@@ -86,6 +86,30 @@ def resolve_input_columns(
     return [c for c in df.columns if c not in excluded]
 
 
+def frame_order_select(df: DataFrame, *groups: Sequence[str]) -> DataFrame:
+    """``df`` pruned to the named columns, kept in FRAME order.
+
+    A projection that only drops columns is pushed below a ``Repartition``
+    and then removed, so ``CollapseRepartition`` merges the loader's
+    round-robin exchange (sources/tables.py) into the operator's own. A
+    reordering projection stays above it and both exchanges run (see
+    SCALE.md). Kernels therefore bind columns by name, and each operator
+    emits its declared output order itself.
+    """
+    wanted = {c for group in groups for c in group}
+    missing = sorted(wanted - set(df.columns))
+    if missing:
+        raise KeyError(f"columns {missing} not found in DataFrame (has {df.columns})")
+    return df.select(*[c for c in df.columns if c in wanted])
+
+
+def named_fields(df: DataFrame, names: Sequence[str]) -> list:
+    """``df``'s schema fields for ``names``, in the order given — an
+    operator's declared output order over its frame-order input."""
+    fields = {f.name: f for f in df.schema.fields}
+    return [fields[c] for c in names]
+
+
 def input_numpy_dtypes(df: DataFrame, cols: Sequence[str]) -> dict[str, np.dtype]:
     """NumPy dtype per kernel input column; raises TypeError for types the
     kernels don't support (strings/arrays/maps — same restriction as the

@@ -50,6 +50,7 @@ from polars_numba_spark.dtypes import (
 from polars_numba_spark.kernels import compile_step_function, get_folder
 from polars_numba_spark.operators._prep import (
     as_list,
+    frame_order_select,
     group_boundaries,
     input_numpy_dtypes,
     key_tuple,
@@ -110,7 +111,7 @@ def collect_fold(
     acc0 = initial_accumulator
     dtype_list = [np_dtypes[c] for c in cols]
 
-    prepared = df.select(*cols, *order_cols).na.drop(subset=cols)
+    prepared = frame_order_select(df, cols, order_cols).na.drop(subset=cols)
     if combine is None:
         prepared = _single_ordered_stream(prepared, order_cols)
     elif order_cols:
@@ -134,8 +135,8 @@ def collect_fold(
                 continue
             saw_rows = True
             arrays = [
-                column_to_numpy(batch.column(i), dtype_list[i])
-                for i in range(len(cols))
+                column_to_numpy(batch.column(c), dtype_list[i])
+                for i, c in enumerate(cols)
             ]
             acc = folder(step, acc, extra, *arrays)
         if combine is None or saw_rows:
@@ -351,7 +352,7 @@ def grouped_fold(
     # per Arrow batch (not once per group — with millions of small groups the
     # per-group applyInPandas overhead dominates the kernel cost).
     prepared = (
-        df.select(*keys, *cols, *order_cols)
+        frame_order_select(df, keys, cols, order_cols)
         .repartition(*keys)
         .sortWithinPartitions(*keys, *order_cols)
     )
@@ -489,7 +490,7 @@ def grouped_multi_fold(
             yield pd.DataFrame(data)
 
     prepared = (
-        df.select(*keys, *all_cols, *order_cols)
+        frame_order_select(df, keys, all_cols, order_cols)
         .repartition(*keys)
         .sortWithinPartitions(*keys, *order_cols)
     )

@@ -50,9 +50,11 @@ from polars_numba_spark.dtypes import (
 from polars_numba_spark.kernels import compile_step_function, get_scanner
 from polars_numba_spark.operators._prep import (
     as_list,
+    frame_order_select,
     group_boundaries,
     input_numpy_dtypes,
     key_tuple,
+    named_fields,
     resolve_input_columns,
 )
 from polars_numba_spark.operators.fold import _single_ordered_stream
@@ -109,13 +111,13 @@ def collect_scan(
         else normalize_spark_type(return_dtype)
     )
 
-    prepared = df.select(*cols, *order_cols)
-    prepared = _single_ordered_stream(prepared, order_cols)
-    out_schema = T.StructType(
-        [f for f in prepared.schema.fields] + [T.StructField(result_name, res_spark_type)]
+    prepared = _single_ordered_stream(
+        frame_order_select(df, cols, order_cols), order_cols
     )
-
-    col_idx = {c: i for i, c in enumerate(prepared.columns)}
+    out_names = [*cols, *order_cols]
+    out_schema = T.StructType(
+        named_fields(df, out_names) + [T.StructField(result_name, res_spark_type)]
+    )
 
     def scan_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc = acc0
@@ -123,7 +125,7 @@ def collect_scan(
             n = batch.num_rows
             if n == 0:
                 continue
-            in_arrays = [batch.column(col_idx[c]) for c in cols]
+            in_arrays = [batch.column(c) for c in cols]
             mask = null_mask(in_arrays)
             np_cols = [
                 column_to_numpy(fill_zero(arr), dtype_list[i])
@@ -133,8 +135,8 @@ def collect_scan(
             acc = scanner(step, acc, extra, result, mask, *np_cols)
             scan_col = scan_result_to_arrow(result, mask, res_shape)
             yield pa.RecordBatch.from_arrays(
-                [*batch.columns, scan_col],
-                names=[*batch.schema.names, result_name],
+                [*(batch.column(c) for c in out_names), scan_col],
+                names=[*out_names, result_name],
             )
 
     return prepared.mapInArrow(scan_stream, schema=out_schema)
@@ -176,7 +178,7 @@ def _parallel_prefix_scan(
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     prepared = (
-        df.select(*cols, *order_cols)
+        frame_order_select(df, cols, order_cols)
         .repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)
     )
@@ -195,7 +197,7 @@ def _parallel_prefix_scan(
 
     prepared, _ckpt_ids = tracked_local_checkpoint(prepared)
     register_session_scoped(_ckpt_ids)
-    col_idx = {c: i for i, c in enumerate(prepared.columns)}
+    out_names = [*cols, *order_cols]
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
@@ -203,7 +205,7 @@ def _parallel_prefix_scan(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            in_arrays = [batch.column(col_idx[c]) for c in cols]
+            in_arrays = [batch.column(c) for c in cols]
             mask = null_mask(in_arrays)
             np_cols = [
                 column_to_numpy(fill_zero(arr), dtype_list[i])
@@ -233,7 +235,7 @@ def _parallel_prefix_scan(
             seed = combine(seed, part_accs[pid])
 
     out_schema = T.StructType(
-        list(prepared.schema.fields) + [T.StructField(result_name, res_spark_type)]
+        named_fields(df, out_names) + [T.StructField(result_name, res_spark_type)]
     )
 
     def seeded_scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -242,7 +244,7 @@ def _parallel_prefix_scan(
             n = batch.num_rows
             if n == 0:
                 continue
-            in_arrays = [batch.column(col_idx[c]) for c in cols]
+            in_arrays = [batch.column(c) for c in cols]
             mask = null_mask(in_arrays)
             np_cols = [
                 column_to_numpy(fill_zero(arr), dtype_list[i])
@@ -252,8 +254,8 @@ def _parallel_prefix_scan(
             acc = scanner(step, acc, folder_extra, result, mask, *np_cols)
             scan_col = scan_result_to_arrow(result, mask, res_shape)
             yield pa.RecordBatch.from_arrays(
-                [*batch.columns, scan_col],
-                names=[*batch.schema.names, result_name],
+                [*(batch.column(c) for c in out_names), scan_col],
+                names=[*out_names, result_name],
             )
 
     return prepared.mapInArrow(seeded_scan, schema=out_schema)
@@ -336,12 +338,14 @@ def grouped_scan(
     )
 
     prepared = (
-        df.select(*keys, *cols, *order_cols)
+        frame_order_select(df, keys, cols, order_cols)
         .repartition(*keys)
         .sortWithinPartitions(*keys, *order_cols)
     )
+    # mapInPandas assigns the returned frame's columns by name
     out_schema = T.StructType(
-        list(prepared.schema.fields) + [T.StructField(result_name, res_spark_type)]
+        named_fields(df, [*keys, *cols, *order_cols])
+        + [T.StructField(result_name, res_spark_type)]
     )
 
     _NULLABLE_PANDAS = {
@@ -465,12 +469,12 @@ def grouped_multi_scan(
         )
 
     prepared = (
-        df.select(*keys, *all_cols, *order_cols)
+        frame_order_select(df, keys, all_cols, order_cols)
         .repartition(*keys)
         .sortWithinPartitions(*keys, *order_cols)
     )
     out_schema = T.StructType(
-        list(prepared.schema.fields)
+        named_fields(df, [*keys, *all_cols, *order_cols])
         + [T.StructField(n, compiled[n]["res_spark_type"]) for n in names]
     )
 

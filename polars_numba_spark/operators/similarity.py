@@ -237,10 +237,13 @@ def _pair_cosine_arrow(
             with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
                 div = na * nb
                 if (cos_valid & (div == 0.0)).any():
-                    # ANSI mode: the expression path raises
-                    # ArithmeticException here — reproduce the failure
-                    # (same class, pyspark.errors.ArithmeticException)
-                    # instead of silently emitting IEEE inf/NaN
+                    # ANSI mode: the expression path fails with
+                    # [DIVIDE_BY_ZERO] here — fail with the same error
+                    # condition instead of silently emitting IEEE inf/NaN.
+                    # Parity is at the message, not the catchable class:
+                    # raised in a Python worker, this reaches the driver
+                    # wrapped as PythonException, so callers match on
+                    # [DIVIDE_BY_ZERO]
                     from pyspark.errors import ArithmeticException
 
                     raise ArithmeticException(

@@ -267,10 +267,13 @@ def _assign_nearest_arrow(
                         acc += vs[:, d] * cj[d]
                     div = vn[idx] * cn[j]
                     if (div == 0.0).any():
-                        # ANSI mode: the expression path raises
-                        # ArithmeticException here — reproduce the failure
-                        # (same class, pyspark.errors.ArithmeticException)
-                        # instead of silently emitting IEEE NaN/inf
+                        # ANSI mode: the expression path fails with
+                        # [DIVIDE_BY_ZERO] here — fail with the same error
+                        # condition instead of silently emitting IEEE NaN/inf.
+                        # Parity is at the message, not the catchable class:
+                        # raised in a Python worker, this reaches the driver
+                        # wrapped as PythonException, so callers match on
+                        # [DIVIDE_BY_ZERO]
                         from pyspark.errors import ArithmeticException
 
                         raise ArithmeticException(

@@ -19,6 +19,7 @@ UI's Storage tab renders).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 # Checkpoint ids created for DataFrames whose lifetime must extend past the
@@ -67,8 +68,24 @@ def _checkpoint_rdd_ids(out: DataFrame) -> set[int]:
     before/after diff of ``getPersistentRDDs`` — the diff was two JVM
     map scans per checkpoint AND attributed ids wrongly when two threads
     checkpoint concurrently (r15: the RRF face materializes its BM25 and
-    PageRank subtrees in parallel submitter threads)."""
-    return {int(out._jdf.queryExecution().analyzed().rdd().id())}
+    PageRank subtrees in parallel submitter threads).
+
+    The read goes through private Catalyst surface, so it is checked
+    against ``getPersistentRDDs``: if a Spark upgrade changes the plan
+    shape, this site raises instead of leaking untracked blocks."""
+    site = "plans/checkpoint.py::_checkpoint_rdd_ids"
+    try:
+        rdd_id = int(out._jdf.queryExecution().analyzed().rdd().id())
+    except Py4JError as e:
+        raise RuntimeError(
+            f"{site}: the checkpointed plan is not a LogicalRDD ({e!r})"
+        ) from e
+    if not out.sparkSession.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id):
+        raise RuntimeError(
+            f"{site}: RDD {rdd_id} read off the checkpointed plan is not a "
+            "persistent RDD"
+        )
+    return {rdd_id}
 
 
 def _checkpoint_mode() -> str:

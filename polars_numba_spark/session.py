@@ -7,6 +7,9 @@ Defaults chosen for parity with the reference's execution profile and for
   (``collect_batches(chunk_size=50_000)``, ref `__init__.py:344,712`).
 - ``spark.python.worker.reuse=true`` keeps the per-worker compile cache warm,
   mirroring the reference's ``_NUMBA_CACHE`` amortization (ref `:167`).
+- Python workers fork from ``polars_numba_spark._daemon``, which stops
+  every task from re-reading the zip archives on the worker's path (see
+  that module).
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing) —
   at cluster scale this is what keeps shuffles right-sized without manual
   tuning per scale factor.
@@ -57,6 +60,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", "polars_numba_spark._daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -76,3 +76,14 @@ def test_tracked_ids_are_exact_and_thread_safe(spark):
     CK.release(spark, ids_a)
     assert out_b.agg(F.sum("x")).collect()[0][0] == sum(i * 7 for i in range(2000))
     CK.release(spark, ids_b)
+
+
+def test_checkpoint_id_read_is_checked_against_persistent_rdds(spark):
+    """The id is read off the plan through private Catalyst surface; a
+    plan shape that does not yield a persisted RDD (as a Spark upgrade
+    could produce) must fail loudly at that site, not leak blocks."""
+    rdd_frame = spark.createDataFrame(spark.sparkContext.parallelize([(1,), (2,)]), "x long")
+    with pytest.raises(RuntimeError, match="_checkpoint_rdd_ids.*not a persistent RDD"):
+        CK._checkpoint_rdd_ids(rdd_frame)
+    with pytest.raises(RuntimeError, match="_checkpoint_rdd_ids.*not a LogicalRDD"):
+        CK._checkpoint_rdd_ids(spark.range(3))

@@ -1085,3 +1085,85 @@ def test_cohort_ltv_window_runs_on_triangle(spark):
         # the firsts branch prunes `value` — subsets are the win; reading
         # anything beyond the four referenced columns is the regression
         assert cols <= {"event_type", "ts", "user_id", "value"}
+
+
+def _total_step(acc, price, cust):
+    """Running total of the first column; the second only checks binding."""
+    return acc + price
+
+
+def _orders_fold_scan_frames(spark, monkeypatch):
+    """The fold/scan operators over a ``load_table`` frame (sf0.001 orders
+    is under-split, so the loader adds its round-robin exchange). The
+    ``collect_fold`` input is captured at its ``mapInArrow`` call."""
+    from polars_numba_spark.operators import fold as FO
+    from polars_numba_spark.operators import scan as SC
+    from polars_numba_spark.sources import load_table
+
+    orders = load_table(spark, "orders", SF)
+    cls = type(orders)
+    captured = []
+    map_in_arrow = cls.mapInArrow
+
+    def capture(self, *args, **kwargs):
+        captured.append(self)
+        return map_in_arrow(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInArrow", capture)
+    value_cols = ["o_totalprice", "o_custkey"]
+    FO.collect_fold(
+        orders, _total_step, 0.0, column_names=value_cols, order_by="o_orderkey"
+    )
+    spec = dict(function=_total_step, initial_accumulator=0.0,
+                return_dtype="double", columns=value_cols)
+    return {
+        "collect_fold": captured[0],
+        "collect_scan": SC.collect_scan(
+            orders, _total_step, 0.0, "double", column_names=value_cols,
+            order_by="o_orderkey",
+        ),
+        "grouped_fold": FO.grouped_fold(
+            orders, "o_orderstatus", _total_step, 0.0, "double",
+            columns=value_cols, order_by="o_orderkey",
+        ),
+        "grouped_scan": SC.grouped_scan(
+            orders, "o_orderstatus", _total_step, 0.0, "double",
+            columns=value_cols, order_by="o_orderkey",
+        ),
+        "grouped_multi_fold": FO.grouped_multi_fold(
+            orders, "o_orderstatus", {"total": spec}, order_by="o_orderkey"
+        ),
+        "grouped_multi_scan": SC.grouped_multi_scan(
+            orders, "o_orderstatus", {"total": spec}, order_by="o_orderkey"
+        ),
+    }
+
+
+def test_fold_scan_merge_the_loader_exchange(spark, monkeypatch):
+    """The operators prune their input in frame order, so Catalyst merges
+    the loader's round-robin exchange into the operator's own exchange."""
+    frames = _orders_fold_scan_frames(spark, monkeypatch)
+    for name in ["collect_fold", "collect_scan", "grouped_fold", "grouped_scan",
+                 "grouped_multi_fold"]:
+        assert "RoundRobinPartitioning" not in plans.explain_string(frames[name]), name
+
+
+def test_fold_scan_keep_declared_column_order(spark, monkeypatch):
+    """Kernel columns given out of frame order keep the declared output
+    order and bind by name (the running total is over ``o_totalprice``)."""
+    import itertools
+
+    frames = _orders_fold_scan_frames(spark, monkeypatch)
+    declared = ["o_totalprice", "o_custkey", "o_orderkey"]
+    assert frames["collect_scan"].columns == [*declared, "scan"]
+    assert frames["grouped_scan"].columns == ["o_orderstatus", *declared, "scan"]
+    assert frames["grouped_multi_scan"].columns == ["o_orderstatus", *declared, "total"]
+
+    rows = sorted(frames["collect_scan"].collect(), key=lambda r: r.o_orderkey)
+    expected = list(itertools.accumulate(r.o_totalprice for r in rows))
+    assert [r.scan for r in rows] == pytest.approx(expected)
+    for name, col in [("grouped_scan", "scan"), ("grouped_multi_scan", "total")]:
+        totals = {}
+        for r in sorted(frames[name].collect(), key=lambda r: r.o_orderkey):
+            totals[r.o_orderstatus] = totals.get(r.o_orderstatus, 0.0) + r.o_totalprice
+            assert r[col] == pytest.approx(totals[r.o_orderstatus]), name

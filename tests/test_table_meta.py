@@ -1,0 +1,66 @@
+"""Table metadata memo (sources/tables.py::_table_meta).
+
+Inferring a parquet schema runs a Spark job. ``load_table`` and
+``load_stream`` memoize a single-file table's schema under (path,
+modification time, length), so reading an unchanged table again submits
+no job, and a rewritten file is read with its new schema.
+"""
+
+from __future__ import annotations
+
+import itertools
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from polars_numba_spark.sources import load_stream, load_table
+
+_groups = itertools.count()
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group; the number of jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"table-meta-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_unchanged_table_is_read_without_a_job(spark, tmp_path):
+    pq.write_table(pa.table({"a": [1, 2, 3]}), tmp_path / "memo.parquet")
+    sf_dir = str(tmp_path)
+    # the first read infers the schema: a job, which shows the count works
+    assert _jobs_in_group(spark, lambda: load_table(spark, "memo", sf_dir)) >= 1
+    assert _jobs_in_group(spark, lambda: load_table(spark, "memo", sf_dir)) == 0
+    assert _jobs_in_group(spark, lambda: load_stream(spark, "memo", sf_dir)) == 0
+    assert sorted(r.a for r in load_table(spark, "memo", sf_dir).collect()) == [1, 2, 3]
+
+
+def test_rewritten_table_gets_its_new_schema(spark, tmp_path):
+    path = tmp_path / "memo.parquet"
+    sf_dir = str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, "memo", sf_dir).columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = load_table(spark, "memo", sf_dir)
+    assert df.columns == ["a", "b"]
+    assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
+    assert load_stream(spark, "memo", sf_dir).columns == ["a", "b"]
+
+
+def test_directory_table_is_read_uncached(spark, tmp_path):
+    """A directory's modification time misses in-place part-file rewrites,
+    so directory tables keep inferring their schema."""
+    table_dir = tmp_path / "memo.parquet"
+    table_dir.mkdir()
+    pq.write_table(pa.table({"a": [1]}), table_dir / "part-0.parquet")
+    sf_dir = str(tmp_path)
+    load_table(spark, "memo", sf_dir)
+    pq.write_table(pa.table({"a": [1], "c": [2.0]}), table_dir / "part-0.parquet")
+    assert load_table(spark, "memo", sf_dir).columns == ["a", "c"]
