@@ -713,8 +713,6 @@ def minhash_dedup_pairs(
     if emit != "pairs":
         raise ValueError(f"emit must be 'pairs' or 'keeplist', got {emit!r}")
     toks = None
-    import os
-
     # The pipeline derives the token/shingle sets THREE times (signature
     # explode + both verify sides). For SHINGLE sets that derivation is
     # the dominant cost — every pass re-runs tokenize → n-gram concat →
@@ -723,12 +721,10 @@ def minhash_dedup_pairs(
     # dedup_minhash_pairs 8.05s → 2.12s wall floor). For UNIGRAM sets the
     # same A/B measured a LOSS (dedup_jaccard_pairs 4.42s → 5.06s:
     # distinct-token derivation is ~0.5s and the checkpoint's
-    # materialize+read costs more than it saves), so the default is
-    # shingle-only. Results identical by construction — both paths
-    # explode/join the same per-doc set. PNS_MINHASH_TOKS_CKPT=1/0
-    # forces on/off.
-    knob = os.environ.get("PNS_MINHASH_TOKS_CKPT")
-    if knob == "1" or (knob != "0" and shingle_n is not None):
+    # materialize+read costs more than it saves), so only shingle sets are
+    # checkpointed. Results identical by construction — both paths
+    # explode/join the same per-doc set.
+    if shingle_n is not None:
         from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
         toks = session_scoped_checkpoint(

@@ -79,7 +79,7 @@ def cosine_with_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> C
     return dot(a, b) / (norm_a * norm_b)
 
 
-def _pair_cosine_arrow(
+def _pair_cosine(
     df: DataFrame,
     a_vec: str,
     b_vec: str,
@@ -87,180 +87,18 @@ def _pair_cosine_arrow(
     b_norm: str,
     out_col: str = "cosine_sim",
 ) -> DataFrame:
-    """mapInArrow twin of ``cosine_with_norms`` over a joined-pair frame —
-    the r15 §4.2 replacement for the interpreted per-pair ``dot()`` the
-    candidate-VERIFY stages ran (LSH top-k scoring, SemDeDup within-cluster
-    pairs, IVF probe scoring, the capped exact-pair truth sets): one batch
-    NumPy pass instead of one interpreted ``aggregate(zip_with)`` fold per
-    candidate pair (VERDICT r14 "next round" #1).
-
-    **DEFAULT OFF — measured and REJECTED as the default path (r15).**
-    Unlike the per-row kernels that won in r14 (bucket projection: 32-48
-    folds per shipped vector; centroid assign: k folds per shipped
-    vector), pair verify does ONE fold per TWO shipped vectors — the JVM
-    ArrowWriter serializes every array element of both vectors per pair
-    across the boundary, which costs more than the single interpreted
-    fold it replaces. Quiet-host interleaved A/B (4 reps, wall/CPU
-    floors, tools/remeasure.py, 2026-08-18):
-
-    =========================  =============  =============
-    face                       expression     pair kernel
-    =========================  =============  =============
-    embedding_topk_lsh         1.56s / 21.2   2.45s / 30.1
-    embedding_near_dup_pairs   0.79s / 11.1   1.29s / 20.1
-    embedding_near_dup_recall  2.12s / 26.3   3.59s / 47.4
-    semantic_dedup_pairs       4.50s / 59.5   5.23s / 64.0
-    embedding_topk_bruteforce  0.54s /  2.4   0.73s /  9.5
-    kmeans_silhouette          3.30s / 53.7   3.69s / 67.3
-    =========================  =============  =============
-
-    The ratio (boundary bytes per pair vs FLOPs per pair) is scale-
-    invariant, so this does not flip at corpus scale; it would flip for
-    much wider vectors or a heavier per-pair score. The kernel stays
-    available behind ``PNS_PAIR_COSINE_ARROW=1`` with its bit-exactness
-    pinned by tests/test_pair_cosine_kernel.py.
-
-    ``df``'s columns are ``keep... + [a_vec, b_vec, a_norm, b_norm]`` in
-    any order; the output is ``keep... + out_col`` (vectors and norms are
-    consumed). Callers select ONLY the needed columns first (§4.1).
-
-    BIT-EXACT CONTRACT with ``dot(a, b) / (na * nb)`` (which the DuckDB
-    oracles reproduce via list_cosine_similarity / explicit folds):
-
-    - the dot accumulates index-ordered — one rounded multiply + one
-      rounded add per element (no FMA), exactly
-      ``aggregate(zip_with(a, b, x*y), 0.0, acc + x)``.
-    - NULL semantics: the dot is NULL iff either array is NULL, the
-      lengths differ (zip_with null-pads the short side and a null
-      product taints the left fold), or any element is NULL; an empty
-      equal-length pair folds to the 0.0 init. ``na * nb`` is NULL if
-      either norm is NULL, and Divide returns NULL when either side is
-      NULL *before* the ANSI zero check — so a NULL dot never errors.
-    - a non-NULL dot over a 0.0 (or -0.0) norm product RAISES, because
-      the session runs Spark 4 ANSI mode where double division by zero
-      is an error (same contract as ``_assign_nearest_arrow``).
-    - NaN/±inf flow through plain IEEE arithmetic on both paths.
-
-    """
-    import os
-
-    if os.environ.get("PNS_PAIR_COSINE_ARROW", "0") != "1":
-        consumed = {a_vec, b_vec, a_norm, b_norm}
-        keep = [c for c in df.columns if c not in consumed]
-        return df.select(
-            *keep,
-            cosine_with_norms(
-                F.col(a_vec), F.col(b_vec), F.col(a_norm), F.col(b_norm)
-            ).alias(out_col),
-        )
-
-    import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
+    """Score a joined-pair frame with ``cosine_with_norms``: the output is
+    ``df``'s other columns plus ``out_col`` (vectors and norms are consumed).
+    A batch NumPy kernel for this step was measured slower and removed; see
+    OPTIMIZATION_r15.md."""
     consumed = {a_vec, b_vec, a_norm, b_norm}
     keep = [c for c in df.columns if c not in consumed]
-    out_schema = StructType(
-        [df.schema[c] for c in keep] + [StructField(out_col, DoubleType())]
+    return df.select(
+        *keep,
+        cosine_with_norms(
+            F.col(a_vec), F.col(b_vec), F.col(a_norm), F.col(b_norm)
+        ).alias(out_col),
     )
-    ia = df.columns.index(a_vec)
-    ib = df.columns.index(b_vec)
-    ina = df.columns.index(a_norm)
-    inb = df.columns.index(b_norm)
-    keep_idx = [df.columns.index(c) for c in keep]
-
-    def score(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            arr_a = batch.column(ia)
-            arr_b = batch.column(ib)
-            n = len(arr_a)
-            dot = np.full(n, np.nan)
-            dot_valid = np.zeros(n, dtype=bool)
-            if n:
-                offs_a = arr_a.offsets.to_numpy(zero_copy_only=False)[: n + 1]
-                offs_b = arr_b.offsets.to_numpy(zero_copy_only=False)[: n + 1]
-                len_a = offs_a[1:] - offs_a[:-1]
-                len_b = offs_b[1:] - offs_b[:-1]
-                va = (
-                    np.ones(n, dtype=bool)
-                    if arr_a.null_count == 0
-                    else arr_a.is_valid().to_numpy(zero_copy_only=False)
-                )
-                vb = (
-                    np.ones(n, dtype=bool)
-                    if arr_b.null_count == 0
-                    else arr_b.is_valid().to_numpy(zero_copy_only=False)
-                )
-                clean = va & vb & (len_a == len_b)
-                for arr, offs in ((arr_a, offs_a), (arr_b, offs_b)):
-                    vals = arr.values
-                    if vals.null_count:
-                        nulls = vals.is_null().to_numpy(zero_copy_only=False)
-                        for i in np.nonzero(clean)[0]:
-                            if nulls[offs[i] : offs[i + 1]].any():
-                                clean[i] = False
-                vals_a = arr_a.values.to_numpy(zero_copy_only=False)
-                vals_b = arr_b.values.to_numpy(zero_copy_only=False)
-                with np.errstate(over="ignore", invalid="ignore"):
-                    for L in np.unique(len_a[clean]):
-                        idx = np.nonzero(clean & (len_a == L))[0]
-                        if L == 0:
-                            dot[idx] = 0.0
-                            continue
-                        ga = offs_a[idx][:, None] + np.arange(L)[None, :]
-                        gb = offs_b[idx][:, None] + np.arange(L)[None, :]
-                        xs = vals_a[ga]
-                        ys = vals_b[gb]
-                        acc = np.zeros(len(idx))
-                        for d in range(L):
-                            # one rounded multiply + one rounded add per
-                            # element in index order — the exact left fold
-                            acc += xs[:, d] * ys[:, d]
-                        dot[idx] = acc
-                dot_valid = clean
-            col_na = batch.column(ina)
-            col_nb = batch.column(inb)
-            na = col_na.to_numpy(zero_copy_only=False)
-            nb = col_nb.to_numpy(zero_copy_only=False)
-            na_valid = (
-                np.ones(n, dtype=bool)
-                if col_na.null_count == 0
-                else col_na.is_valid().to_numpy(zero_copy_only=False)
-            )
-            nb_valid = (
-                np.ones(n, dtype=bool)
-                if col_nb.null_count == 0
-                else col_nb.is_valid().to_numpy(zero_copy_only=False)
-            )
-            cos_valid = dot_valid & na_valid & nb_valid
-            with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
-                div = na * nb
-                if (cos_valid & (div == 0.0)).any():
-                    # ANSI mode: the expression path fails with
-                    # [DIVIDE_BY_ZERO] here — fail with the same error
-                    # condition instead of silently emitting IEEE inf/NaN.
-                    # Parity is at the message, not the catchable class:
-                    # raised in a Python worker, this reaches the driver
-                    # wrapped as PythonException, so callers match on
-                    # [DIVIDE_BY_ZERO]
-                    from pyspark.errors import ArithmeticException
-
-                    raise ArithmeticException(
-                        "[DIVIDE_BY_ZERO] zero-norm vector in pairwise "
-                        "cosine scoring (ANSI division)"
-                    )
-                cos = dot / div
-            cos_list = [
-                float(cos[i]) if cos_valid[i] else None for i in range(n)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in keep_idx]
-                + [pa.array(cos_list, type=pa.float64())],
-                names=keep + [out_col],
-            )
-
-    return df.mapInArrow(score, out_schema)
 
 
 def brute_force_topk(
@@ -287,16 +125,12 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    # r15: per-pair scoring via the batch NumPy kernel (bit-exact twin —
-    # see _pair_cosine_arrow) instead of one interpreted fold per pair;
-    # round_to stays an in-plan F.round on the kernel's raw cosine, so the
-    # rounding arithmetic is untouched.
     pairs = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "qv", "cv", "qn", "cn")
     )
-    scored = _pair_cosine_arrow(pairs, "qv", "cv", "qn", "cn")
+    scored = _pair_cosine(pairs, "qv", "cv", "qn", "cn")
     if round_to is not None:
         scored = scored.withColumn(
             "cosine_sim", F.round(F.col("cosine_sim"), round_to)
@@ -580,7 +414,7 @@ def lsh_topk(
 
     c = _prep(corpus, "neighbor_id", "cv", "cn")
     q = _prep(queries, "query_id", "qv", "qn")
-    # r15: score candidates with the batch kernel BEFORE the dedup shuffle.
+    # r15: score candidates BEFORE the dedup shuffle.
     # The cosine is a pure function of the pair, so scoring bucket-collision
     # duplicates and deduping the (query, neighbor, cos) rows afterwards is
     # result-identical — and the dropDuplicates exchange now carries three
@@ -591,7 +425,7 @@ def lsh_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "qv", "cv", "qn", "cn")
     )
-    scored = _pair_cosine_arrow(pairs, "qv", "cv", "qn", "cn").dropDuplicates(
+    scored = _pair_cosine(pairs, "qv", "cv", "qn", "cn").dropDuplicates(
         ["query_id", "neighbor_id"]
     )
     if round_to is not None:
@@ -677,11 +511,10 @@ def embedding_near_dup_pairs(
     )
     a = e.alias("a")
     b = e.alias("b")
-    # r15: score with the batch kernel BEFORE the threshold filter and the
-    # pair-dedup shuffle — scoring the (rare) multi-table collisions twice
-    # is cheap NumPy, while the dropDuplicates exchange now moves only the
-    # surviving (a_id, b_id, cos) rows instead of two vectors per candidate
-    # (§2.3/§8). The cosine is a pure function of the pair, so
+    # r15: score BEFORE the threshold filter and the pair-dedup shuffle —
+    # scoring the (rare) multi-table collisions twice is cheap, while the
+    # dropDuplicates exchange now moves only the surviving (a_id, b_id,
+    # cos) rows instead of two vectors per candidate (§2.3/§8). The cosine is a pure function of the pair, so
     # filter→dedup ≡ dedup→score→filter row-for-row.
     pairs = a.join(
         b,
@@ -695,7 +528,7 @@ def embedding_near_dup_pairs(
         F.col("b.nv").alias("bn"),
     )
     return (
-        _pair_cosine_arrow(pairs, "av", "bv", "an", "bn")
+        _pair_cosine(pairs, "av", "bv", "an", "bn")
         .where(F.col("cosine_sim") >= threshold)
         .dropDuplicates(["a_id", "b_id"])
     )

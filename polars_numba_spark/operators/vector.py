@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
 from polars_numba_spark.operators.similarity import (
+    _pair_cosine,
     as_double,
     cosine_with_norms,
     dot as _dot_fast,
@@ -490,12 +491,7 @@ def ivf_topk(
         .where(F.col("__pr") <= nprobe)
         .select("query_id", "qv", "qn", "cell")
     )
-    # r15: probe-member scoring via the batch NumPy pair kernel (bit-exact
-    # twin of cosine_with_norms — similarity._pair_cosine_arrow) instead of
-    # one interpreted fold per (query, member) candidate.
-    from polars_numba_spark.operators.similarity import _pair_cosine_arrow
-
-    scored = _pair_cosine_arrow(
+    scored = _pair_cosine(
         member_vecs.join(probed, "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "qv", "cv", "qn", "cvn"),
@@ -566,11 +562,6 @@ def semantic_dedup_pairs(
     m = session_scoped_checkpoint(m)
     a = m.alias("a")
     b = m.alias("b")
-    # r15: within-cluster pair scoring via the batch NumPy kernel
-    # (similarity._pair_cosine_arrow — bit-exact twin of cosine_with_norms);
-    # round_to stays an in-plan F.round on the kernel's raw cosine.
-    from polars_numba_spark.operators.similarity import _pair_cosine_arrow
-
     pairs = a.join(
         b,
         (F.col("a.assigned") == F.col("b.assigned"))
@@ -584,7 +575,7 @@ def semantic_dedup_pairs(
         F.col("a.__vn").alias("__an"),
         F.col("b.__vn").alias("__bn"),
     )
-    scored = _pair_cosine_arrow(pairs, "__av", "__bv", "__an", "__bn")
+    scored = _pair_cosine(pairs, "__av", "__bv", "__an", "__bn")
     if round_to is not None:
         scored = scored.withColumn(
             "cosine_sim", F.round(F.col("cosine_sim"), round_to)
@@ -793,11 +784,7 @@ def contrastive_triplets(
         F.col("vn").alias("bn"),
     )
     pairs = a.join(b, pair_keys).where(F.col("aid") != F.col("bid"))
-    # r15: positive mining scored via the batch NumPy kernel (bit-exact
-    # twin of cosine_with_norms — similarity._pair_cosine_arrow)
-    from polars_numba_spark.operators.similarity import _pair_cosine_arrow
-
-    scored = _pair_cosine_arrow(
+    scored = _pair_cosine(
         pairs.select("aid", "bid", "av", "bv", "an", "bn"),
         "av", "bv", "an", "bn", out_col="pos_sim",
     )
@@ -945,209 +932,6 @@ def _pq_subvectors(df: DataFrame, m: int, vec_col: str, id_col: str) -> DataFram
     )
 
 
-def _spark_round_half_up(x: float, scale: int) -> float:
-    """Spark's round() on a double: BigDecimal(Double.toString(x)).setScale(
-    scale, HALF_UP).toDouble — Python's repr(float) is the same shortest
-    round-trip string, so Decimal(repr(x)) reproduces it exactly (the
-    recipe tests/test_pq_thirdeye.py already pins). NaN/±inf pass through
-    unchanged (Spark's Round returns non-finite inputs as-is)."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if not math.isfinite(x):
-        return x
-    return float(
-        Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
-    )
-
-
-def _collect_pq_cents(cents: DataFrame) -> list[tuple]:
-    """(s, code, cv, cn2) rows sorted by (s, code) — the PQ assign
-    kernel's closure payload. The codebook is m×k rows and was already
-    collected to the driver as a broadcast relation on the expression
-    path; train-loop callers pass checkpointed frames, so this collect
-    reads materialized blocks."""
-    rows = cents.select(
-        "s",
-        F.col("__code").alias("code"),
-        as_double("__cv").alias("cv"),
-        F.col("__cn2").alias("cn2"),
-    ).collect()
-    return sorted(
-        ((r["s"], r["code"], r["cv"], r["cn2"]) for r in rows),
-        key=lambda t: (t[0], t[1]),
-    )
-
-
-def _pq_assign_arrow(
-    subs: DataFrame,
-    cent_rows: list[tuple],
-    carry_vec: bool,
-    round_to: int | None = None,
-    code_type=None,
-) -> DataFrame:
-    """mapInArrow twin of the broadcast-join + struct-MIN argmin in
-    :func:`_pq_assign` (guide §4.2 + §2.4): per batch, NumPy scores each
-    (id, s, subvec) row against its subspace's k collected centroids and
-    emits the argmin row directly — no n×k row blow-up, no per-assign
-    groupBy exchange. VERDICT r14 "next round" #7.
-
-    BIT-EXACT CONTRACT with the expression path (which the unrolled
-    DuckDB PQ oracle and the third-eye suite reproduce):
-
-    - dot is the index-ordered left fold; ``d2 = (-2.0 · dot) + cn2``
-      with exactly one rounded multiply and one rounded add on top.
-    - ``round_to`` replays Spark's ``round()`` per candidate —
-      Decimal(repr(x)) quantized HALF_UP, non-finite values unchanged
-      (:func:`_spark_round_half_up`).
-    - the argmin replays ``min(struct(d2, code))`` under Spark's TOTAL
-      ORDER: NULL sorts LOWEST and therefore WINS the min (a null d2 —
-      null/ragged/null-element subvector vs that centroid's length, or a
-      null centroid/cn2), NaN sorts HIGHEST and loses, ties (including
-      all-null and all-NaN) break to the LOWEST code. The kernel folds
-      codes ascending, replacing only on strictly smaller (tier, value).
-    - rows whose subspace has NO centroid disappear (inner-join
-      semantics), as does a NULL ``s``.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    if code_type is None:
-        code_type = IntegerType()
-    src = subs.select("id", "s", "subvec")
-    id_field = src.schema.fields[0]
-    s_field = src.schema.fields[1]
-    out_fields = [id_field, s_field, StructField("code", code_type)]
-    if carry_vec:
-        out_fields.append(StructField("subvec", ArrayType(DoubleType())))
-    out_schema = StructType(out_fields)
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    code_arrow_type = to_arrow_type(code_type)
-
-    by_s: dict = {}
-    for s, code, cv, cn2 in cent_rows:
-        by_s.setdefault(s, []).append((code, cv, cn2))
-
-    def assign(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if not by_s:  # join against an empty codebook → zero rows
-            return
-
-        # once per task (§4.5): per-(s, code) centroid arrays + validity
-        prep: dict = {}
-        for s, lst in by_s.items():
-            entries = []
-            for code, cv, cn2 in lst:  # already code-ascending
-                if cv is None or any(x is None for x in cv) or cn2 is None:
-                    entries.append((code, None, None, None))
-                    continue
-                arr = np.asarray(cv, dtype=np.float64)
-                entries.append((code, arr, len(arr), float(cn2)))
-            prep[s] = entries
-
-        for batch in batches:
-            sub = batch.column(2)
-            n = len(sub)
-            if n == 0:
-                continue
-            s_col = batch.column(1)
-            s_np = s_col.to_numpy(zero_copy_only=False)
-            s_valid = (
-                np.ones(n, dtype=bool)
-                if s_col.null_count == 0
-                else s_col.is_valid().to_numpy(zero_copy_only=False)
-            )
-            cast = pc.cast(sub, pa.list_(pa.float64()))
-            offsets = sub.offsets.to_numpy(zero_copy_only=False)[: n + 1]
-            lengths = offsets[1:] - offsets[:-1]
-            row_valid = (
-                np.ones(n, dtype=bool)
-                if sub.null_count == 0
-                else sub.is_valid().to_numpy(zero_copy_only=False)
-            )
-            values = sub.values
-            elem_clean = np.ones(n, dtype=bool)
-            if values.null_count:
-                nulls = values.is_null().to_numpy(zero_copy_only=False)
-                for i in np.nonzero(row_valid)[0]:
-                    if nulls[offsets[i] : offsets[i + 1]].any():
-                        elem_clean[i] = False
-            vals = values.to_numpy(zero_copy_only=False)
-            clean = row_valid & elem_clean
-
-            keep = np.zeros(n, dtype=bool)
-            best_code = np.zeros(n, dtype=np.int64)
-            with np.errstate(over="ignore", invalid="ignore"):
-                for s in np.unique(s_np[s_valid]):
-                    entries = prep.get(s)
-                    if entries is None:
-                        continue  # inner-join drop: no centroids for s
-                    ridx = np.nonzero(s_valid & (s_np == s))[0]
-                    keep[ridx] = True
-                    m = len(ridx)
-                    # gather each length-group once, reuse across codes
-                    mats: dict = {}
-                    for L in np.unique(lengths[ridx][clean[ridx]]):
-                        lmask = clean[ridx] & (lengths[ridx] == L)
-                        g = offsets[ridx[lmask]][:, None] + np.arange(L)[None, :]
-                        mats[L] = (lmask, vals[g].astype(np.float64))
-                    bt = np.full(m, np.int8(2))  # 2 = unset (> any real tier)
-                    bv = np.zeros(m)
-                    bc = np.zeros(m, dtype=np.int64)
-                    for code, carr, clen, cn2 in entries:
-                        d2 = np.full(m, np.nan)
-                        dvalid = np.zeros(m, dtype=bool)
-                        if carr is not None and clen in mats:
-                            lmask, mat = mats[clen]
-                            acc = np.zeros(int(lmask.sum()))
-                            for d in range(clen):
-                                acc += mat[:, d] * carr[d]
-                            dd = (-2.0 * acc) + cn2
-                            if round_to is not None:
-                                fin = np.isfinite(dd)
-                                for j in np.nonzero(fin)[0]:
-                                    dd[j] = _spark_round_half_up(
-                                        float(dd[j]), round_to
-                                    )
-                            d2[lmask] = dd
-                            dvalid[lmask] = True
-                        # tiers: -1 NULL (wins the MIN), 0 value, 1 NaN
-                        t = np.where(
-                            ~dvalid, np.int8(-1),
-                            np.where(np.isnan(d2), np.int8(1), np.int8(0)),
-                        ).astype(np.int8)
-                        lt = (t < bt) | ((t == bt) & (t == 0) & (d2 < bv))
-                        bt = np.where(lt, t, bt)
-                        bv = np.where(lt, d2, bv)
-                        bc = np.where(lt, code, bc)
-                    best_code[ridx] = bc
-            kidx = np.nonzero(keep)[0]
-            mask = pa.array(keep)
-            cols = [
-                batch.column(0).filter(mask),
-                s_col.filter(mask),
-                pa.array(best_code[kidx].tolist(), type=code_arrow_type),
-            ]
-            names = [id_field.name, s_field.name, "code"]
-            if carry_vec:
-                cols.append(cast.filter(mask))
-                names.append("subvec")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return src.mapInArrow(assign, out_schema)
-
-
 def _pq_assign(
     subs: DataFrame,
     cents: DataFrame,
@@ -1161,26 +945,12 @@ def _pq_assign(
     convention for cross-engine-reproducible tie behavior (portable
     faces only; the production path stays unrounded).
 
-    r15: a batch NumPy kernel twin exists (:func:`_pq_assign_arrow` —
-    bit-exact contract documented there; scores each subvector against
-    the collected codebook, no n×k blow-up, no per-assign groupBy
-    exchange) — **measured and REJECTED as the default (quiet-host A/B,
-    tools/remeasure.py, 4 reps, 2026-08-18): the full embedding_pq_encode
-    face read 3.12s wall / 16.6 CPU-s on this expression path vs 3.30s /
-    48.8 CPU-s on the kernel** (equal wall only because idle cores absorb
-    the extra burn; CPU is what scales). An isolated single assign stage
-    measured ~equal (1.90s vs 1.81s floors) — the loss is the per-stage
-    Python boundary cost ×3 assigns plus the plan-time codebook collects,
-    which the single lazy broadcast-join plan never pays. The kernel
-    stays available behind ``PNS_PQ_ASSIGN_ARROW=1``, bit-exactness
-    pinned by tests/test_pq_kernel.py."""
-    import os
-
-    if os.environ.get("PNS_PQ_ASSIGN_ARROW", "0") == "1":
-        code_type = cents.select("__code").schema.fields[0].dataType
-        return _pq_assign_arrow(
-            subs, _collect_pq_cents(cents), carry_vec, round_to, code_type
-        )
+    The rows carry the contract of ``min(struct(d2, code))`` under
+    Spark's total order: a tie goes to the lowest code, a NULL ``d2``
+    (null, ragged or null-element subvector) sorts lowest and wins the
+    MIN, and a row whose subspace has no centroid is dropped by the inner
+    join. A batch NumPy kernel for this step was measured slower and
+    removed; see OPTIMIZATION_r15.md."""
     dot = _dot_fast(F.col("subvec"), F.col("__cv"))
     d2 = F.lit(-2.0) * dot + F.col("__cn2")
     if round_to is not None:

@@ -11,8 +11,6 @@ schemas aligned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -736,26 +734,8 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``block_by="source"``); no pairwise join on a bare blocking key
     remains in the plan (pinned in test_plans.py)."""
     d = _t(spark, sf_dir, "documents")
-    toks = None
-    if os.environ.get("PNS_MINHASH_TOKS_CKPT") == "1":
-        # opt-in ONLY: the r15 A/B measured this face SLOWER with the
-        # shared checkpointed toks (4.42s → 5.06s wall floor) — unigram
-        # distinct-token derivation is ~0.5s of the face, so the
-        # checkpoint's materialize+read overhead exceeds the 2 saved
-        # re-tokenizations. Kept wired (and tested) for corpora whose
-        # tokenize pass is expensive; carries `source` for the banded
-        # block key. Result-identical by construction.
-        from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
-
-        toks = session_scoped_checkpoint(
-            d.select(
-                F.col("doc_id").alias("id"),
-                "source",
-                D._token_sets("text", None).alias("toks"),
-            ).withColumn("n_toks", F.size("toks"))
-        )
     cands = D.minhash_lsh_candidates(
-        d, num_hashes=16, bands=4, portable=True, block_by="source", toks=toks
+        d, num_hashes=16, bands=4, portable=True, block_by="source"
     )
     # verify_partitions: the banded candidate set here is large (~139k
     # verified pairs at sf0.1) and the verify is per-pair set arithmetic —
@@ -765,7 +745,6 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands,
         prune_threshold=0.8,
         verify_partitions=spark.sparkContext.defaultParallelism,
-        toks=toks,
     ).where(F.col("jaccard") >= 0.8)
 
 
@@ -1118,10 +1097,6 @@ def _exact_pairs_capped(
     )
     a = e.alias("a")
     b = e.alias("b")
-    # r15: all-pairs scoring via the batch NumPy kernel (bit-exact twin of
-    # cosine_with_norms — similarity._pair_cosine_arrow) instead of one
-    # interpreted fold per pair: at cap=1000 this is ~500k interpreted
-    # aggregate(zip_with) evaluations replaced by vectorized batch dots.
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("a_id"),
         F.col("b.vec_id").alias("b_id"),
@@ -1130,7 +1105,7 @@ def _exact_pairs_capped(
         F.col("a.nv").alias("an"),
         F.col("b.nv").alias("bn"),
     )
-    return S._pair_cosine_arrow(pairs, "av", "bv", "an", "bn").where(
+    return S._pair_cosine(pairs, "av", "bv", "an", "bn").where(
         F.col("cosine_sim") >= threshold
     )
 
@@ -4243,7 +4218,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_nearest_centroid,
         kmeans_iterations,
     )
-    from polars_numba_spark.operators.similarity import cosine_with_norms, norm
+    from polars_numba_spark.operators.similarity import norm
     from polars_numba_spark.operators.vector import as_double
 
     e = _t(spark, sf_dir, "embeddings")
@@ -4257,9 +4232,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = cent1.select(
         F.col("label").alias("__cid"), as_double("centroid").alias("__cv")
     ).withColumn("__cn", norm(F.col("__cv")))
-    # r15: the n×k scoring pass runs through the batch NumPy pair kernel
-    # (bit-exact twin of cosine_with_norms); the 9dp round stays in-plan.
-    scored = S._pair_cosine_arrow(
+    scored = S._pair_cosine(
         e.select("vec_id", as_double("embedding").alias("__v"))
         .withColumn("__vn", norm(F.col("__v")))
         .crossJoin(F.broadcast(c))

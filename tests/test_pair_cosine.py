@@ -1,10 +1,9 @@
-"""Bit-exactness pins for the r15 pairwise-cosine mapInArrow kernel
-(similarity._pair_cosine_arrow) against the interpreted expression path
-(cosine_with_norms) the DuckDB oracles reproduce — including the dirty-row
-semantics: null vector / null element / ragged pair → NULL cosine, NaN/inf
-flow through IEEE, a zero divisor on an evaluated pair raises (ANSI), and
-an empty equal-length pair folds to dot 0.0 (which then divides by a 0.0
-norm product → the ANSI error, same as the expression path)."""
+"""Pins for the pairwise-cosine helper (similarity._pair_cosine) the
+candidate-verify stages share — including the dirty-row semantics the
+DuckDB oracles reproduce: null vector / null element / ragged pair → NULL
+cosine, NaN flows through IEEE, and a zero norm product on an evaluated
+pair raises (ANSI). Also pins the norm the bucket kernel emits alongside
+its bucket arrays."""
 
 from __future__ import annotations
 
@@ -16,13 +15,6 @@ from pyspark.sql import functions as F
 from polars_numba_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(autouse=True)
-def _force_kernel(monkeypatch):
-    """The kernel is default-OFF (measured rejection — see the function's
-    docstring); these tests pin its bit-exactness for the opt-in path."""
-    monkeypatch.setenv("PNS_PAIR_COSINE_ARROW", "1")
 
 
 def _embeddings(spark):
@@ -67,58 +59,35 @@ def _as_key(x):
     return repr(x)
 
 
-def test_pair_cosine_kernel_matches_expression(spark):
-    """Kernel vs expression over real sf0.001 pairs + adversarial rows:
-    repr-exact per pair (ulp differences fail)."""
+def test_pair_cosine_adversarial_rows(spark):
+    """Real sf0.001 pairs + adversarial rows: every dirty-row class gives
+    its NULL/NaN result, and the clean pairs score."""
     full = _embeddings(spark).limit(60).unionByName(_adversarial(spark))
-    pairs = _pair_frame(full)
-    expr = {
-        (r["a_id"], r["b_id"]): _as_key(r["c"])
-        for r in pairs.select(
-            "a_id",
-            "b_id",
-            S.cosine_with_norms(
-                F.col("av"), F.col("bv"), F.col("an"), F.col("bn")
-            ).alias("c"),
-        ).collect()
-    }
-    kern = {
+    out = S._pair_cosine(_pair_frame(full), "av", "bv", "an", "bn")
+    assert out.columns == ["a_id", "b_id", "cosine_sim"]
+    got = {
         (r["a_id"], r["b_id"]): _as_key(r["cosine_sim"])
-        for r in S._pair_cosine_arrow(
-            pairs, "av", "bv", "an", "bn"
-        ).collect()
+        for r in out.collect()
     }
-    assert kern == expr
-    # sanity: the adversarial classes actually exercised their branches
-    assert expr[(900001, 900003)] == "NULL"       # null vector
-    assert expr[(900003, 900004)] == "NULL"       # ragged pair
-    assert expr[(900005, 900006)] == "NULL"       # null element
-    assert kern[(900006, 900009)] == "NaN"        # NaN propagates
-    assert any(v not in ("NULL", "NaN") for v in kern.values())
+    assert got[(900001, 900003)] == "NULL"       # null vector
+    assert got[(900003, 900004)] == "NULL"       # ragged pair
+    assert got[(900005, 900006)] == "NULL"       # null element
+    assert got[(900006, 900009)] == "NaN"        # NaN propagates
+    assert any(v not in ("NULL", "NaN") for v in got.values())
 
 
-def test_pair_cosine_kernel_zero_norm_raises_like_ansi(spark):
-    """A zero-norm vector scored against a real one raises on BOTH paths
-    (Spark 4 ANSI double division by zero) — the kernel must not silently
-    emit IEEE inf/NaN."""
+def test_pair_cosine_zero_norm_raises_like_ansi(spark):
+    """A zero-norm vector scored against a real one raises (Spark 4 ANSI
+    double division by zero) instead of emitting IEEE inf/NaN."""
     rows = [(1, [0.0] * 8), (2, [1.0] * 8)]
     base = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = _pair_frame(base)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        pairs.select(
-            S.cosine_with_norms(
-                F.col("av"), F.col("bv"), F.col("an"), F.col("bn")
-            ).alias("c")
-        ).collect()
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._pair_cosine_arrow(pairs, "av", "bv", "an", "bn").collect()
+        S._pair_cosine(_pair_frame(base), "av", "bv", "an", "bn").collect()
 
 
-def test_pair_cosine_kernel_empty_input(spark):
+def test_pair_cosine_empty_input(spark):
     base = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = S._pair_cosine_arrow(
-        _pair_frame(base), "av", "bv", "an", "bn"
-    )
+    out = S._pair_cosine(_pair_frame(base), "av", "bv", "an", "bn")
     assert out.count() == 0
     assert out.columns == ["a_id", "b_id", "cosine_sim"]
 

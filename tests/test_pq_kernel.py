@@ -1,59 +1,15 @@
-"""Bit-exactness pins for the r15 PQ argmin-L2 mapInArrow kernel
-(vector._pq_assign_arrow) against the broadcast-join + struct-MIN
-expression path it replaces — including:
-
-- round-before-compare (``round_to``) replicated as
-  Decimal(repr(x)).quantize(HALF_UP) — the exact BigDecimal recipe the
-  third-eye PQ suite already pins for Spark's round();
-- Spark total-order MIN semantics: a NULL distance (null/ragged subvector
-  or null element, vs that centroid's length) sorts LOWEST and therefore
-  WINS the argmin, NaN sorts HIGHEST and loses, ties break to the lowest
-  code;
-- rows of a subspace with no centroids disappear (inner-join semantics).
-"""
+"""Pins for the PQ argmin-L2 assign (vector._pq_assign) on a hand-built
+case where Spark's total-order MIN decides the answer: ties break to the
+lowest code, a NULL distance (ragged subvector vs every centroid) sorts
+lowest and therefore WINS the argmin, and rows of a subspace with no
+centroids disappear (inner-join semantics)."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators import vector as V
 from polars_numba_spark.operators.similarity import sumsq
-
-SF = "/root/testdata/sf0.001"
-
-
-def _embeddings(spark):
-    from polars_numba_spark.sources import load_table
-
-    return load_table(spark, "embeddings", SF)
-
-
-def _expr_assign(subs, cents, carry_vec, round_to):
-    """The pre-r15 expression spelling, kept verbatim for differentials."""
-    from polars_numba_spark.operators.similarity import dot as _dot_fast
-
-    dot = _dot_fast(F.col("subvec"), F.col("__cv"))
-    d2 = F.lit(-2.0) * dot + F.col("__cn2")
-    if round_to is not None:
-        d2 = F.round(d2, round_to)
-    scored = subs.join(F.broadcast(cents), "s").select(
-        "id", "s", "subvec", F.col("__code"), d2.alias("__d2")
-    )
-    aggs = [
-        F.min(F.struct(F.col("__d2"), F.col("__code").alias("code"))).alias(
-            "__best"
-        )
-    ]
-    if carry_vec:
-        aggs.append(F.any_value(F.col("subvec")).alias("subvec"))
-    out = scored.groupBy("id", "s").agg(*aggs)
-    cols = ["id", "s", F.col("__best.code").alias("code")]
-    if carry_vec:
-        cols.append("subvec")
-    return out.select(*cols)
 
 
 def _cents(spark, rows):
@@ -61,65 +17,6 @@ def _cents(spark, rows):
         spark.createDataFrame(rows, "s int, __code int, __cv array<double>")
         .withColumn("__cn2", sumsq(F.col("__cv")))
     )
-
-
-def _subs_with_dirt(spark):
-    base = V._pq_subvectors(
-        _embeddings(spark).limit(50), 4, "embedding", "vec_id"
-    )
-    dirt = spark.createDataFrame(
-        [
-            (900001, 0, None),                            # null subvec
-            (900002, 1, []),                              # empty (ragged)
-            (900003, 2, [1.0] * 5),                       # ragged vs dim/4
-            (900004, 3, [None if i == 2 else 0.5 for i in range(16)]),
-            (900005, 0, [float("nan")] * 16),
-            (900006, 1, [float("inf") if i == 0 else 0.25 for i in range(16)]),
-            (900007, 2, [0.0] * 16),
-        ],
-        "id long, s int, subvec array<double>",
-    )
-    return base.unionByName(dirt)
-
-
-@pytest.mark.parametrize("round_to", [None, 9])
-@pytest.mark.parametrize("carry_vec", [False, True])
-def test_pq_assign_kernel_matches_expression(spark, round_to, carry_vec):
-    subs = _subs_with_dirt(spark)
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    cents = _cents(
-        spark,
-        [
-            (s, c, rng.standard_normal(16).tolist())
-            for s in range(4)
-            for c in range(4)
-        ],
-    )
-
-    def key(rows):
-        out = {}
-        for r in rows:
-            if carry_vec:
-                v = (
-                    None
-                    if r["subvec"] is None
-                    # repr-keyed so NaN == NaN in the comparison
-                    else tuple(repr(x) for x in r["subvec"])
-                )
-            else:
-                v = ()
-            out[(r["id"], r["s"])] = (r["code"], v)
-        return out
-
-    exp = key(_expr_assign(subs, cents, carry_vec, round_to).collect())
-    got = key(
-        V._pq_assign_arrow(
-            subs, V._collect_pq_cents(cents), carry_vec, round_to
-        ).collect()
-    )
-    assert got == exp
 
 
 def test_pq_assign_kernel_ties_and_null_win_semantics(spark):
@@ -133,44 +30,10 @@ def test_pq_assign_kernel_ties_and_null_win_semantics(spark):
         "id long, s int, subvec array<double>",
     )
     cents = _cents(spark, [(0, 7, [2.0, 0.0]), (0, 5, [2.0, 0.0])])
-    exp = {
-        (r["id"], r["s"]): r["code"]
-        for r in _expr_assign(subs, cents, False, 9).collect()
-    }
     got = {
         (r["id"], r["s"]): r["code"]
-        for r in V._pq_assign_arrow(
-            subs, V._collect_pq_cents(cents), False, 9
-        ).collect()
+        for r in V._pq_assign(subs, cents, False, 9).collect()
     }
-    assert got == exp
-    assert got[(1, 0)] == 5          # tie -> lowest code
-    assert got[(2, 0)] == 5          # null d2 wins the MIN, lowest code
-    assert (3, 1) not in got         # inner-join drop
-
-
-def test_pq_encode_face_unchanged_by_kernel(spark, monkeypatch):
-    """End-to-end: portable train+encode codes identical under the kernel
-    vs the expression twin (the third-eye suite pins the maths; this pins
-    the swap). The kernel is default-OFF (measured rejection); forced on
-    here."""
-    monkeypatch.setenv("PNS_PQ_ASSIGN_ARROW", "1")
-    e = _embeddings(spark).limit(120)
-    books = V.pq_train_codebooks(e, m=4, k=8, iterations=2, round_to=9)
-    codes = {
-        (r["id"], r["s"]): r["code"]
-        for r in V.pq_encode(e, books, m=4, round_to=9).collect()
-    }
-    cents = books.select(
-        "s",
-        F.col("code").alias("__code"),
-        F.col("centroid").alias("__cv"),
-        F.col("cn2").alias("__cn2"),
-    )
-    expr = {
-        (r["id"], r["s"]): r["code"]
-        for r in _expr_assign(
-            V._pq_subvectors(e, 4, "embedding", "vec_id"), cents, False, 9
-        ).collect()
-    }
-    assert codes == expr
+    # tie -> lowest code; null d2 wins the MIN at the lowest code; (3, 1)
+    # is dropped by the inner join
+    assert got == {(1, 0): 5, (2, 0): 5}

@@ -342,13 +342,10 @@ corpus_strategy = st.lists(
 )
 
 
-@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    corpus=corpus_strategy,
-    threshold=st.sampled_from([0.5, 0.6, 0.7, 0.75, 0.8, 0.9, 0.95]),
-)
-@pytest.mark.soak  # r15 fast-tier trim (VERDICT r14 #2); >10s each
-def test_containment_join_complete_and_precise(spark, corpus, threshold):
+_thresholds = st.sampled_from([0.5, 0.6, 0.7, 0.75, 0.8, 0.9, 0.95])
+
+
+def _check_containment_complete_and_precise(spark, corpus, threshold):
     from polars_numba_spark.operators.dedup import containment_join
 
     df = spark.createDataFrame(
@@ -367,6 +364,21 @@ def test_containment_join_complete_and_precise(spark, corpus, threshold):
         if a != b and len(sets[a] & sets[b]) / len(sets[a]) >= threshold
     }
     assert got == brute
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(corpus=corpus_strategy, threshold=_thresholds)
+@pytest.mark.soak  # r15 fast-tier trim (VERDICT r14 #2); >10s each
+def test_containment_join_complete_and_precise(spark, corpus, threshold):
+    _check_containment_complete_and_precise(spark, corpus, threshold)
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(corpus=corpus_strategy, threshold=_thresholds)
+def test_containment_join_complete_and_precise_fast(spark, corpus, threshold):
+    """Default-tier twin of the soak sweep: same corpora and thresholds,
+    fewer examples."""
+    _check_containment_complete_and_precise(spark, corpus, threshold)
 
 
 @given(

@@ -3,8 +3,8 @@ the containment SSJoin derive the token/shingle sets several times per
 plan (signature explode + both verify sides; 5× in the SSJoin). The r15
 optimization materializes the tokenized corpus ONCE via a session-scoped
 checkpoint and shares it. These tests pin RESULT EQUALITY between the
-checkpointed and pure-lineage plans for every wired path — the knob may
-move work, never results."""
+checkpointed and pure-lineage plans for every wired path — the checkpoint
+may move work, never results."""
 
 from __future__ import annotations
 
@@ -33,21 +33,39 @@ def _sorted_rows(df):
     return [tuple(r) for r in df.orderBy(*df.columns).collect()]
 
 
+def _minhash_pairs(docs, shingle_n, toks):
+    """minhash_dedup_pairs' candidate + verify plan with an explicit
+    tokenized-corpus feed (``toks=None`` is the pure-lineage plan)."""
+    cands = D.minhash_lsh_candidates(
+        docs, "text", "doc_id", 16, 4, portable=True,
+        shingle_n=shingle_n, toks=toks,
+    )
+    return D.jaccard_pairs(
+        docs, cands, "text", "doc_id", prune_threshold=0.5,
+        shingle_n=shingle_n, toks=toks,
+    ).where(F.col("jaccard") >= 0.5)
+
+
 @pytest.mark.parametrize("shingle_n", [None, 8])
-def test_minhash_pairs_ckpt_matches_lineage(spark, docs, shingle_n, monkeypatch):
-    outs = []
-    for knob in ("0", "1"):
-        monkeypatch.setenv("PNS_MINHASH_TOKS_CKPT", knob)
-        outs.append(
-            _sorted_rows(
-                D.minhash_dedup_pairs(
-                    docs, num_hashes=16, bands=4, threshold=0.5,
-                    portable=True, shingle_n=shingle_n,
-                )
-            )
+def test_minhash_pairs_ckpt_matches_lineage(spark, docs, shingle_n):
+    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+
+    toks = session_scoped_checkpoint(
+        docs.select(
+            F.col("doc_id").alias("id"),
+            D._token_sets("text", shingle_n).alias("toks"),
+        ).withColumn("n_toks", F.size("toks"))
+    )
+    lineage = _sorted_rows(_minhash_pairs(docs, shingle_n, None))
+    assert _sorted_rows(_minhash_pairs(docs, shingle_n, toks)) == lineage
+    assert lineage  # non-degenerate: the dup cluster must pair up
+    # the public pipeline (which picks its plan from shingle_n) agrees
+    assert lineage == _sorted_rows(
+        D.minhash_dedup_pairs(
+            docs, num_hashes=16, bands=4, threshold=0.5,
+            portable=True, shingle_n=shingle_n,
         )
-    assert outs[0] == outs[1]
-    assert outs[0]  # non-degenerate: the dup cluster must pair up
+    )
 
 
 def test_banded_signatures_toks_feed_matches(spark, docs):

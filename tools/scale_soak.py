@@ -58,8 +58,8 @@ SOAK_QUERIES = [
     # semantic_dedup_pairs joined the soak set in round 11: the catalog
     # face now SELF-SCALES k (k=None -> k_for_corpus = ceil(sqrt n),
     # mirrored in the oracle by _K_SELF_SCALED), so soaking the face
-    # directly measures the production posture — see tools/run_r11_soaks.py
-    # and run_semdedup_soak (the original operator-level curve).
+    # directly measures the production posture — see SCALE.md's round-11
+    # soak and run_semdedup_soak (the original operator-level curve).
     "embedding_topk_bruteforce",
     "kernel_fold_event_cents",
     "kernel_scan_user_balance_cents",
