@@ -17,8 +17,9 @@ ranks match Spark's hash-for-hash.
 Scale shape: one iteration = one equi-join of the edge list against the
 rank vector plus one groupBy on the destination node — both shuffles key
 on node id, AQE sizes the exchanges, and the edge list is materialized
-once via tracked localCheckpoint so round N does not re-derive the graph
-construction N times (the same lineage trap connected_components pins).
+once via a pinned checkpoint (``plans.checkpoint.checkpoint_rounds``) so
+round N does not re-derive the graph construction N times (the same
+lineage trap connected_components pins).
 No driver-side state beyond the Python loop counter; no collect.
 """
 
@@ -45,78 +46,62 @@ def pagerank(
     convergence test: determinism and the unrolled SQL oracle both need
     the round count to be data-independent.
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e, e_ids = tracked_local_checkpoint(e)
+    with checkpoint_rounds() as ck:
+        e = ck.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        )
+        nodes = ck.pin(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        outdeg = e.groupBy(F.col("src").alias("node")).agg(
+            F.count(F.lit(1)).alias("outdeg")
+        )
+        # Pre-attach the out-degree to the edge list ONCE (r14): the loop used
+        # to join `ranks` against `e` and then against `outdeg` every
+        # iteration — two |nodes|-keyed shuffles of the rank vector per round
+        # where one suffices. outdeg is a static per-src property of the
+        # checkpointed edge set, so (src, dst, outdeg) is materialized before
+        # the loop and each iteration pays exactly one join + one aggregate.
+        # Arithmetic unchanged: the same round(rank / outdeg, 12) per edge.
+        e_deg = ck.pin(
+            e.join(outdeg, e.src == outdeg.node).select("src", "dst", "outdeg")
+        )
+        n_nodes = nodes.agg(F.count(F.lit(1)).alias("__n"))
 
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes, n_ids = tracked_local_checkpoint(nodes)
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    # Pre-attach the out-degree to the edge list ONCE (r14): the loop used
-    # to join `ranks` against `e` and then against `outdeg` every
-    # iteration — two |nodes|-keyed shuffles of the rank vector per round
-    # where one suffices. outdeg is a static per-src property of the
-    # checkpointed edge set, so (src, dst, outdeg) is materialized before
-    # the loop and each iteration pays exactly one join + one aggregate.
-    # Arithmetic unchanged: the same round(rank / outdeg, 12) per edge.
-    e_deg = e.join(outdeg, e.src == outdeg.node).select(
-        "src", "dst", "outdeg"
-    )
-    e_deg, ed_ids = tracked_local_checkpoint(e_deg)
-    release(spark, e_ids)  # the raw edge set is no longer read by the loop
-    n_nodes = nodes.agg(F.count(F.lit(1)).alias("__n"))
-
-    ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", F.round(F.lit(1.0) / F.col("__n"), 12).alias("rank")
-    )
-    rank_ids: set[int] = set()
-    for _ in range(iterations):
-        contribs = (
-            e_deg.join(ranks, e_deg.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.round(F.col("rank") / F.col("outdeg"), 12).alias("__c"),
+        ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
+            "node", F.round(F.lit(1.0) / F.col("__n"), 12).alias("rank")
+        )
+        for _ in range(iterations):
+            contribs = (
+                e_deg.join(ranks, e_deg.src == ranks.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    F.round(F.col("rank") / F.col("outdeg"), 12).alias("__c"),
+                )
             )
-        )
-        summed = contribs.groupBy("node").agg(
-            F.sum(F.col("__c").cast("decimal(28,14)")).alias("__s")
-        )
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "node",
-                F.round(
-                    F.lit(1.0 - damping) / F.col("__n")
-                    + F.lit(damping)
-                    * F.coalesce(F.col("__s").cast("double"), F.lit(0.0)),
-                    12,
-                ).alias("rank"),
+            summed = contribs.groupBy("node").agg(
+                F.sum(F.col("__c").cast("decimal(28,14)")).alias("__s")
             )
-        )
-        # truncate lineage per round: without this, round k's plan embeds
-        # k copies of the join tree and Catalyst analysis goes quadratic.
-        # The new checkpoint is EAGER, so the superseded round's blocks can
-        # be freed immediately (the block-manager leak checkpoint.py pins).
-        ranks, new_ids = tracked_local_checkpoint(ranks)
-        release(spark, rank_ids)
-        rank_ids = new_ids
-    # the returned frame reads only the FINAL rank blocks: graph-side
-    # checkpoints are free now; the final blocks are swept between queries
-    release(spark, ed_ids | n_ids)
-    register_session_scoped(rank_ids)
+            # truncate lineage per round: without this, round k's plan embeds
+            # k copies of the join tree and Catalyst analysis goes quadratic
+            ranks = ck.step(
+                "ranks",
+                nodes.join(summed, "node", "left")
+                .crossJoin(F.broadcast(n_nodes))
+                .select(
+                    "node",
+                    F.round(
+                        F.lit(1.0 - damping) / F.col("__n")
+                        + F.lit(damping)
+                        * F.coalesce(F.col("__s").cast("double"), F.lit(0.0)),
+                        12,
+                    ).alias("rank"),
+                ),
+            )
     return ranks
 
 
@@ -144,36 +129,27 @@ def bfs_hops(
     embed k join trees). ``max_hops`` is a fixed bound, not a convergence
     test, so the loop unrolls into a bounded recursive-CTE oracle.
     Integer hop arithmetic — nothing to round, every engine agrees."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    e, e_ids = tracked_local_checkpoint(e)
-
-    visited = seeds.select(
-        F.col(seed_col).alias("id"), F.lit(0).cast("int").alias("hops")
-    )
-    visited, v_ids = tracked_local_checkpoint(visited)
-    frontier = visited
-    for h in range(1, max_hops + 1):
-        nxt = (
-            e.join(frontier, e.u == frontier.id)
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .select("id", F.lit(h).cast("int").alias("hops"))
+    with checkpoint_rounds() as ck:
+        e = ck.pin(edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")))
+        visited = ck.step(
+            "visited",
+            seeds.select(
+                F.col(seed_col).alias("id"), F.lit(0).cast("int").alias("hops")
+            ),
         )
-        visited = visited.unionByName(nxt)
-        visited, new_ids = tracked_local_checkpoint(visited)
-        release(spark, v_ids)
-        v_ids = new_ids
-        frontier = visited.where(F.col("hops") == h)
-    release(spark, e_ids)
-    register_session_scoped(v_ids)
+        frontier = visited
+        for h in range(1, max_hops + 1):
+            nxt = (
+                e.join(frontier, e.u == frontier.id)
+                .select(F.col("v").alias("id"))
+                .distinct()
+                .join(visited.select("id"), "id", "left_anti")
+                .select("id", F.lit(h).cast("int").alias("hops"))
+            )
+            visited = ck.step("visited", visited.unionByName(nxt))
+            frontier = visited.where(F.col("hops") == h)
     return visited
 
 
@@ -204,64 +180,56 @@ def hits(
     both shuffles key on node id; the L1 total is a broadcast 1-row
     aggregate. The edge list is localCheckpointed once and reused by all
     2·iterations half-steps."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e, e_ids = tracked_local_checkpoint(e)
-
-    srcs = e.select("src").distinct()
-    n_src = srcs.agg(F.count(F.lit(1)).alias("__n"))
-    hubs = srcs.crossJoin(F.broadcast(n_src)).select(
-        "src", F.round(F.lit(1.0) / F.col("__n"), 12).alias("hub")
-    )
-    hub_ids: set[int] = set()
-    auth_ids: set[int] = set()
-    auths = None
-    for _ in range(iterations):
-        a_raw = (
-            e.join(hubs, "src")
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.round(F.col("hub"), 12).cast("decimal(28,14)")
-                ).alias("__ar")
+    with checkpoint_rounds() as ck:
+        e = ck.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        )
+        srcs = e.select("src").distinct()
+        n_src = srcs.agg(F.count(F.lit(1)).alias("__n"))
+        hubs = srcs.crossJoin(F.broadcast(n_src)).select(
+            "src", F.round(F.lit(1.0) / F.col("__n"), 12).alias("hub")
+        )
+        auths = None
+        for _ in range(iterations):
+            a_raw = (
+                e.join(hubs, "src")
+                .groupBy("dst")
+                .agg(
+                    F.sum(
+                        F.round(F.col("hub"), 12).cast("decimal(28,14)")
+                    ).alias("__ar")
+                )
             )
+            a_tot = a_raw.agg(F.sum("__ar").alias("__t"))
+            auths = ck.step(
+                "auths",
+                a_raw.crossJoin(F.broadcast(a_tot)).select(
+                    "dst",
+                    F.round(
+                        F.col("__ar").cast("double") / F.col("__t").cast("double"),
+                        12,
+                    ).alias("auth"),
+                ),
+            )
+            h_raw = (
+                e.join(auths, "dst")
+                .groupBy("src")
+                .agg(F.sum(F.col("auth").cast("decimal(28,14)")).alias("__hr"))
+            )
+            h_tot = h_raw.agg(F.sum("__hr").alias("__t"))
+            hubs = ck.step(
+                "hubs",
+                h_raw.crossJoin(F.broadcast(h_tot)).select(
+                    "src",
+                    F.round(
+                        F.col("__hr").cast("double") / F.col("__t").cast("double"),
+                        12,
+                    ).alias("hub"),
+                ),
+            )
+        return (
+            hubs.select(F.col("src").alias("node"), "hub"),
+            auths.select(F.col("dst").alias("node"), "auth"),
         )
-        a_tot = a_raw.agg(F.sum("__ar").alias("__t"))
-        auths = a_raw.crossJoin(F.broadcast(a_tot)).select(
-            "dst",
-            F.round(
-                F.col("__ar").cast("double") / F.col("__t").cast("double"),
-                12,
-            ).alias("auth"),
-        )
-        auths, new_a = tracked_local_checkpoint(auths)
-        release(spark, auth_ids)
-        auth_ids = new_a
-        h_raw = (
-            e.join(auths, "dst")
-            .groupBy("src")
-            .agg(F.sum(F.col("auth").cast("decimal(28,14)")).alias("__hr"))
-        )
-        h_tot = h_raw.agg(F.sum("__hr").alias("__t"))
-        hubs = h_raw.crossJoin(F.broadcast(h_tot)).select(
-            "src",
-            F.round(
-                F.col("__hr").cast("double") / F.col("__t").cast("double"),
-                12,
-            ).alias("hub"),
-        )
-        hubs, new_h = tracked_local_checkpoint(hubs)
-        release(spark, hub_ids)
-        hub_ids = new_h
-    release(spark, e_ids)
-    register_session_scoped(hub_ids | auth_ids)
-    return (
-        hubs.select(F.col("src").alias("node"), "hub"),
-        auths.select(F.col("dst").alias("node"), "auth"),
-    )

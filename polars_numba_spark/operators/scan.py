@@ -190,13 +190,9 @@ def _parallel_prefix_scan(
     # lazily by the RETURNED DataFrame, so they are registered session-
     # scoped and swept between queries by the bench/gate harness instead of
     # leaking for the session's lifetime (round-2 verdict hygiene item).
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
-    prepared, _ckpt_ids = tracked_local_checkpoint(prepared)
-    register_session_scoped(_ckpt_ids)
+    prepared = session_scoped_checkpoint(prepared)
     out_names = [*cols, *order_cols]
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -366,16 +366,13 @@ def winnowing_overlap_pairs(
     repo-wide interpreted-Generate rule).
 
     Returns (a_id, b_id, n_fp_a, n_fp_b, shared_fp, overlap)."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
-    fp_plan = winnowing_fingerprints(
-        df, text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
+    fp = session_scoped_checkpoint(
+        winnowing_fingerprints(
+            df, text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
+        )
     )
-    fp, fp_ids = tracked_local_checkpoint(fp_plan)
-    register_session_scoped(fp_ids)
     ex = fp.where(F.size("fingerprints") > 0).select(
         F.col("id").alias("doc_id"),
         F.size("fingerprints").alias("n_fp"),

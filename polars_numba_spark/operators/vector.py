@@ -386,13 +386,8 @@ def kmeans_iterations(
     loop — at corpus scale run a few iterations on a hash-sample, then
     assign the full corpus once.
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
-    spark = df.sparkSession
     seeds = (
         df.orderBy(id_col)
         .limit(k)
@@ -401,43 +396,36 @@ def kmeans_iterations(
             as_double(vec_col).alias("centroid"),
         )
     )
-    centroids, ids_cur = tracked_local_checkpoint(seeds)
-    ids_prev: set[int] = set()
-    assignments = None
-    for _ in range(iterations):
-        # One scored pass serves BOTH outputs: the assignment kernel
-        # (r14: _assign_nearest_arrow — the batch NumPy twin of the
-        # broadcast-crossJoin + struct-max argmax, bit-exact contract on
-        # that function) carries each vector through (__v), so the
-        # centroid update needs NO re-join of df against the assignments;
-        # the kernel also emits one row per vector directly, removing the
-        # per-iteration argmax aggregation exchange outright.
-        cid_type = centroids.select("label").schema.fields[0].dataType
-        cent_rows = _collect_centroid_rows(centroids, "label", "centroid")
-        carried = _assign_nearest_arrow(
-            df, cent_rows, vec_col, id_col, cid_type, carry_vec=True
-        )
-        if not cent_rows:  # empty corpus → empty seeds → empty rounds
-            carried = carried.where(F.lit(False))
-        assignments = carried.select(id_col, "assigned", "cosine_sim")
-        new_centroids, ids_new = tracked_local_checkpoint(
-            group_centroids(
-                carried.select(
-                    F.col("assigned").alias("label"),
-                    F.col("__v").alias(vec_col),
-                ),
-                vec_col,
-                "label",
-            ).select("label", "centroid")
-        )
-        # round i-1's centroid blocks were only reachable through the
-        # now-superseded assignments plan — free them; keep the last TWO
-        # rounds (returned `assignments` lazily reads its input centroids,
-        # returned `centroids` is the newest checkpoint)
-        release(spark, ids_prev)
-        ids_prev, ids_cur = ids_cur, ids_new
-        centroids = new_centroids
-    register_session_scoped(ids_prev | ids_cur)
+    with checkpoint_rounds() as ck:
+        centroids = ck.step("centroids", seeds)
+        assignments = None
+        for _ in range(iterations):
+            # One scored pass serves BOTH outputs: the assignment kernel
+            # (r14: _assign_nearest_arrow — the batch NumPy twin of the
+            # broadcast-crossJoin + struct-max argmax, bit-exact contract on
+            # that function) carries each vector through (__v), so the
+            # centroid update needs NO re-join of df against the assignments;
+            # the kernel also emits one row per vector directly, removing the
+            # per-iteration argmax aggregation exchange outright.
+            cid_type = centroids.select("label").schema.fields[0].dataType
+            cent_rows = _collect_centroid_rows(centroids, "label", "centroid")
+            carried = _assign_nearest_arrow(
+                df, cent_rows, vec_col, id_col, cid_type, carry_vec=True
+            )
+            if not cent_rows:  # empty corpus → empty seeds → empty rounds
+                carried = carried.where(F.lit(False))
+            assignments = carried.select(id_col, "assigned", "cosine_sim")
+            centroids = ck.step(
+                "centroids",
+                group_centroids(
+                    carried.select(
+                        F.col("assigned").alias("label"),
+                        F.col("__v").alias(vec_col),
+                    ),
+                    vec_col,
+                    "label",
+                ).select("label", "centroid"),
+            )
     return assignments, centroids
 
 
@@ -1005,13 +993,8 @@ def pq_train_codebooks(
     unroll reproduces the codebooks and codes bit-exactly. Production
     training stays unrounded (``None``).
     """
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
-    spark = df.sparkSession
     subs = _pq_subvectors(df, m, vec_col, id_col)
     seeds = (
         subs.withColumn(
@@ -1026,45 +1009,41 @@ def pq_train_codebooks(
         )
         .withColumn("__cn2", sumsq(F.col("__cv")))
     )
-    cents, ids_cur = tracked_local_checkpoint(seeds)
-    ids_prev: set[int] = set()
-    for _ in range(iterations):
-        assigned = _pq_assign(subs, cents, carry_vec=True, round_to=round_to)
-        sum_x = (
-            F.sum("x")
-            if round_to is None
-            else F.sum(F.col("x").cast("decimal(28,12)")).cast("double")
-        )
-        per_dim = (
-            assigned.select(
-                "s", "code", F.posexplode("subvec").alias("dim", "x")
+    with checkpoint_rounds() as ck:
+        cents = ck.step("centroids", seeds)
+        for _ in range(iterations):
+            assigned = _pq_assign(subs, cents, carry_vec=True, round_to=round_to)
+            sum_x = (
+                F.sum("x")
+                if round_to is None
+                else F.sum(F.col("x").cast("decimal(28,12)")).cast("double")
             )
-            .groupBy("s", "code", "dim")
-            .agg(sum_x.alias("__sx"), F.count("x").alias("__n"))
-        )
-        mean = F.col("__sx") / F.col("__n")
-        if round_to is not None:
-            mean = F.round(mean, round_to)
-        new_cents = (
-            per_dim.withColumn("__mean", mean)
-            .groupBy("s", "code")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "__mean"))
-                ).alias("__dm")
+            per_dim = (
+                assigned.select(
+                    "s", "code", F.posexplode("subvec").alias("dim", "x")
+                )
+                .groupBy("s", "code", "dim")
+                .agg(sum_x.alias("__sx"), F.count("x").alias("__n"))
             )
-            .select(
-                "s",
-                F.col("code").alias("__code"),
-                F.transform(F.col("__dm"), lambda e: e["__mean"]).alias("__cv"),
+            mean = F.col("__sx") / F.col("__n")
+            if round_to is not None:
+                mean = F.round(mean, round_to)
+            new_cents = (
+                per_dim.withColumn("__mean", mean)
+                .groupBy("s", "code")
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("dim", "__mean"))
+                    ).alias("__dm")
+                )
+                .select(
+                    "s",
+                    F.col("code").alias("__code"),
+                    F.transform(F.col("__dm"), lambda e: e["__mean"]).alias("__cv"),
+                )
+                .withColumn("__cn2", sumsq(F.col("__cv")))
             )
-            .withColumn("__cn2", sumsq(F.col("__cv")))
-        )
-        cents_new, ids_new = tracked_local_checkpoint(new_cents)
-        release(spark, ids_prev)
-        ids_prev, ids_cur = ids_cur, ids_new
-        cents = cents_new
-    register_session_scoped(ids_prev | ids_cur)
+            cents = ck.step("centroids", new_cents)
     return cents.select(
         "s",
         F.col("__code").alias("code"),

@@ -1,16 +1,32 @@
-"""Tracked eager local checkpoints: materialize-and-release for iterative
-DataFrame algorithms.
+"""Eager checkpoints with an owned lifetime, for iterative DataFrame
+algorithms and for operators whose result reads materialized rows.
 
 ``DataFrame.localCheckpoint(eager=True)`` truncates lineage by persisting
-the materialized rows as executor block-manager RDD blocks — but Spark
-keeps those blocks until the session dies. An iterative algorithm that
-checkpoints every round (connected components, parallel prefix scan)
-therefore leaks one working-set copy PER ROUND into the block manager; at
-cluster scale that is steady memory-pressure growth, and in a long bench
-session it degrades every later query (the round-2 driver-bench
-regression). These helpers pair each checkpoint with the block ids it
-created so superseded rounds can be freed the moment the next round is
-materialized.
+the materialized rows as executor block-manager RDD blocks, and Spark
+keeps those blocks until the session dies. A loop that checkpoints every
+round (connected components, PageRank, BFS, HITS, k-means, PQ training,
+label propagation) would leak one working-set copy per round. Every such
+loop runs inside :func:`checkpoint_rounds`, which owns the policy::
+
+    with checkpoint_rounds() as ck:
+        edges = ck.pin(edges)                 # freed when the block exits
+        for _ in range(n):
+            labels = ck.step("labels", ...)   # frees the previous "labels"
+            labels, n_changed = ck.step("labels", ..., observe=F.count_if(...))
+
+- ``pin`` checkpoints a frame the loop reads every round; it is released
+  when the block exits.
+- ``step`` checkpoints the next round and frees the superseded round of
+  the same name. ``observe`` is an aggregate attached with
+  ``DataFrame.observe``; its value comes back from the checkpoint job
+  itself, so a convergence test costs no second job.
+- On a normal exit the newest checkpoint of each name is registered
+  session-scoped (the returned frame still reads it); on an exception
+  everything is released.
+
+:func:`session_scoped_checkpoint` is the one-shot form for a single frame
+the caller's result reads lazily. Session-scoped blocks are swept between
+queries by :func:`release_session_checkpoints` (bench and test harnesses).
 
 Only public-ish JVM surface is touched (``JavaSparkContext.
 getPersistentRDDs`` via the standard py4j gateway — the same map the Spark
@@ -19,13 +35,16 @@ UI's Storage tab renders).
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, SparkSession
+from contextlib import contextmanager
+from typing import Iterator
 
-# Checkpoint ids created for DataFrames whose lifetime must extend past the
-# creating function (e.g. the parallel prefix scan's partition-stable input,
-# which the RETURNED DataFrame still reads). Bench/test harnesses call
-# release_session_checkpoints() between queries to sweep these.
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+# Checkpoint ids whose blocks a RETURNED DataFrame still reads (e.g. the
+# parallel prefix scan's partition-stable input, a loop's final round).
+# Bench/test harnesses call release_session_checkpoints() between queries
+# to sweep these.
 _SESSION_SCOPED: list[int] = []
 
 # Plan-audit capture (r14): an eager checkpoint TRUNCATES lineage, so any
@@ -123,7 +142,9 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
 def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """Eagerly checkpoint ``df``; return (checkpointed df, the NEW
     persistent-RDD ids backing it) so the caller can free them with
-    :func:`release` once the checkpoint is superseded. Default is
+    :func:`release` once the checkpoint is superseded (callers outside
+    this module go through :func:`checkpoint_rounds` or
+    :func:`session_scoped_checkpoint`). Default is
     ``localCheckpoint`` (executor blocks, fast, non-replicated);
     ``PNS_CHECKPOINT_MODE=reliable`` swaps in a reliable checkpoint for
     cluster deployments (see :func:`_checkpoint_mode`) — the id-tracking
@@ -161,10 +182,53 @@ def release(spark: SparkSession, ids: set[int] | list[int]) -> None:
             rdd.unpersist()
 
 
-def register_session_scoped(ids: set[int] | list[int]) -> None:
-    """Record checkpoint ids whose blocks the caller's RETURNED DataFrame
-    still reads — to be swept between queries, not at function exit."""
-    _SESSION_SCOPED.extend(ids)
+class _Rounds:
+    """The handle :func:`checkpoint_rounds` yields; see the module doc."""
+
+    def __init__(self) -> None:
+        self._spark: SparkSession | None = None
+        self._pinned: set[int] = set()
+        self._steps: dict[str, set[int]] = {}
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Eager checkpoint released when the block exits."""
+        self._spark = df.sparkSession
+        out, ids = tracked_local_checkpoint(df)
+        self._pinned |= ids
+        return out
+
+    def step(self, name: str, df: DataFrame, observe: Column | None = None):
+        """Eager checkpoint that supersedes the previous one under ``name``
+        (freed once this one is materialized). With ``observe`` (an
+        aggregate Column) return ``(frame, value)``: the value comes from
+        the checkpoint job, and NULL (an empty frame) reads as 0."""
+        self._spark = df.sparkSession
+        obs = Observation() if observe is not None else None
+        if obs is not None:
+            df = df.observe(obs, observe.alias("v"))
+        out, ids = tracked_local_checkpoint(df)
+        release(self._spark, self._steps.get(name, set()))
+        self._steps[name] = ids
+        if obs is None:
+            return out
+        return out, obs.get["v"] or 0
+
+
+@contextmanager
+def checkpoint_rounds() -> Iterator[_Rounds]:
+    """Scope for an iterative algorithm's checkpoints (module doc): pinned
+    frames are released at exit, the newest ``step`` of each name is
+    registered session-scoped, and an exception releases everything."""
+    ck = _Rounds()
+    try:
+        yield ck
+    except BaseException:
+        if ck._spark is not None:
+            release(ck._spark, ck._pinned.union(*ck._steps.values()))
+        raise
+    if ck._spark is not None:
+        release(ck._spark, ck._pinned)
+        _SESSION_SCOPED.extend(set().union(*ck._steps.values()))
 
 
 def session_scoped_checkpoint(df: DataFrame) -> DataFrame:

@@ -1296,43 +1296,39 @@ def customer_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge⋈label join + one (node, label) count + one per-node argmax
     window, all keyed on node id; the label frame is localCheckpointed
     per round (the components-loop lineage pin)."""
-    from polars_numba_spark.plans.checkpoint import (
-        register_session_scoped,
-        release,
-        tracked_local_checkpoint,
-    )
+    from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
     c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") < 1500)
     pairs = fuzzy_name_pairs(c).select(
         F.col("a_key").alias("u"), F.col("b_key").alias("v")
     )
-    und = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    und, e_ids = tracked_local_checkpoint(und)
-    lab = c.select(
-        F.col("c_custkey").alias("id"), F.col("c_custkey").alias("lab")
-    )
-    lab, l_ids = tracked_local_checkpoint(lab)
-    for _ in range(3):
-        msgs = und.join(
-            lab.select(F.col("id").alias("u"), "lab"), "u"
-        ).select(F.col("v").alias("id"), "lab")
-        counts = msgs.groupBy("id", "lab").agg(F.count(F.lit(1)).alias("c"))
-        wv = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("lab"))
-        best = (
-            counts.withColumn("rn", F.row_number().over(wv))
-            .where(F.col("rn") == 1)
-            .select("id", F.col("lab").alias("blab"))
+    with checkpoint_rounds() as ck:
+        und = ck.pin(
+            pairs.unionByName(
+                pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
         )
-        lab = lab.join(best, "id", "left").select(
-            "id", F.coalesce(F.col("blab"), F.col("lab")).alias("lab")
+        lab = ck.step(
+            "labels",
+            c.select(F.col("c_custkey").alias("id"), F.col("c_custkey").alias("lab")),
         )
-        lab, new_ids = tracked_local_checkpoint(lab)
-        release(spark, l_ids)
-        l_ids = new_ids
-    release(spark, e_ids)
-    register_session_scoped(l_ids)
+        for _ in range(3):
+            msgs = und.join(
+                lab.select(F.col("id").alias("u"), "lab"), "u"
+            ).select(F.col("v").alias("id"), "lab")
+            counts = msgs.groupBy("id", "lab").agg(F.count(F.lit(1)).alias("c"))
+            wv = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("lab"))
+            best = (
+                counts.withColumn("rn", F.row_number().over(wv))
+                .where(F.col("rn") == 1)
+                .select("id", F.col("lab").alias("blab"))
+            )
+            lab = ck.step(
+                "labels",
+                lab.join(best, "id", "left").select(
+                    "id", F.coalesce(F.col("blab"), F.col("lab")).alias("lab")
+                ),
+            )
     return lab.select("id", F.col("lab").alias("community"))
 
 

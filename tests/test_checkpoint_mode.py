@@ -87,3 +87,21 @@ def test_checkpoint_id_read_is_checked_against_persistent_rdds(spark):
         CK._checkpoint_rdd_ids(rdd_frame)
     with pytest.raises(RuntimeError, match="_checkpoint_rdd_ids.*not a LogicalRDD"):
         CK._checkpoint_rdd_ids(spark.range(3))
+
+
+def test_reliable_mode_components_match_local(spark, monkeypatch, tmp_path):
+    """connected_components' convergence observation is filled by the
+    reliable checkpoint job exactly as by the local one: same labels on
+    the long-chain graph."""
+    from polars_numba_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "a_id long, b_id long"
+    )
+    monkeypatch.delenv("PNS_CHECKPOINT_MODE", raising=False)
+    local = sorted(connected_components(edges).collect())
+    monkeypatch.setenv("PNS_CHECKPOINT_MODE", "reliable")
+    monkeypatch.setenv("PNS_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    reliable = sorted(connected_components(edges).collect())
+    assert reliable == local
+    assert {r["component"] for r in local} == {0} and len(local) == 13

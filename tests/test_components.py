@@ -58,14 +58,45 @@ def test_keep_list_on_real_near_dups(spark):
     assert all(k for i, (k, c) in rows.items() if c == i)
 
 
-def test_components_raises_on_iteration_cap(spark):
-    import pytest
+def test_components_convergence_runs_no_count_job(spark, monkeypatch):
+    """The changed-label count comes back from each round's checkpoint job
+    (an observation), not from a second DataFrame.count job per round."""
+    def no_count(self):
+        raise AssertionError("connected_components called DataFrame.count")
 
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "a_id long, b_id long")
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is the
+    # abstract base it overrides count on)
+    monkeypatch.setattr(type(edges), "count", no_count)
+    comps = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    assert comps == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+
+
+def test_components_empty_edges_return_empty(spark):
+    """No edges → no labels; the observed changed count is NULL on an empty
+    round and must read as converged, not raise."""
+    edges = spark.createDataFrame([], "a_id long, b_id long")
+    out = connected_components(edges)
+    assert out.columns == ["id", "component"]
+    assert out.collect() == []
+
+
+def test_components_raises_on_iteration_cap(spark):
+    """Hitting the cap raises, and leaves no blocks behind: the pinned edge
+    set and the last label round are released before the error escapes."""
+    from polars_numba_spark.plans.checkpoint import (
+        _persistent_ids,
+        release_session_checkpoints,
+    )
+
+    release_session_checkpoints(spark)
+    before = _persistent_ids(spark)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "a_id long, b_id long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iterations=3)
+    assert _persistent_ids(spark) - before == set()
 
 
 def test_star_keeplist_components_equal_clique_components(spark):

@@ -1416,13 +1416,82 @@ def test_pagerank_star_graph_invariants(spark):
     assert out == out2
 
 
-def test_pagerank_releases_checkpoint_blocks(spark):
-    """PageRank must not leak block-manager blocks: superseded per-round
-    checkpoints are freed during the run, graph-side checkpoints at return,
-    and the final rank blocks are session-scoped (swept between queries by
-    the bench/gate harness) — the iterative-algorithm leak checkpoint.py
-    documents."""
+def _ring_edges(spark, a, b):
+    """A 5-node ring: every loop below runs more than one round on it."""
+    return spark.createDataFrame(
+        [(i, (i + 1) % 5) for i in range(5)] + [((i + 1) % 5, i) for i in range(5)],
+        f"{a} long, {b} long",
+    )
+
+
+def _loop_pagerank(spark):
     from polars_numba_spark.operators.graphrank import pagerank
+
+    return [pagerank(_ring_edges(spark, "src", "dst"), iterations=3)], 1
+
+
+def _loop_bfs_hops(spark):
+    from polars_numba_spark.operators.graphrank import bfs_hops
+
+    seeds = spark.createDataFrame([(1,)], "id long")
+    return [bfs_hops(_ring_edges(spark, "src", "dst"), seeds, max_hops=3)], 1
+
+
+def _loop_hits(spark):
+    from polars_numba_spark.operators.graphrank import hits
+
+    # the final hubs round and the final auths round
+    return list(hits(_ring_edges(spark, "src", "dst"), iterations=2)), 2
+
+
+def _loop_connected_components(spark):
+    return [D.connected_components(_ring_edges(spark, "a_id", "b_id"))], 1
+
+
+def _vectors(spark):
+    rows = [(i, [float(i % 3), float(i % 5), 1.0 + i / 10]) for i in range(12)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _loop_kmeans_iterations(spark):
+    from polars_numba_spark.operators.vector import kmeans_iterations
+
+    # one centroid round remains: `assignments` reads the centroid rows
+    # collected to the driver, not the superseded round's checkpoint
+    return list(kmeans_iterations(_vectors(spark), k=3, iterations=3)), 1
+
+
+def _loop_pq_train_codebooks(spark):
+    from polars_numba_spark.operators.vector import pq_train_codebooks
+
+    return [pq_train_codebooks(_vectors(spark), m=1, k=2, iterations=3)], 1
+
+
+def _loop_label_propagation(spark):
+    from test_plans import q
+
+    return [q(spark, "customer_label_propagation")], 1
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _loop_pagerank,
+        _loop_bfs_hops,
+        _loop_hits,
+        _loop_connected_components,
+        _loop_kmeans_iterations,
+        _loop_pq_train_codebooks,
+        _loop_label_propagation,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_loop_"),
+)
+def test_loop_releases_checkpoint_blocks(spark, build):
+    """Every checkpoint loop frees superseded rounds and its pinned inputs
+    before it returns: while the result is live only the final round's
+    blocks persist, and release_session_checkpoints (the bench/gate sweep
+    between queries) frees those too — the iterative-algorithm leak
+    checkpoint.py documents."""
     from polars_numba_spark.plans.checkpoint import (
         _persistent_ids,
         release_session_checkpoints,
@@ -1430,14 +1499,10 @@ def test_pagerank_releases_checkpoint_blocks(spark):
 
     release_session_checkpoints(spark)
     before = _persistent_ids(spark)
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")], "src string, dst string"
-    )
-    out = pagerank(edges, iterations=3)
-    assert out.count() == 3
-    mid = _persistent_ids(spark) - before
-    # only the final rank checkpoint may remain while the result is live
-    assert len(mid) <= 2, mid
+    results, n_final = build(spark)
+    for df in results:
+        assert df.collect()
+    assert len(_persistent_ids(spark) - before) == n_final
     release_session_checkpoints(spark)
     assert _persistent_ids(spark) - before == set()
 
