@@ -14,8 +14,11 @@ notes), built on Spark's execution model:
 - whole-frame operators run as a single ordered Arrow stream on an executor
   (``mapInArrow``) — the fold is inherently sequential, Spark provides the
   scan+filter+pushdown around it;
-- grouped operators run as hash-partitioned ``applyInPandas`` — one ordered
-  kernel call per group, shuffle planned by Catalyst;
+- grouped operators shuffle on the keys (planned by Catalyst), sort within
+  partitions and run one segmented ``mapInArrow`` driver: group boundaries
+  by change detection over the Arrow key columns, one ordered kernel call
+  per group, accumulators carried across batches. NaN is a value, not null
+  (the reference's Polars rule), in both kernel input and group keys;
 - associative step functions get a declarative fast path (native aggregates /
   window frames) that stays entirely JVM-side.
 

@@ -5,39 +5,9 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from polars_numba_spark.dtypes import spark_type_to_numpy
-
-
-def group_boundaries(pdf: "pd.DataFrame", keys: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
-    """(starts, ends) of contiguous key groups in a key-sorted batch.
-
-    Null-aware: two adjacent null keys belong to the SAME group (Spark's
-    groupBy semantics — null is one group), which naive ``!=`` change
-    detection gets wrong because NaN != NaN.
-    """
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
-    for k in keys:
-        s = pdf[k]
-        prev = s.shift()
-        neq = s.ne(prev) & ~(s.isna() & prev.isna())
-        change |= neq.to_numpy(dtype=bool)
-    change[0] = True
-    starts = np.flatnonzero(change)
-    return starts, np.append(starts[1:], n)
-
-
-def key_tuple(pdf: "pd.DataFrame", keys: Sequence[str], row: int) -> tuple:
-    """Normalized key tuple at a row position: NaN/NaT → None so tuple
-    equality works across batch boundaries."""
-    out = []
-    for k in keys:
-        v = pdf[k].iloc[row]
-        out.append(None if pd.isna(v) else v)
-    return tuple(out)
 
 
 def ensure_event_time(df: DataFrame, time_col: str) -> DataFrame:

@@ -6,12 +6,14 @@ Reference semantics being reproduced
 - ``collect_fold`` (`:312-355`): fold the whole frame to ONE Python value,
   streaming in batches, accumulator threaded across batch boundaries. Rows
   with a null in any selected column are dropped *before* folding (`:339`,
-  docstring `:332`, tested `tests/test_collect_fold.py:41-56`).
+  docstring `:332`, tested `tests/test_collect_fold.py:41-56`). NaN is a
+  value, not null: a NaN row is folded (the Polars rule).
 - ``fold`` expression (`:358-405`): the same reduction usable per-group
   inside an aggregation context (`examples_fold.py:87-97`). Here that is
-  :func:`grouped_fold` — a hash-partitioned ``applyInPandas`` with an
-  explicit intra-group sort (Polars frames are ordered; Spark DataFrames are
-  not, so order is a parameter, not an assumption).
+  :func:`grouped_fold` — a hash partition on the keys, an explicit
+  intra-group sort (Polars frames are ordered; Spark DataFrames are not, so
+  order is a parameter, not an assumption) and the segmented Arrow driver
+  of ``_segmented``.
 
 The step function need NOT be associative (the credit-card example,
 `examples_fold.py:47-75`, rejects purchases based on running state — no
@@ -19,8 +21,10 @@ partial-aggregation plan can compute it), which dictates the physical
 strategy:
 
 - **grouped fold**: parallel across groups (shuffle on keys, Catalyst-planned),
-  sequential within each group — exactly the per-group callback structure of
-  the reference's expression fold.
+  sequential within each group. One ``mapInArrow`` pass walks the sorted
+  batches, finds group boundaries by change detection over the Arrow key
+  columns and carries the open group's accumulator across batches; the
+  single-spec, multi-spec and ``agg_with_fold`` forms all run it.
 - **global fold**: logically a single ordered stream. We run it as ONE
   executor task over Arrow batches (``mapInArrow`` on a single partition),
   accumulator threaded across batches inside the generator — the Spark
@@ -32,30 +36,24 @@ strategy:
 
 from __future__ import annotations
 
+import operator
 import pickle
+from functools import reduce
 from typing import Any, Callable, Iterator, Sequence
 
-import numpy as np
 import pyarrow as pa
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import functions as F
 
 from polars_numba_spark._arrow import column_to_numpy
-from polars_numba_spark.dtypes import (
-    SizedArray,
-    normalize_spark_type,
-    result_dtype_and_shape,
-)
 from polars_numba_spark.kernels import compile_step_function, get_folder
 from polars_numba_spark.operators._prep import (
     as_list,
     frame_order_select,
-    group_boundaries,
     input_numpy_dtypes,
-    key_tuple,
     resolve_input_columns,
 )
+from polars_numba_spark.operators._segmented import grouped_pass
 
 
 def _single_ordered_stream(df: DataFrame, order_by: list[str]) -> DataFrame:
@@ -90,7 +88,8 @@ def collect_fold(
     a fresh file scan); the fold itself runs on an executor, only the final
     accumulator (pickled, one row) reaches the driver.
 
-    - Null rows (any selected column) are dropped before folding (ref `:339`).
+    - Null rows (any selected column) are dropped before folding (ref `:339`);
+      NaN rows are folded.
     - ``extra_args`` are passed positionally between the accumulator and the
       column values (ref `:316,376-379`).
     - ``column_names=None`` binds ALL frame columns positionally
@@ -111,7 +110,10 @@ def collect_fold(
     acc0 = initial_accumulator
     dtype_list = [np_dtypes[c] for c in cols]
 
-    prepared = frame_order_select(df, cols, order_cols).na.drop(subset=cols)
+    # NaN is a value: only nulls drop (``na.drop`` would drop NaN too)
+    prepared = frame_order_select(df, cols, order_cols).where(
+        reduce(operator.and_, [F.col(c).isNotNull() for c in cols])
+    )
     if combine is None:
         prepared = _single_ordered_stream(prepared, order_cols)
     elif order_cols:
@@ -124,7 +126,7 @@ def collect_fold(
         prepared = prepared.repartitionByRange(*order_cols).sortWithinPartitions(
             *order_cols
         )
-    # Catalyst still sees select + na.drop declaratively → column pruning and
+    # Catalyst still sees select + isNotNull declaratively → column pruning and
     # IsNotNull pushdown reach the parquet scan before the stream collapses.
 
     def fold_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -182,18 +184,21 @@ def grouped_fold(
     Parity: ref expression ``fold`` `__init__.py:358-405` used inside
     ``group_by().agg(...)`` (`examples_fold.py:87-97`). Multi-column input is
     explicit here (``columns=[...]``) instead of the reference's
-    ``pl.struct()`` packing (`:370-372`) — inside ``applyInPandas`` the
-    columns arrive separately anyway.
+    ``pl.struct()`` packing (`:370-372`) — in an Arrow batch the columns
+    arrive separately anyway. This is the one-spec call of
+    :func:`grouped_multi_fold`, so ``result_name`` may not name a key, order
+    or input column.
 
     - Null rows (any selected column) are dropped per group before folding
-      (ref `:391`, tested `tests/test_expr_fold.py:32-46`).
+      (ref `:391`, tested `tests/test_expr_fold.py:32-46`); NaN rows are
+      folded. A NaN key and a null key are two groups, as in ``groupBy``.
     - The result is cast to ``return_dtype`` (ref `:400-405`); a tuple
       accumulator with ``return_dtype=SizedArray(t, k)`` yields an
       ``array<t>`` of length k (ref `:673-679`).
 
     Scale notes: the shuffle is on the group keys (Catalyst hash partition);
-    each group must fit one Python worker's memory — inherent to
-    ``applyInPandas``. For skewed keys, pre-salt + two-level fold only works
+    a group streams through its worker batch by batch, but one worker folds
+    it sequentially. For skewed keys, pre-salt + two-level fold only works
     for decomposable steps — declare one with ``combine=``; for
     non-associative steps skew is a data-model problem, documented, not
     hidden.
@@ -212,9 +217,6 @@ def grouped_fold(
     and the accumulator to survive the cast to ``return_dtype`` between
     levels (numeric/array accumulators do).
     """
-    from pyspark.sql import functions as F
-
-    step = compile_step_function(function)
     keys = as_list(group_by)
     if not keys:
         raise ValueError("group_by must name at least one column")
@@ -275,88 +277,9 @@ def grouped_fold(
                     columns=["__p"],
                     result_name=result_name,
                 )
-    np_dtypes = input_numpy_dtypes(df, cols)
-    folder = get_folder(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    dtype_list = [np_dtypes[c] for c in cols]
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
-
-    key_fields = [f for f in df.schema.fields if f.name in keys]
-    if isinstance(return_dtype, SizedArray):
-        res_field = T.StructField(result_name, return_dtype.spark_type())
-    else:
-        res_field = T.StructField(result_name, normalize_spark_type(return_dtype))
-    out_schema = T.StructType(key_fields + [res_field])
-
-    def cast_result(acc: Any) -> Any:
-        # Cast via a NumPy buffer in the declared dtype — assignment performs
-        # the same cast the reference applies when building the result Series
-        # with dtype=return_dtype (ref `:733`, test `test_collect_scan.py:75-92`).
-        buf = np.empty((1,) + res_shape, dtype=res_np_dtype)
-        buf[0] = acc
-        if res_shape:
-            return buf[0].tolist()
-        return buf[0].item() if res_np_dtype.kind in "biuf" else buf[0]
-
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Rows arrive grouped (partitioned by keys, sorted by keys+order), so
-        # groups are contiguous. Group boundaries are found with NumPy change
-        # detection on the key columns — no pandas groupby, no per-group
-        # frames; the kernel runs on array slices. Only the LAST group of a
-        # batch can continue into the next batch — its accumulator is carried
-        # instead of emitted.
-        open_key: tuple | None = None
-        open_acc: Any = None
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            # fold null rule (ref `:339`): rows with a null in any selected
-            # column are dropped — but only the ROWS, not their group: a
-            # group that is entirely null still yields acc0. So boundaries
-            # are detected on the full batch and nulls filtered per slice.
-            mask = np.zeros(n, dtype=bool)
-            for c in cols:
-                mask |= pdf[c].isna().to_numpy()
-            valid = ~mask
-            data_arrays = [
-                pdf[c].fillna(0).to_numpy().astype(dtype_list[i], copy=False)
-                for i, c in enumerate(cols)
-            ]
-            starts, ends = group_boundaries(pdf, keys)
-            out_keys: list[tuple] = []
-            out_vals: list[Any] = []
-            for s, e in zip(starts, ends):
-                key = key_tuple(pdf, keys, s)
-                acc = open_acc if key == open_key else acc0
-                v = valid[s:e]
-                if v.all():
-                    acc = folder(step, acc, extra, *[a[s:e] for a in data_arrays])
-                elif v.any():
-                    acc = folder(step, acc, extra, *[a[s:e][v] for a in data_arrays])
-                if open_key is not None and key != open_key:
-                    out_keys.append(open_key)
-                    out_vals.append(cast_result(open_acc))
-                open_key, open_acc = key, acc
-            if out_keys:
-                data = {k: [kk[i] for kk in out_keys] for i, k in enumerate(keys)}
-                data[result_name] = out_vals
-                yield pd.DataFrame(data)
-        if open_key is not None:
-            data = {k: [open_key[i]] for i, k in enumerate(keys)}
-            data[result_name] = [cast_result(open_acc)]
-            yield pd.DataFrame(data)
-
-    # One shuffle on the keys + partition-local sort; Python is crossed once
-    # per Arrow batch (not once per group — with millions of small groups the
-    # per-group applyInPandas overhead dominates the kernel cost).
-    prepared = (
-        frame_order_select(df, keys, cols, order_cols)
-        .repartition(*keys)
-        .sortWithinPartitions(*keys, *order_cols)
-    )
-    return prepared.mapInPandas(fold_partition, schema=out_schema)
+    spec = dict(function=function, initial_accumulator=initial_accumulator,
+                return_dtype=return_dtype, columns=cols, extra_args=extra_args)
+    return grouped_multi_fold(df, keys, {result_name: spec}, order_by=order_by)
 
 
 def grouped_multi_fold(
@@ -366,7 +289,7 @@ def grouped_multi_fold(
     order_by: str | Sequence[str] | None = None,
 ) -> DataFrame:
     """Several independent folds over the SAME keys and ordering, executed
-    in ONE shuffle + partition-local sort + ``mapInPandas`` pass — one row
+    in ONE shuffle + partition-local sort + ``mapInArrow`` pass — one row
     per group carrying every fold's result.
 
     The fused form of N :func:`grouped_fold` calls: data is shuffled and
@@ -375,126 +298,10 @@ def grouped_multi_fold(
     null rule is preserved exactly). Specs are ``name → {function,
     initial_accumulator, return_dtype, columns, extra_args}``; ``order_by``
     is shared (folds needing different orderings need different sorts —
-    use separate :func:`grouped_fold` calls).
+    use separate :func:`grouped_fold` calls). A result name may not name a
+    key, order or input column.
     """
-    keys = as_list(group_by)
-    if not keys:
-        raise ValueError("group_by must name at least one column")
-    if not specs:
-        raise ValueError("specs must contain at least one fold")
-    order_cols = as_list(order_by)
-    names = list(specs)
-
-    compiled: dict[str, dict] = {}
-    all_cols: list[str] = []
-    for name, spec in specs.items():
-        cols = resolve_input_columns(
-            df, spec.get("columns"), exclude=[*keys, *order_cols]
-        )
-        np_dtypes = input_numpy_dtypes(df, cols)
-        rd = spec["return_dtype"]
-        res_np, res_shape = result_dtype_and_shape(rd)
-        compiled[name] = dict(
-            step=compile_step_function(spec["function"]),
-            cols=cols,
-            dtypes=[np_dtypes[c] for c in cols],
-            folder=get_folder(len(cols)),
-            extra=tuple(spec.get("extra_args", ())),
-            acc0=spec["initial_accumulator"],
-            res_np=res_np,
-            res_shape=res_shape,
-        )
-        for c in cols:
-            if c not in all_cols:
-                all_cols.append(c)
-
-    reserved = set(keys) | set(order_cols) | set(all_cols)
-    colliding = sorted(set(names) & reserved)
-    if colliding:
-        raise ValueError(
-            f"fold result names collide with key/order/input columns: {colliding}"
-        )
-
-    key_fields = [f for f in df.schema.fields if f.name in keys]
-    res_fields = []
-    for name, spec in specs.items():
-        rd = spec["return_dtype"]
-        if isinstance(rd, SizedArray):
-            res_fields.append(T.StructField(name, rd.spark_type()))
-        else:
-            res_fields.append(T.StructField(name, normalize_spark_type(rd)))
-    out_schema = T.StructType(key_fields + res_fields)
-
-    def cast_result(meta: dict, acc: Any) -> Any:
-        buf = np.empty((1,) + meta["res_shape"], dtype=meta["res_np"])
-        buf[0] = acc
-        if meta["res_shape"]:
-            return buf[0].tolist()
-        return buf[0].item() if meta["res_np"].kind in "biuf" else buf[0]
-
-    def fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Same carry protocol as grouped_fold: only the LAST group of a
-        # batch can continue into the next; its accumulators (one per spec)
-        # are carried instead of emitted.
-        open_key: tuple | None = None
-        open_accs: dict[str, Any] = {}
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            per_spec: dict[str, tuple] = {}
-            for name in names:
-                meta = compiled[name]
-                mask = np.zeros(n, dtype=bool)
-                for c in meta["cols"]:
-                    mask |= pdf[c].isna().to_numpy()
-                arrays = [
-                    pdf[c].fillna(0).to_numpy().astype(meta["dtypes"][i], copy=False)
-                    for i, c in enumerate(meta["cols"])
-                ]
-                per_spec[name] = (~mask, arrays)
-            starts, ends = group_boundaries(pdf, keys)
-            out_keys: list[tuple] = []
-            out_vals: dict[str, list] = {name: [] for name in names}
-            for s, e in zip(starts, ends):
-                key = key_tuple(pdf, keys, s)
-                continuing = key == open_key
-                new_accs: dict[str, Any] = {}
-                for name in names:
-                    meta = compiled[name]
-                    acc = open_accs[name] if continuing else meta["acc0"]
-                    valid, arrays = per_spec[name]
-                    v = valid[s:e]
-                    if v.all():
-                        acc = meta["folder"](
-                            meta["step"], acc, meta["extra"], *[a[s:e] for a in arrays]
-                        )
-                    elif v.any():
-                        acc = meta["folder"](
-                            meta["step"], acc, meta["extra"], *[a[s:e][v] for a in arrays]
-                        )
-                    new_accs[name] = acc
-                if open_key is not None and not continuing:
-                    out_keys.append(open_key)
-                    for name in names:
-                        out_vals[name].append(cast_result(compiled[name], open_accs[name]))
-                open_key, open_accs = key, new_accs
-            if out_keys:
-                data = {k: [kk[i] for kk in out_keys] for i, k in enumerate(keys)}
-                data.update(out_vals)
-                yield pd.DataFrame(data)
-        if open_key is not None:
-            data = {k: [open_key[i]] for i, k in enumerate(keys)}
-            for name in names:
-                data[name] = [cast_result(compiled[name], open_accs[name])]
-            yield pd.DataFrame(data)
-
-    prepared = (
-        frame_order_select(df, keys, all_cols, order_cols)
-        .repartition(*keys)
-        .sortWithinPartitions(*keys, *order_cols)
-    )
-    return prepared.mapInPandas(fold_partition, schema=out_schema)
+    return grouped_pass(df, group_by, specs, order_by, fold=True)
 
 
 def agg_with_fold(
@@ -510,22 +317,22 @@ def agg_with_fold(
     expressions (ref `examples_fold.py:87-97` — a fold and native aggs in
     one ``agg`` call). Spark aggregate expressions can't host an arbitrary
     sequential kernel, so the equivalent surface is this helper: it runs the
-    native aggregates as one Catalyst ``groupBy().agg`` and each fold spec
-    through :func:`grouped_fold`, then null-safe-joins the per-key results
-    (null is one group in both paths, matching groupBy semantics).
+    native aggregates as one Catalyst ``groupBy().agg`` and the folds as one
+    :func:`grouped_multi_fold` pass per distinct ``order_by``, then
+    null-safe-joins the per-key results (null is one group in both paths,
+    matching groupBy semantics).
 
     ``native_aggs`` maps result name → aggregate Column;
-    ``folds`` maps result name → kwargs for :func:`grouped_fold`
-    (``function, initial_accumulator, return_dtype, columns, order_by,
-    extra_args``).
+    ``folds`` maps result name → a :func:`grouped_multi_fold` spec plus its
+    ``order_by`` (``function, initial_accumulator, return_dtype, columns,
+    order_by, extra_args``).
 
     Scale notes: each component shuffles once on the SAME keys and the
     joins are key-equi — at cluster scale co-partitioned joins of
     already-aggregated (one-row-per-key) sides, far smaller than the input.
-    Folds sharing an ``order_by`` are FUSED into one
-    :func:`grouped_multi_fold` pass (one shuffle + sort + scan for all of
-    them), so the typical many-folds-one-ordering call costs one kernel
-    pass and one join regardless of fold count.
+    Folds sharing an ``order_by`` are FUSED into one pass (one shuffle +
+    sort + scan for all of them), so the typical many-folds-one-ordering
+    call costs one kernel pass and one join regardless of fold count.
     """
     keys = as_list(group_by)
     if not keys:
@@ -563,14 +370,10 @@ def agg_with_fold(
         return left.join(right, cond, "inner").drop(*renames.values())
 
     for ob, group in by_order.items():
-        if len(group) == 1:
-            name, spec = next(iter(group.items()))
-            folded = grouped_fold(df, keys, result_name=name, **spec)
-        else:
-            specs = {
-                n: {k: v for k, v in s.items() if k != "order_by"}
-                for n, s in group.items()
-            }
-            folded = grouped_multi_fold(df, keys, specs, order_by=list(ob))
+        specs = {
+            n: {k: v for k, v in s.items() if k != "order_by"}
+            for n, s in group.items()
+        }
+        folded = grouped_multi_fold(df, keys, specs, order_by=list(ob))
         out = folded if out is None else join_on_keys(out, folded)
     return out

@@ -17,45 +17,38 @@ Reference semantics being reproduced
   → Int32 truncates, `tests/test_collect_scan.py:75-92`); tuple accumulators
   declared as ``SizedArray(t, k)`` emit one k-vector per row (`:673-679`,
   `tests/test_collect_scan.py:190-208`).
+- NaN is a value, not null: a NaN input is passed to the step and a NaN
+  accumulator is emitted as NaN, never as null (the Polars rule).
 
-Physical strategy mirrors fold.py: grouped scans are hash-partitioned
-``applyInPandas`` (parallel across groups, `examples_scan.py:72-82`); the
-global scan is a single ordered Arrow stream (``mapInArrow``), accumulator
-threaded through the generator. Associative scans (running max/sum) should
-use :func:`polars_numba_spark.operators.window.assoc_scan` — a pure window
-frame that never leaves the JVM.
+Physical strategy mirrors fold.py: grouped scans shuffle on the keys, sort
+within partitions and run the segmented Arrow driver of ``_segmented``
+(parallel across groups, `examples_scan.py:72-82`), which carries each
+group's accumulator across batches; the global scan is a single ordered
+Arrow stream (``mapInArrow``), accumulator threaded through the generator.
+Both scan a batch through ``KernelSpec``. Associative scans (running
+max/sum) should use :func:`polars_numba_spark.operators.window.assoc_scan`
+— a pure window frame that never leaves the JVM.
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable, Iterator, Sequence
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from polars_numba_spark._arrow import (
-    column_to_numpy,
-    fill_zero,
-    null_mask,
-    scan_result_to_arrow,
-)
-from polars_numba_spark.dtypes import (
-    SizedArray,
-    normalize_spark_type,
-    result_dtype_and_shape,
-)
-from polars_numba_spark.kernels import compile_step_function, get_scanner
+from polars_numba_spark.kernels import get_scanner
 from polars_numba_spark.operators._prep import (
     as_list,
     frame_order_select,
-    group_boundaries,
-    input_numpy_dtypes,
-    key_tuple,
     named_fields,
     resolve_input_columns,
+)
+from polars_numba_spark.operators._segmented import (
+    grouped_pass,
+    kernel_spec,
+    result_batch,
 )
 from polars_numba_spark.operators.fold import _single_ordered_stream
 
@@ -96,48 +89,24 @@ def collect_scan(
             df, function, initial_accumulator, return_dtype, extra_args,
             column_names, order_by, result_name, combine, num_partitions,
         )
-    step = compile_step_function(function)
     order_cols = as_list(order_by)
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
-    np_dtypes = input_numpy_dtypes(df, cols)
-    scanner = get_scanner(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    dtype_list = [np_dtypes[c] for c in cols]
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
-    res_spark_type = (
-        return_dtype.spark_type()
-        if isinstance(return_dtype, SizedArray)
-        else normalize_spark_type(return_dtype)
-    )
-
+    spec = kernel_spec(df, result_name, function, initial_accumulator,
+                       return_dtype, cols, extra_args, get_scanner)
     prepared = _single_ordered_stream(
         frame_order_select(df, cols, order_cols), order_cols
     )
     out_names = [*cols, *order_cols]
-    out_schema = T.StructType(
-        named_fields(df, out_names) + [T.StructField(result_name, res_spark_type)]
-    )
+    out_schema = T.StructType(named_fields(df, out_names) + [spec.field])
 
     def scan_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = acc0
+        acc = spec.acc0
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            in_arrays = [batch.column(c) for c in cols]
-            mask = null_mask(in_arrays)
-            np_cols = [
-                column_to_numpy(fill_zero(arr), dtype_list[i])
-                for i, arr in enumerate(in_arrays)
-            ]
-            result = np.empty((n,) + res_shape, dtype=res_np_dtype)
-            acc = scanner(step, acc, extra, result, mask, *np_cols)
-            scan_col = scan_result_to_arrow(result, mask, res_shape)
-            yield pa.RecordBatch.from_arrays(
-                [*(batch.column(c) for c in out_names), scan_col],
-                names=[*out_names, result_name],
-            )
+            acc, result, mask = spec.scan(acc, batch)
+            columns = [batch.column(c) for c in out_names]
+            yield result_batch(out_names, columns, [spec], [result], [mask])
 
     return prepared.mapInArrow(scan_stream, schema=out_schema)
 
@@ -159,22 +128,12 @@ def _parallel_prefix_scan(
 
     from pyspark import TaskContext
 
-    step = compile_step_function(function)
     order_cols = as_list(order_by)
     if not order_cols:
         raise ValueError("the parallel (combine) scan requires order_by")
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
-    np_dtypes = input_numpy_dtypes(df, cols)
-    scanner = get_scanner(len(cols))
-    folder_extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    dtype_list = [np_dtypes[c] for c in cols]
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
-    res_spark_type = (
-        return_dtype.spark_type()
-        if isinstance(return_dtype, SizedArray)
-        else normalize_spark_type(return_dtype)
-    )
+    spec = kernel_spec(df, result_name, function, initial_accumulator,
+                       return_dtype, cols, extra_args, get_scanner)
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     prepared = (
@@ -197,20 +156,13 @@ def _parallel_prefix_scan(
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
-        acc = acc0
+        acc = spec.acc0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            in_arrays = [batch.column(c) for c in cols]
-            mask = null_mask(in_arrays)
-            np_cols = [
-                column_to_numpy(fill_zero(arr), dtype_list[i])
-                for i, arr in enumerate(in_arrays)
-            ]
             # scan null rule during the partial fold too: null rows don't
             # advance the accumulator
-            buf = np.empty((batch.num_rows,) + res_shape, dtype=res_np_dtype)
-            acc = scanner(step, acc, folder_extra, buf, mask, *np_cols)
+            acc = spec.scan(acc, batch)[0]
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([pid], type=pa.int32()),
@@ -224,35 +176,22 @@ def _parallel_prefix_scan(
     # The contract `fold(a, rows) == combine(a, fold(acc0, rows))` gives the
     # prefix recurrence: seed_{i+1} = combine(seed_i, partial_i), seed_0=acc0.
     seeds: dict[int, Any] = {}
-    seed = acc0
+    seed = spec.acc0
     for pid in range(n_parts):
         seeds[pid] = seed
         if pid in part_accs:
             seed = combine(seed, part_accs[pid])
 
-    out_schema = T.StructType(
-        named_fields(df, out_names) + [T.StructField(result_name, res_spark_type)]
-    )
+    out_schema = T.StructType(named_fields(df, out_names) + [spec.field])
 
     def seeded_scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc = seeds[TaskContext.get().partitionId()]
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            in_arrays = [batch.column(c) for c in cols]
-            mask = null_mask(in_arrays)
-            np_cols = [
-                column_to_numpy(fill_zero(arr), dtype_list[i])
-                for i, arr in enumerate(in_arrays)
-            ]
-            result = np.empty((n,) + res_shape, dtype=res_np_dtype)
-            acc = scanner(step, acc, folder_extra, result, mask, *np_cols)
-            scan_col = scan_result_to_arrow(result, mask, res_shape)
-            yield pa.RecordBatch.from_arrays(
-                [*(batch.column(c) for c in out_names), scan_col],
-                names=[*out_names, result_name],
-            )
+            acc, result, mask = spec.scan(acc, batch)
+            columns = [batch.column(c) for c in out_names]
+            yield result_batch(out_names, columns, [spec], [result], [mask])
 
     return prepared.mapInArrow(seeded_scan, schema=out_schema)
 
@@ -286,9 +225,10 @@ def grouped_scan(
     shape when needed.
 
     Null rule per reference: null input row → null output row, accumulator
-    unchanged, within each group's declared order.
+    unchanged, within each group's declared order; NaN is a value. This is
+    the one-spec call of :func:`grouped_multi_scan`, so ``result_name`` may
+    not name a key, order or input column.
     """
-    step = compile_step_function(function)
     keys = as_list(group_by)
     if not keys:
         raise ValueError("group_by must name at least one column")
@@ -321,86 +261,9 @@ def grouped_scan(
                 stacklevel=2,
             )
 
-    np_dtypes = input_numpy_dtypes(df, cols)
-    scanner = get_scanner(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    dtype_list = [np_dtypes[c] for c in cols]
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
-    res_spark_type = (
-        return_dtype.spark_type()
-        if isinstance(return_dtype, SizedArray)
-        else normalize_spark_type(return_dtype)
-    )
-
-    prepared = (
-        frame_order_select(df, keys, cols, order_cols)
-        .repartition(*keys)
-        .sortWithinPartitions(*keys, *order_cols)
-    )
-    # mapInPandas assigns the returned frame's columns by name
-    out_schema = T.StructType(
-        named_fields(df, [*keys, *cols, *order_cols])
-        + [T.StructField(result_name, res_spark_type)]
-    )
-
-    _NULLABLE_PANDAS = {
-        "int8": "Int8", "int16": "Int16", "int32": "Int32", "int64": "Int64",
-        "bool": "boolean", "float32": "Float32", "float64": "Float64",
-    }
-
-    def attach_result(pdf: pd.DataFrame, result: np.ndarray, mask: np.ndarray) -> pd.DataFrame:
-        out = pdf.copy()
-        if res_shape:
-            out[result_name] = [
-                None if m else row.tolist() for m, row in zip(mask, result)
-            ]
-        else:
-            name = _NULLABLE_PANDAS.get(res_np_dtype.name)
-            if mask.any() and name:
-                arr = pd.array(result, dtype=name)
-                arr[mask] = pd.NA
-                out[result_name] = arr
-            else:
-                series = pd.Series(result, index=out.index)
-                if mask.any():
-                    series[mask] = None
-                out[result_name] = series
-        return out
-
-    def scan_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Rows arrive grouped and ordered (partitioned by keys, sorted by
-        # keys+order); only the LAST group of a batch can continue into the
-        # next batch, so its accumulator is carried (ref `:710,725-727` —
-        # the same batch-boundary threading, here per group).
-        open_key: tuple | None = None
-        open_acc = acc0
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            mask = np.zeros(n, dtype=bool)
-            for c in cols:
-                mask |= pdf[c].isna().to_numpy()
-            np_cols = [
-                pdf[c].fillna(0).to_numpy().astype(dtype_list[i], copy=False)
-                for i, c in enumerate(cols)
-            ]
-            result = np.empty((n,) + res_shape, dtype=res_np_dtype)
-            starts, ends = group_boundaries(pdf, keys)
-            for s, e in zip(starts, ends):
-                key = key_tuple(pdf, keys, s)
-                acc = open_acc if key == open_key else acc0
-                acc = scanner(
-                    step, acc, extra,
-                    result[s:e],
-                    mask[s:e],
-                    *[a[s:e] for a in np_cols],
-                )
-                open_key, open_acc = key, acc
-            yield attach_result(pdf, result, mask)
-
-    return prepared.mapInPandas(scan_partition, schema=out_schema)
+    spec = dict(function=function, initial_accumulator=initial_accumulator,
+                return_dtype=return_dtype, columns=cols, extra_args=extra_args)
+    return grouped_multi_scan(df, keys, {result_name: spec}, order_by=order_by)
 
 
 def grouped_multi_scan(
@@ -410,7 +273,7 @@ def grouped_multi_scan(
     order_by: str | Sequence[str] | None = None,
 ) -> DataFrame:
     """Several independent running scans over the SAME keys and ordering in
-    ONE shuffle + sort + ``mapInPandas`` pass — every input row comes back
+    ONE shuffle + sort + ``mapInArrow`` pass — every input row comes back
     with one result column per spec.
 
     Closes the multi-expression parity gap for scans (the reference
@@ -419,117 +282,7 @@ def grouped_multi_scan(
     per extra scan). Specs are ``name → {function, initial_accumulator,
     return_dtype, columns, extra_args}`` with a shared ``order_by``; each
     spec keeps its own null rule (ITS null rows yield null for ITS column,
-    accumulator unchanged), accumulator carry, and result dtype.
+    accumulator unchanged), accumulator carry, and result dtype. A result
+    name may not name a key, order or input column.
     """
-    keys = as_list(group_by)
-    if not keys:
-        raise ValueError("group_by must name at least one column")
-    if not specs:
-        raise ValueError("specs must contain at least one scan")
-    order_cols = as_list(order_by)
-    names = list(specs)
-
-    compiled: dict[str, dict] = {}
-    all_cols: list[str] = []
-    for name, spec in specs.items():
-        cols = resolve_input_columns(
-            df, spec.get("columns"), exclude=[*keys, *order_cols]
-        )
-        np_dtypes = input_numpy_dtypes(df, cols)
-        rd = spec["return_dtype"]
-        res_np, res_shape = result_dtype_and_shape(rd)
-        compiled[name] = dict(
-            step=compile_step_function(spec["function"]),
-            cols=cols,
-            dtypes=[np_dtypes[c] for c in cols],
-            scanner=get_scanner(len(cols)),
-            extra=tuple(spec.get("extra_args", ())),
-            acc0=spec["initial_accumulator"],
-            res_np=res_np,
-            res_shape=res_shape,
-            res_spark_type=(
-                rd.spark_type()
-                if isinstance(rd, SizedArray)
-                else normalize_spark_type(rd)
-            ),
-        )
-        for c in cols:
-            if c not in all_cols:
-                all_cols.append(c)
-
-    reserved = set(keys) | set(order_cols) | set(all_cols)
-    colliding = sorted(set(names) & reserved)
-    if colliding:
-        raise ValueError(
-            f"scan result names collide with key/order/input columns: {colliding}"
-        )
-
-    prepared = (
-        frame_order_select(df, keys, all_cols, order_cols)
-        .repartition(*keys)
-        .sortWithinPartitions(*keys, *order_cols)
-    )
-    out_schema = T.StructType(
-        named_fields(df, [*keys, *all_cols, *order_cols])
-        + [T.StructField(n, compiled[n]["res_spark_type"]) for n in names]
-    )
-
-    _NULLABLE_PANDAS = {
-        "int8": "Int8", "int16": "Int16", "int32": "Int32", "int64": "Int64",
-        "bool": "boolean", "float32": "Float32", "float64": "Float64",
-    }
-
-    def result_column(meta: dict, result: np.ndarray, mask: np.ndarray, index):
-        if meta["res_shape"]:
-            return [None if m else row.tolist() for m, row in zip(mask, result)]
-        name = _NULLABLE_PANDAS.get(meta["res_np"].name)
-        if mask.any() and name:
-            arr = pd.array(result, dtype=name)
-            arr[mask] = pd.NA
-            return arr
-        series = pd.Series(result, index=index)
-        if mask.any():
-            series = series.astype(object)
-            series[mask] = None
-        return series
-
-    def scan_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        open_key: tuple | None = None
-        open_accs: dict[str, Any] = {n: compiled[n]["acc0"] for n in names}
-        for pdf in batches:
-            n_rows = len(pdf)
-            if not n_rows:
-                continue
-            per_spec: dict[str, tuple] = {}
-            for name in names:
-                meta = compiled[name]
-                mask = np.zeros(n_rows, dtype=bool)
-                for c in meta["cols"]:
-                    mask |= pdf[c].isna().to_numpy()
-                np_cols = [
-                    pdf[c].fillna(0).to_numpy().astype(meta["dtypes"][i], copy=False)
-                    for i, c in enumerate(meta["cols"])
-                ]
-                result = np.empty((n_rows,) + meta["res_shape"], dtype=meta["res_np"])
-                per_spec[name] = (mask, np_cols, result)
-            starts, ends = group_boundaries(pdf, keys)
-            for s, e in zip(starts, ends):
-                key = key_tuple(pdf, keys, s)
-                continuing = key == open_key
-                new_accs: dict[str, Any] = {}
-                for name in names:
-                    meta = compiled[name]
-                    mask, np_cols, result = per_spec[name]
-                    acc = open_accs[name] if continuing else meta["acc0"]
-                    new_accs[name] = meta["scanner"](
-                        meta["step"], acc, meta["extra"],
-                        result[s:e], mask[s:e], *[a[s:e] for a in np_cols],
-                    )
-                open_key, open_accs = key, new_accs
-            out = pdf.copy()
-            for name in names:
-                mask, _, result = per_spec[name]
-                out[name] = result_column(compiled[name], result, mask, out.index)
-            yield out
-
-    return prepared.mapInPandas(scan_partition, schema=out_schema)
+    return grouped_pass(df, group_by, specs, order_by, fold=False)

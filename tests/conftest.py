@@ -17,16 +17,24 @@ from polars_numba_spark import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    extra = {}
-    if os.environ.get("PNS_TEST_TINY_BATCHES"):
-        # adversarial batching: exercises every batch-boundary carry path
-        extra["spark.sql.execution.arrow.maxRecordsPerBatch"] = "19"
     s = get_spark(
         app_name="polars-numba-spark-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf=extra or None,
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def tiny_batches(spark):
+    """Adversarial 19-row Arrow batches for one test, so groups span many
+    batches and every batch-boundary carry path runs. The previous value is
+    set back afterwards: ``conf.unset`` would fall back to Spark's default,
+    not the session's."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "19")
+    yield
+    spark.conf.set(key, previous)

@@ -5,11 +5,27 @@ the grouped examples (`examples_fold.py:81-97`, `examples_scan.py:66-82`).
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from polars_numba_spark import SizedArray, grouped_fold, grouped_scan
+from polars_numba_spark import (
+    SizedArray,
+    collect_fold,
+    collect_scan,
+    grouped_fold,
+    grouped_multi_fold,
+    grouped_multi_scan,
+    grouped_scan,
+)
+
+
+def map_in_arrow_nodes(plan: str) -> set[str]:
+    """Distinct MapInArrow nodes of a physical plan string (AQE prints a node
+    in both the final and the initial subtree)."""
+    return {ln.strip().lstrip("+-*: ") for ln in plan.splitlines() if "MapInArrow" in ln}
 
 
 def cap_step(acc, cap, amt):
@@ -195,7 +211,7 @@ def test_null_group_keys_form_one_group(spark):
 
 
 def test_single_huge_group_streams_through(spark):
-    """The mapInPandas execution streams Arrow batches, so a group larger
+    """The mapInArrow execution streams Arrow batches, so a group larger
     than any single batch (here 1M rows through 50k-row batches) works with
     O(batch) worker memory — the applyInPandas whole-group materialization
     cap does NOT apply to this engine's grouped kernels."""
@@ -311,8 +327,6 @@ def count_big_step(acc, threshold, amt):
 def test_grouped_multi_fold_matches_separate_folds(spark, user_purchases):
     """The fused pass (one shuffle+sort+scan for N folds) must reproduce N
     separate grouped_fold calls exactly — including per-spec null rules."""
-    from polars_numba_spark.operators.fold import grouped_multi_fold
-
     specs = {
         "capped": dict(
             function=cap_step, initial_accumulator=0.0, return_dtype="double",
@@ -346,8 +360,6 @@ def test_grouped_multi_fold_matches_separate_folds(spark, user_purchases):
 
 def test_grouped_multi_fold_null_rule_is_per_spec(spark):
     """A row null in one spec's columns is dropped for THAT spec only."""
-    from polars_numba_spark.operators.fold import grouped_multi_fold
-
     df = spark.createDataFrame(
         [("a", 1.0, 10.0, 0), ("a", None, 20.0, 1), ("a", 3.0, None, 2)],
         "user string, x double, y double, ord long",
@@ -368,7 +380,7 @@ def test_grouped_multi_fold_null_rule_is_per_spec(spark):
 
 def test_agg_with_fold_fuses_shared_ordering(spark, user_purchases):
     """Two folds sharing order_by must run as ONE kernel pass: the plan
-    contains a single mapInPandas/ArrowEvalPython-style python node."""
+    contains a single MapInArrow node (and no MapInPandas)."""
     from polars_numba_spark import agg_with_fold
 
     out = agg_with_fold(
@@ -389,64 +401,98 @@ def test_agg_with_fold_fuses_shared_ordering(spark, user_purchases):
     assert rows["bob"]["capped"] == 17.5 and rows["bob"]["total"] == 17.5
     plan = out._jdf.queryExecution().executedPlan().toString()
     # AQE prints the same physical node in both the final and original
-    # subtrees — count DISTINCT MapInPandas nodes (two unfused folds would
+    # subtrees — count DISTINCT MapInArrow nodes (two unfused folds would
     # show two nodes with different output columns)
-    nodes = {
-        ln.strip().lstrip("+-*: ") for ln in plan.splitlines() if "MapInPandas" in ln
-    }
-    assert len(nodes) == 1, plan
+    assert len(map_in_arrow_nodes(plan)) == 1, plan
+    assert "MapInPandas" not in plan
 
 
-def test_grouped_multi_fold_batch_boundary_carry(spark):
-    """600 rows / 3 users so the adversarial 19-row batching
-    (PNS_TEST_TINY_BATCHES=1) forces every group across many Arrow batches;
-    results must match a plain-Python replay of both folds."""
-    from polars_numba_spark.operators.fold import grouped_multi_fold
-
+def _carry_rows(users):
+    """600 rows over ``users`` in ord order, every 13th amount null: with
+    19-row batches every group spans many Arrow batches."""
     rows = []
     for i in range(600):
-        user = f"u{i % 3}"
         amt = float((i * 37) % 101) - 25.0
-        rows.append((user, None if i % 13 == 0 else amt, i))
-    df = spark.createDataFrame(rows, "user string, amt double, ord long")
+        rows.append((users[i % len(users)], None if i % 13 == 0 else amt, i))
+    return rows
 
-    expected_capped: dict[str, float] = {}
-    expected_total: dict[str, float] = {}
-    for user, amt, _ in rows:  # rows are already in ord order
+
+def _replay(rows):
+    """Plain-Python capped and total scans per user: {(user, ord): (capped,
+    total)}, (None, None) for a null row, plus each user's final pair."""
+    per_row: dict = {}
+    acc: dict = {}
+    for user, amt, ord_ in rows:
         if amt is None:
+            per_row[(user, ord_)] = (None, None)
             continue
-        acc = expected_capped.get(user, 0.0)
-        new = acc + amt
-        expected_capped[user] = acc if new > 1000.0 or new < 0 else new
-        expected_total[user] = expected_total.get(user, 0.0) + amt
+        c, t = acc.get(user, (0.0, 0.0))
+        new = c + amt
+        acc[user] = (c if new > 1000.0 or new < 0 else new, t + amt)
+        per_row[(user, ord_)] = acc[user]
+    return per_row, acc
 
+
+_CARRY_SPECS = {
+    "capped": dict(function=cap_step, initial_accumulator=0.0,
+                   return_dtype="double", columns=["amt"], extra_args=(1000.0,)),
+    "total": dict(function=sum_step, initial_accumulator=0.0,
+                  return_dtype="double", columns=["amt"]),
+}
+
+
+def test_grouped_multi_fold_batch_boundary_carry(spark, tiny_batches):
+    """600 rows / 3 users under 19-row batching, so every group crosses
+    many Arrow batches; results must match a plain-Python replay of both
+    folds."""
+    rows = _carry_rows(["u0", "u1", "u2"])
+    df = spark.createDataFrame(rows, "user string, amt double, ord long")
+    _, expected = _replay(rows)
     out = {
         r["user"]: r
-        for r in grouped_multi_fold(
-            df,
-            "user",
-            {
-                "capped": dict(function=cap_step, initial_accumulator=0.0,
-                               return_dtype="double", columns=["amt"],
-                               extra_args=(1000.0,)),
-                "total": dict(function=sum_step, initial_accumulator=0.0,
-                              return_dtype="double", columns=["amt"]),
-            },
-            order_by="ord",
-        ).collect()
+        for r in grouped_multi_fold(df, "user", _CARRY_SPECS, order_by="ord").collect()
     }
     assert len(out) == 3
-    for user in expected_capped:
-        assert out[user]["capped"] == pytest.approx(expected_capped[user], abs=1e-9)
-        assert out[user]["total"] == pytest.approx(expected_total[user], abs=1e-9)
+    for user, (capped, total) in expected.items():
+        assert out[user]["capped"] == pytest.approx(capped, abs=1e-9)
+        assert out[user]["total"] == pytest.approx(total, abs=1e-9)
+
+
+def test_grouped_fold_batch_boundary_carry_null_key(spark, tiny_batches):
+    """The single-spec fold carries across 19-row batches too, including a
+    null-key group that spans batches."""
+    rows = _carry_rows(["u0", None, "u1"])
+    df = spark.createDataFrame(rows, "user string, amt double, ord long")
+    _, expected = _replay(rows)
+    got = {
+        r["user"]: r["fold"]
+        for r in grouped_fold(
+            df, "user", cap_step, 0.0, "double", columns=["amt"],
+            order_by="ord", extra_args=(1000.0,),
+        ).collect()
+    }
+    assert got == pytest.approx({u: c for u, (c, _) in expected.items()}, abs=1e-9)
+
+
+def test_grouped_scan_batch_boundary_carry_null_key(spark, tiny_batches):
+    rows = _carry_rows(["u0", None, "u1"])
+    df = spark.createDataFrame(rows, "user string, amt double, ord long")
+    expected, _ = _replay(rows)
+    got = {
+        (r["user"], r["ord"]): r["scan"]
+        for r in grouped_scan(
+            df, "user", sum_step, 0.0, "double", columns=["amt"], order_by="ord"
+        ).collect()
+    }
+    assert len(got) == 600
+    for k, (_, total) in expected.items():
+        assert got[k] == (None if total is None else pytest.approx(total)), k
 
 
 def test_grouped_multi_scan_matches_separate_scans(spark, user_purchases):
     """Fused multi-scan (one shuffle+sort+pass, N result columns) must
     reproduce N separate grouped_scan calls exactly — per-spec null rules
     and carries included."""
-    from polars_numba_spark.operators.scan import grouped_multi_scan
-
     specs = {
         "capped": dict(function=cap_step, initial_accumulator=0.0,
                        return_dtype="double", columns=["amt"],
@@ -472,15 +518,13 @@ def test_grouped_multi_scan_matches_separate_scans(spark, user_purchases):
     # plan: ONE kernel pass
     out = grouped_multi_scan(user_purchases, "user", specs, order_by="ord")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    nodes = {ln.strip().lstrip("+-*: ") for ln in plan.splitlines() if "MapInPandas" in ln}
-    assert len(nodes) == 1
+    assert len(map_in_arrow_nodes(plan)) == 1
+    assert "MapInPandas" not in plan
 
 
 def test_grouped_multi_scan_null_rule_is_per_spec(spark):
     """A null in one spec's columns nulls THAT spec's output for the row
     (accumulator unchanged) while the other spec still produces a value."""
-    from polars_numba_spark.operators.scan import grouped_multi_scan
-
     df = spark.createDataFrame(
         [("a", 1.0, 10.0, 0), ("a", None, 20.0, 1), ("a", 3.0, None, 2)],
         "user string, x double, y double, ord long",
@@ -504,45 +548,15 @@ def test_grouped_multi_scan_null_rule_is_per_spec(spark):
     assert rows[2]["sx"] == 4.0 and rows[2]["sy"] is None
 
 
-def test_grouped_multi_scan_batch_boundary_carry(spark):
-    """600 rows / 3 users across tiny Arrow batches (PNS_TEST_TINY_BATCHES)
-    — fused scan carries every spec's accumulator independently."""
-    from polars_numba_spark.operators.scan import grouped_multi_scan
-
-    rows = []
-    for i in range(600):
-        user = f"u{i % 3}"
-        amt = float((i * 37) % 101) - 25.0
-        rows.append((user, None if i % 13 == 0 else amt, i))
+def test_grouped_multi_scan_batch_boundary_carry(spark, tiny_batches):
+    """600 rows / 3 users across 19-row Arrow batches — the fused scan
+    carries every spec's accumulator independently."""
+    rows = _carry_rows(["u0", "u1", "u2"])
     df = spark.createDataFrame(rows, "user string, amt double, ord long")
-
-    expected: dict = {}
-    acc: dict = {}
-    for user, amt, ord_ in rows:
-        if amt is None:
-            expected[(user, ord_)] = (None, None)
-            continue
-        c, t = acc.get(user, (0.0, 0.0))
-        new = c + amt
-        c = c if new > 1000.0 or new < 0 else new
-        t = t + amt
-        acc[user] = (c, t)
-        expected[(user, ord_)] = (c, t)
-
+    expected, _ = _replay(rows)
     got = {
         (r["user"], r["ord"]): (r["capped"], r["total"])
-        for r in grouped_multi_scan(
-            df,
-            "user",
-            {
-                "capped": dict(function=cap_step, initial_accumulator=0.0,
-                               return_dtype="double", columns=["amt"],
-                               extra_args=(1000.0,)),
-                "total": dict(function=sum_step, initial_accumulator=0.0,
-                              return_dtype="double", columns=["amt"]),
-            },
-            order_by="ord",
-        ).collect()
+        for r in grouped_multi_scan(df, "user", _CARRY_SPECS, order_by="ord").collect()
     }
     assert len(got) == 600
     for k, (ec, et) in expected.items():
@@ -590,8 +604,6 @@ def test_grouped_multi_fold_rejects_input_name_collision(spark, user_purchases):
     """A spec named like a key/order/input column would duplicate a field in
     the output schema and fail late with a confusing Arrow error — reject
     it up front."""
-    from polars_numba_spark.operators.fold import grouped_multi_fold
-
     with pytest.raises(ValueError, match="collide"):
         grouped_multi_fold(
             user_purchases, "user",
@@ -601,9 +613,18 @@ def test_grouped_multi_fold_rejects_input_name_collision(spark, user_purchases):
         )
 
 
-def test_grouped_multi_scan_rejects_input_name_collision(spark, user_purchases):
-    from polars_numba_spark.operators.scan import grouped_multi_scan
+def test_grouped_single_spec_rejects_input_name_collision(spark, user_purchases):
+    """grouped_fold and grouped_scan are one-spec calls of the multi-spec
+    path, so they take its result-name rule."""
+    with pytest.raises(ValueError, match="collide"):
+        grouped_fold(user_purchases, "user", sum_step, 0.0, "double",
+                     columns=["amt"], order_by="ord", result_name="amt")
+    with pytest.raises(ValueError, match="collide"):
+        grouped_scan(user_purchases, "user", sum_step, 0.0, "double",
+                     columns=["amt"], order_by="ord", result_name="user")
 
+
+def test_grouped_multi_scan_rejects_input_name_collision(spark, user_purchases):
     with pytest.raises(ValueError, match="collide"):
         grouped_multi_scan(
             user_purchases, "user",
@@ -611,3 +632,68 @@ def test_grouped_multi_scan_rejects_input_name_collision(spark, user_purchases):
                          return_dtype="double", columns=["amt"])},
             order_by="ord",
         )
+
+
+def _nan_probe(spark):
+    """``[1.0, NaN, 2.0, null]`` in ``o`` order, one group."""
+    return spark.createDataFrame(
+        [("g", 1.0, 0), ("g", float("nan"), 1), ("g", 2.0, 2), ("g", None, 3)],
+        "k string, v double, o long",
+    )
+
+
+def _scan_values(out, name):
+    return [r[name] for r in out.orderBy("o").collect()]
+
+
+_SUM_SPEC = dict(function=sum_step, initial_accumulator=0.0,
+                 return_dtype="double", columns=["v"])
+_NAN_OPS = {
+    "collect_fold": lambda df: collect_fold(
+        df, sum_step, 0.0, column_names=["v"], order_by="o"),
+    "grouped_fold": lambda df: grouped_fold(
+        df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o",
+    ).collect()[0]["fold"],
+    "grouped_multi_fold": lambda df: grouped_multi_fold(
+        df, "k", {"r": _SUM_SPEC}, order_by="o").collect()[0]["r"],
+    "collect_scan": lambda df: _scan_values(collect_scan(
+        df, sum_step, 0.0, "double", column_names=["v"], order_by="o"), "scan"),
+    "grouped_scan": lambda df: _scan_values(grouped_scan(
+        df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o"), "scan"),
+    "grouped_multi_scan": lambda df: _scan_values(grouped_multi_scan(
+        df, "k", {"r": _SUM_SPEC}, order_by="o"), "r"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NAN_OPS))
+def test_nan_is_a_value_not_null(spark, op):
+    """Reference (Polars) rule in every batch fold/scan operator: NaN is a
+    value, only null is null. A fold folds the NaN row (sum → NaN); a scan
+    passes NaN on and emits null only for the null row."""
+    got = _NAN_OPS[op](_nan_probe(spark))
+    if op.endswith("fold"):
+        assert math.isnan(got), got
+    else:
+        assert got[0] == 1.0 and math.isnan(got[1]) and math.isnan(got[2]), got
+        assert got[3] is None, got
+
+
+def _key(value):
+    return "NaN" if isinstance(value, float) and math.isnan(value) else value
+
+
+def test_nan_and_null_float_keys_are_two_groups(spark):
+    """A NaN key and a null key are two groups whose keys match groupBy."""
+    df = spark.createDataFrame(
+        [(float("nan"), 1.0, 0), (None, 2.0, 1), (float("nan"), 3.0, 2),
+         (None, 4.0, 3), (1.5, 5.0, 4)],
+        "k double, v double, o long",
+    )
+    want = {_key(r["k"]): r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
+    assert want == {"NaN": 4.0, None: 6.0, 1.5: 5.0}
+    folded = grouped_fold(df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o")
+    assert {_key(r["k"]): r["fold"] for r in folded.collect()} == want
+    scanned = grouped_scan(df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o")
+    assert {(_key(r["k"]), r["o"]): r["scan"] for r in scanned.collect()} == {
+        ("NaN", 0): 1.0, (None, 1): 2.0, ("NaN", 2): 4.0, (None, 3): 6.0, (1.5, 4): 5.0,
+    }

@@ -146,7 +146,7 @@ def test_grouped_fold_skew_check_quiet_on_uniform_keys(spark):
 
 def test_grouped_fold_auto_salts_with_combine(spark):
     """combine= declared + hot key detected → the two-level salted fold
-    engages (two mapInPandas stages in the plan) and the result matches
+    engages (two mapInArrow stages in the plan) and the result matches
     the unsalted fold exactly."""
     from polars_numba_spark import plans
     from polars_numba_spark.operators.fold import grouped_fold
@@ -158,7 +158,9 @@ def test_grouped_fold_auto_salts_with_combine(spark):
         skew_check=True, combine=_add,
     )
     s = plans.explain_string(salted, "simple")
-    assert s.count("MapInPandas") == 2  # partial fold + merge fold
+    nodes = {ln.strip().lstrip("+-*: ") for ln in s.splitlines() if "MapInArrow" in ln}
+    assert len(nodes) == 2  # partial fold + merge fold
+    assert "MapInPandas" not in s
     assert "__fold_salt" in s
     got_plain = {r["g"]: r["fold"] for r in plain.collect()}
     got_salted = {r["g"]: r["fold"] for r in salted.collect()}
