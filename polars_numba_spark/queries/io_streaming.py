@@ -10,13 +10,18 @@ Both queries keep the (spark, sf_dir) -> batch DataFrame contract:
   any value lost or mangled in either text codec (double shortest-roundtrip,
   ISO-8601 timestamps) breaks the hash;
 - the streaming queries run real Structured Streaming jobs (file source →
-  stateful operator / event-time windows → parquet sink, ``availableNow``
-  trigger) and return a read of the sink; with bounded input the final
-  streaming state must equal the batch computation the oracle performs.
-  Sinks are parquet (or a memory table staged out and DROPPED before
-  returning) so no session-lived state survives a query — the round-2
-  driver bench showed leaked memory sinks degrading every later query in a
-  91-query single-session run.
+  stateful operator / event-time windows → sink) and return a read of the
+  sink; with bounded input the final streaming state must equal the batch
+  computation the oracle performs.
+
+Sink policy: every streaming face except the foreachBatch near-dup ingest
+runs its query through :func:`_run_available_now` — ``availableNow``
+trigger, a fresh checkpoint dir removed afterwards, output read back from
+parquet. Append mode writes a parquet streaming sink; complete mode, which
+file sinks do not support, writes a ``pns_``-prefixed memory table that is
+staged to parquet and dropped. Either way no session-lived state survives a
+query — the round-2 driver bench showed leaked memory sinks degrading every
+later query in a 91-query single-session run.
 """
 
 from __future__ import annotations
@@ -73,6 +78,68 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
     )
     os.makedirs(path, exist_ok=True)
     return path
+
+
+def _fresh_dir(tag: str, sf_dir: str) -> str:
+    """Wipe the ``tag`` scratch dir (previous runs' output — same
+    bounded-disk contract as the overwrite-mode scratch writes) and return
+    a fresh run-specific subdir of it."""
+    base = _scratch_dir(tag, sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    path = os.path.join(base, uuid.uuid4().hex[:8])
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def _await(query, name: str) -> None:
+    if not query.awaitTermination(300):
+        query.stop()
+        raise TimeoutError(f"{name}: availableNow stream did not finish in 300s")
+
+
+def _run_available_now(
+    df: DataFrame,
+    name: str,
+    sf_dir: str,
+    complete: bool = False,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Run the bounded stream ``df`` to completion and return a batch read
+    of its output (the module's sink policy).
+
+    ``complete`` selects complete output mode: the memory table is staged
+    to parquet and dropped. ``state_partitions`` pins
+    ``spark.sql.shuffle.partitions`` for this query only: the state-store
+    partition count is fixed at the stream's first checkpoint, and each
+    stateful partition pays a state-store commit and a Python worker per
+    micro-batch — pure overhead when the per-key work is small. Cluster
+    callers size it to the stream's key cardinality instead."""
+    spark = df.sparkSession
+    out_dir = _fresh_dir(f"{name}_out", sf_dir)
+    table = f"pns_{name}_{uuid.uuid4().hex[:8]}"
+    # a fresh checkpoint per run: a reused one would mark the input
+    # processed and emit nothing; the sink holds the results
+    ckpt = tempfile.mkdtemp(prefix=f"pns_ckpt_{name}_")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        writer = df.writeStream.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        )
+        if complete:
+            writer = writer.format("memory").queryName(table).outputMode("complete")
+        else:
+            writer = writer.format("parquet").option("path", out_dir).outputMode("append")
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        _await(writer.start(), name)
+        if complete:
+            spark.table(table).write.mode("overwrite").parquet(out_dir)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if complete:
+            spark.catalog.dropTempView(table)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.parquet(out_dir)
 
 
 @register(
@@ -290,35 +357,14 @@ def streaming_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     input the final counters MUST equal the batch sketch, so this face
     shares the batch face's oracle verbatim (_CMS_ORACLE_SQL,
     single-sourced — the same pattern as the EWMA twins). Runs as a real
-    availableNow job into a complete-mode memory sink, staged to parquet
-    and dropped (driver-bench hygiene); the probe/top-20 join is batch
+    complete-mode availableNow job; the probe/top-20 join is batch
     post-processing over the final counter table."""
     from polars_numba_spark.operators.sketch import cms_coords, cms_probe
 
     stream = load_stream(spark, "events", sf_dir).select("user_id")
     coords = cms_coords(stream, "user_id", depth=4, width=1024, portable=True)
     agg = coords.groupBy("j", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_cms_{run_id}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError(
-                "streaming_user_cms: availableNow stream did not finish in "
-                "300s — refusing to return a partial complete-mode aggregate"
-            )
-        staged = _fresh_dir(_scratch_dir("cms_out", sf_dir), run_id)
-        spark.table(sink).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    sketch = spark.read.parquet(staged)
+    sketch = _run_available_now(agg, "streaming_user_cms", sf_dir, complete=True)
     e = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     exact = (
         e.groupBy("user_id")
@@ -340,9 +386,8 @@ def streaming_burst_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The burst monitor run as an actual Structured Streaming job — the
     deployment shape the face exists for: event-time 1-HOUR tumbling
     windows per type maintained by the streaming engine (availableNow,
-    complete-mode memory sink, staged to parquet and dropped), then the
-    trailing-24h RANGE baseline + flags computed over the final hourly
-    state exactly as the batch face does. Bounded input ⇒ the sink state
+    complete mode), then the trailing-24h RANGE baseline + flags computed
+    over the final hourly state exactly as the batch face does. Bounded input ⇒ the sink state
     must equal the batch hourly aggregate (unified semantics), so this
     face shares the batch oracle verbatim (_BURST_ORACLE_SQL,
     single-sourced — the CMS/EWMA-twin pattern). Streaming state is
@@ -355,32 +400,11 @@ def streaming_burst_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.groupBy(
             F.window("ts", "1 hour").alias("w"), F.col("event_type")
         ).agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_burst_{run_id}"
-    query = (
-        hourly.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError(
-                "streaming_burst_windows: availableNow stream did not finish "
-                "in 300s — refusing to return a partial complete-mode aggregate"
-            )
-        staged = _fresh_dir(_scratch_dir("burst_out", sf_dir), run_id)
-        spark.table(sink).select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        ).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    base = spark.read.parquet(staged).select(
+    base = _run_available_now(
+        hourly, "streaming_burst_windows", sf_dir, complete=True
+    ).select(
         "event_type",
         F.floor(F.unix_timestamp("window_start") / 3600).alias("hour_idx"),
         "n_events",
@@ -404,21 +428,6 @@ def streaming_burst_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fresh_dir(base: str, run_id: str) -> str:
-    """Wipe ``base`` (previous runs' output — same bounded-disk contract as
-    the overwrite-mode scratch writes) and return a run-specific subdir."""
-    shutil.rmtree(base, ignore_errors=True)
-    path = os.path.join(base, run_id)
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
-def _await(query, name: str) -> None:
-    if not query.awaitTermination(300):
-        query.stop()
-        raise TimeoutError(f"{name}: availableNow stream did not finish in 300s")
-
-
 @register(
     "streaming_daily_rollup",
     oracle="""
@@ -433,7 +442,7 @@ def _await(query, name: str) -> None:
 def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The windowed rollup executed as an actual Structured Streaming job:
     file-stream the events parquet, event-time 1-day tumbling windows per
-    event_type, complete-mode memory sink, availableNow trigger. Bounded
+    event_type, complete output mode, availableNow trigger. Bounded
     input ⇒ the final sink state must equal the batch aggregate (Spark's
     unified semantics), which the oracle computes independently — a hard
     driver signal for the streaming engine path, not just its batch twin."""
@@ -447,37 +456,13 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events": F.count(F.lit(1)),
             "total_cents": F.sum(F.round(F.col("value") * 100).cast("long")),
         },
+    ).select(
+        F.col("window.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_cents",
     )
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_daily_{run_id}"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError(
-                "streaming_daily_rollup: availableNow stream did not finish in "
-                "300s — refusing to return a partial complete-mode aggregate"
-            )
-        # Complete mode requires a memory sink (driver-resident rows); stage
-        # the final state to parquet and DROP the sink table so nothing
-        # session-lived survives the query (round-2 driver-bench hygiene:
-        # leaked memory sinks degraded every later query in a 91-query run).
-        staged = _fresh_dir(_scratch_dir("daily_out", sf_dir), run_id)
-        spark.table(sink).select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_cents",
-        ).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    return spark.read.parquet(staged)
+    return _run_available_now(out, "streaming_daily_rollup", sf_dir, complete=True)
 
 
 def staged_streaming_scan_balance(
@@ -507,8 +492,7 @@ def staged_streaming_scan_balance(
        ``maxFilesPerTrigger=1`` — each key's rows arrive together and the
        per-batch ``order_by`` sort is a global per-key sort. This is the
        per-key cross-batch ordering guarantee, by layout rather than luck.
-    3. Sink is a parquet STREAMING sink (not a memory table): nothing
-       driver-resident, nothing session-lived left behind.
+    3. Sink is a parquet streaming sink (append mode).
 
     At cluster scale step 1 is one extra shuffle+write of the stream's
     working set — the standard stage-then-replay pattern for folds that
@@ -552,9 +536,7 @@ def _staged_streaming_scan(
     for the per-key ordering-by-layout argument)."""
     from polars_numba_spark.streaming import streaming_grouped_scan
 
-    run_id = uuid.uuid4().hex[:8]
-    staging = _fresh_dir(_scratch_dir("scan_stage", sf_dir), run_id)
-    out_dir = _fresh_dir(_scratch_dir("scan_out", sf_dir), run_id)
+    staging = _fresh_dir(f"{query_name}_stage", sf_dir)
 
     # hash-repartition only: the per-key file co-location is what carries
     # the ordering guarantee (whole files per micro-batch); row order WITHIN
@@ -580,35 +562,11 @@ def _staged_streaming_scan(
         columns=columns,
         order_by=["ts", "event_id"],
     )
-    # fresh checkpoint per run (a reused one would mark the staged files
-    # processed and emit nothing); removed after termination — the parquet
-    # sink holds the results, the state store dies with the query
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_{run_id}")
-    # State-store partition count is taken from shuffle.partitions at the
-    # stream's FIRST checkpoint — each stateful partition pays a state-store
-    # commit + a Python worker per micro-batch, pure overhead when the
-    # per-key work is this small (VERDICT r3: 33.2s driver vs 3.8s floor,
-    # "job-count-heavy"). Pin it to the staging-file count for this query
-    # only and restore after; at cluster scale the caller sizes it to the
-    # stream's real key cardinality instead.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_staging_files))
-    try:
-        query = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            _await(query, query_name)
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_dir)
+    # one state partition per staging file (VERDICT r3: unpinned, the
+    # face was 33.2s driver vs 3.8s floor, "job-count-heavy")
+    return _run_available_now(
+        out, query_name, sf_dir, state_partitions=n_staging_files
+    )
 
 
 @register(
@@ -637,7 +595,7 @@ def streaming_scan_user_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup as a REAL streaming job: file-stream the
     documents table through streaming_exact_dedup (stateful first-arrival
-    per content digest), availableNow → memory sink, then aggregate the
+    per content digest), availableNow → parquet sink, then aggregate the
     sink. Which copy survives a digest race is arbitrary across partitions,
     so the result projects only digest-determined values (count + summed
     text length over distinct texts) — deterministic regardless of arrival
@@ -646,24 +604,7 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = load_stream(spark, "documents", sf_dir)
     deduped = streaming_exact_dedup(stream, "text")
-    run_id = uuid.uuid4().hex[:8]
-    out_dir = _fresh_dir(_scratch_dir("dedup_out", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_dedup_{run_id}")
-    # parquet streaming sink — append mode needs no driver-resident memory
-    # table, so nothing session-lived survives the query (bench hygiene)
-    query = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(query, "streaming_dedup_docs")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).agg(
+    return _run_available_now(deduped, "streaming_dedup_docs", sf_dir).agg(
         F.count(F.lit(1)).alias("n_unique"),
         F.sum(F.length("text").cast("long")).cast("long").alias("total_chars"),
     )
@@ -699,14 +640,12 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization executed as an actual Structured Streaming
     job: file-stream the events parquet through ``session_window`` (merging
-    gap-session state in the state store), complete-mode memory sink,
+    gap-session state in the state store), complete output mode,
     availableNow trigger. Bounded input ⇒ the final sink equals the batch
     sessions (Spark's unified semantics), checked against the SAME
     independent gaps-and-islands oracle as the batch ``user_sessions`` —
     closing the streaming family on its last un-gated face (rollup, dedup
-    and the stateful kernel scan already run as real jobs). The staged
-    parquet + dropped sink follows the bench-hygiene pattern: nothing
-    session-lived survives the query."""
+    and the stateful kernel scan already run as real jobs)."""
     from polars_numba_spark.operators.sessionize import sessionize
 
     stream = load_stream(spark, "events", sf_dir).withColumn(
@@ -722,25 +661,10 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents": F.sum("cents"),
         },
         watermark="1 hour",
+    ).select("user_id", "session_start", "n_events", "total_cents")
+    return _run_available_now(
+        sessions, "streaming_user_sessions", sf_dir, complete=True
     )
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_sessions_{run_id}"
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(query, "streaming_user_sessions")
-        staged = _fresh_dir(_scratch_dir("sessions_out", sf_dir), run_id)
-        spark.table(sink).select(
-            "user_id", "session_start", "n_events", "total_cents"
-        ).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    return spark.read.parquet(staged)
 
 
 @register(
@@ -782,22 +706,7 @@ def streaming_users_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = load_stream(spark, "events", sf_dir).select("event_type", "user_id")
     est = streaming_kmv_distinct(stream, "user_id", "event_type", k=64)
-    run_id = uuid.uuid4().hex[:8]
-    out_dir = _fresh_dir(_scratch_dir("kmv_out", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_kmv_{run_id}")
-    query = (
-        est.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(query, "streaming_users_kmv")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    sink = spark.read.parquet(out_dir)
+    sink = _run_available_now(est, "streaming_users_kmv", sf_dir)
     # the last emitted row per key carries the final state's estimate
     return (
         sink.groupBy("event_type")
@@ -843,22 +752,9 @@ def streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("total_cents"),
     )
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_enrich_{run_id}"
-    query = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        out, "streaming_enriched_segments", sf_dir, complete=True
     )
-    try:
-        _await(query, "streaming_enriched_segments")
-        staged = _fresh_dir(_scratch_dir("enrich_out", sf_dir), run_id)
-        spark.table(sink).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    return spark.read.parquet(staged)
 
 
 @register(
@@ -888,22 +784,7 @@ def streaming_user_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = streaming_latest_snapshot(
         stream, keys="user_id", seq_col="ts", tiebreak="event_id"
     )
-    run_id = uuid.uuid4().hex[:8]
-    out_dir = _fresh_dir(_scratch_dir("lww_out", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_lww_{run_id}")
-    query = (
-        snap.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(query, "streaming_user_latest_state")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    sink = spark.read.parquet(out_dir)
+    sink = _run_available_now(snap, "streaming_user_latest_state", sf_dir)
     return (
         sink.groupBy("user_id")
         .agg(
@@ -971,28 +852,10 @@ def streaming_signup_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
         ),
         "inner",
     ).select("purchase_id", "user_id", "signup_id", "purchase_ts", "signup_ts")
-    run_id = uuid.uuid4().hex[:8]
-    out_dir = _fresh_dir(_scratch_dir("ssjoin_out", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_ssj_{run_id}")
-    # 4 state stores per stream-stream-join partition: pin the state
-    # partition count for this bounded run (cluster callers size it to key
-    # cardinality), same as the other stateful streaming queries.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(query, "streaming_signup_purchase_join")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)
+    # 4 state stores per stream-stream-join partition
+    return _run_available_now(
+        joined, "streaming_signup_purchase_join", sf_dir, state_partitions=8
+    )
 
 
 @register(
@@ -1030,9 +893,7 @@ def streaming_signup_conversion_outer(spark: SparkSession, sf_dir: str) -> DataF
     sink read; at cluster scale the same barrier is an ordinary heartbeat
     topic. With the barrier, append-mode output equals the batch LEFT JOIN
     the oracle runs."""
-    run_id = uuid.uuid4().hex[:8]
-    staging = _fresh_dir(_scratch_dir("ssouter_stage", sf_dir), run_id)
-    out_dir = _fresh_dir(_scratch_dir("ssouter_out", sf_dir), run_id)
+    staging = _fresh_dir("ssouter_stage", sf_dir)
 
     events = _t(spark, sf_dir, "events").where(
         F.col("event_type").isin("signup", "purchase")
@@ -1114,26 +975,11 @@ def streaming_signup_conversion_outer(spark: SparkSession, sf_dir: str) -> DataF
         ),
         "leftOuter",
     ).select("signup_id", "user_id", "signup_ts", "purchase_id", "purchase_ts")
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_sso_{run_id}")
-    # Stream-stream join keeps 4 state stores per partition; pin the state
-    # partition count to the staging width for this bounded-input query
-    # (cluster callers size it to real key cardinality instead).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(query, "streaming_signup_conversion_outer")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).where(F.col("user_id") >= 0)
+    # 4 state stores per stream-stream-join partition
+    out = _run_available_now(
+        joined, "streaming_signup_conversion_outer", sf_dir, state_partitions=8
+    )
+    return out.where(F.col("user_id") >= 0)
 
 
 def _streaming_neardup_oracle() -> str:
@@ -1199,10 +1045,9 @@ def streaming_neardup_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_minhash_keep_list,
     )
 
-    run_id = uuid.uuid4().hex[:8]
-    staging = _fresh_dir(_scratch_dir("neardup_stage", sf_dir), run_id)
-    store = _fresh_dir(_scratch_dir("neardup_store", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_neardup_{run_id}")
+    staging = _fresh_dir("neardup_stage", sf_dir)
+    store = _fresh_dir("neardup_store", sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="pns_ckpt_streaming_neardup_keeplist_")
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 1000).select(
         "doc_id", "text"
@@ -1283,22 +1128,7 @@ def streaming_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = load_stream(spark, "events", sf_dir).select("event_type", "user_id")
     est = streaming_hll_distinct(stream, "user_id", "event_type", p=12)
-    run_id = uuid.uuid4().hex[:8]
-    out_dir = _fresh_dir(_scratch_dir("hll_out", sf_dir), run_id)
-    ckpt = os.path.join(tempfile.gettempdir(), f"pns_ckpt_hll_{run_id}")
-    query = (
-        est.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await(query, "streaming_users_hll")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    sink = spark.read.parquet(out_dir)
+    sink = _run_available_now(est, "streaming_users_hll", sf_dir)
     final = sink.groupBy("event_type").agg(
         F.max_by(F.struct("n_registers", "z_present"), "batches_seen").alias(
             "__st"
@@ -1428,27 +1258,9 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_purchases")
         )
     )
-    run_id = uuid.uuid4().hex[:8]
-    sink = f"pns_stream_sprt_{run_id}"
-    query = (
-        per_user.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    state = _run_available_now(
+        per_user, "streaming_sprt_monitor", sf_dir, complete=True
     )
-    try:
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError(
-                "streaming_sprt_monitor: availableNow stream did not finish "
-                "in 300s — refusing to read a partial complete-mode aggregate"
-            )
-        staged = _fresh_dir(_scratch_dir("sprt_state", sf_dir), run_id)
-        spark.table(sink).write.mode("overwrite").parquet(staged)
-    finally:
-        spark.catalog.dropTempView(sink)
-    state = spark.read.parquet(staged)
     med = (
         state.where(F.col("n_purchases") > 0)
         .agg(

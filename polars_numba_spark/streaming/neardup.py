@@ -54,6 +54,7 @@ from polars_numba_spark.operators.dedup import (
     _bucket_star_edges,
     connected_components,
 )
+from polars_numba_spark.plans.checkpoint import checkpoint_rounds
 
 _BANDS_SUBDIR = "bands"
 _EDGES_SUBDIR = "edges"
@@ -141,22 +142,23 @@ def ingest_neardup_batch(
         )
     )
     bn = bn.unionByName(sentinels)
-    # the batch is the small side of every join below; materialize it once
-    bn = bn.localCheckpoint(eager=True)
+    # the batch is the small side of every join below; materialize it once,
+    # and release it after the two appends, its last reads
+    with checkpoint_rounds() as ck:
+        bn = ck.pin(bn)
+        members = bn
+        if _store_has_bands(spark, bands_dir):
+            store = spark.read.parquet(bands_dir)
+            touched = bn.select("band_idx", "band_hash").distinct()
+            # broadcast the batch's touched buckets: the store is never
+            # shuffled, only filtered — the delta-ingest join shape
+            members = store.join(
+                F.broadcast(touched), ["band_idx", "band_hash"]
+            ).unionByName(bn)
 
-    members = bn
-    if _store_has_bands(spark, bands_dir):
-        store = spark.read.parquet(bands_dir)
-        touched = bn.select("band_idx", "band_hash").distinct()
-        # broadcast the batch's touched buckets: the store is never
-        # shuffled, only filtered — the delta-ingest join shape
-        members = store.join(
-            F.broadcast(touched), ["band_idx", "band_hash"]
-        ).unionByName(bn)
-
-    star = _bucket_star_edges(members, ["band_idx", "band_hash"])
-    star.write.mode("append").parquet(edges_dir)
-    bn.write.mode("append").parquet(bands_dir)
+        star = _bucket_star_edges(members, ["band_idx", "band_hash"])
+        star.write.mode("append").parquet(edges_dir)
+        bn.write.mode("append").parquet(bands_dir)
 
 
 def streaming_minhash_keep_list(

@@ -12,6 +12,14 @@ Caveat vs batch semantics: streaming order is arrival order across
 micro-batches (late rows fold late). For time-correct results, pair with a
 watermark and tolerate reordering only within a micro-batch, or use the
 windowed rollup below for event-time-correct aggregation.
+
+Caveat vs the batch null rule: ``applyInPandasWithState`` converts through
+pandas both ways. On the way in NaN and null both become NaN and a
+nullable bigint becomes float64; on the way out the ``isnull()`` mask turns
+NaN into null. So the streaming fold and scan treat NaN as null (the batch
+operators treat it as a value), and a bigint input with nulls loses
+precision past 2^53 — in the input passthrough too. Fixing it needs an
+Arrow state API; a strict xfail in tests/test_streaming.py pins it.
 """
 
 from __future__ import annotations
@@ -24,9 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from polars_numba_spark.dtypes import normalize_spark_type
-from polars_numba_spark.kernels import compile_step_function, get_folder
-from polars_numba_spark.operators._prep import as_list, ensure_event_time, input_numpy_dtypes
+from polars_numba_spark.kernels import get_folder, get_scanner
+from polars_numba_spark.operators._prep import as_list, ensure_event_time
+from polars_numba_spark.operators._segmented import kernel_spec
 
 
 def streaming_grouped_fold(
@@ -44,38 +52,27 @@ def streaming_grouped_fold(
     micro-batch with the accumulator persisted in the state store.
 
     Output mode: use ``update`` (each batch emits keys that changed).
+    NaN counts as null here (see the module caveat).
     """
-    step = compile_step_function(function)
     keys = as_list(group_by)
     order_cols = as_list(order_by)
-    cols = list(columns)
-    np_dtypes = input_numpy_dtypes(df, cols)
-    dtype_list = [np_dtypes[c] for c in cols]
-    folder = get_folder(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        key_fields + [T.StructField(result_name, normalize_spark_type(return_dtype))]
+    spec = kernel_spec(
+        df, result_name, function, initial_accumulator, return_dtype,
+        list(columns), extra_args, get_folder,
     )
+    cols = spec.cols
+    out_schema = T.StructType([df.schema[k] for k in keys] + [spec.field])
     # State holds the PICKLED accumulator: arbitrary Python accumulators
     # (tuples, dicts, ints without float degradation) survive micro-batches
     # exactly as the batch operators allow.
     state_schema = T.StructType([T.StructField("acc", T.BinaryType())])
-
-    from polars_numba_spark.dtypes import result_dtype_and_shape
-
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
 
     def fold_with_state(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         import pickle
 
-        import numpy as np
-
-        acc = pickle.loads(bytes(state.get[0])) if state.exists else acc0
+        acc = pickle.loads(bytes(state.get[0])) if state.exists else spec.acc0
         # Spark may deliver a key's micro-batch rows as SEVERAL pandas
         # chunks in arbitrary order — order_by is only meaningful over the
         # concatenation, so gather first, sort once, fold once. Memory is
@@ -89,16 +86,16 @@ def streaming_grouped_fold(
             pdf = pdf.dropna(subset=cols)
             if len(pdf):
                 arrays = [
-                    pdf[c].to_numpy().astype(dtype_list[i], copy=False)
-                    for i, c in enumerate(cols)
+                    pdf[c].to_numpy().astype(d, copy=False)
+                    for c, d in zip(cols, spec.dtypes)
                 ]
-                acc = folder(step, acc, extra, *arrays)
+                acc = spec.kernel(spec.step, acc, spec.extra, *arrays)
         state.update((pickle.dumps(acc),))
         # return-dtype cast, same numpy-buffer semantics as batch grouped_fold
-        buf = np.empty((1,) + res_shape, dtype=res_np_dtype)
+        buf = spec.buffer(1)
         buf[0] = acc
-        value = buf[0].tolist() if res_shape else (
-            buf[0].item() if res_np_dtype.kind in "biuf" else buf[0]
+        value = buf[0].tolist() if spec.res_shape else (
+            buf[0].item() if spec.res_np.kind in "biuf" else buf[0]
         )
         data = {k: [v] for k, v in zip(keys, key)}
         data[result_name] = [value]
@@ -129,36 +126,19 @@ def streaming_grouped_scan(
     across micro-batches (the streaming face of ``grouped_scan``; output
     mode ``append``).
 
-    Null rule matches the batch operator: rows with a null in any selected
-    column emit a null scan value and do not advance the accumulator.
+    Null rule: rows with a null in any selected column emit a null scan
+    value and do not advance the accumulator. Unlike the batch operator, a
+    NaN counts as null (see the module caveat).
     """
-    import numpy as np
-
-    from polars_numba_spark.dtypes import result_dtype_and_shape
-    from polars_numba_spark.kernels import get_scanner
-
-    step = compile_step_function(function)
     keys = as_list(group_by)
     order_cols = as_list(order_by)
-    cols = list(columns)
-    np_dtypes = input_numpy_dtypes(df, cols)
-    dtype_list = [np_dtypes[c] for c in cols]
-    scanner = get_scanner(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    res_np_dtype, res_shape = result_dtype_and_shape(return_dtype)
-
-    from polars_numba_spark.dtypes import SizedArray
-
-    res_spark_type = (
-        return_dtype.spark_type()
-        if isinstance(return_dtype, SizedArray)
-        else normalize_spark_type(return_dtype)
+    spec = kernel_spec(
+        df, result_name, function, initial_accumulator, return_dtype,
+        list(columns), extra_args, get_scanner,
     )
+    cols = spec.cols
     passthrough = [f for f in df.schema.fields if f.name in {*keys, *order_cols, *cols}]
-    out_schema = T.StructType(
-        passthrough + [T.StructField(result_name, res_spark_type)]
-    )
+    out_schema = T.StructType(passthrough + [spec.field])
     state_schema = T.StructType([T.StructField("acc", T.BinaryType())])
 
     def scan_with_state(
@@ -166,7 +146,7 @@ def streaming_grouped_scan(
     ) -> Iterable[pd.DataFrame]:
         import pickle
 
-        acc = pickle.loads(bytes(state.get[0])) if state.exists else acc0
+        acc = pickle.loads(bytes(state.get[0])) if state.exists else spec.acc0
         # concatenate the micro-batch's chunks before sorting (see fold)
         gathered = [pdf[[f.name for f in passthrough]] for pdf in pdfs if len(pdf)]
         for pdf in (
@@ -174,24 +154,15 @@ def streaming_grouped_scan(
         ):
             if order_cols:
                 pdf = pdf.sort_values(order_cols, kind="mergesort")
-            n = len(pdf)
-            if not n:
-                continue
-            mask = None
-            for c in cols:
-                m = pdf[c].isna().to_numpy()
-                mask = m if mask is None else (mask | m)
-            import numpy as _np
-
-            mask = mask if mask is not None else _np.zeros(n, dtype=bool)
+            mask = pdf[cols].isna().any(axis=1).to_numpy()
             np_cols = [
-                pdf[c].fillna(0).to_numpy().astype(dtype_list[i], copy=False)
-                for i, c in enumerate(cols)
+                pdf[c].fillna(0).to_numpy().astype(d, copy=False)
+                for c, d in zip(cols, spec.dtypes)
             ]
-            result = np.empty((n,) + res_shape, dtype=res_np_dtype)
-            acc = scanner(step, acc, extra, result, mask, *np_cols)
+            result = spec.buffer(len(pdf))
+            acc = spec.kernel(spec.step, acc, spec.extra, result, mask, *np_cols)
             out = pdf.copy()
-            if res_shape:
+            if spec.res_shape:
                 out[result_name] = [
                     None if m else row.tolist() for m, row in zip(mask, result)
                 ]

@@ -181,3 +181,16 @@ def test_replayed_batch_appends_no_duplicate_sentinels(spark, store_dir):
     assert sentinels.count() == 2  # one row per distinct tokenless doc
     verdict = _verdict_map(neardup_verdict(spark, store_dir))
     assert verdict == {101: (101, True), 102: (102, True)}
+
+
+def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
+    """Each ingest pins its banded batch for the two appends and releases
+    it afterwards: repeated ingests leave no persistent RDD behind."""
+    from polars_numba_spark.plans.checkpoint import _persistent_ids
+
+    batch = _with_clones(spark).where(F.col("doc_id") < 20)
+    before = _persistent_ids(spark)
+    for _ in range(2):
+        ingest_neardup_batch(spark, batch, store_dir, num_hashes=16, bands=4,
+                             portable=True)
+    assert _persistent_ids(spark) == before
