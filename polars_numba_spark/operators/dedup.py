@@ -26,6 +26,7 @@ oracle — it anchors the approximate variants' correctness in tests.
 
 from __future__ import annotations
 
+import weakref
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -161,15 +162,16 @@ def _banding_columns(
     PER MICRO-BATCH on the driver (r15 profile: "build" was 0.75s of the
     ~2.2s warm per-batch cost, ~90% of it Column construction, ~0.07s the
     DataFrame chain). Columns are immutable unresolved expressions, safe
-    to share across plans; the cache keys on the live SparkContext so a
-    JVM restart cannot serve stale JavaObject handles."""
+    to share across plans; the cache keys weakly on the live SparkContext
+    so a JVM restart cannot serve stale JavaObject handles, and a stopped
+    context's entries go with it."""
     from pyspark import SparkContext
 
-    sc = SparkContext._active_spark_context
-    key = (id(sc), text_col, num_hashes, bands, portable, shingle_n)
-    hit = _BANDING_COLUMN_CACHE.get(key)
+    cache = _BANDING_COLUMN_CACHE.setdefault(SparkContext._active_spark_context, {})
+    key = (text_col, num_hashes, bands, portable, shingle_n)
+    hit = cache.get(key)
     if hit is not None:
-        return hit[1]
+        return hit
 
     rows_per_band = num_hashes // bands
     tokcol = F.explode(_token_sets(text_col, shingle_n)).alias("tok")
@@ -202,15 +204,11 @@ def _banding_columns(
         )
     ).alias("band")
     entry = (tokcol, aggs, bandcol)
-    # pin the context OBJECT in the entry: id(sc) keys are only unique
-    # among LIVE objects, so holding this reference guarantees a restarted
-    # context can never alias a dead one's key and be served its stale
-    # py4j handles (the reference is tiny; one per context ever started).
-    _BANDING_COLUMN_CACHE[key] = (sc, entry)
+    cache[key] = entry
     return entry
 
 
-_BANDING_COLUMN_CACHE: dict[tuple, tuple] = {}
+_BANDING_COLUMN_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _banded_signatures(

@@ -8,10 +8,13 @@ tier. Run with `pytest -m soak`."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 pytestmark = pytest.mark.soak
 
@@ -28,6 +31,6 @@ pytestmark = pytest.mark.soak
 def test_example_runs(script):
     proc = subprocess.run(
         [sys.executable, f"examples/{script}"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

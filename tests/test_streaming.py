@@ -10,9 +10,11 @@ import glob
 import inspect
 import os
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from polars_numba_spark.operators.fold import grouped_fold
 from polars_numba_spark.sources import load_stream, load_table
@@ -768,7 +770,8 @@ def _runner_state(spark, name):
     "face",
     [
         "streaming_daily_rollup",  # complete mode: memory table staged out
-        "streaming_signup_purchase_join",  # append mode, 8 state partitions
+        "streaming_signup_purchase_join",  # append mode, stream-stream join
+        "streaming_user_ewma",  # staged stateful scan
     ],
 )
 def test_runner_leaves_no_session_state(spark, face):
@@ -779,7 +782,17 @@ def test_runner_leaves_no_session_state(spark, face):
     assert _runner_state(spark, face) == before
 
 
-def test_runner_cleans_up_after_a_failed_stream(spark):
+@pytest.fixture
+def off_slot_shuffle_partitions(spark):
+    """The session's shuffle partitions set away from its 4 task slots, as
+    a session not built by ``get_spark`` may have them."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_runner_cleans_up_after_a_failed_stream(spark, off_slot_shuffle_partitions):
     from polars_numba_spark.queries.io_streaming import _run_available_now
 
     failing = (
@@ -789,10 +802,72 @@ def test_runner_cleans_up_after_a_failed_stream(spark):
     )
     before = _runner_state(spark, "runner_probe")
     with pytest.raises(Exception, match="runner probe failure"):
-        _run_available_now(
-            failing, "runner_probe", SF, complete=True, state_partitions=3
-        )
+        _run_available_now(failing, "runner_probe", SF, complete=True)
     assert _runner_state(spark, "runner_probe") == before
+
+
+class _StateOperatorPartitions(StreamingQueryListener):
+    """Records ``numShufflePartitions`` of every state operator in every
+    progress event, and how many queries have terminated."""
+
+    def __init__(self):
+        self.partitions: set[int] = set()
+        self.terminated = 0
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.partitions |= {
+            op.numShufflePartitions for op in event.progress.stateOperators
+        }
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated += 1
+
+
+def _state_partitions(spark, run) -> set[int]:
+    """The state partition counts the streaming query started by ``run()``
+    reports. Listener events arrive asynchronously, in order: wait for the
+    query's termination event, which follows its progress events."""
+    listener = _StateOperatorPartitions()
+    spark.streams.addListener(listener)
+    try:
+        assert run().count() > 0
+        deadline = time.monotonic() + 60
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.terminated == 1
+    return listener.partitions
+
+
+def test_ewma_runs_one_state_partition_per_task_slot(spark):
+    """The EWMA face's stream has one state partition per task slot: 4 on
+    ``local[4]``."""
+    from polars_numba_spark.queries.io_streaming import streaming_user_ewma
+
+    assert spark.sparkContext.defaultParallelism == 4
+    assert _state_partitions(spark, lambda: streaming_user_ewma(spark, SF)) == {4}
+
+
+def test_runner_pins_state_partitions_to_the_task_slots(
+    spark, off_slot_shuffle_partitions
+):
+    """Whatever the session's shuffle partitions, the runner's query has
+    one state partition per task slot, and the session keeps its value."""
+    from polars_numba_spark.queries.io_streaming import _run_available_now
+
+    counts = load_stream(spark, "events", SF).groupBy("event_type").count()
+    assert _state_partitions(
+        spark,
+        lambda: _run_available_now(counts, "runner_pin_probe", SF, complete=True),
+    ) == {4}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
 def test_streaming_faces_share_one_runner():

@@ -194,3 +194,19 @@ def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
         ingest_neardup_batch(spark, batch, store_dir, num_hashes=16, bands=4,
                              portable=True)
     assert _persistent_ids(spark) == before
+
+
+def test_banding_columns_cache_holds_its_context_weakly(spark):
+    """The banding Column cache serves a second call under the same context
+    from the cache, and keys on the context without keeping it alive."""
+    import sys
+
+    from polars_numba_spark.operators import dedup
+
+    sc = spark.sparkContext
+    dedup._BANDING_COLUMN_CACHE.clear()
+    refs = sys.getrefcount(sc)
+    first = dedup._banding_columns("text", 16, 4, True, None)
+    assert dedup._banding_columns("text", 16, 4, True, None) is first
+    assert list(dedup._BANDING_COLUMN_CACHE.keys()) == [sc]
+    assert sys.getrefcount(sc) == refs

@@ -591,7 +591,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=10)
-    ap.add_argument("--out", default="/root/repo/.scale")
+    ap.add_argument("--out", default=str(Path(__file__).resolve().parent.parent / ".scale"))
     ap.add_argument("--queries", default=None, help="comma-separated subset")
     ap.add_argument("--skip-build", action="store_true")
     ap.add_argument("--scale-md", default=None, help="write SCALE.md here")
