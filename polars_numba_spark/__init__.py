@@ -11,14 +11,16 @@ semantics (null rules, dtype casting, arity limits, compile caching,
 closure-capture guard — see each docstring for reference file:line parity
 notes), built on Spark's execution model:
 
-- whole-frame operators run as a single ordered Arrow stream on an executor
-  (``mapInArrow``) — the fold is inherently sequential, Spark provides the
-  scan+filter+pushdown around it;
 - grouped operators shuffle on the keys (planned by Catalyst), sort within
   partitions and run one segmented ``mapInArrow`` driver: group boundaries
   by change detection over the Arrow key columns, one ordered kernel call
   per group, accumulators carried across batches. NaN is a value, not null
   (the reference's Polars rule), in both kernel input and group keys;
+- whole-frame operators are the driver's one-group case: a single ordered
+  partition on an executor — the fold is inherently sequential, Spark
+  provides the scan+filter+pushdown around it — or, with a declared
+  ``combine``, range partitions folded in parallel and merged (fold) or
+  prefix-seeded (scan) on the driver;
 - associative step functions get a declarative fast path (native aggregates /
   window frames) that stays entirely JVM-side.
 

@@ -18,10 +18,12 @@ This module reproduces the reference's observable kernel behaviors
   (`:170-178`) if they change.
 - **extra_args injection** (`:316,376-379`): constants passed positionally
   between the accumulator and the column values.
-- **column-name inference** (`_get_column_names`, `:228-237`): names default
-  to the step function's parameter names after ``acc``; the whole-frame
-  operators instead default to *all frame columns positionally*
-  (`:346-348,714-716`, tested `tests/test_collect_fold.py:75-85`).
+- **column binding**: the whole-frame operators default to *all frame
+  columns positionally* (`:346-348,714-716`, tested
+  `tests/test_collect_fold.py:75-85`); the grouped operators to all
+  columns but the keys and order (``_prep.resolve_input_columns``). The
+  reference's signature-based naming (`_get_column_names`, `:228-237`)
+  serves its expression API, which here takes explicit ``columns=``.
 
 Scan null semantics (`:441`, docstring `:697-700`): a row with any null in
 the selected columns produces a null output row, the step function is *not*
@@ -34,7 +36,7 @@ from __future__ import annotations
 
 import inspect
 from types import FunctionType
-from typing import Any, Callable, Sequence
+from typing import Any, Callable
 
 from polars_numba_spark._numba import maybe_jit
 
@@ -76,35 +78,31 @@ _FOLDERS = {n: maybe_jit(f) for n, f in _FOLDERS_RAW.items()}
 _SCANNERS = {n: maybe_jit(f) for n, f in _SCANNERS_RAW.items()}
 
 
-def get_folder(num_args: int, jit: bool = True) -> Callable:
+def _kernel(kernels: dict[int, Callable], num_args: int) -> Callable:
     """Arity dispatch with the reference's exact error behavior
-    (`__init__.py:263-309`). ``jit=False`` returns the raw Python kernel
-    (list-capable — the SQL UDTF path)."""
+    (`__init__.py:263-309,629-670`)."""
     if num_args == 0:
         raise ValueError("You must pass in at least one column name")
-    folder = (_FOLDERS if jit else _FOLDERS_RAW).get(num_args)
-    if folder is None:
+    kernel = kernels.get(num_args)
+    if kernel is None:
         raise RuntimeError(
             f"You passed in {num_args} columns, but currently "
             "only up to 9 columns are supported; if you need more, file "
             "an issue."
         )
-    return folder
+    return kernel
+
+
+def get_folder(num_args: int, jit: bool = True) -> Callable:
+    """The fold kernel for ``num_args`` columns. ``jit=False`` returns the
+    raw Python kernel (list-capable — the SQL UDTF path)."""
+    return _kernel(_FOLDERS if jit else _FOLDERS_RAW, num_args)
 
 
 def get_scanner(num_args: int, jit: bool = True) -> Callable:
-    """Arity dispatch for scanners (`__init__.py:629-670`). ``jit=False``
-    returns the raw Python kernel (list-capable — the SQL UDTF path)."""
-    if num_args == 0:
-        raise ValueError("You must pass in at least one column name")
-    scanner = (_SCANNERS if jit else _SCANNERS_RAW).get(num_args)
-    if scanner is None:
-        raise RuntimeError(
-            f"You passed in {num_args} columns, but currently "
-            "only up to 9 columns are supported; if you need more, file "
-            "an issue."
-        )
-    return scanner
+    """The scan kernel for ``num_args`` columns. ``jit=False`` returns the
+    raw Python kernel (list-capable — the SQL UDTF path)."""
+    return _kernel(_SCANNERS if jit else _SCANNERS_RAW, num_args)
 
 
 # --- compile cache + captured-variable guard (ref `__init__.py:167-225`) ---
@@ -175,15 +173,3 @@ def compile_step_function(function: FunctionType) -> Callable:
         _COMPILE_CACHE[function] = cached
     return cached
 
-
-def infer_column_names(
-    function: FunctionType, column_names: Sequence[str] | None = None
-) -> list[str] | None:
-    """Column names from the step function's signature after ``acc``
-    (ref ``_get_column_names`` `__init__.py:228-237`). Returns None if the
-    caller wants positional all-columns binding (the whole-frame default,
-    `:346-348`)."""
-    if column_names is not None:
-        return list(column_names)
-    params = list(inspect.signature(function).parameters.keys())
-    return params[1:] or None

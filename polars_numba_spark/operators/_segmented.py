@@ -1,10 +1,17 @@
-"""The segmented Arrow driver behind the grouped fold/scan operators.
+"""The segmented Arrow driver behind every fold/scan operator.
 
 ``grouped_fold``, ``grouped_scan``, their multi-spec forms and
 ``agg_with_fold`` all run one pass: shuffle on the group keys, sort within
 partitions by keys + order, then one ``mapInArrow`` over the sorted record
 batches. Within a batch a group is a contiguous run of equal keys (a
 segment); each spec's kernel runs on its slice of every segment.
+
+The whole-frame ``collect_fold``/``collect_scan`` are its one-group case:
+:func:`ordered_partitions` makes the single partitioning decision (one
+ordered partition, or range partitions for a declared ``combine``),
+:func:`fold_partitions` folds each partition to one driver-side partial and
+:func:`scan_partitions` runs the driver with no key columns, each partition
+seeded with its own starting accumulator.
 
 - **Boundaries**: change detection over the Arrow key columns. A null key
   equals a null key and, for floating keys, NaN equals NaN — one group each,
@@ -23,13 +30,15 @@ segment); each spec's kernel runs on its slice of every segment.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import pickle
+from dataclasses import dataclass, replace
 from functools import partial
 from typing import Any, Callable, Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -53,16 +62,17 @@ from polars_numba_spark.operators._prep import (
 @dataclass(frozen=True)
 class KernelSpec:
     """One fold or scan: its compiled step, kernel, input columns and
-    declared result."""
+    declared result (none for a whole-frame fold, which returns its
+    accumulator as is)."""
 
-    field: T.StructField
+    field: T.StructField | None
     step: Callable
     kernel: Callable
     cols: list[str]
     dtypes: list[np.dtype]
     extra: tuple
     acc0: Any
-    res_np: np.dtype
+    res_np: np.dtype | None
     res_shape: tuple[int, ...]
 
     def inputs(self, batch: pa.RecordBatch) -> tuple[np.ndarray, list[np.ndarray]]:
@@ -75,12 +85,12 @@ class KernelSpec:
     def buffer(self, n: int) -> np.ndarray:
         return np.empty((n,) + self.res_shape, dtype=self.res_np)
 
-    def scan(self, acc: Any, batch: pa.RecordBatch) -> tuple[Any, np.ndarray, np.ndarray]:
-        """Scan a whole batch from ``acc``: (next acc, result, null mask)."""
+    def fold(self, acc: Any, batch: pa.RecordBatch) -> Any:
+        """Fold a whole batch from ``acc``, null rows dropped (ref `:339`)."""
         mask, arrays = self.inputs(batch)
-        result = self.buffer(batch.num_rows)
-        acc = self.kernel(self.step, acc, self.extra, result, mask, *arrays)
-        return acc, result, mask
+        if mask.any():
+            arrays = [a[~mask] for a in arrays]
+        return self.kernel(self.step, acc, self.extra, *arrays)
 
 
 def kernel_spec(
@@ -95,9 +105,10 @@ def kernel_spec(
 ) -> KernelSpec:
     step = compile_step_function(function)
     np_dtypes = input_numpy_dtypes(df, cols)
-    res_np, res_shape = result_dtype_and_shape(return_dtype)
+    declared = return_dtype is not None
+    res_np, res_shape = result_dtype_and_shape(return_dtype) if declared else (None, ())
     return KernelSpec(
-        field=T.StructField(name, normalize_spark_type(return_dtype)),
+        field=T.StructField(name, normalize_spark_type(return_dtype)) if declared else None,
         step=step,
         kernel=get_kernel(len(cols)),
         cols=cols,
@@ -160,11 +171,73 @@ def grouped_pass(
     return prepared.mapInArrow(run, schema=out_schema)
 
 
-def _key_changes(columns: Sequence[pa.Array]) -> np.ndarray:
-    """``out[i]`` is True where row ``i + 1`` starts a new group.
-    ``pc.not_equal`` gives null for a null side and true for NaN vs NaN, so
-    both are decided explicitly."""
-    m = len(columns[0])
+def ordered_partitions(df: DataFrame, order_cols: list[str], parallel: bool) -> DataFrame:
+    """The whole-frame operators' partitioning.
+
+    Sequential (no ``combine``): one ordered partition. A non-associative
+    fold or scan is inherently one stream (SURVEY.md §7 hard-part 2); with
+    an order it is a single-shuffle ``repartition(1).sortWithinPartitions``,
+    without one ``coalesce(1)`` keeps the source's file/row-group order with
+    no shuffle at all.
+
+    Parallel (a declared ``combine``): with an order, one range partition
+    per task slot, each a CONTIGUOUS run of the declared order (hash
+    partitions would interleave it, and a non-commutative combine would
+    merge slices out of order); without one, the frame as it is.
+    """
+    if not parallel:
+        if order_cols:
+            return df.repartition(1).sortWithinPartitions(*order_cols)
+        return df.coalesce(1)
+    if order_cols:
+        n = df.sparkSession.sparkContext.defaultParallelism
+        return df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
+    return df
+
+
+def fold_partitions(prepared: DataFrame, spec: KernelSpec) -> list[tuple[int, Any]]:
+    """``(pid, acc)`` for each partition of ``prepared`` that holds rows, in
+    partition order: ``spec`` folded over the partition's batches, the
+    accumulator threaded across them. Only the pickled accumulators reach
+    the driver."""
+
+    def partial_fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc, saw_rows = spec.acc0, False
+        for batch in batches:
+            if batch.num_rows:
+                acc, saw_rows = spec.fold(acc, batch), True
+        if saw_rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([TaskContext.get().partitionId()], type=pa.int32()),
+                 pa.array([pickle.dumps(acc)], type=pa.binary())],
+                names=["pid", "acc"],
+            )
+
+    rows = prepared.mapInArrow(partial_fold, schema="pid int, acc binary").collect()
+    return [(pid, pickle.loads(acc)) for pid, acc in sorted(rows)]
+
+
+def scan_partitions(
+    prepared: DataFrame, spec: KernelSpec, names: list[str], seeds: dict[int, Any]
+) -> DataFrame:
+    """``names`` plus ``spec``'s scan column: the segmented driver with no
+    key columns, so each partition is one group, seeded with
+    ``seeds[pid]``. A partition missing from ``seeds`` holds no rows or
+    starts at ``spec.acc0``."""
+
+    def seeded_scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        seed = seeds.get(TaskContext.get().partitionId(), spec.acc0)
+        return _segmented([], [replace(spec, acc0=seed)], names, False, batches)
+
+    schema = T.StructType(named_fields(prepared, names) + [spec.field])
+    return prepared.mapInArrow(seeded_scan, schema=schema)
+
+
+def _key_changes(columns: Sequence[pa.Array], m: int) -> np.ndarray:
+    """``out[i]`` is True where row ``i + 1`` of ``m`` starts a new group;
+    with no key columns the rows are one group. ``pc.not_equal`` gives null
+    for a null side and true for NaN vs NaN, so both are decided
+    explicitly."""
     out = np.zeros(m - 1, dtype=bool)
     for col in columns:
         cur, prev = col.slice(1), col.slice(0, m - 1)
@@ -229,7 +302,7 @@ def _segmented(
             off = 1
         # segment g is key rows [bounds[g], bounds[g + 1]), batch rows
         # [starts[g], ends[g]); the last segment stays open
-        changes = np.flatnonzero(_key_changes(key_cols)) + 1
+        changes = np.flatnonzero(_key_changes(key_cols, n + off)) + 1
         bounds = np.concatenate(([0], changes, [n + off]))
         starts, ends = np.maximum(bounds[:-1] - off, 0), bounds[1:] - off
         closed = len(starts) - 1  # groups that end inside this batch

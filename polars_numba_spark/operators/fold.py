@@ -25,11 +25,14 @@ strategy:
   batches, finds group boundaries by change detection over the Arrow key
   columns and carries the open group's accumulator across batches; the
   single-spec, multi-spec and ``agg_with_fold`` forms all run it.
-- **global fold**: logically a single ordered stream. We run it as ONE
-  executor task over Arrow batches (``mapInArrow`` on a single partition),
-  accumulator threaded across batches inside the generator — the Spark
-  analog of the reference's driver batch loop (`:341-355`) that keeps data
-  off the driver. For associative steps use
+- **global fold**: the one-group case of the same driver, logically a
+  single ordered stream. ``ordered_partitions`` collapses the frame to ONE
+  ordered partition and ``fold_partitions`` folds its Arrow batches in one
+  executor task, accumulator threaded across batches — the Spark analog of
+  the reference's driver batch loop (`:341-355`) that keeps data off the
+  driver. A declared ``combine=`` folds range (or source) partitions in
+  parallel instead and merges their partials on the driver. For
+  associative steps use
   :func:`polars_numba_spark.operators.window.assoc_fold` instead, which
   stays fully parallel and JVM-side.
 """
@@ -37,38 +40,26 @@ strategy:
 from __future__ import annotations
 
 import operator
-import pickle
+import warnings
 from functools import reduce
-from typing import Any, Callable, Iterator, Sequence
+from typing import Any, Callable, Sequence
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_numba_spark._arrow import column_to_numpy
-from polars_numba_spark.kernels import compile_step_function, get_folder
+from polars_numba_spark.kernels import get_folder
 from polars_numba_spark.operators._prep import (
     as_list,
     frame_order_select,
-    input_numpy_dtypes,
     resolve_input_columns,
 )
-from polars_numba_spark.operators._segmented import grouped_pass
-
-
-def _single_ordered_stream(df: DataFrame, order_by: list[str]) -> DataFrame:
-    """Collapse to one ordered partition.
-
-    Scale note: a non-associative global fold is inherently sequential — one
-    stream is the *correct* plan, not a missed optimization (SURVEY.md §7
-    hard-part 2). With ``order_by`` this is a single-shuffle
-    ``repartition(1).sortWithinPartitions`` (no global range partitioning
-    step); without it, ``coalesce(1)`` preserves the source's file/row-group
-    order with no shuffle at all.
-    """
-    if order_by:
-        return df.repartition(1).sortWithinPartitions(*order_by)
-    return df.coalesce(1)
+from polars_numba_spark.operators._segmented import (
+    fold_partitions,
+    grouped_pass,
+    kernel_spec,
+    ordered_partitions,
+)
+from polars_numba_spark.operators.skew import skewed_group
 
 
 def collect_fold(
@@ -101,68 +92,32 @@ def collect_fold(
       driver), which is the scale path for decomposable reductions that the
       named-kind ``assoc_fold`` can't express (custom states, tuples).
     """
-    step = compile_step_function(function)
     order_cols = as_list(order_by)
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
-    np_dtypes = input_numpy_dtypes(df, cols)
-    folder = get_folder(len(cols))
-    extra = tuple(extra_args)
-    acc0 = initial_accumulator
-    dtype_list = [np_dtypes[c] for c in cols]
-
-    # NaN is a value: only nulls drop (``na.drop`` would drop NaN too)
+    spec = kernel_spec(df, "fold", function, initial_accumulator, None, cols,
+                       extra_args, get_folder)
+    # NaN is a value: only nulls drop (``na.drop`` would drop NaN too). The
+    # filter stays declarative, so column pruning and IsNotNull pushdown
+    # reach the parquet scan before the partitioning.
     prepared = frame_order_select(df, cols, order_cols).where(
         reduce(operator.and_, [F.col(c).isNotNull() for c in cols])
     )
-    if combine is None:
-        prepared = _single_ordered_stream(prepared, order_cols)
-    elif order_cols:
-        # Partition-parallel path with a declared order: range-partition on
-        # the order columns so each partition is a CONTIGUOUS run of the
-        # declared order (hash partitions would be arbitrary interleavings —
-        # an associative-but-non-commutative combine would silently merge
-        # out-of-order slices). collect() preserves partition order, so the
-        # driver-side combine below merges partials in true sequence.
-        prepared = prepared.repartitionByRange(*order_cols).sortWithinPartitions(
-            *order_cols
+    partials = [
+        acc for _, acc in fold_partitions(
+            ordered_partitions(prepared, order_cols, combine is not None), spec
         )
-    # Catalyst still sees select + isNotNull declaratively → column pruning and
-    # IsNotNull pushdown reach the parquet scan before the stream collapses.
-
-    def fold_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = acc0
-        saw_rows = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw_rows = True
-            arrays = [
-                column_to_numpy(batch.column(c), dtype_list[i])
-                for i, c in enumerate(cols)
-            ]
-            acc = folder(step, acc, extra, *arrays)
-        if combine is None or saw_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([pickle.dumps(acc)], type=pa.binary())], names=["acc"]
-            )
-
-    result = prepared.mapInArrow(fold_stream, schema="acc binary").collect()
-    if not result:
-        return acc0
+    ]
+    if not partials:
+        return spec.acc0
     if combine is None:
-        return pickle.loads(bytes(result[0][0]))
-    # Partition partials combine on the driver — O(#partitions) tiny values.
+        return partials[0]
+    # Partition partials combine on the driver: O(#partitions) tiny values.
     # NOTE: requires f(f(a0, xs), f(a0, ys)) == f(a0, xs ++ ys) under
     # `combine`. With order_by, partitions are contiguous ranges of the
-    # declared order (repartitionByRange above) and arrive in partition
-    # order, so a non-commutative (but decomposable) combine is safe;
-    # without order_by, partition contents are arbitrary and `combine`
-    # must be order-insensitive.
-    partials = [pickle.loads(bytes(row[0])) for row in result]
-    acc = partials[0]
-    for p in partials[1:]:
-        acc = combine(acc, p)
-    return acc
+    # declared order and arrive in partition order, so a non-commutative
+    # (but decomposable) combine is safe; without order_by, partition
+    # contents are arbitrary and `combine` must be order-insensitive.
+    return reduce(combine, partials)
 
 
 def grouped_fold(
@@ -177,7 +132,6 @@ def grouped_fold(
     result_name: str = "fold",
     skew_check: bool | float = False,
     combine: Callable | None = None,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Per-group sequential fold → one row per group (keys + result).
 
@@ -223,60 +177,45 @@ def grouped_fold(
     order_cols = as_list(order_by)
     cols = resolve_input_columns(df, columns, exclude=[*keys, *order_cols])
 
-    if skew_check:
-        from polars_numba_spark.operators.skew import (
-            fair_share_threshold,
-            hot_key_share,
+    skew = skewed_group(df, keys, skew_check)
+    if skew and combine is not None:
+        # 16 salt buckets spread a hot group over 16 partial folds
+        salt_src = [F.col(c) for c in (order_cols or cols)]
+        salted = df.withColumn(
+            "__fold_salt", F.pmod(F.xxhash64(*salt_src), F.lit(16)).cast("int")
         )
-
-        threshold = (
-            skew_check
-            if isinstance(skew_check, float) and not isinstance(skew_check, bool)
-            else fair_share_threshold(df)
+        partials = grouped_fold(
+            salted,
+            [*keys, "__fold_salt"],
+            function,
+            initial_accumulator,
+            return_dtype,
+            columns=cols,
+            order_by=order_by,
+            extra_args=extra_args,
+            result_name="__p",
         )
-        share, hot = hot_key_share(df, keys)
-        if share > threshold:
-            if combine is None:
-                import warnings
-
-                warnings.warn(
-                    f"grouped_fold skew: sampled hottest group {hot} holds "
-                    f"~{share:.0%} of rows (threshold {threshold:.1%}); one "
-                    "Python worker folds it sequentially. If the step is "
-                    "decomposable, pass combine= to auto-salt; if it is "
-                    "associative, window.assoc_fold / skew.salted_agg stay "
-                    "JVM-side; otherwise hot-key state is inherent to the "
-                    "declared semantics.",
-                    stacklevel=2,
-                )
-            else:
-                salt_src = [F.col(c) for c in (order_cols or cols)]
-                salted = df.withColumn(
-                    "__fold_salt",
-                    F.pmod(F.xxhash64(*salt_src), F.lit(salt_buckets)).cast(
-                        "int"
-                    ),
-                )
-                partials = grouped_fold(
-                    salted,
-                    [*keys, "__fold_salt"],
-                    function,
-                    initial_accumulator,
-                    return_dtype,
-                    columns=cols,
-                    order_by=order_by,
-                    extra_args=extra_args,
-                    result_name="__p",
-                )
-                return grouped_fold(
-                    partials,
-                    keys,
-                    combine,
-                    initial_accumulator,
-                    return_dtype,
-                    columns=["__p"],
-                    result_name=result_name,
-                )
+        return grouped_fold(
+            partials,
+            keys,
+            combine,
+            initial_accumulator,
+            return_dtype,
+            columns=["__p"],
+            result_name=result_name,
+        )
+    if skew:
+        share, threshold, hot = skew
+        warnings.warn(
+            f"grouped_fold skew: sampled hottest group {hot} holds "
+            f"~{share:.0%} of rows (threshold {threshold:.1%}); one "
+            "Python worker folds it sequentially. If the step is "
+            "decomposable, pass combine= to auto-salt; if it is "
+            "associative, window.assoc_fold / skew.salted_agg stay "
+            "JVM-side; otherwise hot-key state is inherent to the "
+            "declared semantics.",
+            stacklevel=2,
+        )
     spec = dict(function=function, initial_accumulator=initial_accumulator,
                 return_dtype=return_dtype, columns=cols, extra_args=extra_args)
     return grouped_multi_fold(df, keys, {result_name: spec}, order_by=order_by)

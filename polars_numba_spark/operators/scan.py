@@ -23,34 +23,38 @@ Reference semantics being reproduced
 Physical strategy mirrors fold.py: grouped scans shuffle on the keys, sort
 within partitions and run the segmented Arrow driver of ``_segmented``
 (parallel across groups, `examples_scan.py:72-82`), which carries each
-group's accumulator across batches; the global scan is a single ordered
-Arrow stream (``mapInArrow``), accumulator threaded through the generator.
-Both scan a batch through ``KernelSpec``. Associative scans (running
-max/sum) should use :func:`polars_numba_spark.operators.window.assoc_scan`
-— a pure window frame that never leaves the JVM.
+group's accumulator across batches. The global scan is the driver's
+one-group case (``scan_partitions``: no key columns): a single ordered
+partition, or with ``combine=`` range partitions each seeded with the
+prefix of the partials ``fold_partitions`` folded before them.
+Associative scans (running max/sum) should use
+:func:`polars_numba_spark.operators.window.assoc_scan` — a pure window
+frame that never leaves the JVM.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterator, Sequence
+import warnings
+from dataclasses import replace
+from typing import Any, Callable, Sequence
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-from polars_numba_spark.kernels import get_scanner
+from polars_numba_spark.kernels import get_folder, get_scanner
 from polars_numba_spark.operators._prep import (
     as_list,
     frame_order_select,
-    named_fields,
     resolve_input_columns,
 )
 from polars_numba_spark.operators._segmented import (
+    fold_partitions,
     grouped_pass,
     kernel_spec,
-    result_batch,
+    ordered_partitions,
+    scan_partitions,
 )
-from polars_numba_spark.operators.fold import _single_ordered_stream
+from polars_numba_spark.operators.skew import skewed_group
+from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
 
 def collect_scan(
@@ -63,7 +67,6 @@ def collect_scan(
     order_by: str | Sequence[str] | None = None,
     result_name: str = "scan",
     combine: Callable[[Any, Any], Any] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Whole-frame running scan → the input columns plus a ``result_name``
     column, computed over one ordered stream.
@@ -76,124 +79,43 @@ def collect_scan(
     Scale note: the result is NOT collected — it stays distributed. By
     default it is a single ordered partition (the sequential dependency).
     Supplying ``combine`` runs the classic **two-pass parallel prefix scan**
-    instead: range-partition on the order key, pass 1 folds per-partition
-    partials, the driver prefix-combines them into per-partition seeds
-    (O(#partitions) tiny values), pass 2 scans each partition seeded with
-    its prefix — fully parallel, exact. ``combine`` must satisfy
-    ``fold(a, rows) == combine(a, fold(acc0, rows))``; ``order_by`` is
-    required and should be a total order (ties make range partitioning
-    nondeterministic at partition edges).
+    instead: range-partition on the order key (one partition per task
+    slot), pass 1 folds per-partition partials, the driver prefix-combines
+    them into per-partition seeds (O(#partitions) tiny values), pass 2 scans
+    each partition seeded with its prefix — fully parallel, exact.
+    ``combine`` must satisfy ``fold(a, rows) == combine(a, fold(acc0,
+    rows))``; ``order_by`` is required and should be a total order (ties
+    make range partitioning nondeterministic at partition edges).
     """
-    if combine is not None:
-        return _parallel_prefix_scan(
-            df, function, initial_accumulator, return_dtype, extra_args,
-            column_names, order_by, result_name, combine, num_partitions,
-        )
     order_cols = as_list(order_by)
-    cols = resolve_input_columns(df, column_names, exclude=order_cols)
-    spec = kernel_spec(df, result_name, function, initial_accumulator,
-                       return_dtype, cols, extra_args, get_scanner)
-    prepared = _single_ordered_stream(
-        frame_order_select(df, cols, order_cols), order_cols
-    )
-    out_names = [*cols, *order_cols]
-    out_schema = T.StructType(named_fields(df, out_names) + [spec.field])
-
-    def scan_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = spec.acc0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            acc, result, mask = spec.scan(acc, batch)
-            columns = [batch.column(c) for c in out_names]
-            yield result_batch(out_names, columns, [spec], [result], [mask])
-
-    return prepared.mapInArrow(scan_stream, schema=out_schema)
-
-
-def _parallel_prefix_scan(
-    df: DataFrame,
-    function: Callable,
-    initial_accumulator: Any,
-    return_dtype: Any,
-    extra_args: Sequence[Any],
-    column_names: Sequence[str] | None,
-    order_by: str | Sequence[str] | None,
-    result_name: str,
-    combine: Callable[[Any, Any], Any],
-    num_partitions: int | None,
-) -> DataFrame:
-    """Two-pass parallel prefix scan (see collect_scan docstring)."""
-    import pickle
-
-    from pyspark import TaskContext
-
-    order_cols = as_list(order_by)
-    if not order_cols:
+    if combine is not None and not order_cols:
         raise ValueError("the parallel (combine) scan requires order_by")
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
     spec = kernel_spec(df, result_name, function, initial_accumulator,
                        return_dtype, cols, extra_args, get_scanner)
-
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    prepared = (
-        frame_order_select(df, cols, order_cols)
-        .repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
+    prepared = ordered_partitions(
+        frame_order_select(df, cols, order_cols), order_cols, combine is not None
     )
-    # Both passes MUST see byte-identical partitions, but repartitionByRange
-    # samples its boundaries per job — materialize once (executor-local
-    # storage) so pass 1's partials line up with pass 2's partitions. At
-    # cluster scale this is one extra write of the working set, the price of
-    # turning a one-task scan into an n-task scan. The blocks are read
-    # lazily by the RETURNED DataFrame, so they are registered session-
-    # scoped and swept between queries by the bench/gate harness instead of
-    # leaking for the session's lifetime (round-2 verdict hygiene item).
-    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
-
-    prepared = session_scoped_checkpoint(prepared)
-    out_names = [*cols, *order_cols]
-
-    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pid = TaskContext.get().partitionId()
-        acc = spec.acc0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # scan null rule during the partial fold too: null rows don't
-            # advance the accumulator
-            acc = spec.scan(acc, batch)[0]
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int32()),
-                pa.array([pickle.dumps(acc)], type=pa.binary()),
-            ],
-            names=["pid", "acc"],
-        )
-
-    rows = prepared.mapInArrow(partials, schema="pid int, acc binary").collect()
-    part_accs = {r["pid"]: pickle.loads(bytes(r["acc"])) for r in rows}
-    # The contract `fold(a, rows) == combine(a, fold(acc0, rows))` gives the
-    # prefix recurrence: seed_{i+1} = combine(seed_i, partial_i), seed_0=acc0.
     seeds: dict[int, Any] = {}
-    seed = spec.acc0
-    for pid in range(n_parts):
-        seeds[pid] = seed
-        if pid in part_accs:
-            seed = combine(seed, part_accs[pid])
-
-    out_schema = T.StructType(named_fields(df, out_names) + [spec.field])
-
-    def seeded_scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = seeds[TaskContext.get().partitionId()]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            acc, result, mask = spec.scan(acc, batch)
-            columns = [batch.column(c) for c in out_names]
-            yield result_batch(out_names, columns, [spec], [result], [mask])
-
-    return prepared.mapInArrow(seeded_scan, schema=out_schema)
+    if combine is not None:
+        # Both passes MUST see byte-identical partitions, but
+        # repartitionByRange samples its boundaries per job — materialize
+        # once (executor-local storage) so pass 1's partials line up with
+        # pass 2's partitions. At cluster scale this is one extra write of
+        # the working set, the price of turning a one-task scan into an
+        # n-task scan. The returned DataFrame reads the blocks lazily, so
+        # they are registered session-scoped and swept between queries by
+        # the bench/gate harness instead of leaking for the session's life.
+        prepared = session_scoped_checkpoint(prepared)
+        # A scan partial skips null rows, which is the fold rule. The
+        # contract gives the prefix recurrence
+        # seed_{i+1} = combine(seed_i, partial_i), seed_0 = acc0.
+        seed = spec.acc0
+        folder = replace(spec, kernel=get_folder(len(cols)))
+        for pid, partial in fold_partitions(prepared, folder):
+            seeds[pid] = seed
+            seed = combine(seed, partial)
+    return scan_partitions(prepared, spec, [*cols, *order_cols], seeds)
 
 
 def grouped_scan(
@@ -235,31 +157,19 @@ def grouped_scan(
     order_cols = as_list(order_by)
     cols = resolve_input_columns(df, columns, exclude=[*keys, *order_cols])
 
-    if skew_check:
-        from polars_numba_spark.operators.skew import (
-            fair_share_threshold,
-            hot_key_share,
+    skew = skewed_group(df, keys, skew_check)
+    if skew:
+        share, threshold, hot = skew
+        warnings.warn(
+            f"grouped_scan skew: sampled hottest group {hot} holds "
+            f"~{share:.0%} of rows (threshold {threshold:.1%}); one "
+            "Python worker scans it sequentially. For associative "
+            "steps use window.assoc_scan (JVM window); for "
+            "decomposable steps collect_scan(combine=) runs a two-pass "
+            "parallel prefix; otherwise hot-key state is inherent to "
+            "the declared semantics.",
+            stacklevel=2,
         )
-
-        threshold = (
-            skew_check
-            if isinstance(skew_check, float) and not isinstance(skew_check, bool)
-            else fair_share_threshold(df)
-        )
-        share, hot = hot_key_share(df, keys)
-        if share > threshold:
-            import warnings
-
-            warnings.warn(
-                f"grouped_scan skew: sampled hottest group {hot} holds "
-                f"~{share:.0%} of rows (threshold {threshold:.1%}); one "
-                "Python worker scans it sequentially. For associative "
-                "steps use window.assoc_scan (JVM window); for "
-                "decomposable steps collect_scan(combine=) runs a two-pass "
-                "parallel prefix; otherwise hot-key state is inherent to "
-                "the declared semantics.",
-                stacklevel=2,
-            )
 
     spec = dict(function=function, initial_accumulator=initial_accumulator,
                 return_dtype=return_dtype, columns=cols, extra_args=extra_args)

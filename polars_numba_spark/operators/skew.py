@@ -93,6 +93,24 @@ def fair_share_threshold(df: DataFrame) -> float:
     return 1.0 / max(parts, 1)
 
 
+def skewed_group(
+    df: DataFrame, keys: Sequence[str], skew_check: bool | float
+) -> tuple[float, float, object] | None:
+    """The grouped kernels' ``skew_check``: ``(share, threshold, key)`` when
+    the sampled hottest group holds more than ``threshold`` of the rows,
+    else None. ``skew_check`` is ``False`` (no check, no job), ``True`` (one
+    fair reducer share) or the threshold share itself."""
+    if not skew_check:
+        return None
+    threshold = (
+        skew_check
+        if isinstance(skew_check, float) and not isinstance(skew_check, bool)
+        else fair_share_threshold(df)
+    )
+    share, hot = hot_key_share(df, keys)
+    return (share, threshold, hot) if share > threshold else None
+
+
 def key_skew_report(
     df: DataFrame, keys: str | Sequence[str], top_n: int = 10
 ) -> DataFrame:

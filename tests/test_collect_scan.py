@@ -150,10 +150,9 @@ def test_parallel_prefix_scan_matches_sequential(spark):
 
     seq = collect_scan(df, add, 0, "long", column_names=["v"], order_by="ord")
     par = collect_scan(
-        df, add, 0, "long", column_names=["v"], order_by="ord",
-        combine=merge, num_partitions=8,
+        df, add, 0, "long", column_names=["v"], order_by="ord", combine=merge,
     )
-    assert par.rdd.getNumPartitions() == 8
+    assert par.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     seq_vals = [r["scan"] for r in seq.orderBy("ord").collect()]
     par_vals = [r["scan"] for r in par.orderBy("ord").collect()]
     assert seq_vals == par_vals
@@ -170,7 +169,7 @@ def test_parallel_prefix_scan_null_rule(spark):
 
     par = collect_scan(
         df, add, 0, "long", column_names=["v"], order_by="ord",
-        combine=lambda a, b: a + b, num_partitions=4,
+        combine=lambda a, b: a + b,
     )
     got = [r["scan"] for r in par.orderBy("ord").collect()]
     acc, expected = 0, []
@@ -188,3 +187,41 @@ def test_parallel_scan_requires_order(spark):
     with pytest.raises(ValueError, match="requires order_by"):
         collect_scan(df, lambda a, v: a + v, 0, "long", column_names=["v"],
                      combine=lambda a, b: a + b)
+
+
+def test_parallel_prefix_scan_empty_frame(spark):
+    df = spark.createDataFrame([], "v long, ord long")
+    par = collect_scan(df, lambda acc, v: acc + v, 0, "long", column_names=["v"],
+                       order_by="ord", combine=lambda a, b: a + b)
+    assert par.collect() == []
+
+
+def test_parallel_prefix_scan_fewer_rows_than_slots(spark):
+    """Fewer rows than task slots: the range partitioner makes fewer
+    partitions than asked for and one holds only a null row; the seeds
+    still line up."""
+    assert spark.sparkContext.defaultParallelism >= 4
+    df = spark.createDataFrame([(5, 0), (None, 1), (7, 2)], "v long, ord long")
+    par = collect_scan(df, lambda acc, v: acc + v, 100, "long", column_names=["v"],
+                       order_by="ord", combine=lambda a, b: a + b - 100)
+    assert [r["scan"] for r in par.orderBy("ord").collect()] == [105, None, 112]
+
+
+def test_parallel_prefix_scan_tuple_accumulator(spark):
+    """A SizedArray tuple accumulator under combine= equals the sequential
+    scan, null rows included."""
+    rows = [(float(i % 7) if i % 11 else None, float(i % 5), i) for i in range(300)]
+    df = spark.createDataFrame(rows, "a double, b double, ord long")
+
+    def pair(acc, a, b):
+        return (acc[0] + a, acc[1] + b)
+
+    def merge(x, y):
+        return (x[0] + y[0], x[1] + y[1])
+
+    kwargs = dict(column_names=["a", "b"], order_by="ord")
+    dtype = SizedArray("double", 2)
+    seq = scan_values(df, pair, (0.0, 0.0), dtype, **kwargs)
+    par = scan_values(df, pair, (0.0, 0.0), dtype, combine=merge, **kwargs)
+    assert par == seq
+    assert seq[11] is None and seq[-1] is not None

@@ -35,6 +35,12 @@ def step(acc, v):
     return acc + v if v % 2 == 0 else acc - v  # non-commutative-ish, branchy
 
 
+def add(a, b):
+    """``step`` shifts the accumulator by a per-row amount, so partials
+    folded from 0.0 combine by addition: the ``combine=`` form."""
+    return a + b
+
+
 def py_fold(values, acc0=0.0):
     acc = acc0
     for v in values:
@@ -44,10 +50,11 @@ def py_fold(values, acc0=0.0):
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=rows_strategy)
-def test_collect_fold_matches_python(spark, rows):
+@given(rows=rows_strategy, combine=st.sampled_from([None, add]))
+def test_collect_fold_matches_python(spark, rows, combine):
     df = _spark_df(spark, rows)
-    got = collect_fold(df, step, 0.0, column_names=["v"], order_by="ord")
+    got = collect_fold(df, step, 0.0, column_names=["v"], order_by="ord",
+                       combine=combine)
     assert got == pytest.approx(py_fold([v for _, v in rows]))
 
 
@@ -68,10 +75,11 @@ def test_grouped_fold_matches_python(spark, rows):
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=rows_strategy)
-def test_collect_scan_matches_python(spark, rows):
+@given(rows=rows_strategy, combine=st.sampled_from([None, add]))
+def test_collect_scan_matches_python(spark, rows, combine):
     df = _spark_df(spark, rows)
-    out = collect_scan(df, step, 0.0, "double", column_names=["v"], order_by="ord")
+    out = collect_scan(df, step, 0.0, "double", column_names=["v"], order_by="ord",
+                       combine=combine)
     got = [r["scan"] for r in out.orderBy("ord").collect()]
     acc = 0.0
     expected = []
