@@ -13,20 +13,34 @@ micro-batches (late rows fold late). For time-correct results, pair with a
 watermark and tolerate reordering only within a micro-batch, or use the
 windowed rollup below for event-time-correct aggregation.
 
-Caveat vs the batch null rule: ``applyInPandasWithState`` converts through
-pandas both ways. On the way in NaN and null both become NaN and a
-nullable bigint becomes float64; on the way out the ``isnull()`` mask turns
-NaN into null. So the streaming fold and scan treat NaN as null (the batch
-operators treat it as a value), and a bigint input with nulls loses
-precision past 2^53 — in the input passthrough too. Fixing it needs an
-Arrow state API; a strict xfail in tests/test_streaming.py pins it.
+Every state operator runs on :func:`_keyed_state`, which hands its update
+function a key's micro-batch rows as one exact Arrow batch and takes an
+Arrow batch back. ``applyInPandasWithState`` speaks pandas, where int64 has
+no null and NaN reads as null, so the rows cross it encoded:
+
+- **In**: each non-key integral or floating column arrives null-filled with
+  0 (its type kept) beside a ``__null_<c>`` flag computed on the JVM, and
+  is rebuilt in Arrow with that flag as its null mask — NaN stays a value
+  and a bigint stays exact.
+- **Out**: numeric columns leave as pandas masked arrays, which PySpark
+  converts through Arrow without its ``isnull()`` mask.
+
+So the streaming fold and scan keep the batch operators' null rule: a fold
+drops null rows only, a scan emits null for null rows only, and NaN is a
+value (ref `__init__.py:339,718-736`).
 """
 
 from __future__ import annotations
 
+import hashlib
+import pickle
+from operator import itemgetter
 from typing import Any, Callable, Iterable, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,7 +48,92 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from polars_numba_spark.kernels import get_folder, get_scanner
 from polars_numba_spark.operators._prep import as_list, ensure_event_time
-from polars_numba_spark.operators._segmented import kernel_spec
+from polars_numba_spark.operators._segmented import kernel_spec, result_batch
+
+# Arrow type -> the pandas masked dtype a numeric column leaves as
+_MASKED = {
+    getattr(pa, t)(): pd.api.types.pandas_dtype(t.capitalize())
+    for t in ("int8", "int16", "int32", "int64", "float32", "float64")
+}
+
+
+def _keyed_state(
+    df: DataFrame,
+    keys: list[str],
+    out_schema: T.StructType | str,
+    state_schema: T.StructType | str,
+    mode: str,
+    update: Callable[..., tuple[pa.RecordBatch, tuple]],
+) -> DataFrame:
+    """``df`` grouped by ``keys``, each key's micro-batch run through
+    ``update(key, rows, stored)`` with the in/out encoding the module
+    docstring describes: the module's one ``applyInPandasWithState`` call.
+
+    ``key`` maps each key column to its one-row array, ``rows`` holds every
+    row the key has in the micro-batch and ``stored`` is its state tuple,
+    None on the key's first micro-batch. ``update`` returns the rows to
+    emit, in ``out_schema`` order, and the new state tuple."""
+    names = df.columns
+    flagged = [
+        f.name for f in df.schema.fields if f.name not in keys
+        and isinstance(f.dataType, (T.IntegralType, T.FloatType, T.DoubleType))
+    ]
+    encoded = df.select(
+        *[
+            F.coalesce(F.col(c), F.lit(0).cast(df.schema[c].dataType)).alias(c)
+            if c in flagged else F.col(c)
+            for c in names
+        ],
+        *[F.col(c).isNull().alias(f"__null_{c}") for c in flagged],
+    )
+
+    def run(
+        _: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        # Spark may deliver a key's micro-batch rows as several chunks in
+        # arbitrary order; an order is only meaningful over all of them.
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        rows = pa.RecordBatch.from_arrays(
+            [
+                pa.array(pdf[c].to_numpy(), mask=pdf[f"__null_{c}"].to_numpy())
+                if c in flagged else pa.Array.from_pandas(pdf[c])
+                for c in names
+            ],
+            names=names,
+        )
+        key = {k: rows.column(k).slice(0, 1) for k in keys}
+        out, new_state = update(key, rows, state.get if state.exists else None)
+        state.update(new_state)
+        yield out.to_pandas(types_mapper=_MASKED.get)
+
+    return encoded.groupBy(*keys).applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _ascending(rows: pa.RecordBatch, order_cols: list[str]) -> pa.RecordBatch:
+    """``rows`` stably sorted as the batch operators' Spark ``asc`` sorts
+    them: nulls first and NaN after every number (Arrow alone puts NaN
+    beside the nulls)."""
+    if not order_cols:
+        return rows
+    sort_keys: dict[str, pa.Array] = {}
+    for c in order_cols:
+        col = rows.column(c)
+        if pa.types.is_floating(col.type):
+            sort_keys[f"__nan_{c}"] = pc.is_nan(col)
+        sort_keys[c] = col
+    order = pc.sort_indices(
+        pa.RecordBatch.from_pydict(sort_keys),
+        sort_keys=[(k, "ascending") for k in sort_keys],
+        null_placement="at_start",
+    )
+    return rows.take(order)
 
 
 def streaming_grouped_fold(
@@ -52,7 +151,6 @@ def streaming_grouped_fold(
     micro-batch with the accumulator persisted in the state store.
 
     Output mode: use ``update`` (each batch emits keys that changed).
-    NaN counts as null here (see the module caveat).
     """
     keys = as_list(group_by)
     order_cols = as_list(order_by)
@@ -60,53 +158,24 @@ def streaming_grouped_fold(
         df, result_name, function, initial_accumulator, return_dtype,
         list(columns), extra_args, get_folder,
     )
-    cols = spec.cols
+    used = {*keys, *order_cols, *spec.cols}
     out_schema = T.StructType([df.schema[k] for k in keys] + [spec.field])
+
     # State holds the PICKLED accumulator: arbitrary Python accumulators
     # (tuples, dicts, ints without float degradation) survive micro-batches
     # exactly as the batch operators allow.
-    state_schema = T.StructType([T.StructField("acc", T.BinaryType())])
-
-    def fold_with_state(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        import pickle
-
-        acc = pickle.loads(bytes(state.get[0])) if state.exists else spec.acc0
-        # Spark may deliver a key's micro-batch rows as SEVERAL pandas
-        # chunks in arbitrary order — order_by is only meaningful over the
-        # concatenation, so gather first, sort once, fold once. Memory is
-        # bounded by the key's per-micro-batch volume (watermarks bound it
-        # further in production).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            if order_cols:
-                pdf = pdf.sort_values(order_cols, kind="mergesort")
-            pdf = pdf.dropna(subset=cols)
-            if len(pdf):
-                arrays = [
-                    pdf[c].to_numpy().astype(d, copy=False)
-                    for c, d in zip(cols, spec.dtypes)
-                ]
-                acc = spec.kernel(spec.step, acc, spec.extra, *arrays)
-        state.update((pickle.dumps(acc),))
-        # return-dtype cast, same numpy-buffer semantics as batch grouped_fold
-        buf = spec.buffer(1)
+    def update(key, rows, stored):
+        acc = pickle.loads(stored[0]) if stored else spec.acc0
+        acc = spec.fold(acc, _ascending(rows, order_cols))
+        buf = spec.buffer(1)  # the return-dtype cast of batch grouped_fold
         buf[0] = acc
-        value = buf[0].tolist() if spec.res_shape else (
-            buf[0].item() if spec.res_np.kind in "biuf" else buf[0]
-        )
-        data = {k: [v] for k, v in zip(keys, key)}
-        data[result_name] = [value]
-        yield pd.DataFrame(data)
+        no_null = np.zeros(1, dtype=bool)
+        out = result_batch(keys, list(key.values()), [spec], [buf], [no_null])
+        return out, (pickle.dumps(acc),)
 
-    return df.groupBy(*keys).applyInPandasWithState(
-        fold_with_state,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df.select(*[c for c in df.columns if c in used]),
+        keys, out_schema, "acc binary", "update", update,
     )
 
 
@@ -127,8 +196,7 @@ def streaming_grouped_scan(
     mode ``append``).
 
     Null rule: rows with a null in any selected column emit a null scan
-    value and do not advance the accumulator. Unlike the batch operator, a
-    NaN counts as null (see the module caveat).
+    value and do not advance the accumulator.
     """
     keys = as_list(group_by)
     order_cols = as_list(order_by)
@@ -136,51 +204,23 @@ def streaming_grouped_scan(
         df, result_name, function, initial_accumulator, return_dtype,
         list(columns), extra_args, get_scanner,
     )
-    cols = spec.cols
-    passthrough = [f for f in df.schema.fields if f.name in {*keys, *order_cols, *cols}]
+    used = {*keys, *order_cols, *spec.cols}
+    passthrough = [f for f in df.schema.fields if f.name in used]
     out_schema = T.StructType(passthrough + [spec.field])
-    state_schema = T.StructType([T.StructField("acc", T.BinaryType())])
 
-    def scan_with_state(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        import pickle
+    def update(key, rows, stored):  # state as in streaming_grouped_fold
+        acc = pickle.loads(stored[0]) if stored else spec.acc0
+        rows = _ascending(rows, order_cols)
+        mask, arrays = spec.inputs(rows)
+        result = spec.buffer(rows.num_rows)
+        acc = spec.kernel(spec.step, acc, spec.extra, result, mask, *arrays)
+        names = rows.schema.names
+        out = result_batch(names, rows.columns, [spec], [result], [mask])
+        return out, (pickle.dumps(acc),)
 
-        acc = pickle.loads(bytes(state.get[0])) if state.exists else spec.acc0
-        # concatenate the micro-batch's chunks before sorting (see fold)
-        gathered = [pdf[[f.name for f in passthrough]] for pdf in pdfs if len(pdf)]
-        for pdf in (
-            [pd.concat(gathered, ignore_index=True)] if len(gathered) > 1 else gathered
-        ):
-            if order_cols:
-                pdf = pdf.sort_values(order_cols, kind="mergesort")
-            mask = pdf[cols].isna().any(axis=1).to_numpy()
-            np_cols = [
-                pdf[c].fillna(0).to_numpy().astype(d, copy=False)
-                for c, d in zip(cols, spec.dtypes)
-            ]
-            result = spec.buffer(len(pdf))
-            acc = spec.kernel(spec.step, acc, spec.extra, result, mask, *np_cols)
-            out = pdf.copy()
-            if spec.res_shape:
-                out[result_name] = [
-                    None if m else row.tolist() for m, row in zip(mask, result)
-                ]
-            else:
-                series = pd.Series(result, index=out.index)
-                if mask.any():
-                    series = series.astype(object)
-                    series[mask] = None
-                out[result_name] = series
-            yield out
-        state.update((pickle.dumps(acc),))
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        scan_with_state,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df.select(*[f.name for f in passthrough]),
+        keys, out_schema, "acc binary", "append", update,
     )
 
 
@@ -259,51 +299,30 @@ def streaming_kmv_distinct(
     hash-distinct spelling; under md5-60bit collisions this undercounts
     by the collision count, same as the batch sketch.
     """
-    import hashlib
-
-    from polars_numba_spark.operators._prep import as_list
-
-    # Cast to string JVM-side (exactly the batch sketch's spelling): a null
-    # in an integral pandas column would coerce it to float64 and stringify
-    # survivors as '123.0', silently diverging from md5_long's '123'.
-    df = df.withColumn(value_col, F.col(value_col).cast("string"))
+    # md5_long hashes the value's string form as Spark casts it (a double
+    # as '1.0E10', where Python's str gives '10000000000.0'), so cast on
+    # the JVM, exactly the batch sketch's spelling.
     key_list = as_list(keys)
+    df = df.select(*key_list, F.col(value_col).cast("string").alias(value_col))
     dtypes = dict(df.dtypes)
     key_schema = ", ".join(f"{c} {dtypes[c]}" for c in key_list)
     out_schema = f"{key_schema}, kmv_estimate double, batches_seen long"
-    state_schema = "hashes array<long>, batches long"
     space = float(1 << 60)
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        hashes: set = set()
-        batches = 0
-        if state.exists:
-            stored, batches = state.get
-            hashes = set(stored)
-        fresh = set()
-        for pdf in pdfs:
-            col = pdf[value_col].dropna()
-            fresh.update(col.astype(str).tolist())
-        for v in fresh:
+    def update(key, rows, stored):
+        hashes, batches = (set(stored[0]), stored[1]) if stored else (set(), 0)
+        for v in set(rows.column(value_col).drop_null().to_pylist()):
             hashes.add(int(hashlib.md5(v.encode()).hexdigest()[:15], 16))
         top = sorted(hashes)[:k]
         batches += 1
-        state.update((top, batches))
-        if len(top) < k:
-            est = float(len(top))
-        else:
-            est = (k - 1) * space / float(top[-1])
-        data = {c: [kv] for c, kv in zip(key_list, key)}
-        data["kmv_estimate"] = [est]
-        data["batches_seen"] = [batches]
-        yield pd.DataFrame(data)
+        est = float(len(top)) if len(top) < k else (k - 1) * space / float(top[-1])
+        out = pa.RecordBatch.from_pydict(
+            {**key, "kmv_estimate": [est], "batches_seen": [batches]}
+        )
+        return out, (top, batches)
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, key_list, out_schema, "hashes array<long>, batches long", "append", update
     )
 
 
@@ -330,15 +349,9 @@ def streaming_hll_distinct(
     value, so the streaming estimate is bit-identical to the batch face
     and to the DuckDB oracle. Readers take ``max_by(..., batches_seen)``
     per key (the streaming_kmv_distinct read protocol)."""
-    import hashlib
-
-    from polars_numba_spark.operators._prep import as_list
-
-    # Cast to string JVM-side (the batch sketch's spelling): a null in an
-    # integral pandas column would coerce it to float64 and stringify
-    # survivors as '123.0', silently diverging from md5_long's '123'.
-    df = df.withColumn(value_col, F.col(value_col).cast("string"))
+    # the JVM string cast: see streaming_kmv_distinct
     key_list = as_list(keys)
+    df = df.select(*key_list, F.col(value_col).cast("string").alias(value_col))
     dtypes = dict(df.dtypes)
     key_schema = ", ".join(f"{c} {dtypes[c]}" for c in key_list)
     out_schema = (
@@ -349,17 +362,9 @@ def streaming_hll_distinct(
     rho_max = w_bits + 1
     w_mask = (1 << w_bits) - 1
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        regs: dict[int, int] = {}
-        batches = 0
-        if state.exists:
-            buckets, rhos, batches = state.get
-            regs = dict(zip(buckets, rhos))
-        fresh = set()
-        for pdf in pdfs:
-            col = pdf[value_col].dropna()
-            fresh.update(col.astype(str).tolist())
-        for v in fresh:
+    def update(key, rows, stored):
+        regs, batches = (dict(zip(*stored[:2])), stored[2]) if stored else ({}, 0)
+        for v in set(rows.column(value_col).drop_null().to_pylist()):
             h = int(hashlib.md5(v.encode()).hexdigest()[:15], 16)
             bucket = h >> w_bits
             w = h & w_mask
@@ -367,21 +372,16 @@ def streaming_hll_distinct(
             if regs.get(bucket, 0) < rho:
                 regs[bucket] = rho
         batches += 1
-        state.update((list(regs.keys()), list(regs.values()), batches))
         z_present = sum(1 << (rho_max - r) for r in regs.values())
-        data = {c: [kv] for c, kv in zip(key_list, key)}
-        data["n_registers"] = [len(regs)]
-        data["z_present"] = [z_present]
-        data["batches_seen"] = [batches]
-        yield pd.DataFrame(data)
+        out = pa.RecordBatch.from_pydict({
+            **key,
+            "n_registers": [len(regs)],
+            "z_present": [z_present],
+            "batches_seen": [batches],
+        })
+        return out, (list(regs.keys()), list(regs.values()), batches)
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(df, key_list, out_schema, state_schema, "append", update)
 
 
 def streaming_latest_snapshot(
@@ -419,36 +419,24 @@ def streaming_latest_snapshot(
     key_schema = ", ".join(f"{c} {dtypes[c]}" for c in key_list)
     val_schema = ", ".join(f"{c} {dtypes[c]}" for c in vals)
     out_schema = f"{key_schema}, {val_schema}, batches_seen long"
-    state_schema = f"{val_schema}, batches long"
     order_cols = [seq_col, *tb_list]
+    seq = itemgetter(*[vals.index(c) for c in order_cols])
+    newest_first = [(c, "descending") for c in order_cols]
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        best: tuple | None = None
-        batches = 0
-        if state.exists:
-            stored = state.get
-            best, batches = tuple(stored[:-1]), stored[-1]
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            top = pdf.sort_values(order_cols, ascending=False).iloc[0]
-            cand = tuple(top[c] for c in vals)
-            if best is None or tuple(
-                cand[vals.index(c)] for c in order_cols
-            ) > tuple(best[vals.index(c)] for c in order_cols):
-                best = cand
+    def update(key, rows, stored):
+        best, batches = (tuple(stored[:-1]), stored[-1]) if stored else (None, 0)
+        top = pc.sort_indices(rows, sort_keys=newest_first)[0].as_py()
+        cand = tuple(rows.column(c)[top].as_py() for c in vals)
+        if best is None or seq(cand) > seq(best):
+            best = cand
         batches += 1
-        state.update((*best, batches))
-        data = {c: [kv] for c, kv in zip(key_list, key)}
-        for c, v in zip(vals, best):
-            data[c] = [v]
-        data["batches_seen"] = [batches]
-        yield pd.DataFrame(data)
+        out = pa.RecordBatch.from_pydict({
+            **key,
+            **{c: pa.array([v], rows.schema.field(c).type) for c, v in zip(vals, best)},
+            "batches_seen": [batches],
+        })
+        return out, (*best, batches)
 
-    return df.groupBy(*key_list).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, key_list, out_schema, f"{val_schema}, batches long", "append", update
     )

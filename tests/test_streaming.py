@@ -701,61 +701,123 @@ def test_streaming_cms_batch_split_invariant(spark, tmp_path):
     assert got == expected
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="applyInPandasWithState converts through pandas both ways: NaN "
-    "reads as null and a nullable bigint as float64 (ROADMAP open item)",
-)
+def _drain(spark, out, name, mode, ckpt):
+    """Run the bounded stream ``out`` into a memory table in ``mode`` and
+    return its rows."""
+    query = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert query.awaitTermination(120), "stream did not finish within timeout"
+    try:
+        return spark.table(name).collect()
+    finally:
+        spark.catalog.dropTempView(name)
+
+
 def test_streaming_fold_scan_keep_nan_and_exact_int64(spark, tmp_path):
     """The streaming fold/scan must give the batch operators' results: NaN
-    is a value, not null, and a bigint stays exact past 2^53."""
+    is a value, not null, a bigint stays exact past 2^53, and rows sort as
+    Spark's ``asc`` sorts them (null order first, NaN order last)."""
     from polars_numba_spark.operators.scan import grouped_scan
     from polars_numba_spark.streaming import streaming_grouped_scan
 
     rows = [
-        (1, 0, 1.0, 2**53 + 1),
-        (1, 1, float("nan"), None),
-        (1, 2, 2.0, 1),
-        (1, 3, None, 1),
+        (1, 0.0, 1.0, 2**53 + 1),
+        (1, 1.0, float("nan"), None),
+        (1, 2.0, 2.0, 1),
+        (1, 3.0, None, 1),
+        (1, None, 4.0, 2),
+        (1, float("nan"), 8.0, 4),
     ]
-    schema = "k long, o long, x double, n long"
+    schema = "k long, o double, x double, n long"
     spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "in"))
     batch = spark.read.parquet(str(tmp_path / "in"))
 
-    def drain(out, name, mode):
-        query = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", str(tmp_path / name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert query.awaitTermination(120), "stream did not finish within timeout"
-        try:
-            return spark.table(name)
-        finally:
-            spark.catalog.dropTempView(name)
-
-    def scans(df, col):
-        return [(r["o"], repr(r[col]), repr(r["scan"]))
-                for r in df.orderBy("o").collect()]
+    def scans(rows, col):
+        return sorted((repr(r["o"]), repr(r[col]), repr(r["scan"])) for r in rows)
 
     for col, acc0, dtype in (("x", 0.0, "double"), ("n", 0, "long")):
         args = ("k", add_cents, acc0, dtype)
         kwargs = {"columns": [col], "order_by": "o"}
         stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
-        got_scan = scans(
-            drain(streaming_grouped_scan(stream, *args, **kwargs),
-                  f"nan_scan_{col}", "append"),
-            col,
+        got_scan = _drain(spark, streaming_grouped_scan(stream, *args, **kwargs),
+                          f"nan_scan_{col}", "append", tmp_path / f"scan_{col}")
+        got_fold = _drain(spark, streaming_grouped_fold(stream, *args, **kwargs),
+                          f"nan_fold_{col}", "update", tmp_path / f"fold_{col}")
+        assert scans(got_scan, col) == scans(
+            grouped_scan(batch, *args, **kwargs).collect(), col
         )
-        got_fold = drain(streaming_grouped_fold(stream, *args, **kwargs),
-                         f"nan_fold_{col}", "update").collect()
-        assert got_scan == scans(grouped_scan(batch, *args, **kwargs), col)
         assert [repr(r["fold"]) for r in got_fold] == [
             repr(r["fold"]) for r in grouped_fold(batch, *args, **kwargs).collect()
         ]
+    # the bigint scan (the loop's last pass), in Spark's asc order
+    assert {repr(r["o"]): r["scan"] for r in got_scan} == {
+        "None": 2, "0.0": 2**53 + 3, "1.0": None, "2.0": 2**53 + 4,
+        "3.0": 2**53 + 5, "nan": 2**53 + 9,
+    }
+
+
+def test_streaming_latest_snapshot_keeps_int64_exact_beside_null(spark, tmp_path):
+    """A bigint winner stays exact past 2^53 when its key has a null in the
+    same column in the same micro-batch, and a null winner stays null."""
+    from polars_numba_spark.streaming import streaming_latest_snapshot
+
+    rows = [(1, 1, 2**53 + 1), (1, 0, None), (2, 0, 5), (2, 1, None)]
+    schema = "k long, seq long, v long"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp_path / "in"))
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
+    got = _drain(spark, streaming_latest_snapshot(stream, "k", "seq"),
+                 "lww_exact", "append", tmp_path / "ckpt")
+    assert {r["k"]: (r["seq"], r["v"]) for r in got} == {
+        1: (1, 2**53 + 1), 2: (1, None)
+    }
+
+
+def test_streaming_fold_scan_list_results_match_batch(spark, tmp_path):
+    """A ``SizedArray`` (tuple accumulator) result streams as the batch
+    operators give it: a list per row, None for a null input row."""
+    from pyspark.sql import types as T
+
+    from polars_numba_spark import SizedArray
+    from polars_numba_spark.operators.scan import grouped_scan
+    from polars_numba_spark.streaming import streaming_grouped_scan
+
+    prices = [100.0, 800.0, 300.0, None, 0.0, 60.0]
+    units = [20.0, 2.0, 5.0, 9.0, 0.0, 1.0]
+    schema = "k string, price double, units double, ord long"
+    spark.createDataFrame(
+        [("o", p, u, i) for i, (p, u) in enumerate(zip(prices, units))], schema
+    ).write.parquet(str(tmp_path / "in"))
+    batch = spark.read.parquet(str(tmp_path / "in"))
+
+    def step(acc, max_price, max_units, price, units):
+        bal, got = acc
+        if bal + price > max_price or got + units > max_units:
+            return acc
+        return (bal + price, got + units)
+
+    args = ("k", step, (0.0, 0.0), SizedArray(T.DoubleType(), 2))
+    kwargs = {"columns": ["price", "units"], "order_by": "ord",
+              "extra_args": (1000.0, 25.0)}
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
+    got_scan = _drain(spark, streaming_grouped_scan(stream, *args, **kwargs),
+                      "list_scan", "append", tmp_path / "scan")
+    got_fold = _drain(spark, streaming_grouped_fold(stream, *args, **kwargs),
+                      "list_fold", "update", tmp_path / "fold")
+
+    def by_ord(rows):
+        return {r["ord"]: r["scan"] for r in rows}
+
+    assert by_ord(got_scan) == by_ord(grouped_scan(batch, *args, **kwargs).collect())
+    assert by_ord(got_scan)[3] is None
+    assert [r["fold"] for r in got_fold] == [
+        r["fold"] for r in grouped_fold(batch, *args, **kwargs).collect()
+    ] == [[960.0, 23.0]]
 
 
 def _runner_state(spark, name):
@@ -878,3 +940,15 @@ def test_streaming_faces_share_one_runner():
     src = inspect.getsource(io_streaming)
     assert src.count("writeStream") == 1
     assert src.count("awaitTermination") == 1
+
+
+def test_stateful_operators_share_one_keyed_state_helper():
+    """The five state operators run on ``_keyed_state``: one
+    ``applyInPandasWithState`` call, and no pandas sort, fill or null-mask
+    code in the module."""
+    from polars_numba_spark.streaming import stateful
+
+    src = inspect.getsource(stateful)
+    assert src.count("applyInPandasWithState(") == 1
+    for pandas_idiom in ("sort_values", "fillna", "dropna", ".isna("):
+        assert pandas_idiom not in src, pandas_idiom
