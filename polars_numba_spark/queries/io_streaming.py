@@ -16,12 +16,17 @@ Both queries keep the (spark, sf_dir) -> batch DataFrame contract:
 
 Sink policy: every streaming face except the foreachBatch near-dup ingest
 runs its query through :func:`_run_available_now` — ``availableNow``
-trigger, a fresh checkpoint dir removed afterwards, output read back from
-parquet. Append mode writes a parquet streaming sink; complete mode, which
-file sinks do not support, writes a ``pns_``-prefixed memory table that is
-staged to parquet and dropped. Either way no session-lived state survives a
-query — the round-2 driver bench showed leaked memory sinks degrading every
-later query in a 91-query single-session run.
+trigger, a fresh checkpoint dir removed afterwards. Complete mode, which
+file sinks do not support, writes a ``pns_``-prefixed memory table, and
+that memory sink is the result: the returned frame is resolved from the
+table and the view is dropped, so the rows stay reachable only through
+the caller's frame (a ``LocalTableScan``: no parquet write, no listing, no
+schema job). The sink already holds those rows on the driver. Append mode
+writes a parquet streaming sink, read back with the stream's schema; an
+append output grows with its input, so it is not collected to the driver.
+Either way no session-lived state survives a query — the round-2 driver
+bench showed leaked memory sinks degrading every later query in a
+91-query single-session run.
 """
 
 from __future__ import annotations
@@ -65,7 +70,9 @@ from polars_numba_spark.streaming import windowed_rollup
 
 def _scratch_dir(tag: str, sf_dir: str) -> str:
     """Deterministic per-(pid, tag, sf) scratch dir: the lazily-returned
-    DataFrame still references these files when the caller collects, so
+    DataFrame still references these files when the caller collects (a
+    format round-trip's read-back, an append-mode stream's parquet sink;
+    a complete-mode stream returns its memory sink and makes no dir), so
     they cannot be deleted here — instead every rerun overwrites the SAME
     directory (mode 'overwrite'), bounding disk at one copy per sf rather
     than one per invocation. The pid token keeps two CONCURRENT gate/bench
@@ -103,11 +110,15 @@ def _run_available_now(
     sf_dir: str,
     complete: bool = False,
 ) -> DataFrame:
-    """Run the bounded stream ``df`` to completion and return a batch read
+    """Run the bounded stream ``df`` to completion and return a batch frame
     of its output (the module's sink policy).
 
-    ``complete`` selects complete output mode: the memory table is staged
-    to parquet and dropped. The query runs with
+    ``complete`` selects complete output mode, and the memory sink is the
+    result: the frame is resolved from the sink's table before the view
+    is dropped, so only the caller's frame reaches the rows, and Spark
+    plans it as a ``LocalTableScan`` with no job. Append mode writes a
+    parquet sink and reads it back with ``df``'s schema, so no
+    schema-inference job runs. The query runs with
     ``spark.sql.shuffle.partitions`` pinned to the session's
     ``defaultParallelism``, restored afterwards: one state partition per
     task slot. The state-store partition count is fixed at the stream's
@@ -120,7 +131,6 @@ def _run_available_now(
     already set the conf to the core count; the pin holds the rule for
     sessions built elsewhere."""
     spark = df.sparkSession
-    out_dir = _fresh_dir(f"{name}_out", sf_dir)
     table = f"pns_{name}_{uuid.uuid4().hex[:8]}"
     # a fresh checkpoint per run: a reused one would mark the input
     # processed and emit nothing; the sink holds the results
@@ -133,19 +143,21 @@ def _run_available_now(
         if complete:
             writer = writer.format("memory").queryName(table).outputMode("complete")
         else:
+            out_dir = _fresh_dir(f"{name}_out", sf_dir)
             writer = writer.format("parquet").option("path", out_dir).outputMode("append")
         spark.conf.set(
             "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
         )
         _await(writer.start(), name)
+        # resolved before the view is dropped: the frame keeps the sink
         if complete:
-            spark.table(table).write.mode("overwrite").parquet(out_dir)
+            return spark.table(table)
+        return spark.read.schema(df.schema).parquet(out_dir)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if complete:
             spark.catalog.dropTempView(table)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)
 
 
 @register(
@@ -1173,8 +1185,9 @@ def streaming_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ewma_step(acc, value):
         return (1.0 - EWMA_ALPHA) * acc + EWMA_ALPHA * value
 
+    # frame order, so the staging exchange merges the loader's
     events = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
+        "event_id", "ts", "user_id", "value"
     )
     return _staged_streaming_scan(
         spark,

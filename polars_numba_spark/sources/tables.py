@@ -141,7 +141,9 @@ def _parallelize_underscplit_scan(
     round-robin is deterministic under retry (Spark sorts before
     round-robin repartition, SPARK-23207). Fold/scan operators prune their
     input in frame order (operators/_prep.py::frame_order_select), so
-    Catalyst merges this exchange into theirs. Kill switch:
+    Catalyst merges this exchange into theirs. :func:`load_table` applies
+    its timestamp casts before calling this, so they sit under the
+    exchange and the merge holds for ``events`` too. Kill switch:
     PNS_SCAN_PARALLELIZE=0.
     """
     if os.environ.get("PNS_SCAN_PARALLELIZE") == "0" or size is None:
@@ -175,13 +177,16 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     floor-convert to microseconds, the same truncation DuckDB applies),
     though the current testdata ships plain ``timestamp[us]``.
     Under-split inputs are repartitioned to the core count — see
-    :func:`_parallelize_underscplit_scan`. The parquet schema of an
-    unchanged single-file table is not inferred again (:func:`_table_meta`).
+    :func:`_parallelize_underscplit_scan` — after the casts, so the casts
+    sit under the round-robin exchange and a consumer that prunes in frame
+    order merges it into its own, ``events`` included. The parquet schema
+    of an unchanged single-file table is not inferred again
+    (:func:`_table_meta`).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     df, size = _read_parquet(spark, path)
-    df = _parallelize_underscplit_scan(spark, df, size)
-    return _normalize_timestamps(_events_ts_micros(df, name))
+    df = _normalize_timestamps(_events_ts_micros(df, name))
+    return _parallelize_underscplit_scan(spark, df, size)
 
 
 def load_stream(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

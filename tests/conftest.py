@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -38,3 +39,26 @@ def tiny_batches(spark):
     spark.conf.set(key, "19")
     yield
     spark.conf.set(key, previous)
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``jobs_in_group(fn)``: run ``fn`` under a fresh job group and return
+    the number of jobs it submitted from the calling thread."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-in-group-{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -1141,10 +1141,18 @@ def _orders_fold_scan_frames(spark, monkeypatch):
 
 def test_fold_scan_merge_the_loader_exchange(spark, monkeypatch):
     """The operators prune their input in frame order, so Catalyst merges
-    the loader's round-robin exchange into the operator's own exchange."""
+    the loader's round-robin exchange into the operator's own exchange.
+    ``events`` has its ``ts`` cast under that exchange, so it merges too."""
+    from polars_numba_spark.operators import scan as SC
+    from polars_numba_spark.sources import load_table
+
     frames = _orders_fold_scan_frames(spark, monkeypatch)
+    frames["events_grouped_scan"] = SC.grouped_scan(
+        load_table(spark, "events", SF), "user_id", _total_step, 0.0, "double",
+        columns=["value", "event_id"], order_by="ts",
+    )
     for name in ["collect_fold", "collect_scan", "grouped_fold", "grouped_scan",
-                 "grouped_multi_fold"]:
+                 "grouped_multi_fold", "events_grouped_scan"]:
         assert "RoundRobinPartitioning" not in plans.explain_string(frames[name]), name
 
 

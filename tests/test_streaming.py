@@ -831,7 +831,7 @@ def _runner_state(spark, name):
 @pytest.mark.parametrize(
     "face",
     [
-        "streaming_daily_rollup",  # complete mode: memory table staged out
+        "streaming_daily_rollup",  # complete mode: the memory sink is the result
         "streaming_signup_purchase_join",  # append mode, stream-stream join
         "streaming_user_ewma",  # staged stateful scan
     ],
@@ -842,6 +842,42 @@ def test_runner_leaves_no_session_state(spark, face):
     before = _runner_state(spark, face)
     assert getattr(io_streaming, face)(spark, SF).count() > 0
     assert _runner_state(spark, face) == before
+
+
+def test_complete_mode_returns_its_memory_sink(spark):
+    """A complete-mode stream hands back its memory sink: a
+    ``LocalTableScan`` with no parquet write or read, which keeps its rows
+    after the runner has dropped the sink's view."""
+    from polars_numba_spark.queries.io_streaming import _run_available_now
+
+    name = "runner_handoff_probe"
+    out_dirs = os.path.join(tempfile.gettempdir(), f"pns_{name}_out_*")
+    dirs_before = glob.glob(out_dirs)
+    before = _runner_state(spark, name)
+    counts = load_stream(spark, "events", SF).groupBy("event_type").count()
+    out = _run_available_now(counts, name, SF, complete=True)
+    assert _runner_state(spark, name) == before
+    assert glob.glob(out_dirs) == dirs_before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "FileScan parquet" not in plan
+    expected = sorted(load_table(spark, "events", SF).groupBy("event_type").count().collect())
+    assert sorted(out.collect()) == sorted(out.collect()) == expected
+
+
+def test_append_mode_reads_back_without_a_job(spark, jobs_in_group):
+    """An append-mode stream's parquet sink is read back with the schema
+    the stream wrote. The query's own jobs run in its job group, so the
+    caller's group sees none: no schema inference after termination."""
+    from polars_numba_spark.queries.io_streaming import _run_available_now
+
+    picked = load_stream(spark, "events", SF).select("event_id", "value")
+    out = []
+    assert jobs_in_group(
+        lambda: out.append(_run_available_now(picked, "runner_append_probe", SF))
+    ) == 0
+    expected = load_table(spark, "events", SF).select("event_id", "value")
+    assert sorted(out[0].collect()) == sorted(expected.collect())
 
 
 @pytest.fixture

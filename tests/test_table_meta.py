@@ -8,37 +8,19 @@ no job, and a rewritten file is read with its new schema.
 
 from __future__ import annotations
 
-import itertools
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from polars_numba_spark.sources import load_stream, load_table
 
-_groups = itertools.count()
 
-
-def _jobs_in_group(spark, fn) -> int:
-    """Run ``fn`` under a fresh job group; the number of jobs it submitted."""
-    sc = spark.sparkContext
-    group = f"table-meta-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_unchanged_table_is_read_without_a_job(spark, tmp_path):
+def test_unchanged_table_is_read_without_a_job(spark, tmp_path, jobs_in_group):
     pq.write_table(pa.table({"a": [1, 2, 3]}), tmp_path / "memo.parquet")
     sf_dir = str(tmp_path)
     # the first read infers the schema: a job, which shows the count works
-    assert _jobs_in_group(spark, lambda: load_table(spark, "memo", sf_dir)) >= 1
-    assert _jobs_in_group(spark, lambda: load_table(spark, "memo", sf_dir)) == 0
-    assert _jobs_in_group(spark, lambda: load_stream(spark, "memo", sf_dir)) == 0
+    assert jobs_in_group(lambda: load_table(spark, "memo", sf_dir)) >= 1
+    assert jobs_in_group(lambda: load_table(spark, "memo", sf_dir)) == 0
+    assert jobs_in_group(lambda: load_stream(spark, "memo", sf_dir)) == 0
     assert sorted(r.a for r in load_table(spark, "memo", sf_dir).collect()) == [1, 2, 3]
 
 
