@@ -60,13 +60,12 @@ def frame_order_select(df: DataFrame, *groups: Sequence[str]) -> DataFrame:
     """``df`` pruned to the named columns, kept in FRAME order.
 
     A projection that only drops columns is pushed below a ``Repartition``
-    and then removed, so ``CollapseRepartition`` merges the loader's
-    round-robin exchange (sources/tables.py) into the operator's own. The
-    loader's casts sit under its round-robin, so this holds for a table
-    with timestamp columns (``events``) too. A reordering projection
-    stays above it and both exchanges run (see SCALE.md). Kernels
-    therefore bind columns by name, and each operator emits its declared
-    output order itself.
+    and then removed, so ``CollapseRepartition`` merges any upstream
+    repartition of the caller's frame (a ``repartition(n)`` or
+    :func:`sources.widen`) into the operator's own exchange. A reordering
+    projection stays above it and both exchanges run (see SCALE.md).
+    Kernels therefore bind columns by name, and each operator emits its
+    declared output order itself.
     """
     wanted = {c for group in groups for c in group}
     missing = sorted(wanted - set(df.columns))

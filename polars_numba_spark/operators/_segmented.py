@@ -183,7 +183,9 @@ def ordered_partitions(df: DataFrame, order_cols: list[str], parallel: bool) -> 
     Parallel (a declared ``combine``): with an order, one range partition
     per task slot, each a CONTIGUOUS run of the declared order (hash
     partitions would interleave it, and a non-commutative combine would
-    merge slices out of order); without one, the frame as it is.
+    merge slices out of order); without one, the frame's own partitioning
+    (a scan's native splits): nothing here widens it, because an
+    exchange in front of an O(1)-per-row fold costs more than it saves.
     """
     if not parallel:
         if order_cols:

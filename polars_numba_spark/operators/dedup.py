@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
+from polars_numba_spark.sources import widen
 from polars_numba_spark.operators.text import (
     distinct_tokens,
     fingerprint,
@@ -238,7 +239,7 @@ def _banded_signatures(
     if toks is not None:
         tok = toks.select("id", *blocks, F.explode("toks").alias("tok"))
     else:
-        tok = df.select(F.col(id_col).alias("id"), *blocks, tokcol)
+        tok = widen(df).select(F.col(id_col).alias("id"), *blocks, tokcol)
     sig = tok.groupBy("id", *blocks).agg(*aggs)
     return sig.select("id", *blocks, bandcol).select(
         "id", *blocks, "band.band_idx", "band.band_hash"
@@ -726,7 +727,7 @@ def minhash_dedup_pairs(
         from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
         toks = session_scoped_checkpoint(
-            df.select(
+            widen(df).select(
                 F.col(id_col).alias("id"),
                 _token_sets(text_col, shingle_n).alias("toks"),
             ).withColumn("n_toks", F.size("toks"))
@@ -1314,7 +1315,7 @@ def _duplicated_shingle_positions(
             ),
         )
 
-    sh = _explode(df)
+    sh = _explode(widen(df))
     if hash_shingles:
         sh = sh.withColumn("__sh", F.xxhash64("__sh"))
     if via == "auto":
@@ -1568,7 +1569,7 @@ def duplicated_shingle_fraction(
             F.explode(token_shingles(text_col, shingle_n)).alias("__sh"),
         )
 
-    shingles = _explode(df)
+    shingles = _explode(widen(df))
     if via == "auto":
         via = _choose_shingle_via(df, _explode, skew_threshold, sample_fraction)
     if via == "window":

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
+from polars_numba_spark.sources import widen
 
 
 def interval_join(
@@ -64,7 +65,9 @@ def interval_join(
     lo_op = {"both": "<=", "left": "<=", "right": "<", "neither": "<"}[closed]
     hi_op = {"both": "<=", "left": "<", "right": "<=", "neither": "<"}[closed]
 
-    l_b = left.withColumn("__bucket", (F.col(point) / bucket_width).cast("long"))
+    # the points are the join's stream side: the exact range filter runs at
+    # their width
+    l_b = widen(left).withColumn("__bucket", (F.col(point) / bucket_width).cast("long"))
     r_b = right.withColumn(
         "__buckets",
         F.sequence(

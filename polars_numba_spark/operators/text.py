@@ -16,6 +16,8 @@ import os
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from polars_numba_spark.sources import widen
+
 # Minimal per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small and frozen: they are part of the operator's
 # contract (the oracle SQL embeds the same lists).
@@ -370,7 +372,7 @@ def winnowing_overlap_pairs(
 
     fp = session_scoped_checkpoint(
         winnowing_fingerprints(
-            df, text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
+            widen(df), text_col=text_col, id_col=id_col, k=k, w=w, portable=portable
         )
     )
     ex = fp.where(F.size("fingerprints") > 0).select(

@@ -24,6 +24,7 @@ from polars_numba_spark.operators.similarity import (
     norm,
     sumsq,
 )
+from polars_numba_spark.sources import widen
 
 
 def l2_normalize(col, eps: float = 1e-12):
@@ -1073,7 +1074,7 @@ def pq_encode(
         F.col("cn2").alias("__cn2"),
     )
     return _pq_assign(
-        _pq_subvectors(df, m, vec_col, id_col), cents, False, round_to=round_to
+        _pq_subvectors(widen(df), m, vec_col, id_col), cents, False, round_to=round_to
     )
 
 

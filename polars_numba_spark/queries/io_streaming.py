@@ -31,6 +31,7 @@ bench showed leaked memory sinks degrading every later query in a
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -68,21 +69,39 @@ from polars_numba_spark.sources.formats import (
 from polars_numba_spark.streaming import windowed_rollup
 
 
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch_root() -> str:
+    """This process's scratch root: one ``mkdtemp`` dir in the system temp
+    dir, removed when the process exits (by the process that made it, not
+    by a forked child)."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="pns_scratch_")
+        atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
+    return _SCRATCH_ROOT
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """Deterministic per-(pid, tag, sf) scratch dir: the lazily-returned
-    DataFrame still references these files when the caller collects (a
-    format round-trip's read-back, an append-mode stream's parquet sink;
-    a complete-mode stream returns its memory sink and makes no dir), so
-    they cannot be deleted here — instead every rerun overwrites the SAME
-    directory (mode 'overwrite'), bounding disk at one copy per sf rather
-    than one per invocation. The pid token keeps two CONCURRENT gate/bench
-    processes from overwriting files the other's lazy DataFrame still
-    references (within one process, reruns are sequential — the overwrite
-    is safe)."""
+    """Deterministic per-(tag, sf) scratch dir under the process's
+    :func:`_scratch_root`: the lazily-returned DataFrame still references
+    these files when the caller collects (a format round-trip's read-back,
+    an append-mode stream's parquet sink; a complete-mode stream returns
+    its memory sink and makes no dir), so they cannot be deleted here —
+    instead every rerun overwrites the SAME directory (mode 'overwrite'),
+    bounding disk at one copy per sf rather than one per invocation, and
+    the root goes at exit. A root per process keeps two CONCURRENT
+    gate/bench processes from overwriting files the other's lazy DataFrame
+    still references (within one process, reruns are sequential — the
+    overwrite is safe)."""
     sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"pns_{tag}_{sf_key}_p{os.getpid()}"
-    )
+    path = os.path.join(_scratch_root(), f"{tag}_{sf_key}")
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -1185,7 +1204,7 @@ def streaming_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ewma_step(acc, value):
         return (1.0 - EWMA_ALPHA) * acc + EWMA_ALPHA * value
 
-    # frame order, so the staging exchange merges the loader's
+    # frame order, so the staging exchange merges any upstream repartition
     events = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )

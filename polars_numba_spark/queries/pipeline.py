@@ -19,6 +19,7 @@ from polars_numba_spark.operators import multimodal as M
 from polars_numba_spark.operators import similarity as S
 from polars_numba_spark.operators import text as X
 from polars_numba_spark.queries.catalog import _t, register
+from polars_numba_spark.sources import widen
 
 
 _MD5INT_SQL = "CAST(CAST(('0x' || substr(md5({x}), 1, 15)) AS UBIGINT) AS BIGINT)"
@@ -404,7 +405,7 @@ def doc_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     hitter."""
     from polars_numba_spark.operators.sketch import heavy_hitters
 
-    d = _t(spark, sf_dir, "documents")
+    d = widen(_t(spark, sf_dir, "documents"))
     occ = d.select("lang", F.explode(X.tokens("text")).alias("token"))
     return heavy_hitters(occ, "token", "lang", k=40)
 
@@ -1095,7 +1096,8 @@ def _exact_pairs_capped(
         .select("vec_id", S.as_double("embedding").alias("v"))
         .withColumn("nv", S.norm(F.col("v")))
     )
-    a = e.alias("a")
+    # the nested-loop join scores every pair on its stream side's tasks
+    a = widen(e).alias("a")
     b = e.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("a_id"),
@@ -2772,7 +2774,7 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Hash-exact cross-engine via the round-9-decimal term
     accumulator (float sum order cannot perturb a bit). Whitespace is
     stripped before counting so layout doesn't dilute the signal."""
-    d = _t(spark, sf_dir, "documents")
+    d = widen(_t(spark, sf_dir, "documents"))
     s = d.select(
         "doc_id",
         F.regexp_replace(X.casefolded("text"), r"\s+", "").alias("s"),

@@ -17,6 +17,7 @@ from polars_numba_spark.queries.catalog import (
     _t,
     register,
 )
+from polars_numba_spark.sources import widen
 
 
 @register(
@@ -866,7 +867,8 @@ def fuzzy_name_pairs(c: DataFrame) -> DataFrame:
         )
 
     def pairs_on(keyed, extra_eq):
-        a, b = keyed.alias("a"), keyed.alias("b")
+        # the edit distances run on the join's stream side
+        a, b = widen(keyed).alias("a"), keyed.alias("b")
         cond = (
             (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
             & (F.col("a.c_custkey") < F.col("b.c_custkey"))

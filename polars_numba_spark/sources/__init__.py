@@ -12,6 +12,9 @@ from polars_numba_spark.sources.tables import (
     load_table,
     load_tables,
     register_views,
+    widen,
 )
 
-__all__ = ["TABLE_NAMES", "load_stream", "load_table", "load_tables", "register_views"]
+__all__ = [
+    "TABLE_NAMES", "load_stream", "load_table", "load_tables", "register_views", "widen",
+]

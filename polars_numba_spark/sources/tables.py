@@ -10,6 +10,11 @@ tables (region, nation, supplier, part, customer at low SF) are ideal
 broadcast-join candidates; query code marks them with ``F.broadcast``
 explicitly rather than trusting the 10 MB autoBroadcast threshold at
 cluster scale.
+
+The loader adds no exchange: a scan runs at its native split count, and
+the width decision belongs to the consumer. Operators with heavy per-row
+work widen an under-split input with :func:`widen`; fold/scan and
+relational operators take the width of their own exchange.
 """
 
 from __future__ import annotations
@@ -57,105 +62,75 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """A byte-valued Spark conf as int (accepts '134217728', '128m', '1g')."""
-    try:
-        raw = str(spark.conf.get(key)).strip().lower()
-    except Exception:
-        return default
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if raw.endswith(suffix):
-            raw = raw[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
 # (path, modification time, length) of a single-file table -> its parquet
 # schema. One Hadoop getFileStatus gives the key; rewriting the file moves
 # its modification time, so a hit is the file as it is now.
 _TABLE_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
 
 
-def _table_meta(spark: SparkSession, path: str) -> tuple[T.StructType | None, int | None]:
-    """(parquet schema, byte length) of a table, without a Spark job when
-    the file is unchanged since the last call.
+def _table_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The parquet schema of a table, without a Spark job when the file is
+    unchanged since the last call.
 
-    Inferring a parquet schema runs a Spark job. For a
-    single-file table the schema is memoized under the key above. A
-    directory's modification time does not change when a part-file is
-    rewritten in place, so no cheap key is exact for it: directories
-    return no schema (the caller infers it) and their length from a
-    ContentSummary, as before. Unreadable metadata gives ``(None, None)``.
+    Inferring a parquet schema runs a Spark job. For a single-file table
+    the schema is memoized under the key above. A directory's
+    modification time does not change when a part-file is rewritten in
+    place, so no cheap key is exact for it: directories, and unreadable
+    metadata, return ``None`` and the caller infers the schema.
     """
     try:
         hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        status = fs.getFileStatus(hpath)
-        if status.isDirectory():
-            return None, int(fs.getContentSummary(hpath).getLength())
+        status = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(hpath)
     except Py4JError:
-        return None, None
-    size = int(status.getLen())
-    key = (path, int(status.getModificationTime()), size)
+        return None
+    if status.isDirectory():
+        return None
+    key = (path, int(status.getModificationTime()), int(status.getLen()))
     schema = _TABLE_SCHEMAS.get(key)
     if schema is None:
         schema = _TABLE_SCHEMAS[key] = spark.read.parquet(path).schema
-    return schema, size
+    return schema
 
 
-def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, int | None]:
-    """``spark.read.parquet(path)`` (with the memoized schema when there is
-    one) and the table's byte length."""
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the memoized schema when there is
+    one."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema, size = _table_meta(spark, path)
+    schema = _table_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path), size
+    return reader.parquet(path)
 
 
-def _parallelize_underscplit_scan(
-    spark: SparkSession, df: DataFrame, size: int | None
-) -> DataFrame:
-    """Round-robin-repartition a scan whose INPUT SPLIT COUNT is below the
-    core count — the under-split-input hazard (guide §2.5 "input skew",
-    SCALE.md round-13 split-sizing lesson): a table that fits in fewer
-    splits than cores serializes every scan-side computation (tokenize /
-    shingle-explode / hash / pair-scoring — the bulk of this engine's
-    CPU) onto that many tasks. Measured at sf0.1 (r14): the single-file
-    tables plan exactly ONE scan task, so CPU-bound faces ran at
-    parallelism ≈ 1 of 32 (embedding_near_dup_pairs: 6 CPU-s ≈ 5.3s
-    wall single-task; 0.9s wall after this change).
+def widen(df: DataFrame) -> DataFrame:
+    """``df`` round-robined to the session's task slots when its input fits
+    in fewer splits than that; otherwise ``df`` unchanged.
 
-    Scale-adaptive by construction: the split estimate is driver-side
-    metadata only (the table's byte length from :func:`_table_meta`,
-    against the current maxPartitionBytes — correct for any filesystem
-    scheme), and any input big enough to fill the cluster's cores
-    (≥ cores × maxPartitionBytes, e.g. any 100 TB table) takes the no-op
-    branch, so production scans keep their native splits and pay no extra
-    exchange. Filter pushdown and column pruning pass through Repartition
-    (verified in the plan: PushedFilters/ReadSchema unchanged), and the
-    round-robin is deterministic under retry (Spark sorts before
-    round-robin repartition, SPARK-23207). Fold/scan operators prune their
-    input in frame order (operators/_prep.py::frame_order_select), so
-    Catalyst merges this exchange into theirs. :func:`load_table` applies
-    its timestamp casts before calling this, so they sit under the
-    exchange and the merge holds for ``events`` too. Kill switch:
-    PNS_SCAN_PARALLELIZE=0.
+    A table smaller than one split per slot plans fewer scan tasks than
+    there are slots (a single-file table at sf0.1 plans one), and every
+    per-row computation above the scan runs on those few tasks. Operators
+    with heavy per-row work (shingling, hashing, pair scoring) call this on
+    their input; the rest run at the input's own width, because their own
+    exchange sets it and a round-robin under it would be a second shuffle
+    (SCALE.md, "Scan width at the consumer").
+
+    The split estimate is driver-side metadata only, and runs no job: the
+    optimized plan's ``sizeInBytes`` (the files' byte length for a scan,
+    scaled for pruned columns) against ``spark.sql.files.maxPartitionBytes``
+    as Spark parses it. Any input that fills the slots, which is every
+    production-scale one, takes the no-op branch. Filter pushdown and
+    column pruning pass through the repartition, and the round-robin is
+    deterministic under retry (Spark sorts before a round-robin
+    repartition, SPARK-23207).
     """
-    if os.environ.get("PNS_SCAN_PARALLELIZE") == "0" or size is None:
-        return df  # size None: unreadable metadata, keep the native scan
-    par = spark.sparkContext.defaultParallelism
-    max_bytes = _conf_bytes(
-        spark, "spark.sql.files.maxPartitionBytes", 128 << 20
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
     )
-    est_splits = max(1, -(-size // max(1, max_bytes)))
-    if est_splits >= par:
+    if -(-size // max(1, split_bytes)) >= slots:
         return df
-    return df.repartition(par)
+    return df.repartition(slots)
 
 
 def _events_ts_micros(df: DataFrame, name: str) -> DataFrame:
@@ -175,18 +150,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     ``_normalize_timestamps``). A legacy fallback also handles
     TIMESTAMP(NANOS) parquet (SPARK-40819: read as raw nanos and
     floor-convert to microseconds, the same truncation DuckDB applies),
-    though the current testdata ships plain ``timestamp[us]``.
-    Under-split inputs are repartitioned to the core count — see
-    :func:`_parallelize_underscplit_scan` — after the casts, so the casts
-    sit under the round-robin exchange and a consumer that prunes in frame
-    order merges it into its own, ``events`` included. The parquet schema
-    of an unchanged single-file table is not inferred again
-    (:func:`_table_meta`).
+    though the current testdata ships plain ``timestamp[us]``. The frame
+    is the scan and these casts, at the scan's own width: consumers that
+    need more call :func:`widen`. The parquet schema of an unchanged
+    single-file table is not inferred again (:func:`_table_schema`).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df, size = _read_parquet(spark, path)
-    df = _normalize_timestamps(_events_ts_micros(df, name))
-    return _parallelize_underscplit_scan(spark, df, size)
+    return _normalize_timestamps(_events_ts_micros(_read_parquet(spark, path), name))
 
 
 def load_stream(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -195,7 +165,7 @@ def load_stream(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) ->
     conversion applies identically)."""
     batch = load_table(spark, name, sf_dir)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    raw_schema = _read_parquet(spark, path)[0].schema
+    raw_schema = _read_parquet(spark, path).schema
     # the file-stream source only accepts DIRECTORIES; pathGlobFilter only
     # matches LEAF file names. So: a table materialized as a parquet
     # directory (part-files inside, e.g. the scale-soak builds) streams by

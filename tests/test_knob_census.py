@@ -22,7 +22,6 @@ def test_engine_knob_set_is_pinned():
         for name, _ in _KNOB.findall(path.read_text())
     }
     assert found == {
-        "PNS_SCAN_PARALLELIZE",
         "PNS_CASEFOLD",
         "PNS_CHECKPOINT_MODE",
         "PNS_CHECKPOINT_DIR",

@@ -510,17 +510,7 @@ def test_video_meta_is_shuffle_free(spark):
     """multimodal_video_meta (synthesize -> box-walk parse) must be a pure
     scan->project->MapInPandas pipeline: no shuffle, no join — container
     metadata extraction over 100 TB of video must stream."""
-    # the production branch: at scale the under-split scan repartition
-    # no-ops (sources/tables.py::_parallelize_underscplit_scan), so the
-    # at-scale plan shape is asserted with it disabled; its local firing
-    # is pinned in test_scan_parallelize.py
-    import os
-
-    os.environ["PNS_SCAN_PARALLELIZE"] = "0"
-    try:
-        df = q(spark, "multimodal_video_meta")
-    finally:
-        os.environ.pop("PNS_SCAN_PARALLELIZE", None)
+    df = q(spark, "multimodal_video_meta")
     s = plans.explain_string(df)
     assert "MapInPandas" in s
     for op in ("Exchange", "Join", "CartesianProduct"):
@@ -577,15 +567,7 @@ def test_gopher_filter_is_one_scan(spark):
     """doc_gopher_filter must be pure codegen over a single documents scan
     reading only (doc_id, text) — a quality gate that shuffles or calls
     Python would throttle every downstream curation stage at 100 TB."""
-    # asserted on the production (no-op) branch of the under-split scan
-    # repartition — see test_video_meta_is_shuffle_free
-    import os
-
-    os.environ["PNS_SCAN_PARALLELIZE"] = "0"
-    try:
-        df = q(spark, "doc_gopher_filter")
-    finally:
-        os.environ.pop("PNS_SCAN_PARALLELIZE", None)
+    df = q(spark, "doc_gopher_filter")
     s = plans.explain_string(df)
     for op in ("Exchange", "Join", "MapInPandas", "BatchEvalPython"):
         assert op not in s, op
@@ -774,16 +756,7 @@ def test_dq_expectations_is_one_scan_plus_fk_join(spark):
     aggregate, unpivoted with stack() — a per-rule union would re-execute
     the aggregate six times (the first spelling did: 18 exchanges, zero
     reuse). One Generate (the stack), one FK join, no cartesian."""
-    # at scale the under-split scan repartition no-ops (sources/tables.py),
-    # so the at-scale exchange budget is asserted with it disabled; its
-    # local firing is pinned in test_scan_parallelize.py
-    import os
-
-    os.environ["PNS_SCAN_PARALLELIZE"] = "0"
-    try:
-        df = q(spark, "orders_dq_expectations")
-    finally:
-        os.environ.pop("PNS_SCAN_PARALLELIZE", None)
+    df = q(spark, "orders_dq_expectations")
     s = plans.explain_string(df)
     assert s.count("- Generate") == 1  # the stack unpivot
     assert "CartesianProduct" not in s
@@ -1092,12 +1065,19 @@ def _total_step(acc, price, cust):
     return acc + price
 
 
+def _add(acc, x):
+    return acc + x
+
+
 def _orders_fold_scan_frames(spark, monkeypatch):
     """The fold/scan operators over a ``load_table`` frame (sf0.001 orders
-    is under-split, so the loader adds its round-robin exchange). The
-    ``collect_fold`` input is captured at its ``mapInArrow`` call."""
+    is under-split: one scan task). The ``collect_fold`` inputs are
+    captured at their ``mapInArrow`` call."""
+    from pyspark.sql import functions as F
+
     from polars_numba_spark.operators import fold as FO
     from polars_numba_spark.operators import scan as SC
+    from polars_numba_spark.operators import window as W
     from polars_numba_spark.sources import load_table
 
     orders = load_table(spark, "orders", SF)
@@ -1114,10 +1094,26 @@ def _orders_fold_scan_frames(spark, monkeypatch):
     FO.collect_fold(
         orders, _total_step, 0.0, column_names=value_cols, order_by="o_orderkey"
     )
+    # a computed column ahead of the operator, as in the fold_scan workload
+    cents = orders.withColumn("cents", F.round(F.col("o_totalprice") * 100).cast("long"))
+    FO.collect_fold(cents.select("cents"), _add, 0, combine=_add)
     spec = dict(function=_total_step, initial_accumulator=0.0,
                 return_dtype="double", columns=value_cols)
     return {
         "collect_fold": captured[0],
+        "collect_fold_combine": captured[1],
+        "collect_scan_combine": SC.collect_scan(
+            cents.select("o_orderkey", "cents"), _add, 0, "long",
+            column_names=["cents"], order_by="o_orderkey", combine=_add,
+        ),
+        "agg_with_fold": FO.agg_with_fold(
+            cents, "o_orderstatus", {"cents": F.sum("cents")},
+            {"total": dict(spec, order_by="o_orderkey")},
+        ),
+        "assoc_scan": W.assoc_scan(
+            cents.select("o_orderkey", "o_orderstatus", "cents"), "sum", "cents",
+            order_by="o_orderkey", partition_by="o_orderstatus",
+        ),
         "collect_scan": SC.collect_scan(
             orders, _total_step, 0.0, "double", column_names=value_cols,
             order_by="o_orderkey",
@@ -1140,9 +1136,11 @@ def _orders_fold_scan_frames(spark, monkeypatch):
 
 
 def test_fold_scan_merge_the_loader_exchange(spark, monkeypatch):
-    """The operators prune their input in frame order, so Catalyst merges
-    the loader's round-robin exchange into the operator's own exchange.
-    ``events`` has its ``ts`` cast under that exchange, so it merges too."""
+    """The fold/scan operators run at the width their own exchange sets:
+    over an under-split ``load_table`` frame, none of them pays for a
+    round-robin exchange, including those whose input computes a column
+    ahead of the operator (``cents``) and ``events`` with its ``ts``
+    cast."""
     from polars_numba_spark.operators import scan as SC
     from polars_numba_spark.sources import load_table
 
@@ -1152,8 +1150,79 @@ def test_fold_scan_merge_the_loader_exchange(spark, monkeypatch):
         columns=["value", "event_id"], order_by="ts",
     )
     for name in ["collect_fold", "collect_scan", "grouped_fold", "grouped_scan",
-                 "grouped_multi_fold", "events_grouped_scan"]:
+                 "grouped_multi_fold", "events_grouped_scan", "collect_fold_combine",
+                 "collect_scan_combine", "agg_with_fold", "assoc_scan"]:
         assert "RoundRobinPartitioning" not in plans.explain_string(frames[name]), name
+
+
+# face -> round-robin exchanges its widened operators run at sf0.001. The
+# fuzzy face widens the stream side of each of its two blocking joins, the
+# interval join's points are read by the join and by the unmatched-interval
+# recovery, and the heavy-hitter face reads its tokenized documents three
+# times (candidate pass, totals, exact recount).
+WIDENED_FACES = {
+    "embedding_near_dup_pairs": 1,  # all-pairs cosine, stream side
+    "embedding_near_dup_recall": 1,
+    "dedup_minhash_pairs": 1,  # shingle sets, before their checkpoint
+    "dedup_jaccard_pairs": 1,  # banded minhash signatures
+    "doc_duplicated_passages": 1,
+    "doc_duplicated_spans": 1,
+    "doc_remove_passages": 1,
+    "doc_winnowing_overlap_pairs": 1,
+    "doc_char_entropy": 1,
+    "embedding_pq_encode": 1,
+    "customer_name_fuzzy_pairs": 2,
+    "recent_order_pressure": 2,
+    "doc_heavy_tokens": 3,
+}
+
+
+@pytest.mark.parametrize("face", sorted(WIDENED_FACES))
+def test_heavy_operators_widen_their_own_input(spark, monkeypatch, face):
+    """An operator with heavy per-row work round-robins its under-split
+    input to the task slots exactly once, and not at all once the input
+    fills the slots (maxPartitionBytes=1k). Counted without AQE, where
+    exchange reuse shows in the physical plan, over the face's frame and
+    the frames it checkpoints while being built."""
+    from polars_numba_spark.plans import checkpoint as CK
+
+    captured = []
+    checkpoint = CK.session_scoped_checkpoint
+
+    def capture(df, *args, **kwargs):
+        captured.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(CK, "session_scoped_checkpoint", capture)
+
+    def round_robins():
+        captured.clear()
+        frames = [q(spark, face), *captured]
+        n = sum(
+            plans.explain_string(f, "simple").count("RoundRobinPartitioning")
+            for f in frames
+        )
+        CK.release_session_checkpoints(spark)
+        return n
+
+    old_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert round_robins() == WIDENED_FACES[face]
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        assert round_robins() == 0
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_split)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+@pytest.mark.parametrize("table", ["documents", "embeddings", "events", "orders"])
+def test_load_table_adds_no_exchange(spark, table):
+    """The loader returns the scan and its casts at the scan's own width;
+    the width decision is the consumer's (sources/tables.py::widen)."""
+    from polars_numba_spark.sources import load_table
+
+    assert "Exchange" not in plans.explain_string(load_table(spark, table, SF))
 
 
 def test_fold_scan_keep_declared_column_order(spark, monkeypatch):

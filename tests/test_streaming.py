@@ -848,10 +848,10 @@ def test_complete_mode_returns_its_memory_sink(spark):
     """A complete-mode stream hands back its memory sink: a
     ``LocalTableScan`` with no parquet write or read, which keeps its rows
     after the runner has dropped the sink's view."""
-    from polars_numba_spark.queries.io_streaming import _run_available_now
+    from polars_numba_spark.queries.io_streaming import _run_available_now, _scratch_root
 
     name = "runner_handoff_probe"
-    out_dirs = os.path.join(tempfile.gettempdir(), f"pns_{name}_out_*")
+    out_dirs = os.path.join(_scratch_root(), f"{name}_out_*")
     dirs_before = glob.glob(out_dirs)
     before = _runner_state(spark, name)
     counts = load_stream(spark, "events", SF).groupBy("event_type").count()
@@ -863,6 +863,28 @@ def test_complete_mode_returns_its_memory_sink(spark):
     assert "FileScan parquet" not in plan
     expected = sorted(load_table(spark, "events", SF).groupBy("event_type").count().collect())
     assert sorted(out.collect()) == sorted(out.collect()) == expected
+
+
+def test_scratch_dirs_go_with_their_process(tmp_path):
+    """Every scratch dir sits under one per-process root, which the process
+    removes at exit: repeated gate and bench runs leave nothing behind in
+    the system temp dir."""
+    import subprocess
+    import sys
+
+    probe = (
+        "from polars_numba_spark.queries import io_streaming as m\n"
+        "print(m._scratch_dir('probe', 'sf'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    made = out.stdout.strip().splitlines()[-1]
+    assert made.startswith(str(tmp_path))
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []
 
 
 def test_append_mode_reads_back_without_a_job(spark, jobs_in_group):

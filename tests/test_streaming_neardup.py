@@ -186,8 +186,15 @@ def test_replayed_batch_appends_no_duplicate_sentinels(spark, store_dir):
 def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
     """Each ingest pins its banded batch for the two appends and releases
     it afterwards: repeated ingests leave no persistent RDD behind."""
-    from polars_numba_spark.plans.checkpoint import _persistent_ids
+    from polars_numba_spark.plans.checkpoint import (
+        _persistent_ids,
+        release_session_checkpoints,
+    )
 
+    # Earlier tests' session-scoped checkpoints are registered by id only,
+    # so the JVM's ContextCleaner may drop them during the ingests once
+    # their frames are collected; start from a session with none.
+    release_session_checkpoints(spark)
     batch = _with_clones(spark).where(F.col("doc_id") < 20)
     before = _persistent_ids(spark)
     for _ in range(2):

@@ -1,4 +1,4 @@
-"""Table metadata memo (sources/tables.py::_table_meta).
+"""Table schema memo (sources/tables.py::_table_schema).
 
 Inferring a parquet schema runs a Spark job. ``load_table`` and
 ``load_stream`` memoize a single-file table's schema under (path,

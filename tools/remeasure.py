@@ -6,8 +6,10 @@ floor. Usage:
 
     python tools/remeasure.py [N] query1 query2 ...
 
-Record the host load average alongside the numbers — runs that race other
-JVMs are contaminated (BASELINE.md round-6 lesson)."""
+Each face's line carries the host load average and the host's steal share
+(``/proc/stat``, as perfbench/probes.py reads it) over that face's runs:
+runs that race other JVMs, or lose CPU to the hypervisor, are contaminated
+(BASELINE.md round-6 lesson)."""
 import json
 import os
 import sys
@@ -27,6 +29,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from perfbench.probes import cpu_jiffies
     from polars_numba_spark import get_spark
     from polars_numba_spark.plans.checkpoint import release_session_checkpoints
     from polars_numba_spark.queries import catalog
@@ -88,14 +91,20 @@ def main() -> int:
     out = {}
     for name in args:
         runs, cpus = [], []
+        steal0, total0 = cpu_jiffies()
         for _ in range(n):
             c0 = cpu_tree_seconds()
             runs.append(round(run(name), 3))
             cpus.append(round(cpu_tree_seconds() - c0, 2))
+        steal1, total1 = cpu_jiffies()
+        steal_pct = round(100 * (steal1 - steal0) / max(1, total1 - total0), 2)
+        load = round(os.getloadavg()[0], 2)
         out[name] = {"runs": runs, "floor": min(runs),
-                     "cpu": cpus, "cpu_floor": min(cpus)}
+                     "cpu": cpus, "cpu_floor": min(cpus),
+                     "load": load, "steal_pct": steal_pct}
         print(f"{name}: {' / '.join(f'{r:.2f}' for r in runs)}  floor={min(runs):.2f}"
-              f"  cpu={' / '.join(f'{c:.1f}' for c in cpus)} cpu_floor={min(cpus):.1f}",
+              f"  cpu={' / '.join(f'{c:.1f}' for c in cpus)} cpu_floor={min(cpus):.1f}"
+              f"  load={load:.2f} steal={steal_pct:.1f}%",
               flush=True)
     print("REMEASURE " + json.dumps({"sf_dir": sf_dir, "results": out,
                                      "load_end": os.getloadavg()}), flush=True)
