@@ -33,12 +33,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
-from polars_numba_spark.sources import widen
 from polars_numba_spark.operators.text import (
     distinct_tokens,
     fingerprint,
     token_shingles,
 )
+from polars_numba_spark.sources import widen
 
 
 def _token_sets(col: Column | str, shingle_n: int | None) -> Column:

@@ -192,8 +192,8 @@ def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
     )
 
     # Earlier tests' session-scoped checkpoints are registered by id only,
-    # so the JVM's ContextCleaner may drop them during the ingests once
-    # their frames are collected; start from a session with none.
+    # so they can vanish during the ingests once their frames are
+    # collected; start from a session with none.
     release_session_checkpoints(spark)
     batch = _with_clones(spark).where(F.col("doc_id") < 20)
     before = _persistent_ids(spark)
