@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_numba_spark.sources import widen
+
 
 def as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -491,7 +493,7 @@ def embedding_near_dup_pairs(
     # interpreted projections per row
     e = (
         _with_bucket_array(
-            embeddings.select(id_col, vec_col), vec_col, dim, n_planes,
+            widen(embeddings.select(id_col, vec_col)), vec_col, dim, n_planes,
             n_tables, with_norm=True,
         )
         .select(

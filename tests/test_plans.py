@@ -1155,14 +1155,16 @@ def test_fold_scan_merge_the_loader_exchange(spark, monkeypatch):
         assert "RoundRobinPartitioning" not in plans.explain_string(frames[name]), name
 
 
-# face -> round-robin exchanges its widened operators run at sf0.001. The
-# fuzzy face widens the stream side of each of its two blocking joins, the
-# interval join's points are read by the join and by the unmatched-interval
-# recovery, and the heavy-hitter face reads its tokenized documents three
-# times (candidate pass, totals, exact recount).
+# face -> round-robin exchanges in the plans of its widened operators at
+# sf0.001. The fuzzy face widens the stream side of each of its two
+# blocking joins; the interval join's points are read by the join and by
+# the unmatched-interval recovery; the recall face adds the bucketed
+# operator's kernel input, read by both sides of its self-join; and the
+# heavy-hitter face reads its tokenized documents three times (candidate
+# pass, totals, exact recount).
 WIDENED_FACES = {
     "embedding_near_dup_pairs": 1,  # all-pairs cosine, stream side
-    "embedding_near_dup_recall": 1,
+    "embedding_near_dup_recall": 3,
     "dedup_minhash_pairs": 1,  # shingle sets, before their checkpoint
     "dedup_jaccard_pairs": 1,  # banded minhash signatures
     "doc_duplicated_passages": 1,
