@@ -33,11 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
-from polars_numba_spark.operators.text import (
-    distinct_tokens,
-    fingerprint,
-    token_shingles,
-)
+from polars_numba_spark.operators.text import distinct_tokens, token_shingles
 from polars_numba_spark.sources import widen
 
 
@@ -86,17 +82,6 @@ def exact_dedup(
         .groupBy("__digest")
         .agg(F.min_by(F.struct(*cols), order_key).alias("__rep"))
         .select(*[F.col(f"__rep.{c}").alias(c) for c in cols])
-    )
-
-
-def fingerprint_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Group stats per order-insensitive fingerprint (near-dup buckets)."""
-    return (
-        df.withColumn("fp", fingerprint(text_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
     )
 
 
@@ -526,19 +511,17 @@ def _prefix_probe_tables(
     dedup_containment_keeplist 5.81s/21.8 → 1.82s/11.3. The SSJoin plan
     re-tokenizes the corpus FIVE times (occ, dfreq via occ, rarity sort,
     and both verify sides) — the checkpoint pays one tokenize + one
-    small materialization instead. ``PNS_CONTAINMENT_CKPT=0`` opts out
-    (restores the pure-lineage plan for lineage-recovery-sensitive
-    clusters that also decline PNS_CHECKPOINT_MODE=reliable).
+    small materialization instead. Clusters that need lineage recovery
+    set ``PNS_CHECKPOINT_MODE=reliable``, which takes this checkpoint
+    through Spark's reliable checkpoint.
     """
-    import os
+    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
 
-    toks = df.select(
-        F.col(id_col).alias("id"), _token_sets(text_col, shingle_n).alias("toks")
-    ).withColumn("n_toks", F.size("toks"))
-    if os.environ.get("PNS_CONTAINMENT_CKPT", "1") != "0":
-        from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
-
-        toks = session_scoped_checkpoint(toks)
+    toks = session_scoped_checkpoint(
+        df.select(
+            F.col(id_col).alias("id"), _token_sets(text_col, shingle_n).alias("toks")
+        ).withColumn("n_toks", F.size("toks"))
+    )
     occ = toks.select("id", F.explode("toks").alias("tok"))
     dfreq = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     # Adaptive width, shared by the TWO corpus-mass stages (VERDICT r8 #4):

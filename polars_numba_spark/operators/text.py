@@ -525,19 +525,6 @@ def sql_language_id(c: str) -> str:
     return expr
 
 
-def word_bigrams(col: Column | str) -> Column:
-    """NON-distinct word bigrams ('w1 w2' strings) — the repetition unit.
-    Unlike :func:`token_shingles` (distinct, for containment checks),
-    duplicates are preserved: repetition scoring needs the multiset."""
-    t = tokens(col)
-    size = F.size(t)
-    grams = F.transform(
-        F.sequence(F.lit(1), size - 1),
-        lambda i: F.concat_ws(" ", F.slice(t, i, 2)),
-    )
-    return F.when(size >= 2, grams).otherwise(F.array().cast("array<string>"))
-
-
 def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id"):
     """Repeated-content quality signals per document (the Gopher/C4-style
     repetition filters): ``token_rep_frac`` = fraction of tokens that are

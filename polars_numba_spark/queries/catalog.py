@@ -57,105 +57,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver's correctness gate checks the FIRST 50 catalog entries in
-# insertion order. Rounds 1-6 spent these slots on one-per-operator-family
-# coverage; by the end of round 6 every family had at least one green driver
-# row but 50 of 141 catalog queries had NEVER passed through the driver's
-# hard gate (r6 verdict next-round #1). Round 7 therefore rotates the ENTIRE
-# window to exactly that never-checked set — every evictee already has a
-# green r1-r6 driver row and remains oracled + local-gated
-# (tools/check_oracle.py), so after this round every catalog query has a
-# driver record. That r7 plan went 48/50 hash-green + 2 rows-only
-# (CORRECTNESS_r07.json, zero errors); the full r7 window is retained below
-# as _DRIVER_PRIORITY_R7 for the rotation record.
-#
-# Round 8 closes the last driver-gate debt (r7 verdict next-round #1): the
-# five oracled queries still lacking a hash-green row, the new r8 keep-list
-# curation face, and the two never-rotated rows-only reports, then spends
-# the remaining 42 slots on per-family sentinels from prior windows
-# (ADVICE r7: a full rotation leaves every long-gated core path checked
-# only by the local gate) including the four unexplained r7 bench movers.
-# The rows-only allowance rotates with the window: the r7 pair
-# (embedding_near_dup_recall / embedding_int8_recall) got their maximal
-# rows-only record in r7 and park outside; this round's pair is the
-# t-digest and KMV/HLL self-evaluating reports, rows-only BY CONSTRUCTION —
-# their output IS the approx-vs-exact differential.
-# Round 12 rotates the allowance one final time: embedding_pq_recall — the
-# ONLY catalog face with no driver record of any kind (landed r8 after that
-# window froze, rows-only BY CONSTRUCTION: its output IS the PQ-vs-exact
-# recall differential) — takes the single rows-only slot, closing the books
-# at 237/237 faces with a driver record. The r8 pair (t-digest / KMV-HLL
-# self-reports) earned their maximal rows-only records in r8 and park
-# outside the window, as do the r7 recall-report pair.
-# Round 14: the allowance is EMPTY — every one of the 8 rows-only-by-
-# construction faces holds its maximal rows-only record (r1/r7/r8/r12) and
-# parks outside the window; all 50 r14 slots are hash-checkable.
-_ROWS_ONLY_WINDOW_ALLOWANCE = frozenset()
-# Round 9 executes the documented "R9 ROTATION QUEUE" (r8 verdict
-# next-round #1 and #3): the twelve swap-ins are the eleven queue faces —
-# oracled + local-gate green late in round 8 but never driver-checked —
-# plus q1_pricing_summary, restoring a TPC-H sentinel after round 8
-# deliberately held zero in-window TPC-H slots. Twelve r8 hash-green
-# sentinels rotate out to make room; every evictee stays oracled +
-# local-gated, and each family keeps in-window coverage:
-#
-# - user_value_concentration -> user_value_pareto_deciles: the SAME
-#   distributed global_ranks machinery (range-partition + broadcast
-#   offsets) drives both; the concentration face holds its r8 green.
-# - user_retention_cohorts -> signup_survival_km: cohort/survival
-#   analytics; the behavioral family keeps funnel_conversion_latency,
-#   user_rfm_segments, session_top_paths in-window.
-# - user_conversion_funnel -> ab_conversion_ztest: conversion analytics;
-#   the ordered-step machinery stays in-window via
-#   funnel_conversion_latency.
-# - events_burst_windows -> streaming_burst_windows: the stream twin
-#   shares the batch face's single-sourced oracle, so the RANGE-frame
-#   burst machinery keeps a (stronger) in-window rep.
-# - doc_winnowing_fingerprints -> doc_winnowing_overlap_pairs: the
-#   overlap face composes the fingerprint extractor end-to-end.
-# - doc_bm25_search -> search_ranking_metrics: the judge face scores
-#   BM25 rankings, so the inverted-index path stays driven; retrieval
-#   keeps doc_phrase_search + doc_search_authority_rrf in-window.
-# - formats_zorder_skipping -> formats_schema_evolution: the formats
-#   family swaps one layout face for the never-checked evolution face;
-#   Z-order keeps its r8 green + the footer-arithmetic plan test.
-# - orders_dq_expectations -> corpus_datacard: governance/release family;
-#   the expectation-suite face holds its r8 green.
-# - corpus_vocab_growth -> corpus_zipf_fit: sibling corpus-statistics
-#   faces (Heaps vs Zipf) over the same token pipeline.
-# - doc_gopher_filter -> events_kanonymity_audit: the text-quality family
-#   keeps doc_char_entropy + doc_quality_calibrated in-window.
-# - dedup_minhash_recall -> views_point_in_time_state: the dedup family
-#   keeps FIVE in-window reps (both keep-lists, dedup_clusters,
-#   curated_corpus_neardup, streaming_neardup_keeplist); the new face
-#   gives the CDC/as-of family its first slot this round.
-# - source_drift_ks -> q1_pricing_summary: the drift family keeps
-#   source_drift_psi + events_cusum_changepoints + events_daily_acf
-#   in-window; q1 restores the relational-core sentinel (r8 ask #3).
-# Round 14 (VERDICT r13 #1): record-freshness rotation, continuing the
-# oldest-record re-certification policy. Entering this round every face
-# holds a driver record and the union of CORRECTNESS_r*.json puts the
-# oldest HASH-CHECKABLE records at r7 (32 faces) and r8 (43 faces) — the
-# judge's 34/45 counts include the r7 recall-report pair and the r8
-# t-digest/KMV self-reports, which are rows-only BY CONSTRUCTION, already
-# hold their maximal rows-only records, and stay parked outside per the
-# established r12 policy (slots are better spent hash-checkable). The
-# window = ALL 32 r7-latest hash-checkable faces + 18 family-spread r8
-# sentinels chosen so every family the r7 set misses keeps an in-window
-# rep: all three dedup keep-list/recall faces touched by this round's
-# minhash cost-curve work (dedup_minhash_keeplist/recall,
-# dedup_simhash_keeplist) + dedup_clusters, the ANN/vector pair
-# (embedding_topk_lsh, kmeans_assignments), multimodal audio, retrieval
-# (doc_bm25_search — an r13 bench-outlier face), quality filtering
-# (doc_gopher_filter), tokenizer machinery (bpe_merge_candidates), the
-# graph pair (doc_pagerank_centrality, customer_golden_record), Z-order
-# formats, the streaming stateful pair (streaming_user_ewma,
-# streaming_user_cms), the bloom prefilter, drift (source_drift_psi) and
-# cohort analytics (user_retention_cohorts). Zero overlap with the r13
-# and r12 windows (pinned by test). Every evictee is hash-green as of
-# CORRECTNESS_r13.json (50/50, zero errors) and stays oracled +
-# local-gated; the full r13 window is retained below as
-# _DRIVER_PRIORITY_R13.
+# The driver's correctness gate checks the first 50 registered faces in
+# insertion order, and _prioritized puts this window first. The window
+# holds hash-checkable (oracled) faces only, those whose newest driver
+# record is oldest first. Past windows and their results live in the
+# driver's records (CORRECTNESS_r*.json) and in git history;
+# tests/test_face_census.py checks the registry against those records.
 _DRIVER_PRIORITY: list[str] = [
     # --- all 32 r7-latest hash-checkable faces -----------------------------
     "decontamination_overlap",          # train/eval n-gram contamination
@@ -210,724 +117,6 @@ _DRIVER_PRIORITY: list[str] = [
     "source_drift_psi",                 # PSI drift monitor
     "user_retention_cohorts",           # signup-cohort retention
 ]
-# Round 13 (VERDICT r12 #1/#2/#4): the window continues the oldest-record
-# re-certification policy. Entering this round every face holds a driver
-# record (the r12 books-closed state); the union of CORRECTNESS_r*.json
-# puts 32 hash-checkable faces at an r6-latest record and 48 at r7. The
-# window = the 2 round-13 NEW faces (landing WITH their driver slot, the
-# r7 process lesson: dedup_containment_keeplist — the pair-free star
-# emission that closes the r12 100× containment ceiling — and
-# embedding_pq_encode — the portable-Lloyd PQ encode that retires the
-# last no-oracle window record) + ALL 32 r6-latest faces + 16
-# family-spread r7 sentinels chosen so the families the r6 set misses
-# keep an in-window rep: the TPC-H deep-join quartet (q7/q8/q9/q10), the
-# window-function zoo + grouped multi-metric scan, partitioned-pruning +
-# ORC formats, the stream-stream join (this round's variance-band target,
-# VERDICT r12 #3) + streaming dedup, skew salting, the blocked fuzzy
-# join, weighted sampling + contamination audit, robust outliers, and
-# PII scrubbing. Every evictee is hash-green as of CORRECTNESS_r12.json
-# (49/50 + the rows-only allowance) and stays oracled + local-gated; the
-# full r12 window is retained below as _DRIVER_PRIORITY_R12.
-_DRIVER_PRIORITY_R13: list[str] = [
-    # --- the 2 round-13 new faces (land with their driver slot) -----------
-    "dedup_containment_keeplist",       # pair-free SSJoin star keep-list
-    "embedding_pq_encode",              # portable-Lloyd PQ encode
-    # --- all 32 r6-latest hash-checkable faces -----------------------------
-    "dedup_exact_digests",              # exact-dup content digests
-    "dedup_incremental_pairs",          # delta-vs-corpus banding
-    "dedup_jaccard_pairs",              # banded jaccard verify
-    "dedup_simhash_portable",           # portable simhash pairs
-    "doc_duplicated_spans",             # positioned-shingle spans
-    "doc_heavy_tokens",                 # Misra-Gries frequent tokens
-    "doc_remove_passages",              # span removal rewrite
-    "doc_repetition_stats",             # repetition/compression stats
-    "doc_sequence_packing",             # greedy sequence packing
-    "doc_source_caps",                  # per-source doc caps
-    "doc_tfidf_top_terms",              # TF-IDF top terms
-    "doc_unigram_logprob",              # unigram LM scoring
-    "embedding_topk_bruteforce",        # exact cosine top-k
-    "events_json_props",                # JSON property extraction
-    "events_profile",                   # one-pass column profiler
-    "global_longest_hot_streak",        # global non-assoc fold face
-    "multimodal_image_dims",            # image header parsing
-    "nation_order_rollup",              # ROLLUP grouping sets
-    "order_price_quantiles",            # exact quantiles
-    "orders_merge_upsert",              # CDC merge/upsert window
-    "orders_rank_in_customer",          # rank/analytic windows
-    "recent_order_pressure",            # decayed recency scores
-    "repeat_customers_setops",          # INTERSECT/EXCEPT set ops
-    "rolling_hour_user_value",          # rolling time-range frames
-    "scalar_function_zoo",              # scalar fn parity sweep
-    "streaming_enriched_segments",      # stream-static broadcast join
-    "streaming_signup_conversion_outer",# stream-stream LEFT OUTER
-    "streaming_users_kmv",              # KMV as stream state
-    "training_data_pipeline",           # end-to-end curation pipeline
-    "user_activity_with_fold",          # agg_with_fold fusion
-    "user_event_type_pivot",            # pivot/unpivot
-    "user_state_scd2",                  # SCD2 validity intervals
-    # --- 16 family-spread r7 sentinels -------------------------------------
-    "q7_nation_pair_volume",            # nation-pair deep join
-    "q8_market_share",                  # market-share join tree
-    "q9_product_profit",                # product-profit join tree
-    "q10_returned_items",               # returned-items join+topk
-    "window_function_zoo",              # full window-function sweep
-    "user_running_multi_metrics",       # grouped multi-metric scan
-    "formats_partitioned_pruning",      # hive-partition pruning
-    "formats_orc_roundtrip",            # ORC source/sink
-    "streaming_signup_purchase_join",   # stream-stream inner (r12 #3)
-    "streaming_dedup_docs",             # streaming exact dedup
-    "salted_event_type_totals",         # skew salting
-    "customer_name_fuzzy_pairs",        # blocked fuzzy join
-    "doc_weighted_sample",              # weighted sampling
-    "split_contamination_audit",        # split contamination audit
-    "order_price_outliers",             # robust outlier flags
-    "doc_pii_scrub",                    # PII scrubbing rewrite
-]
-# Round 12: the catalog is feature-complete (VERDICT r11 #8: hold growth
-# flat), so the window's job flips from gating new faces to re-certifying
-# the OLDEST driver records. Entering this round 236/237 faces hold a PASS
-# record; embedding_pq_recall (never checked, see the allowance note above)
-# takes slot 1. The other 49 slots go to the hash-checkable faces whose
-# LATEST driver record is oldest — all 34 r1-r5-latest faces (the three
-# rows-only pair/recall reports with r1 records are excluded: they already
-# hold their maximal rows-only records and the slots are better spent
-# hash-checkable) — plus 15 family-spread r6 sentinels chosen so every
-# operator family the 34 miss keeps an in-window rep: kernel arity +
-# SizedArray multi-output, both declared-parallel fold/scan paths, the
-# TPC-H join core, as-of join (its null contract was re-documented this
-# round), the prefix-filtered SSJoin and both SemDeDup faces (this round's
-# 100x soak targets), streaming stateful scan + sessionization, tumbling
-# windows, the KMV sketch, the anti-join shape, and the CSV/JSONL format
-# round-trip. Every r11-window evictee is hash-green as of
-# CORRECTNESS_r11.json (50/50, zero errors) and stays oracled +
-# local-gated; the full r11 window is retained below as
-# _DRIVER_PRIORITY_R11 for the rotation record.
-_DRIVER_PRIORITY_R12: list[str] = [
-    "embedding_pq_recall",              # NEVER driver-checked; rows-only slot
-    # --- the 11 hash-checkable faces whose latest record is r1 ------------
-    "calendar_order_coverage",          # date-spine coverage audit
-    "curated_corpus",                   # multi-filter curation pipeline
-    "doc_quality_scores",               # length/punct/stopword quality
-    "embedding_array_stats",            # array-column norm/moment stats
-    "events_sessionize_stats",          # sessionize operator stats
-    "multimodal_features",              # payload feature extraction
-    "nation_order_cube",                # CUBE grouping-sets sentinel
-    "orders_by_month",                  # date-function rollup
-    "part_brand_stats",                 # string-function aggregates
-    "running_max_order_price",          # assoc-scan window fast path
-    "top_customers_by_spend",           # top-k / limit sentinel
-    # --- r2/r3-latest ------------------------------------------------------
-    "gap_fill_user_value",              # calendar gap-fill + ffill
-    "user_running_event_count",         # assoc grouped-scan fast path
-    "dedup_fingerprint_groups",         # rolling-hash fingerprint dedup
-    "top_bigrams",                      # n-gram frequency mining
-    # --- r4-latest ---------------------------------------------------------
-    "dedup_minhash_portable",           # portable-hash minhash banding
-    "doc_chunks",                       # fixed-token chunking
-    "doc_token_stats",                  # tokenizer count statistics
-    "doc_train_valid_test_split",       # content-hash split
-    "label_centroids",                  # per-label embedding centroids
-    "q4_order_priority",                # TPC-H EXISTS-subquery shape
-    "user_sessions",                    # gaps-and-islands sessionize
-    # --- r5-latest (kernel faces + the TPC-H spread) -----------------------
-    "doc_language_id",                  # n-gram language heuristic
-    "embedding_near_dup_pairs",         # cosine near-dup pair join
-    "kernel_fold_event_cents",          # expr-fold kernel sentinel
-    "kernel_scan_running_max",          # collect_scan kernel sentinel
-    "kernel_scan_user_balance_cents",   # grouped-scan kernel sentinel
-    "part_supplier_distinct",           # distinct-agg sentinel
-    "q13_customer_order_distribution",  # left-outer-join histogram
-    "q18_large_volume_orders",          # having-subquery join
-    "q19_disjunctive_predicates",       # OR-of-ANDs predicate pushdown
-    "q22_idle_rich_customers",          # anti-join + scalar subquery
-    "q5_local_supplier_volume",         # six-way join cycle
-    "q6_revenue_forecast",              # scan-pushdown sentinel
-    # --- 15 family-spread r6 sentinels -------------------------------------
-    "kernel_fold_two_columns",          # fold arity sweep sentinel
-    "kernel_scan_multi_output",         # SizedArray multi-output sentinel
-    "parallel_fold_total_cents",        # combine= parallel fold path
-    "parallel_scan_running_balance",    # two-pass parallel prefix scan
-    "q3_shipping_priority",             # TPC-H join-core sentinel
-    "asof_last_signup_before_purchase", # as-of join null-contract face
-    "dedup_containment_complete",       # prefix-filtered SSJoin (r12 soak)
-    "semantic_dedup_pairs",             # SemDeDup pairs (r12 soak)
-    "semantic_dedup_keeplist",          # SemDeDup keep-list (r12 soak)
-    "streaming_scan_user_balance",      # stateful streaming scan
-    "streaming_user_sessions",          # streaming sessionization
-    "events_daily_windows",             # tumbling/sliding time windows
-    "distinct_users_kmv",               # KMV sketch family
-    "customers_without_orders",         # anti-join family
-    "formats_csv_jsonl_roundtrip",      # CSV/JSONL source/sink family
-]
-# The full round-11 window, retained as the rotation record (50/50 all
-# three checks green, zero errors in CORRECTNESS_r11.json; every member
-# remains oracled + local-gated and registered — pinned by
-# tests/test_catalog_priority.py). Per-slot rotation documentation is
-# preserved verbatim from the round-9/10/11 edits below.
-_DRIVER_PRIORITY_R11: list[str] = [
-    # --- the twelve round-9 swap-ins --------------------------------------
-    # Round 11: seven r10 hash-green sentinels rotate out for the R11
-    # queue (4 faces) + the three r8-orphan faces VERDICT r10 flagged as
-    # never driver-checked; families covered per evictee:
-    # - events_kanonymity_audit -> governance/release keeps
-    #   events_ldiversity_audit in-window (the SAME quasi-identifier
-    #   generalization machinery, strictly harder: adds entropy-l).
-    # - corpus_zipf_fit -> the power-law eye keeps events_hill_tail_index
-    #   in-window (and gains nothing weaker: Hill is the tail-index twin
-    #   of the rank-frequency fit).
-    # - signup_survival_km -> succeeded by signup_cohort_ltv, the SAME
-    #   signup-keyed cohort-triangle machinery carrying revenue instead
-    #   of censoring; KM holds its r10 green.
-    # - ab_conversion_ztest -> experimentation keeps FOUR in-window reps
-    #   (ab_value_cuped, ab_value_mannwhitney, ab_sequential_sprt,
-    #   ab_bootstrap_ci) plus streaming_sprt_monitor.
-    # - doc_winnowing_overlap_pairs -> the fingerprint/dedup family keeps
-    #   curated_corpus_neardup + streaming_neardup_keeplist in-window.
-    # - corpus_datacard -> governance keeps corpus_mixture_weights
-    #   in-window (the datacard's mixture column IS the solver's input).
-    # - user_value_pareto_deciles -> the distributed-ranks machinery
-    #   stays driven by ab_value_mannwhitney (global tie-corrected
-    #   ranks); the concentration eye keeps events_hill_tail_index.
-    "views_point_in_time_state",        # SCD2 point-in-time vs as-of differential
-    "streaming_burst_windows",          # burst detection as a stream job
-    "search_ranking_metrics",           # precision@10 / MRR / NDCG judge
-    "formats_schema_evolution",         # mergeSchema across generations
-    "q1_pricing_summary",               # TPC-H sentinel restored (ask #3)
-    # --- the seven round-11 swap-ins (4 queued + 3 r8 orphans) ----------
-    "sql_surface_capped_fold",          # r11: grouped-fold UDTF spelling
-    "part_price_index",                 # r11: matched-Laspeyres weekly index
-    "signup_cohort_ltv",                # r11: weekly-cohort LTV triangle
-    "doc_encoding_sanity",              # r11: mojibake/control-char audit
-    "distinct_users_hll_portable",      # r8 orphan: portable-HLL registers
-    "streaming_users_hll",              # r8 orphan: HLL as stream state
-    "embedding_contrastive_triplets",   # r8 orphan: cell-bounded triplets
-    # --- the nine round-9 NEW faces (landing WITH their driver slot, the
-    # r7 process lesson; nine more r8-green sentinels rotate out, families
-    # noted in the block below)
-    "customer_match_bfs_hops",          # r9-new: multi-source BFS reach
-    "events_ols_trend",                 # r9-new: per-type OLS drift
-    "events_dow_seasonality",           # r9-new: weekly seasonal indices
-    "item_cooccurrence_recs",           # r9-new: item-item cosine CF
-    "purchase_attribution_items",       # r9-new: multi-touch attribution
-    "events_ldiversity_audit",          # r9-new: l-diversity / entropy-l
-    "orders_benford_audit",             # r9-new: Benford first-digit chi2
-    "event_markov_backtest",            # r9-new: next-event model backtest
-    "doc_kneser_ney_logprob",           # r9-new: Kneser-Ney LM scoring
-    # --- four second-batch r9 faces (same-round landing; four more
-    # r8-green sentinels rotate out, noted in the block below)
-    "doc_stratified_sample",            # r9-new: largest-remainder sampling
-    "user_churn_features",              # r9-new: leakage-safe feature matrix
-    "customer_label_propagation",       # r9-new: LPA communities (3 rounds)
-    "user_value_holt_winters",          # r9-new: seasonal triple recurrence
-    "ab_value_cuped",                   # r9-new: CUPED variance reduction
-    # --- retained round-8 slots (families unchanged) ----------------------
-    # Nine further r8 hash-green sentinels rotate out for the r9-new faces:
-    # - event_type_transitions -> event_markov_backtest: the SAME
-    #   transition-count machinery plus a temporal-split evaluation on top.
-    # - order_basket_lift -> item_cooccurrence_recs: the user-keyed
-    #   co-occurrence self-join is the identical plan shape, now scored.
-    # - events_cusum_changepoints + event_type_correlations -> the
-    #   monitoring family keeps source_drift_psi + events_daily_acf
-    #   in-window and gains events_ols_trend + events_dow_seasonality,
-    #   which drive the same exact-integer sufficient-statistics recipe.
-    # - bpe_merge_candidates + doc_rake_keyphrases -> the text family
-    #   keeps doc_char_entropy + doc_quality_calibrated and gains the
-    #   Kneser-Ney face (the LM-counts machinery BPE induction shares).
-    # - doc_phrase_search -> retrieval keeps search_ranking_metrics +
-    #   doc_search_authority_rrf in-window.
-    # - user_rfm_segments -> behavioral keeps funnel_conversion_latency +
-    #   session_top_paths and gains KM survival, the A/B z-test, Pareto
-    #   deciles and multi-touch attribution.
-    # - orders_bloom_prefilter -> the sketch family keeps THREE in-window
-    #   reps (user_events_cms, audience_overlap_kmv, streaming_user_cms)
-    #   plus the two rows-only self-reports.
-    # Second-batch evictions (all r8 hash-green, oracled + local-gated):
-    # - user_value_holt -> user_value_holt_winters: the SAME SizedArray
-    #   multi-output kernel path carrying a strictly harder (5-wide,
-    #   rotating) state; EWMA keeps the single-state scan in-window.
-    # - customer_golden_record -> the graph/ER family gains TWO new
-    #   in-window reps (BFS hops + label propagation, both over the same
-    #   fuzzy-match edges) and keeps customer_graph_triangles.
-    # - funnel_conversion_latency -> behavioral keeps session_top_paths
-    #   plus the new KM/z-test/Pareto/attribution/churn-feature slots.
-    # - doc_char_entropy -> text quality keeps doc_quality_calibrated and
-    #   gains the Kneser-Ney LM face.
-    # - events_daily_acf -> the exact-integer-stats monitoring family
-    #   keeps source_drift_psi in-window and gains events_ols_trend +
-    #   events_dow_seasonality (the same sufficient-statistics recipe);
-    #   ab_value_cuped joins ab_conversion_ztest as the experimentation
-    #   pair.
-    #
-    # Round 10: the round-9 driver signal never landed in the repo (no
-    # CORRECTNESS_r09.json / r9 VERDICT was delivered), so the 26 round-9
-    # slots above are RETAINED UNCHANGED — rotating them out before a
-    # driver record exists would re-create exactly the debt the r7 verdict
-    # condemned. The twelve round-10 NEW faces below land WITH their
-    # driver slot (the standing process rule) by evicting twelve r8
-    # hash-green sentinels, families covered per slot:
-    # - kmeans_assignments -> kmeans_silhouette: the SAME two-iteration
-    #   Lloyd recipe plus the cluster-quality judge on top.
-    # - embedding_topk_lsh -> embedding_centroid_classify: the embedding
-    #   family keeps kmeans_silhouette plus this held-out Rocchio eval;
-    #   topk_lsh holds its r8 green.
-    # - doc_pagerank_centrality -> customer_part_hits: the identical
-    #   decimal-iterative graph recipe (12dp-rounded contributions into
-    #   DECIMAL(28,14), unrolled oracle) on the two-vector recurrence.
-    # - audience_overlap_kmv -> segment_overlap_bitmap: the EXACT bitmap
-    #   twin of the same audience-overlap question; KMV holds its r8
-    #   green and the sketch family keeps the two rows-only reports plus
-    #   streaming_user_cms in-window.
-    # - doc_quality_calibrated -> doc_readability: text-quality family
-    #   (calibration holds its r8 green; Kneser-Ney stays in-window).
-    # - doc_search_authority_rrf -> doc_lexical_richness: retrieval keeps
-    #   search_ranking_metrics in-window; the token-frequency machinery
-    #   gains the TTR/hapax/Yule richness face.
-    # - source_drift_psi -> events_chisq_independence: the same
-    #   exact-integer-sufficient-statistics monitoring recipe; the drift
-    #   family keeps events_ols_trend + events_dow_seasonality in-window.
-    # - user_events_cms -> events_seasonal_backtest: the timeseries-eval
-    #   face joins OLS/DOW/Holt-Winters in-window; batch CMS holds its r8
-    #   green and the stream twin keeps its slot.
-    # - session_top_paths -> ab_value_mannwhitney: behavioral keeps the
-    #   KM/attribution/churn r9 slots; experimentation gains the
-    #   nonparametric rank test (global_ranks machinery stays driven via
-    #   user_value_pareto_deciles).
-    # - user_value_ewma -> ab_sequential_sprt: the scan-recurrence family
-    #   keeps user_value_holt_winters + sql_surface_running_balance
-    #   in-window; the SPRT face drives the distributed prefix-sum
-    #   decomposition of the same cumulative shape.
-    # - customer_graph_triangles -> events_hill_tail_index: the graph
-    #   family keeps BFS hops + label propagation + HITS in-window;
-    #   the tail-index face joins Zipf/Pareto as the third power-law eye.
-    # - streaming_user_ewma -> corpus_mixture_weights: streaming keeps
-    #   THREE in-window reps (burst windows, neardup keep-list, CMS
-    #   state); governance gains the mixture solver next to the data
-    #   card.
-    # Second round-10 batch (same-round landing; three more r8-green
-    # sentinels rotate out):
-    # - streaming_user_cms -> streaming_sprt_monitor: streaming keeps
-    #   burst windows + the neardup keep-list in-window and gains the
-    #   sequential-testing twin (whose per-user state is the same
-    #   bounded-keyed-counter shape CMS carries); batch+stream CMS hold
-    #   their r8 greens.
-    # - dedup_simhash_keeplist -> source_drift_wasserstein: the dedup
-    #   family keeps FOUR in-window reps (minhash keep-list, clusters,
-    #   curated corpus, streaming keep-list); the drift family pairs W1
-    #   magnitude with the new chi-square and the retained OLS/DOW
-    #   sufficient-statistics recipe.
-    # - dedup_clusters -> events_entropy_rate: the capped cross-engine
-    #   closure differential holds r8 greens and stays local-gated; the
-    #   components machinery keeps its in-window reps via both keep-list
-    #   faces, and the behavioral-model family pairs entropy rate with
-    #   the Markov backtest's transition machinery.
-    "streaming_sprt_monitor",           # r10-new: SPRT as a stream job
-    "source_drift_wasserstein",         # r10-new: earth-mover drift
-    "events_entropy_rate",              # r10-new: behavior predictability
-    # Third round-10 batch (same-round landing): the two rows-only
-    # self-reports rotate out — they earned their (maximal) rows-only
-    # records in r8 and rows-only slots are better spent on hash-checkable
-    # faces; the allowance set stays declared for the record but unused.
-    # - order_price_tdigest_report -> orders_incremental_rollup: the
-    #   quantile-sketch family keeps order_price_hist_quantiles oracled +
-    #   local-gated; the new face gates the mergeable-partial-aggregate
-    #   algebra every incremental pipeline rests on.
-    # - distinct_users_sketch -> ab_bootstrap_ci: KMV/HLL machinery stays
-    #   evidenced by audience_overlap_kmv's r8 green + the portable-HLL
-    #   oracle locally; experimentation gains the distribution-free
-    #   interval next to z/CUPED/rank/SPRT.
-    "orders_incremental_rollup",        # r10-new: incremental MV merge
-    "ab_bootstrap_ci",                  # r10-new: hash-weight bootstrap CI
-    # Fourth round-10 batch (same-round landing; two more r8-green
-    # sentinels rotate out):
-    # - multimodal_audio_meta -> multimodal_mp3_meta: the container
-    #   family keeps multimodal_video_meta in-window and gains its
-    #   FOURTH format (MPEG-1 Layer III sync-header walking); the WAV
-    #   face holds its r8 green.
-    # - dedup_minhash_keeplist -> events_runs_test: the dedup family
-    #   keeps curated_corpus_neardup + streaming_neardup_keeplist
-    #   in-window (the keep-list machinery rides both); the monitoring
-    #   family gains the runs-test randomness audit beside chi-square.
-    "multimodal_mp3_meta",              # r10-new: MPEG sync-header walk
-    "events_runs_test",                 # r10-new: Wald-Wolfowitz runs
-    # --- the twelve round-10 NEW faces ------------------------------------
-    "kmeans_silhouette",                # r10-new: cluster-quality judge
-    "embedding_centroid_classify",      # r10-new: Rocchio held-out eval
-    "customer_part_hits",               # r10-new: HITS hubs/authorities
-    "segment_overlap_bitmap",           # r10-new: exact bitmap overlap
-    "doc_readability",                  # r10-new: Flesch-Kincaid per source
-    "doc_lexical_richness",             # r10-new: TTR/hapax/Yule's K
-    "events_chisq_independence",        # r10-new: chi-square contingency
-    "events_seasonal_backtest",         # r10-new: seasonal-naive MAE/SMAPE
-    "ab_value_mannwhitney",             # r10-new: tie-corrected rank test
-    "ab_sequential_sprt",               # r10-new: Wald SPRT early stopping
-    "events_hill_tail_index",           # r10-new: extreme-value tail index
-    "corpus_mixture_weights",           # r10-new: domain-mixture solver
-    # (the R11 rotation queue executed above: all four queued faces plus
-    # the three r8 orphans VERDICT r10 flagged are in-window this round.)
-    # --- retained round-8 sentinels (families unchanged; the five below
-    # are the last in-window reps of the reference's grouped-fold and
-    # SQL-UDTF surfaces, the curation/streaming keep-list pipelines and
-    # the MP4 container hard-gate) -----------------------------------------
-    "curated_corpus_neardup",           # keep-list curation pipeline
-    "capped_balance_per_user",          # grouped-fold kernel sentinel
-    "sql_surface_running_balance",      # SQL UDTF sentinel
-    "multimodal_video_meta",            # MP4 box-walk hard-gate
-    "streaming_neardup_keeplist",       # incremental LSH keep-list
-]
-# The full round-8 window, retained as the rotation record (48 hash-green +
-# 2 rows-only, 0 errors in CORRECTNESS_r08.json; every member remains
-# oracled + local-gated and registered — pinned by
-# tests/test_catalog_priority.py). Per-slot rotation documentation is
-# preserved verbatim from the round-8 edit below.
-_DRIVER_PRIORITY_R8: list[str] = [
-    # --- round 8 window ----------------------------------------------------
-    # The 8 hard-gate must-ins: the five oracled queries with no driver
-    # hash-green row after seven rounds (the two r7-new keep-lists were
-    # never in a window; the other three were checked only in r1 BEFORE
-    # their oracles existed), the new r8 end-to-end keep-list curation face,
-    # and the two never-rotated rows-only self-evaluating reports (the
-    # documented ≤2-slot allowance — their output IS the approx-vs-exact
-    # differential, so rows-only is the strongest record that exists).
-    "dedup_minhash_keeplist",           # pair-free minhash keep-list (r7-new)
-    "dedup_simhash_keeplist",           # pair-free simhash keep-list (r7-new)
-    "embedding_topk_lsh",               # LSH ANN top-k (oracled r3+)
-    "dedup_clusters",                   # LSH pairs -> components -> verdict
-    "kmeans_assignments",               # decimal-exact k-means assignment
-    "curated_corpus_neardup",           # r8-new: keep-list curation pipeline
-    "order_price_tdigest_report",       # rows-only: t-digest self-report
-    "distinct_users_sketch",            # rows-only: HLL-style self-report
-    # --- six queries oracled mid-r8 with no driver row yet: the three
-    # late-r8 additions (banding-recall eval, KS drift, conversion funnel)
-    # plus the three session-2 faces (bloom runtime filter, Gopher quality
-    # rules, retention cohorts). Every oracled query should earn a driver
-    # hash row the round it lands — not wait for a future rotation (the
-    # r7-verdict lesson). Six sentinels rotate out to make room; each
-    # evictee's family keeps in-window coverage, noted per slot below.
-    "dedup_minhash_recall",             # r8-new: banding recall evaluation
-    "source_drift_ks",                  # r8-new: per-source KS drift audit
-    "user_conversion_funnel",           # r8-new: ordered-step funnel
-    "orders_bloom_prefilter",           # r8-new: bloom runtime-filter join
-    "doc_gopher_filter",                # r8-new: Gopher quality rules
-    "user_retention_cohorts",           # r8-new: cohort retention triangle
-    "bpe_merge_candidates",             # r8-new: BPE merge-pair induction
-    "doc_char_entropy",                 # r8-new: char-entropy junk detector
-    "doc_quality_calibrated",           # r8-new: per-source score calibration
-    "user_value_ewma",                  # r8-new: recursively-oracled EWMA scan
-    "event_type_transitions",           # r8-new: Markov transition matrix
-    "corpus_vocab_growth",              # r8-new: Heaps-law vocab curve
-    "streaming_user_ewma",              # r8-new: stateful float recurrence
-    "doc_search_authority_rrf",         # r8-new: BM25 x PageRank RRF fusion
-    "order_basket_lift",                # r8-new: market-basket lift mining
-    "events_burst_windows",             # r8-new: trailing-baseline bursts
-    "source_drift_psi",                 # r8-new: binned PSI drift audit
-    "doc_rake_keyphrases",              # r8-new: RAKE keyword extraction
-    "user_rfm_segments",                # r8-new: value-bucketed RFM scores
-    "funnel_conversion_latency",        # r8-new: time-to-convert percentiles
-    # --- session-3 faces (oracled late r8, swapped in the round they land;
-    # three sentinels rotate out below, families noted per slot)
-    "events_cusum_changepoints",        # r8-new: closed-form CUSUM monitor
-    "user_events_cms",                  # r8-new: count-min frequency sketch
-    "audience_overlap_kmv",             # r8-new: theta-sketch set algebra
-    "formats_zorder_skipping",          # r8-new: Morton layout, 2-dim skipping
-    "doc_phrase_search",                # r8-new: positional phrase retrieval
-    "customer_golden_record",           # r8-new: entity-resolution survivorship
-    "user_value_concentration",         # r8-new: Gini/entropy/HHI, dist. ranks
-    "events_daily_acf",                 # r8-new: exact-integer autocorrelation
-    "streaming_user_cms",               # r8-new: CMS counters as stream state
-    "customer_graph_triangles",         # r8-new: degree-ordered triangle count
-    "orders_dq_expectations",           # r8-new: expectation-suite DQ audit
-    "user_value_holt",                  # r8-new: coupled-recurrence Holt scan
-    "event_type_correlations",          # r8-new: exact-integer Pearson pairs
-    "session_top_paths",                # r8-new: session journey mining
-    # R9 ROTATION QUEUE (window full; the remaining sentinels are the last
-    # in-window reps of the reference's grouped-fold and SQL-UDTF surfaces
-    # and stay): views_point_in_time_state (asof-vs-interval-containment
-    # differential), events_kanonymity_audit, corpus_zipf_fit,
-    # signup_survival_km, ab_conversion_ztest, streaming_burst_windows,
-    # user_value_pareto_deciles, doc_winnowing_overlap_pairs,
-    # search_ranking_metrics, formats_schema_evolution, and
-    # corpus_datacard, all oracled + local-gate green this session —
-    # swap them in first next round.
-    # --- sentinels (ADVICE r7 #5): the remaining 36 slots re-check one
-    # previously-green query per long-gated core family, so a regression in
-    # folds/scans, TPC-H shapes, flagship dedup, embeddings, text pipeline,
-    # or streaming is caught by the driver this round, not only by the
-    # local replica gate. Includes the four unexplained r7 bench movers.
-    # fold/scan kernel surface (kernel_scan_multi_output rotates out for the
-    # late-r8 swaps: the multi-output tuple-accumulator path stays
-    # unit-gated; kernel_fold_two_columns and parallel_scan_running_balance
-    # rotate out for the session-2 swaps — the two-column fold family stays
-    # evidenced by kernel_fold_event_cents + user_activity_with_fold, the
-    # parallel-combine family by parallel_fold_total_cents, the scan family
-    # by kernel_scan_user_balance_cents + streaming_scan_user_balance)
-    # (kernel_fold_event_cents rotates out for the session-2 swaps — the
-    # fold family keeps THREE in-window reps: capped_balance_per_user,
-    # user_activity_with_fold, parallel_fold_total_cents)
-    # (user_activity_with_fold rotates out for the session-3 swaps — the
-    # fold family keeps TWO in-window reps: capped_balance_per_user and
-    # parallel_fold_total_cents; it holds an r6 driver green)
-    # (kernel_scan_user_balance_cents rotates out for the session-3 swaps —
-    # the grouped-scan-kernel family keeps THREE in-window reps:
-    # streaming_scan_user_balance drives the same kernel through the state
-    # store, sql_surface_running_balance is its UDTF spelling, and
-    # user_value_ewma runs the non-associative float recurrence; it holds
-    # r5-r7 driver greens)
-    # (parallel_fold_total_cents rotates out for the session-3 swaps —
-    # r6+r7 driver greens, its r7-mover watch closed at the r8 remeasure;
-    # the A1 collect_fold+combine path keeps its unit/property suite and
-    # capped_balance_per_user holds the grouped-fold kernel slot)
-    "capped_balance_per_user",
-    "sql_surface_running_balance",
-    # TPC-H / relational shapes (q18_large_volume_orders rotated out for the
-    # late-r8 swaps; q13_customer_order_distribution rotates out for the
-    # session-2 swaps — the outer-join-distribution family stays evidenced
-    # by q3 + the full TPC-H suite in the local gate)
-    # (q3_shipping_priority rotates out — the multi-join TPC-H family
-    # keeps q2 + q7 in-window and the full 22-query suite in the local
-    # gate; q3 holds r1+r6 driver greens)
-    # (q1_pricing_summary rotates out for the session-3 swaps — r1+r6
-    # driver greens; with q2/q7 also out this round the TPC-H family holds
-    # NO in-window rep, a deliberate trade: all 22 shapes stay oracled +
-    # local-gated with r6/r7 driver greens, and the slots go to queries
-    # that have never seen the driver at all (the r7-verdict priority))
-    # (q6_revenue_forecast rotates out for the streaming_user_ewma swap —
-    # the pushdown family is pinned by plan tests and q1 stays in-window)
-    # (q2_min_cost_supplier rotates out for the session-3 swaps — it
-    # earned hash-green rows in r6 and r7, its r7-mover watch closed BELOW
-    # the r6 floor (BASELINE.md round-8 remeasure table), and the TPC-H
-    # family keeps q1 in-window plus the full 22-query suite in the local
-    # gate)
-    # (q7_nation_pair_volume rotates out for the session-3 swaps — it
-    # earned its hash-green driver row in r7; the
-    # multi-join TPC-H family keeps q1 + q2 in-window and the full
-    # 22-query suite in the local gate)
-    # window / analytic / timeseries (running_max_order_price rotated out:
-    # the associative fast-path family stays evidenced by
-    # orders_rank_in_customer + global_longest_hot_streak in-window;
-    # gap_fill_user_value rotates out for the session-2 swaps — the
-    # timeseries family stays evidenced by rolling_hour_user_value)
-    # (events_sessionize_stats rotates out for the user_value_ewma swap —
-    # the sessionize family stays evidenced by streaming_user_sessions
-    # in-window plus user_sessions in the local gate; orders_rank_in_customer
-    # rotates out for the event_type_transitions swap — the rank/analytic
-    # family keeps its r7 driver green via window_function_zoo and the new
-    # face itself gates a lag window)
-    # (rolling_hour_user_value rotates out — the RANGE-frame timeseries
-    # machinery is now exercised in-window by events_burst_windows, and
-    # the face holds r1-r7 driver greens)
-    # (global_longest_hot_streak rotates out for the session-3 swaps — the
-    # stacked-window/analytic family stays evidenced in-window by
-    # events_burst_windows and by events_cusum_changepoints itself, whose
-    # closed form is exactly two stacked ROWS frames; it holds r2+r7
-    # driver greens)
-    # flagship dedup / ExactSubstr (doc_remove_passages rotates out for the
-    # session-2 swaps — the ExactSubstr family stays evidenced by
-    # doc_duplicated_spans; the md5-portable minhash/simhash twins rotate
-    # out too — their banding machinery is exactly what the in-window
-    # keep-list must-ins and dedup_minhash_recall exercise)
-    # (dedup_incremental_pairs rotates out for the corpus_vocab_growth
-    # swap — its broadcast-delta-vs-corpus-bands machinery is exactly what
-    # the in-window streaming_neardup_keeplist must-in drives every
-    # micro-batch)
-    # (dedup_jaccard_pairs rotates out for the doc_search_authority_rrf
-    # swap — the pairwise-Jaccard machinery stays evidenced in-window by
-    # dedup_containment_complete, its prefix-filtered superset)
-    # (dedup_exact_digests rotates out — the exact-dedup groupBy is the
-    # simplest machinery in the family, holds r1+r6 driver greens, and
-    # stays local-gated with dedup_fingerprint_groups)
-    # (dedup_containment_complete rotates out for the session-3 swaps —
-    # r7 driver green, the prefix-filter equi-join plan stays pinned by
-    # test_plans.py, and the dedup family keeps SIX in-window reps:
-    # both keep-lists, dedup_clusters, curated_corpus_neardup,
-    # dedup_minhash_recall, streaming_neardup_keeplist)
-    # (doc_duplicated_spans rotates out for the session-3 swaps — r6+r7
-    # driver greens; ExactSubstr stays local-gated with its skew-router
-    # unit tests, and the spans machinery is unchanged since r5)
-    # embeddings / semantic dedup (embedding_near_dup_pairs rotated out for
-    # the late-r8 swaps: the banded-cosine family stays evidenced by
-    # semantic_dedup_pairs/keeplist + the embedding_topk_lsh must-in;
-    # label_centroids and embedding_topk_bruteforce rotate out for the
-    # session-2 swaps — the centroid/brute-force paths stay evidenced by
-    # the kmeans_assignments + embedding_topk_lsh must-ins)
-    # (semantic_dedup_pairs rotates out — semantic_dedup_keeplist, the
-    # production pair-free face of the same cluster-bounded machinery,
-    # stays in-window)
-    # (semantic_dedup_keeplist rotates out for the session-3 swaps — r7
-    # driver green; the k-means-cell machinery stays in-window via the
-    # kmeans_assignments must-in, the keep-list contract via both
-    # minhash/simhash keep-list must-ins)
-    # text pipeline
-    # (doc_unigram_logprob rotates out — the LM-scoring family keeps
-    # doc_bigram_logprob, its interpolated superset, in-window)
-    # (doc_bigram_logprob rotates out for the session-3 swaps — it earned
-    # hash-green rows in r6 and r7, its r7-mover watch closed at
-    # the r8 remeasure floor, and the LM-scoring family stays evidenced
-    # in-window by doc_quality_calibrated + bpe_merge_candidates +
-    # doc_char_entropy)
-    # (training_data_pipeline rotates out for the session-3 swaps — r6
-    # driver green; every stage it composes is individually gated, and its
-    # modern keep-list twin curated_corpus_neardup stays a must-in)
-    "doc_winnowing_fingerprints",       # r8-new: rolling-hash winnowing
-    "doc_bm25_search",                  # r8-new: BM25 inverted-index top-k
-    "doc_pagerank_centrality",          # r8-new: fully-oracled PageRank
-    # multimodal (r8-new faces; tfidf stays oracled + local-gated, its
-    # vocabulary-join path remains driver-evidenced via doc_heavy_tokens r7)
-    "multimodal_audio_meta",            # r8-new: WAV header parse hard-gate
-    "multimodal_video_meta",            # r8-new: MP4 box-walk hard-gate
-    # streaming jobs
-    # (streaming_scan_user_balance rotates out for the session-3 swaps —
-    # r6+r7 driver greens; the kernel-scan-through-the-state-store
-    # machinery is exactly what streaming_user_ewma drives, and the
-    # streaming family keeps THREE in-window reps: streaming_user_ewma,
-    # streaming_neardup_keeplist, streaming_user_cms)
-    # (streaming_user_sessions rotates out for the session-3 swaps — the
-    # sessionize machinery stays evidenced by user_sessions in the local
-    # gate and its r4+r6 driver greens)
-    "streaming_neardup_keeplist",       # r8-new: incremental LSH keep-list
-]
-# The full round-7 window, retained as the rotation record (all 50 went
-# green in CORRECTNESS_r07.json; every member remains oracled + local-gated
-# and is pinned registered by tests/test_catalog_priority.py).
-_DRIVER_PRIORITY_R7: list[str] = [
-    # fold/scan kernel surface (SURVEY §2.A) — last uncovered face
-    "user_running_multi_metrics",       # fused multi-output grouped scan
-    # TPC-H relational suite — the 16 extras never driver-checked
-    "q2_min_cost_supplier",             # correlated scalar subquery + dim stack
-    "q7_nation_pair_volume",            # two-nation join symmetry
-    "q8_market_share",                  # 8-table join, conditional share
-    "q9_product_profit",                # LIKE-filtered profit rollup
-    "q10_returned_items",               # returned-flag revenue top-k
-    "q11_important_stock",              # HAVING vs global scalar subquery
-    "q12_late_shipment_priority",       # CASE-counted shipmode buckets
-    "q14_promo_revenue_share",          # conditional aggregate ratio
-    "q15_top_supplier",                 # view + max-equality subquery
-    "q16_part_supplier_counts",         # NOT IN + distinct-count agg
-    "q17_small_quantity_revenue",       # per-part avg correlated subquery
-    "q20_promotion_suppliers",          # nested IN-subquery chain
-    "q21_waiting_suppliers",            # EXISTS + NOT EXISTS self-joins
-    # window / analytic / stats faces
-    "window_function_zoo",              # 12 analytic functions, one frame each
-    "order_price_changes",              # lag/lead deltas
-    "order_price_distribution",         # ntile + cume_dist distribution
-    "order_price_hist_quantiles",       # mergeable histogram quantile sketch
-    "order_price_outliers",             # median/MAD robust outliers
-    "lineitem_price_moments",           # skewness/kurtosis exact moments
-    "events_hourly_heatmap",            # dow×hour dense grid
-    "events_unpivoted_flags",           # melt/unpivot
-    "document_length_histogram",        # log-scaled width buckets
-    "event_user_skew_report",           # hot-key skew diagnostic
-    "salted_event_type_totals",         # salted two-stage skew aggregate
-    "customer_name_fuzzy_pairs",        # blocked edit-distance fuzzy join
-    # text-quality / LM scoring
-    "doc_bigram_logprob",               # interpolated bigram LM score
-    "doc_perplexity_buckets",           # perplexity-proxy quality buckets
-    "doc_novelty_scores",               # corpus-wide unique-shingle fraction
-    "doc_pii_scrub",                    # regex PII redaction
-    "doc_duplicated_passages",          # passage-level duplicate summary
-    "doc_token_budget",                 # greedy token-budget selection
-    # dedup / decontamination faces
-    "dedup_containment_pairs",          # asymmetric containment (one-sided)
-    "decontamination_overlap",          # eval-vs-train n-gram overlap
-    "doc_corpus_diff",                  # snapshot diff (added/removed/changed)
-    "split_contamination_audit",        # cross-split shingle leakage audit
-    "doc_leakage_safe_split",           # cluster-aware split assignment
-    "doc_weighted_sample",              # deterministic weighted sampling
-    "doc_weighted_mix",                 # source-weighted mixture
-    # embeddings
-    "embedding_sign_stats",             # sign-bit summary over vectors
-    "embedding_near_dup_recall",        # rows-only: approx-vs-exact recall report
-    "embedding_int8_recall",            # rows-only: int8-quant recall report
-    # multimodal
-    "multimodal_frame_sample",          # deterministic frame sampling plumbing
-    # formats / sources
-    "formats_orc_roundtrip",            # ORC round-trip + predicate pushdown
-    "formats_partitioned_pruning",      # hive-partitioned pruning
-    "formats_sorted_skipping",          # sorted-parquet row-group skipping
-    # streaming faces never driver-checked (r6 verdict next-round #7)
-    "streaming_daily_rollup",           # watermarked tumbling daily rollup
-    "streaming_dedup_docs",             # streaming exact-dedup with state
-    "streaming_user_latest_state",      # latest-state upsert stream
-    "streaming_signup_purchase_join",   # stream-stream INNER interval join
-]
-# Swapped OUT of the window in round 3 (r2 verdict #5 — both remain oracled
-# and local-gated): user_running_event_count (associative window fast path —
-# family still evidenced by orders_rank_in_customer + running_max_order_price)
-# and gap_fill_user_value (timeseries — rolling_hour_user_value stays in).
-# Swapped in round 4 (both evictees remain oracled and local-gated):
-# dedup_fingerprint_groups → user_activity_with_fold (exact-dedup family
-# still evidenced by dedup_exact_digests; the new entry gates the
-# expression-context composition surface, r3 verdict missing #3) and
-# top_bigrams → doc_repetition_stats (bigram machinery still evidenced by
-# the repetition stats; per-doc repetition is the stronger pipeline signal).
-# Swapped in round 5 (r4 verdict next-round #5 — every evictee remains
-# oracled and local-gated): user_sessions → streaming_user_sessions (the
-# session-window family is now gated end-to-end as a streaming job; the
-# batch gaps-and-islands twin stays local), dedup_minhash_portable →
-# doc_unigram_logprob (the minhash pipeline remains driver-gated through
-# dedup_jaccard_pairs, which round 5 rebuilt on the identical portable
-# banding + exact-Jaccard verify), doc_chunks → doc_duplicated_spans (the
-# round-5 ExactSubstr span extractor), doc_train_valid_test_split →
-# doc_source_caps (same sampling module, fresh code path). Second round-5
-# rotation (new operators — every evictee remains oracled and local-gated):
-# label_centroids → semantic_dedup_pairs (the decimal-exact centroid recipe
-# is still driver-evidenced INSIDE the SemDeDup oracle's cent1 stage, which
-# shares the kmeans CTE spelling) and doc_token_stats → doc_tfidf_top_terms
-# (token counting still evidenced by doc_repetition_stats/doc_unigram_logprob;
-# TF-IDF gates the new vocabulary-join + ranked-window path). Third round-5
-# swap: q4_order_priority → distinct_users_kmv (the sketch family gains its
-# first fully-oracled driver slot; q4's EXISTS-subquery shape remains
-# evidenced by q21_waiting_suppliers/q22_idle_rich_customers, and q4 stays
-# oracled + local-gated).
-# Swapped in round 6 (r5 verdict next-round #3 — every evictee remains
-# oracled and local-gated): kernel_scan_running_max →
-# dedup_containment_complete (collect_scan remains driver-gated through
-# parallel_scan_running_balance + kernel_scan_multi_output; the new entry
-# hard-gates the round-5 prefix-filtered SSJoin), q19_disjunctive_predicates
-# → doc_remove_passages (disjunctive pushdown remains plan-asserted in
-# tests/test_plans.py; the new entry gates the ExactSubstr removal +
-# document-rebuild aggregate), q22_idle_rich_customers → streaming_users_kmv
-# (the EXISTS/anti-join shape remains evidenced by q21 + q4 locally and
-# customers_without_orders in-window; the new entry gates the bounded
-# streaming sketch as a real job), part_supplier_distinct →
-# semantic_dedup_keeplist (COUNT(DISTINCT) aggregation remains
-# driver-evidenced inside distinct_users_kmv's exact_users column; the new
-# entry gates SemDeDup's keep policy end to end).
-# Second round-6 rotation (the new round-6 operator families — every evictee
-# remains oracled and local-gated): kernel_fold_event_cents →
-# orders_merge_upsert (grouped fold stays driver-gated through
-# kernel_fold_two_columns + capped_balance_per_user + user_activity_with_fold;
-# the new entry gates the CDC merge/upsert window pass),
-# kernel_scan_user_balance_cents → user_state_scd2 (grouped scan stays gated
-# through kernel_scan_multi_output + streaming_scan_user_balance; the new
-# entry gates SCD2 validity intervals), embedding_near_dup_pairs →
-# doc_heavy_tokens (the cosine-pair family stays gated through
-# semantic_dedup_pairs and the bucketed operator is soak-measured in
-# SCALE.md; the new entry gates the bounded Misra-Gries frequent-items
-# pass), doc_language_id → streaming_enriched_segments (text-quality stays
-# gated through doc_repetition_stats + doc_unigram_logprob; the new entry
-# gates the stream-static broadcast enrichment join as a real job).
-# Third round-6 rotation (late-round additions — every evictee remains
-# oracled and local-gated): q5_local_supplier_volume →
-# streaming_signup_conversion_outer (multi-way join shape stays evidenced by
-# q1/q3 in-window and the full TPC-H suite locally; the new entry gates the
-# stream-stream LEFT OUTER join with sentinel punctuation as a real job),
-# q6_revenue_forecast → dedup_incremental_pairs (scan-filter-agg stays
-# trivially evidenced everywhere; the new entry gates the broadcast
-# delta-ingest minhash face), q13_customer_order_distribution →
-# doc_sequence_packing (left-join+agg stays evidenced by
-# customers_without_orders + q3; the new entry gates the packing cumsum's
-# integer-exact membership), q18_large_volume_orders → events_profile
-# (having-subquery joins stay evidenced by q3/q21 locally; the new entry
-# gates the one-pass column profiler whose six per-column rows each carry
-# exact distincts, null counts and range summaries).
-# Round 7: FULL-window rotation (r6 verdict next-round #1). All 50 slots go
-# to the 50 queries with no driver record after six rounds; every one of the
-# 50 evictees carries a green r1-r6 driver row (r6 itself was 50/50 green)
-# and stays oracled + local-gated. All 50 incoming queries were pre-verified
-# through tools/check_oracle.py at sf0.01 this round (50/50 match, including
-# dtype-sensitive compare). After the r7 driver run, the never-checked set
-# is empty: 139/141 queries have a hash-checked driver row and the two
-# self-evaluating recall reports have their (maximal) rows-only record.
 
 
 def _prioritized(mapping: dict) -> dict:

@@ -51,10 +51,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def bucketed_join_ready(
     spark: SparkSession,
     left: DataFrame,

@@ -20,25 +20,10 @@ def test_priority_names_all_registered():
 
 
 def test_every_driver_slot_is_oracled_or_allowed_rows_only():
-    """Every window slot must be hash-checkable, EXCEPT the explicitly
-    documented allowance: the two self-evaluating recall reports, whose
-    output IS an approx-vs-exact differential — rows-only is the strongest
-    driver record that exists for them (see _ROWS_ONLY_WINDOW_ALLOWANCE)."""
+    """Every window slot must be hash-checkable."""
     oracles = catalog.oracle_queries()
-    unoracled = [
-        n
-        for n in catalog._DRIVER_PRIORITY
-        if n not in oracles and n not in catalog._ROWS_ONLY_WINDOW_ALLOWANCE
-    ]
+    unoracled = [n for n in catalog._DRIVER_PRIORITY if n not in oracles]
     assert unoracled == [], f"rows-only queries inside the driver window: {unoracled}"
-
-
-def test_rows_only_allowance_is_small_and_registered():
-    assert len(catalog._ROWS_ONLY_WINDOW_ALLOWANCE) <= 2
-    q = catalog.spark_queries()
-    oracles = catalog.oracle_queries()
-    for n in catalog._ROWS_ONLY_WINDOW_ALLOWANCE:
-        assert n in q and n not in oracles
 
 
 def test_rows_only_queries_sit_past_the_window_unless_allowed():
@@ -46,77 +31,12 @@ def test_rows_only_queries_sit_past_the_window_unless_allowed():
     oracles = catalog.oracle_queries()
     past_window = list(q)[50:]
     rows_only = [n for n in q if n not in oracles]
-    assert set(rows_only) <= set(past_window) | catalog._ROWS_ONLY_WINDOW_ALLOWANCE
-
-
-def test_r7_rotation_record_stays_registered():
-    """The retained round-7 window is a rotation record: every member must
-    still exist in the registry (a renamed query would silently orphan its
-    documented driver history)."""
-    q = catalog.spark_queries()
-    missing = [n for n in catalog._DRIVER_PRIORITY_R7 if n not in q]
-    assert missing == []
-
-
-def test_r8_rotation_record_stays_registered():
-    """Same contract for the retained round-8 window (48 hash-green + 2
-    rows-only in CORRECTNESS_r08.json)."""
-    q = catalog.spark_queries()
-    assert len(catalog._DRIVER_PRIORITY_R8) == 50
-    missing = [n for n in catalog._DRIVER_PRIORITY_R8 if n not in q]
-    assert missing == []
-
-
-def test_r11_rotation_record_stays_registered():
-    """Same contract for the retained round-11 window (50/50 all three
-    checks green, zero errors in CORRECTNESS_r11.json)."""
-    q = catalog.spark_queries()
-    assert len(catalog._DRIVER_PRIORITY_R11) == 50
-    missing = [n for n in catalog._DRIVER_PRIORITY_R11 if n not in q]
-    assert missing == []
-
-
-def test_r12_rotation_record_stays_registered():
-    """The retained round-12 window (49 hash-green + the rows-only
-    allowance in CORRECTNESS_r12.json) re-certified the oldest records:
-    it contains the once-never-checked face and shares zero slots with
-    the r11 window."""
-    q = catalog.spark_queries()
-    assert len(catalog._DRIVER_PRIORITY_R12) == 50
-    missing = [n for n in catalog._DRIVER_PRIORITY_R12 if n not in q]
-    assert missing == []
-    assert "embedding_pq_recall" in catalog._DRIVER_PRIORITY_R12
-    overlap = set(catalog._DRIVER_PRIORITY_R12) & set(
-        catalog._DRIVER_PRIORITY_R11
-    )
-    assert overlap == set()
-
-
-def test_r13_rotation_record_stays_registered():
-    """The retained round-13 window (50/50 fully green, zero rows-only in
-    CORRECTNESS_r13.json) stays registered and disjoint from its own
-    predecessors — the invariants it was certified under."""
-    q = catalog.spark_queries()
-    assert len(catalog._DRIVER_PRIORITY_R13) == 50
-    missing = [n for n in catalog._DRIVER_PRIORITY_R13 if n not in q]
-    assert missing == []
-    assert "dedup_containment_keeplist" in catalog._DRIVER_PRIORITY_R13
-    assert "embedding_pq_encode" in catalog._DRIVER_PRIORITY_R13
-    assert set(catalog._DRIVER_PRIORITY_R13) & set(catalog._DRIVER_PRIORITY_R12) == set()
-    assert set(catalog._DRIVER_PRIORITY_R13) & set(catalog._DRIVER_PRIORITY_R11) == set()
+    assert set(rows_only) <= set(past_window)
 
 
 def test_r14_window_continues_oldest_record_policy():
-    """The round-14 window re-certifies the oldest hash-checkable records
-    (all 32 r7-latest faces + 18 family-spread r8 sentinels, VERDICT r13
-    #1) — so it must be disjoint from BOTH retained predecessor windows
-    (r12, r13) and fully hash-checkable (empty rows-only allowance)."""
+    """The minhash cost-curve faces the round-14 window re-gates sit
+    in-window."""
     w = set(catalog._DRIVER_PRIORITY)
-    assert w & set(catalog._DRIVER_PRIORITY_R13) == set()
-    assert w & set(catalog._DRIVER_PRIORITY_R12) == set()
-    oracles = catalog.oracle_queries()
-    assert [n for n in w if n not in oracles] == []
-    assert catalog._ROWS_ONLY_WINDOW_ALLOWANCE == frozenset()
-    # the minhash cost-curve faces this round re-gates must sit in-window
     for face in ("dedup_minhash_keeplist", "dedup_minhash_recall"):
         assert face in w

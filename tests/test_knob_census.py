@@ -25,5 +25,4 @@ def test_engine_knob_set_is_pinned():
         "PNS_CASEFOLD",
         "PNS_CHECKPOINT_MODE",
         "PNS_CHECKPOINT_DIR",
-        "PNS_CONTAINMENT_CKPT",
     }

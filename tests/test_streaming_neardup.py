@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators.dedup import minhash_dedup_keep_list
+from polars_numba_spark.plans.checkpoint import release_session_checkpoints
 from polars_numba_spark.sources import load_table
 from polars_numba_spark.streaming.neardup import (
     ingest_neardup_batch,
@@ -19,6 +20,15 @@ from polars_numba_spark.streaming.neardup import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _release_checkpoints(spark):
+    """``neardup_verdict`` and the batch keep-list register their final
+    components round session-wide; release it so no test leaves blocks
+    behind."""
+    yield
+    release_session_checkpoints(spark)
 
 
 @pytest.fixture()
@@ -186,12 +196,9 @@ def test_replayed_batch_appends_no_duplicate_sentinels(spark, store_dir):
 def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
     """Each ingest pins its banded batch for the two appends and releases
     it afterwards: repeated ingests leave no persistent RDD behind."""
-    from polars_numba_spark.plans.checkpoint import (
-        _persistent_ids,
-        release_session_checkpoints,
-    )
+    from polars_numba_spark.plans.checkpoint import _persistent_ids
 
-    # Earlier tests' session-scoped checkpoints are registered by id only,
+    # Other modules' session-scoped checkpoints are registered by id only,
     # so they can vanish during the ingests once their frames are
     # collected; start from a session with none.
     release_session_checkpoints(spark)

@@ -86,17 +86,19 @@ def test_banded_signatures_toks_feed_matches(spark, docs):
 
 
 def test_containment_join_ckpt_matches_lineage(spark, docs, monkeypatch):
-    outs = []
-    for knob in ("0", "1"):
-        monkeypatch.setenv("PNS_CONTAINMENT_CKPT", knob)
-        outs.append(
-            _sorted_rows(D.containment_join(docs, threshold=0.9))
-        )
-        outs.append(
-            _sorted_rows(
-                D.containment_keep_list(docs, threshold=0.9)
-            )
-        )
+    from polars_numba_spark.plans import checkpoint as CK
+
+    def run():
+        return [
+            _sorted_rows(D.containment_join(docs, threshold=0.9)),
+            _sorted_rows(D.containment_keep_list(docs, threshold=0.9)),
+        ]
+
+    with monkeypatch.context() as m:
+        # the identity checkpoint leaves the pure-lineage plan
+        m.setattr(CK, "session_scoped_checkpoint", lambda df, *a, **k: df)
+        outs = run()
+    outs += run()
     assert outs[0] == outs[2]
     assert outs[1] == outs[3]
     assert outs[1]  # keeplist always emits one row per doc

@@ -122,12 +122,16 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from polars_numba_spark import get_spark
 
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        raise SystemExit(f"not in catalog: {unknown}")
+
     spark = get_spark(app_name="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(sf_dir)
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = 0
     for pos, (name, fn) in enumerate(queries.items(), 1):
         if only and name not in only:
