@@ -38,6 +38,8 @@ import shutil
 import tempfile
 import time
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,6 +125,24 @@ def _await(query, name: str) -> None:
         raise TimeoutError(f"{name}: availableNow stream did not finish in 300s")
 
 
+@contextmanager
+def _pinned_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then put each back as it
+    was: a conf the session had set gets its value back, and one it had not
+    set is unset again rather than left at its default."""
+    before = spark.conf.getAll
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key in confs:
+            if key in before:
+                spark.conf.set(key, before[key])
+            else:
+                spark.conf.unset(key)
+
+
 def _run_available_now(
     df: DataFrame,
     name: str,
@@ -137,24 +157,41 @@ def _run_available_now(
     is dropped, so only the caller's frame reaches the rows, and Spark
     plans it as a ``LocalTableScan`` with no job. Append mode writes a
     parquet sink and reads it back with ``df``'s schema, so no
-    schema-inference job runs. The query runs with
-    ``spark.sql.shuffle.partitions`` pinned to the session's
-    ``defaultParallelism``, restored afterwards: one state partition per
-    task slot. The state-store partition count is fixed at the stream's
-    first checkpoint, and each state partition costs a fixed amount per
-    micro-batch whatever its size: on ``local[2]`` at sf0.01, 120-160 ms
-    of task time per extra partition for the JVM state store alone (a
-    streaming ``groupBy().count()``) and about 100 ms with the
-    ``applyInPandasWithState`` Python runner (SCALE.md). Partitions beyond
-    the task slots only add waves of that cost. ``get_spark`` sessions
-    already set the conf to the core count; the pin holds the rule for
-    sessions built elsewhere."""
+    schema-inference job runs.
+
+    The query starts under two pinned confs (:func:`_pinned_confs`), set
+    back afterwards. They must be set before ``start()``, where the stream
+    clones the session; its state store reads them from the Hadoop conf
+    captured at planning, so restoring them once the run is over is safe.
+
+    - ``spark.sql.shuffle.partitions`` is the session's
+      ``defaultParallelism``: one state partition per task slot. The
+      state-store partition count is fixed at the stream's first
+      checkpoint, and each state partition costs a fixed amount per
+      micro-batch whatever its size: on ``local[2]`` at sf0.01, 120-160 ms
+      of task time per extra partition for the JVM state store alone (a
+      streaming ``groupBy().count()``) and about 100 ms with the
+      ``applyInPandasWithState`` Python runner (SCALE.md). Partitions
+      beyond the task slots only add waves of that cost. ``get_spark``
+      sessions already set the conf to the core count; the pin holds the
+      rule for sessions built elsewhere.
+    - ``spark.sql.streaming.checkpointFileManagerClass`` writes the
+      offset, commit and state-store files through Hadoop's
+      ``FileSystem`` API. Without libhadoop, the default ``FileContext``
+      manager resolves each local file by launching a ``readlink``
+      process: 80-88 launches, about 100 ms, per face run (SCALE.md,
+      "Process launches in local checkpoint I/O"). Its atomic
+      overwrite-rename protects only a restart, and this checkpoint is a
+      fresh directory that is deleted after the run and never resumed.
+      Checkpoints that callers own (the ``streaming`` package's operators
+      and sinks) keep Spark's default. Turning off the checkpoint's
+      checksum files as well saved 4 more launches per face run and no
+      measurable time, so they stay on."""
     spark = df.sparkSession
     table = f"pns_{name}_{uuid.uuid4().hex[:8]}"
     # a fresh checkpoint per run: a reused one would mark the input
     # processed and emit nothing; the sink holds the results
     ckpt = tempfile.mkdtemp(prefix=f"pns_ckpt_{name}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         writer = df.writeStream.option("checkpointLocation", ckpt).trigger(
             availableNow=True
@@ -164,16 +201,20 @@ def _run_available_now(
         else:
             out_dir = _fresh_dir(f"{name}_out", sf_dir)
             writer = writer.format("parquet").option("path", out_dir).outputMode("append")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-        )
-        _await(writer.start(), name)
+        pins = {
+            "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+            "spark.sql.streaming.checkpointFileManagerClass": (
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager"
+            ),
+        }
+        with _pinned_confs(spark, pins):
+            _await(writer.start(), name)
         # resolved before the view is dropped: the frame keeps the sink
         if complete:
             return spark.table(table)
         return spark.read.schema(df.schema).parquet(out_dir)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if complete:
             spark.catalog.dropTempView(table)
         shutil.rmtree(ckpt, ignore_errors=True)

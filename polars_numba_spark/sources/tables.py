@@ -76,8 +76,11 @@ def _table_schema(spark: SparkSession, path: str) -> T.StructType | None:
     the schema is memoized under the key above. A directory's
     modification time does not change when a part-file is rewritten in
     place, so no cheap key is exact for it: directories, and unreadable
-    metadata, return ``None`` and the caller infers the schema.
+    metadata, return ``None`` and the caller infers the schema. The
+    session reads legacy TIMESTAMP(NANOS) columns as raw nanos from here on
+    (:func:`load_table`), so every inference sees the same raw types.
     """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
         status = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(hpath)
@@ -95,7 +98,6 @@ def _table_schema(spark: SparkSession, path: str) -> T.StructType | None:
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, with the memoized schema when there is
     one."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _table_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -160,12 +162,18 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 
 
 def load_stream(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one table as a Structured Streaming source (file stream over the
-    same parquet; schema taken from a batch read so the nanos→µs events
-    conversion applies identically)."""
-    batch = load_table(spark, name, sf_dir)
+    """Read one table as a Structured Streaming source over the same
+    parquet as :func:`load_table`.
+
+    The stream reads with the batch scan's raw schema (memoized for a
+    single-file table by :func:`_table_schema`, inferred for a directory)
+    and takes the same nanos→µs and timestamp conversions, so its schema
+    is the batch frame's; tests/test_table_meta.py checks that for every
+    table in both layouts. No batch frame is built here."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    raw_schema = _read_parquet(spark, path).schema
+    raw_schema = _table_schema(spark, path)
+    if raw_schema is None:
+        raw_schema = spark.read.parquet(path).schema
     # the file-stream source only accepts DIRECTORIES; pathGlobFilter only
     # matches LEAF file names. So: a table materialized as a parquet
     # directory (part-files inside, e.g. the scale-soak builds) streams by
@@ -181,9 +189,7 @@ def load_stream(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) ->
             .option("pathGlobFilter", f"{name}.parquet")
             .parquet(sf_dir)
         )
-    stream = _normalize_timestamps(_events_ts_micros(stream, name))
-    assert stream.schema == batch.schema
-    return stream
+    return _normalize_timestamps(_events_ts_micros(stream, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

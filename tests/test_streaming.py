@@ -820,12 +820,22 @@ def test_streaming_fold_scan_list_results_match_batch(spark, tmp_path):
     ] == [[960.0, 23.0]]
 
 
+_RUNNER_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
+
+
 def _runner_state(spark, name):
     """What the availableNow runner must leave as it found it: ``pns_``
-    temp views, its checkpoint dirs, the shuffle-partition conf."""
+    temp views, its checkpoint dirs, and each conf it pins, with whether
+    the session had set it (an unset conf must come back unset, not set to
+    its default)."""
     views = {t.name for t in spark.catalog.listTables() if t.name.startswith("pns_")}
     ckpts = glob.glob(os.path.join(tempfile.gettempdir(), f"pns_ckpt_{name}_*"))
-    return views, ckpts, spark.conf.get("spark.sql.shuffle.partitions")
+    explicit = spark.conf.getAll
+    confs = {k: (k in explicit, spark.conf.get(k, None)) for k in _RUNNER_CONFS}
+    return views, ckpts, confs
 
 
 @pytest.mark.parametrize(
@@ -924,6 +934,59 @@ def test_runner_cleans_up_after_a_failed_stream(spark, off_slot_shuffle_partitio
     with pytest.raises(Exception, match="runner probe failure"):
         _run_available_now(failing, "runner_probe", SF, complete=True)
     assert _runner_state(spark, "runner_probe") == before
+
+
+def test_runner_pins_its_confs_while_the_stream_runs(spark, monkeypatch):
+    """While the stream runs, the session has one shuffle partition per task
+    slot and the throwaway checkpoint goes through the FileSystem manager;
+    afterwards the manager conf is unset again."""
+    from polars_numba_spark.queries import io_streaming
+
+    seen = {}
+    real_await = io_streaming._await
+
+    def await_and_read(query, name):
+        seen.update({k: spark.conf.get(k, None) for k in _RUNNER_CONFS})
+        real_await(query, name)
+
+    monkeypatch.setattr(io_streaming, "_await", await_and_read)
+    counts = load_stream(spark, "events", SF).groupBy("event_type").count()
+    before = _runner_state(spark, "runner_conf_probe")
+    assert not before[2]["spark.sql.streaming.checkpointFileManagerClass"][0]
+    out = io_streaming._run_available_now(counts, "runner_conf_probe", SF, complete=True)
+    assert out.count() > 0
+    assert seen == {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+    }
+    assert _runner_state(spark, "runner_conf_probe") == before
+
+
+def test_pinned_confs_put_back_set_and_unset_confs(spark):
+    """``_pinned_confs`` gives a set conf its value back and unsets an unset
+    one, on a normal exit and on an exception."""
+    from polars_numba_spark.queries.io_streaming import _pinned_confs
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        with _pinned_confs(spark, {key: "3"}):
+            assert spark.conf.get(key) == "3"
+        assert key not in spark.conf.getAll
+        with pytest.raises(RuntimeError, match="probe"):
+            with _pinned_confs(spark, {key: "3"}):
+                raise RuntimeError("probe")
+        assert key not in spark.conf.getAll
+        spark.conf.set(key, "7")
+        with _pinned_confs(spark, {key: "3"}):
+            assert spark.conf.get(key) == "3"
+        assert spark.conf.getAll[key] == "7"
+    finally:
+        spark.conf.set(key, prev)
 
 
 class _StateOperatorPartitions(StreamingQueryListener):

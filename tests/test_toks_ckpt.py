@@ -12,6 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators import dedup as D
+from polars_numba_spark.plans.checkpoint import release_session_checkpoints
+
+
+@pytest.fixture(autouse=True)
+def _release_checkpoints(spark):
+    """The tests take session-scoped checkpoints themselves, and the
+    containment paths register their tokenized corpus session-wide;
+    release them so no test leaves blocks behind."""
+    yield
+    release_session_checkpoints(spark)
 
 
 @pytest.fixture()

@@ -9,13 +9,71 @@ floor. Usage:
 Each face's line carries the host load average and the host's steal share
 (``/proc/stat``, as perfbench/probes.py reads it) over that face's runs:
 runs that race other JVMs, or lose CPU to the hypervisor, are contaminated
-(BASELINE.md round-6 lesson)."""
+(BASELINE.md round-6 lesson). It also carries the processes the session's
+JVM launched in each run (JFR ``jdk.ProcessStart`` events, recorded through
+``jcmd`` on the JVM's own pid), with the mean per run of each command: on a
+Hadoop without libhadoop, local file I/O launches ``readlink`` and ``chmod``
+processes (SCALE.md, "Process launches in local checkpoint I/O"). It prints
+``launches=n/a`` when ``jcmd`` or ``jfr`` is not on the PATH."""
+import collections
 import json
 import os
+import shutil
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+_LAUNCH_SETTINGS = """<?xml version="1.0" encoding="UTF-8"?>
+<configuration version="2.0">
+  <event name="jdk.ProcessStart">
+    <setting name="enabled">true</setting>
+    <setting name="stackTrace">false</setting>
+  </event>
+</configuration>
+"""
+
+
+class LaunchRecorder:
+    """Counts the processes a JVM launches between :meth:`start` and
+    :meth:`stop`: a JFR recording of ``jdk.ProcessStart`` only, started and
+    dumped with ``jcmd``, read back with ``jfr print``. The jcmd and jfr
+    processes run outside the JVM, so they are not counted."""
+
+    def __init__(self, pid: int):
+        self.pid = str(pid)
+        # removed when the recorder is collected, or at exit
+        self._dir = tempfile.TemporaryDirectory(prefix="pns_launches_")
+        self.settings = os.path.join(self._dir.name, "launches.jfc")
+        with open(self.settings, "w") as f:
+            f.write(_LAUNCH_SETTINGS)
+
+    @staticmethod
+    def available() -> bool:
+        return bool(shutil.which("jcmd") and shutil.which("jfr"))
+
+    def _jcmd(self, *args: str) -> None:
+        subprocess.run(["jcmd", self.pid, *args], check=True, capture_output=True)
+
+    def start(self) -> None:
+        self._jcmd("JFR.start", "name=pns_launches", f"settings={self.settings}")
+
+    def stop(self) -> collections.Counter:
+        """The launches since :meth:`start`, by command name."""
+        dump = os.path.join(self._dir.name, "launches.jfr")
+        self._jcmd("JFR.stop", "name=pns_launches", f"filename={dump}")
+        out = subprocess.run(
+            ["jfr", "print", "--json", "--events", "jdk.ProcessStart", dump],
+            check=True, capture_output=True, text=True,
+        ).stdout
+        os.remove(dump)
+        events = json.loads(out)["recording"]["events"]
+        return collections.Counter(
+            os.path.basename(e["values"]["command"].split()[0]) for e in events
+        )
 
 
 def main() -> int:
@@ -84,27 +142,45 @@ def main() -> int:
                 p = procs.get(p, (0, 0.0))[0]
         return total
 
+    recorder = None
+    if LaunchRecorder.available():
+        recorder = LaunchRecorder(
+            spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        )
+
     print(f"load avg at start: {os.getloadavg()}", flush=True)
     for warm in ("q6_revenue_forecast", "capped_balance_per_user"):
         run(warm)
 
     out = {}
     for name in args:
-        runs, cpus = [], []
+        runs, cpus, launches = [], [], []
         steal0, total0 = cpu_jiffies()
         for _ in range(n):
+            if recorder is not None:
+                recorder.start()
             c0 = cpu_tree_seconds()
             runs.append(round(run(name), 3))
             cpus.append(round(cpu_tree_seconds() - c0, 2))
+            if recorder is not None:
+                launches.append(recorder.stop())
         steal1, total1 = cpu_jiffies()
         steal_pct = round(100 * (steal1 - steal0) / max(1, total1 - total0), 2)
         load = round(os.getloadavg()[0], 2)
+        launch_line = "n/a"
+        if recorder is not None:
+            by_command = sum(launches, collections.Counter())
+            per_run = " ".join(
+                f"{cmd} {count / n:.3g}" for cmd, count in by_command.most_common()
+            )
+            launch_line = "/".join(str(c.total()) for c in launches) + f" [{per_run}]"
         out[name] = {"runs": runs, "floor": min(runs),
                      "cpu": cpus, "cpu_floor": min(cpus),
-                     "load": load, "steal_pct": steal_pct}
+                     "load": load, "steal_pct": steal_pct,
+                     "launches": [dict(c) for c in launches] if recorder else None}
         print(f"{name}: {' / '.join(f'{r:.2f}' for r in runs)}  floor={min(runs):.2f}"
               f"  cpu={' / '.join(f'{c:.1f}' for c in cpus)} cpu_floor={min(cpus):.1f}"
-              f"  load={load:.2f} steal={steal_pct:.1f}%",
+              f"  load={load:.2f} steal={steal_pct:.1f}%  launches={launch_line}",
               flush=True)
     print("REMEASURE " + json.dumps({"sf_dir": sf_dir, "results": out,
                                      "load_end": os.getloadavg()}), flush=True)
