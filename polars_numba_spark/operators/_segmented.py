@@ -8,10 +8,12 @@ segment); each spec's kernel runs on its slice of every segment.
 
 The whole-frame ``collect_fold``/``collect_scan`` are its one-group case:
 :func:`ordered_partitions` makes the single partitioning decision (one
-ordered partition, or range partitions for a declared ``combine``),
-:func:`fold_partitions` folds each partition to one driver-side partial and
-:func:`scan_partitions` runs the driver with no key columns, each partition
-seeded with its own starting accumulator.
+ordered partition, or range partitions for a declared ``combine``; an
+input that is already one partition, by :func:`one_partition`, is sorted
+where it stands with no exchange), :func:`fold_partitions` folds each
+partition to one driver-side partial and :func:`scan_partitions` runs the
+driver with no key columns, each partition seeded with its own starting
+accumulator.
 
 - **Boundaries**: change detection over the Arrow key columns. A null key
   equals a null key and, for floating keys, NaN equals NaN — one group each,
@@ -38,6 +40,7 @@ from typing import Any, Callable, Iterator, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.protocol import Py4JError
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -171,8 +174,60 @@ def grouped_pass(
     return prepared.mapInArrow(run, schema=out_schema)
 
 
-def ordered_partitions(df: DataFrame, order_cols: list[str], parallel: bool) -> DataFrame:
-    """The whole-frame operators' partitioning.
+def one_partition(df: DataFrame) -> bool:
+    """True when ``df`` runs as exactly one partition, decided on the
+    driver without a job: its physical plan is one chain of single-child
+    nodes with no exchange and no subquery, down to a file scan or an
+    existing-RDD scan (a checkpoint, ``createDataFrame``) whose RDD has one
+    partition. Any other leaf (a cached relation, a local table, a range)
+    is not inspected and answers False, so nothing is materialized to
+    decide.
+
+    The check plans the frame and computes its scan's file splits from
+    the file index the frame already holds: 13-23 ms a call on a warm
+    session (SCALE.md, "Whole-frame fold and scan at the input's width").
+    The exchange it can save costs a stage and a shuffle write. A Spark
+    upgrade that changes the plan surface read here raises at this site."""
+    try:
+        node = df._jdf.queryExecution().executedPlan()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()  # the initial plan; nothing has run
+        if not node.subqueriesAll().isEmpty():
+            return False
+        children = node.children()
+        while children.size() == 1:
+            if "Exchange" in node.nodeName():
+                return False
+            node = children.head()
+            children = node.children()
+        if children.size():  # a join or a union: more than one input
+            return False
+        leaf = node.getClass().getSimpleName()
+        if leaf == "FileSourceScanExec":
+            rdd = node.inputRDD()
+        elif leaf == "RDDScanExec":
+            rdd = node.rdd()
+        else:
+            return False
+        return rdd.getNumPartitions() == 1
+    except Py4JError as e:
+        raise RuntimeError(
+            "operators/_segmented.py::one_partition: the physical plan is not "
+            f"walkable ({e!r})"
+        ) from e
+
+
+def ordered_partitions(
+    df: DataFrame, order_cols: list[str], parallel: bool
+) -> tuple[DataFrame, bool]:
+    """The whole-frame operators' partitioning: the prepared frame, and
+    whether it is split into partitions whose partials must be combined.
+
+    One partition (:func:`one_partition`, asked only when there is an
+    order): ``coalesce(1).sortWithinPartitions`` at the input's own width,
+    with or without ``combine``. One partition is one range, so there is
+    nothing to combine; an exchange in front of an O(1)-per-row kernel
+    costs more than it saves.
 
     Sequential (no ``combine``): one ordered partition. A non-associative
     fold or scan is inherently one stream (SURVEY.md §7 hard-part 2); with
@@ -184,17 +239,16 @@ def ordered_partitions(df: DataFrame, order_cols: list[str], parallel: bool) -> 
     per task slot, each a CONTIGUOUS run of the declared order (hash
     partitions would interleave it, and a non-commutative combine would
     merge slices out of order); without one, the frame's own partitioning
-    (a scan's native splits): nothing here widens it, because an
-    exchange in front of an O(1)-per-row fold costs more than it saves.
+    (a scan's native splits): nothing here widens it, for the same reason.
     """
+    if not order_cols:
+        return (df, True) if parallel else (df.coalesce(1), False)
+    if one_partition(df):
+        return df.coalesce(1).sortWithinPartitions(*order_cols), False
     if not parallel:
-        if order_cols:
-            return df.repartition(1).sortWithinPartitions(*order_cols)
-        return df.coalesce(1)
-    if order_cols:
-        n = df.sparkSession.sparkContext.defaultParallelism
-        return df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-    return df
+        return df.repartition(1).sortWithinPartitions(*order_cols), False
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols), True
 
 
 def fold_partitions(prepared: DataFrame, spec: KernelSpec) -> list[tuple[int, Any]]:

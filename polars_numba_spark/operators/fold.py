@@ -30,8 +30,11 @@ strategy:
   ordered partition and ``fold_partitions`` folds its Arrow batches in one
   executor task, accumulator threaded across batches — the Spark analog of
   the reference's driver batch loop (`:341-355`) that keeps data off the
-  driver. A declared ``combine=`` folds range (or source) partitions in
-  parallel instead and merges their partials on the driver. For
+  driver. An ordered input that is already one partition is sorted where
+  it stands (no exchange). A declared ``combine=`` folds range (or source)
+  partitions in parallel instead and merges their partials on the driver;
+  over a one-partition ordered input it takes the sequential plan, since
+  one partition is one range. For
   associative steps use
   :func:`polars_numba_spark.operators.window.assoc_fold` instead, which
   stays fully parallel and JVM-side.
@@ -91,6 +94,14 @@ def collect_fold(
       runs partition-parallel (one partial per partition, combined on the
       driver), which is the scale path for decomposable reductions that the
       named-kind ``assoc_fold`` can't express (custom states, tuples).
+
+    Plan: with ``order_by``, an input whose plan reads one partition with
+    no exchange (``_segmented.one_partition``, a driver-side check) is
+    sorted in place — ``coalesce(1).sortWithinPartitions``, no exchange —
+    with or without ``combine``, and folds to the sequential result. Any
+    other ordered input is one ``repartition(1)`` partition, or with
+    ``combine`` range partitions. Without ``order_by`` nothing is checked:
+    ``coalesce(1)``, or with ``combine`` the input's own partitions.
     """
     order_cols = as_list(order_by)
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
@@ -102,11 +113,8 @@ def collect_fold(
     prepared = frame_order_select(df, cols, order_cols).where(
         reduce(operator.and_, [F.col(c).isNotNull() for c in cols])
     )
-    partials = [
-        acc for _, acc in fold_partitions(
-            ordered_partitions(prepared, order_cols, combine is not None), spec
-        )
-    ]
+    prepared, _ = ordered_partitions(prepared, order_cols, combine is not None)
+    partials = [acc for _, acc in fold_partitions(prepared, spec)]
     if not partials:
         return spec.acc0
     if combine is None:

@@ -26,7 +26,10 @@ within partitions and run the segmented Arrow driver of ``_segmented``
 group's accumulator across batches. The global scan is the driver's
 one-group case (``scan_partitions``: no key columns): a single ordered
 partition, or with ``combine=`` range partitions each seeded with the
-prefix of the partials ``fold_partitions`` folded before them.
+prefix of the partials ``fold_partitions`` folded before them. An input
+that is already one partition is sorted where it stands (no exchange),
+with or without ``combine=``: one partition is one range, so there is
+nothing to combine.
 Associative scans (running max/sum) should use
 :func:`polars_numba_spark.operators.window.assoc_scan` — a pure window
 frame that never leaves the JVM.
@@ -86,6 +89,14 @@ def collect_scan(
     ``combine`` must satisfy ``fold(a, rows) == combine(a, fold(acc0,
     rows))``; ``order_by`` is required and should be a total order (ties
     make range partitioning nondeterministic at partition edges).
+
+    One-partition rule: when ``order_by`` is given and the input's plan
+    reads one partition with no exchange (``_segmented.one_partition``, a
+    driver-side check that runs no job), the scan sorts that partition in
+    place — ``coalesce(1).sortWithinPartitions``, no exchange — and
+    ``combine`` is not used: one partition is one range, so there is no
+    range sample, no checkpoint and no partials job, and the result is the
+    sequential one. A multi-partition input keeps the plans above.
     """
     order_cols = as_list(order_by)
     if combine is not None and not order_cols:
@@ -93,11 +104,11 @@ def collect_scan(
     cols = resolve_input_columns(df, column_names, exclude=order_cols)
     spec = kernel_spec(df, result_name, function, initial_accumulator,
                        return_dtype, cols, extra_args, get_scanner)
-    prepared = ordered_partitions(
+    prepared, ranges = ordered_partitions(
         frame_order_select(df, cols, order_cols), order_cols, combine is not None
     )
     seeds: dict[int, Any] = {}
-    if combine is not None:
+    if ranges:
         # Both passes MUST see byte-identical partitions, but
         # repartitionByRange samples its boundaries per job — materialize
         # once (executor-local storage) so pass 1's partials line up with

@@ -41,6 +41,18 @@ def tiny_batches(spark):
     spark.conf.set(key, previous)
 
 
+@pytest.fixture()
+def many_splits(spark):
+    """``spark.sql.files.maxPartitionBytes=1k`` for one test, so every
+    parquet table plans many scan splits; the previous value is set back
+    afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    yield
+    spark.conf.set(key, previous)
+
+
 _job_groups = itertools.count()
 
 

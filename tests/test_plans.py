@@ -1246,3 +1246,124 @@ def test_fold_scan_keep_declared_column_order(spark, monkeypatch):
         for r in sorted(frames[name].collect(), key=lambda r: r.o_orderkey):
             totals[r.o_orderstatus] = totals.get(r.o_orderstatus, 0.0) + r.o_totalprice
             assert r[col] == pytest.approx(totals[r.o_orderstatus]), name
+
+
+def _ordered_whole_frame_plans(spark, monkeypatch):
+    """The simple-mode plans of the ordered whole-frame operators over
+    sf0.001 ``orders``, and those of the frames ``collect_scan(combine=)``
+    checkpointed while being built (its result reads the checkpoint, so
+    the range exchange is in the checkpointed frame's plan)."""
+    from polars_numba_spark.operators import scan as SC
+
+    checkpointed = []
+    checkpoint = SC.session_scoped_checkpoint
+
+    def capture(df):
+        checkpointed.append(df)
+        return checkpoint(df)
+
+    monkeypatch.setattr(SC, "session_scoped_checkpoint", capture)
+    frames = _orders_fold_scan_frames(spark, monkeypatch)
+    return (
+        {name: plans.explain_string(frames[name], "simple")
+         for name in ["collect_fold", "collect_scan", "collect_scan_combine"]},
+        [plans.explain_string(f, "simple") for f in checkpointed],
+    )
+
+
+def test_whole_frame_fold_scan_over_one_partition_add_no_exchange(spark, monkeypatch):
+    """Over a one-partition input (sf0.001 ``orders`` is one split) the
+    ordered whole-frame operators sort at the input's own width: no
+    exchange, and ``combine=`` takes the sequential plan (no range
+    exchange, no checkpoint)."""
+    ordered, checkpointed = _ordered_whole_frame_plans(spark, monkeypatch)
+    for name, plan in ordered.items():
+        assert "Exchange" not in plan, name
+        assert "Coalesce 1" in plan, name
+    assert checkpointed == []
+
+
+def test_whole_frame_fold_scan_over_many_splits_keep_their_exchanges(
+    spark, monkeypatch, many_splits
+):
+    """The multi-split plans are unchanged: one ``SinglePartition``
+    exchange for a sequential operator, and for ``collect_scan(combine=)``
+    a range exchange under one checkpoint."""
+    from polars_numba_spark.plans.checkpoint import release_session_checkpoints
+
+    try:
+        ordered, checkpointed = _ordered_whole_frame_plans(spark, monkeypatch)
+    finally:
+        release_session_checkpoints(spark)
+    assert "Exchange SinglePartition" in ordered["collect_fold"]
+    assert "Exchange SinglePartition" in ordered["collect_scan"]
+    assert len(checkpointed) == 1
+    assert "Exchange rangepartitioning" in checkpointed[0]
+
+
+def test_parallel_scan_over_one_partition_is_one_job(spark, jobs_in_group):
+    """``collect_scan(combine=)`` over a one-partition input submits one
+    job in all (the write's) and creates no checkpoint block: no range
+    sample, no checkpoint, no partials job."""
+    from pyspark.sql import functions as F
+
+    from polars_numba_spark.operators.scan import collect_scan
+    from polars_numba_spark.sources import load_table
+
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    orders = load_table(spark, "orders", SF)
+    cents = orders.withColumn("cents", F.round(F.col("o_totalprice") * 100).cast("long"))
+
+    def run():
+        collect_scan(
+            cents.select("o_orderkey", "cents"), _add, 0, "long",
+            column_names=["cents"], order_by="o_orderkey", combine=_add,
+        ).write.format("noop").mode("overwrite").save()
+
+    assert jobs_in_group(run) == 1
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) == persisted
+
+
+def _one_partition_frame(spark, kind):
+    from pyspark.sql import functions as F
+
+    from polars_numba_spark.plans.checkpoint import session_scoped_checkpoint
+    from polars_numba_spark.sources import load_table
+
+    orders = load_table(spark, "orders", SF)
+    if kind == "load_table":
+        return orders
+    if kind == "checkpoint":
+        return session_scoped_checkpoint(orders)
+    if kind == "cached_exchange":
+        return orders.repartition(3).cache()
+    customers = load_table(spark, "customer", SF)
+    return orders.join(F.broadcast(customers), orders.o_custkey == customers.c_custkey)
+
+
+@pytest.mark.parametrize("kind, expected", [
+    ("load_table", True),
+    ("checkpoint", True),
+    ("cached_exchange", False),
+    ("broadcast_join", False),
+])
+def test_one_partition_check_runs_no_job(spark, jobs_in_group, kind, expected):
+    """The one-partition check is driver-side: it submits no job, and a
+    cached frame is answered without materializing the cache."""
+    from polars_numba_spark.operators._segmented import one_partition
+    from polars_numba_spark.plans.checkpoint import release_session_checkpoints
+
+    sc = spark.sparkContext._jsc.sc()
+    cached_before = len(sc.getRDDStorageInfo())
+    df = _one_partition_frame(spark, kind)
+    answers = []
+    try:
+        assert jobs_in_group(lambda: answers.append(one_partition(df))) == 0
+        assert answers == [expected]
+        if kind == "cached_exchange":
+            assert len(sc.getRDDStorageInfo()) == cached_before
+    finally:
+        if kind == "cached_exchange":
+            df.unpersist()
+        release_session_checkpoints(spark)

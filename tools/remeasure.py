@@ -14,8 +14,12 @@ JVM launched in each run (JFR ``jdk.ProcessStart`` events, recorded through
 ``jcmd`` on the JVM's own pid), with the mean per run of each command: on a
 Hadoop without libhadoop, local file I/O launches ``readlink`` and ``chmod``
 processes (SCALE.md, "Process launches in local checkpoint I/O"). It prints
-``launches=n/a`` when ``jcmd`` or ``jfr`` is not on the PATH."""
+``launches=n/a`` when ``jcmd`` or ``jfr`` is not on the PATH. Each run
+has its own Spark job group, and the line carries the jobs each run
+submitted from its own thread while building and writing the face
+(``sc.statusTracker().getJobIdsForGroup``)."""
 import collections
+import itertools
 import json
 import os
 import shutil
@@ -106,12 +110,23 @@ def main() -> int:
         release_session_checkpoints(spark)
         spark.catalog.clearCache()
 
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(name: str) -> tuple[float, int]:
+        """The run's seconds and the Spark jobs it submitted."""
+        group = f"remeasure-{next(groups)}-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            t0 = time.perf_counter()
+            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            elapsed = time.perf_counter() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         scrub()
-        return elapsed
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return elapsed, len(sc.statusTracker().getJobIdsForGroup(group))
 
     def cpu_tree_seconds() -> float:
         """Total user+sys CPU seconds of this process and every live
@@ -154,14 +169,16 @@ def main() -> int:
 
     out = {}
     for name in args:
-        runs, cpus, launches = [], [], []
+        runs, cpus, jobs, launches = [], [], [], []
         steal0, total0 = cpu_jiffies()
         for _ in range(n):
             if recorder is not None:
                 recorder.start()
             c0 = cpu_tree_seconds()
-            runs.append(round(run(name), 3))
+            seconds, n_jobs = run(name)
+            runs.append(round(seconds, 3))
             cpus.append(round(cpu_tree_seconds() - c0, 2))
+            jobs.append(n_jobs)
             if recorder is not None:
                 launches.append(recorder.stop())
         steal1, total1 = cpu_jiffies()
@@ -175,11 +192,12 @@ def main() -> int:
             )
             launch_line = "/".join(str(c.total()) for c in launches) + f" [{per_run}]"
         out[name] = {"runs": runs, "floor": min(runs),
-                     "cpu": cpus, "cpu_floor": min(cpus),
+                     "cpu": cpus, "cpu_floor": min(cpus), "jobs": jobs,
                      "load": load, "steal_pct": steal_pct,
                      "launches": [dict(c) for c in launches] if recorder else None}
         print(f"{name}: {' / '.join(f'{r:.2f}' for r in runs)}  floor={min(runs):.2f}"
               f"  cpu={' / '.join(f'{c:.1f}' for c in cpus)} cpu_floor={min(cpus):.1f}"
+              f"  jobs={'/'.join(map(str, jobs))}"
               f"  load={load:.2f} steal={steal_pct:.1f}%  launches={launch_line}",
               flush=True)
     print("REMEASURE " + json.dumps({"sf_dir": sf_dir, "results": out,
