@@ -65,7 +65,7 @@ def _codegen(template: str, n: int) -> Callable:
     args = ", ".join(f"arr{j}" for j in range(1, n + 1))
     items = ", ".join(f"arr{j}[i]" for j in range(1, n + 1))
     src = template.format(n=n, args=args, items=items)
-    namespace: dict[str, Any] = {}
+    namespace: dict[str, Any] = {"__name__": __name__}
     exec(src, namespace)
     return namespace[f"_folder{n}" if "folder" in template else f"_scanner{n}"]
 
@@ -76,6 +76,11 @@ _FOLDERS_RAW = {n: _codegen(_FOLDER_TEMPLATE, n) for n in range(1, MAX_ARITY + 1
 _SCANNERS_RAW = {n: _codegen(_SCANNER_TEMPLATE, n) for n in range(1, MAX_ARITY + 1)}
 _FOLDERS = {n: maybe_jit(f) for n, f in _FOLDERS_RAW.items()}
 _SCANNERS = {n: maybe_jit(f) for n, f in _SCANNERS_RAW.items()}
+# Each kernel is bound under its own name in this module, so cloudpickle
+# sends it by reference (about 50 bytes, and no search of ``sys.modules``
+# for a function without a module) instead of by value.
+globals().update({f"_folder{n}": k for n, k in _FOLDERS.items()})
+globals().update({f"_scanner{n}": k for n, k in _SCANNERS.items()})
 
 
 def _kernel(kernels: dict[int, Callable], num_args: int) -> Callable:

@@ -26,8 +26,9 @@ accumulator.
   reference's Polars rule): a fold drops only null rows, a scan emits null
   only for null rows.
 - **Output**: a fold emits one row per group — keys taken at the segment
-  starts, each result written into one buffer of its declared dtype; a scan
-  emits every input row with one result column per spec.
+  starts, a floating -0.0 as 0.0 (``groupBy``'s key), each result written
+  into one buffer of its declared dtype; a scan emits every input row with
+  one result column per spec.
 """
 
 from __future__ import annotations
@@ -323,6 +324,15 @@ def result_batch(
     )
 
 
+def group_key(col: pa.Array) -> pa.Array:
+    """``col`` as Spark's ``groupBy`` emits a key: a floating -0.0 becomes
+    0.0 (``x + 0.0`` is ``x`` for every other value, NaN and null
+    included), so a fold's key does not depend on which row came first."""
+    if pa.types.is_floating(col.type):
+        return pc.add(col, pa.scalar(0.0, col.type))
+    return col
+
+
 def _fold_rows(
     keys: list[str],
     key_cols: list[pa.Array],
@@ -331,10 +341,11 @@ def _fold_rows(
     specs: list[KernelSpec],
     results: list[np.ndarray],
 ) -> pa.RecordBatch:
-    """One output row per folded group: its keys at ``rows``, its results."""
+    """One output row per folded group: its keys at ``rows`` as ``groupBy``
+    gives them (:func:`group_key`), its results."""
     by_name = dict(zip(keys, key_cols))
     no_nulls = [np.zeros(len(rows), dtype=bool)] * len(specs)
-    columns = [by_name[k].take(rows) for k in passthrough]
+    columns = [group_key(by_name[k].take(rows)) for k in passthrough]
     return result_batch(passthrough, columns, specs, results, no_nulls)
 
 

@@ -15,15 +15,32 @@ windowed rollup below for event-time-correct aggregation.
 
 Every state operator runs on :func:`_keyed_state`, which hands its update
 function a key's micro-batch rows as one exact Arrow batch and takes an
-Arrow batch back. ``applyInPandasWithState`` speaks pandas, where int64 has
-no null and NaN reads as null, so the rows cross it encoded:
+Arrow batch back.
 
-- **In**: each non-key integral or floating column arrives null-filled with
-  0 (its type kept) beside a ``__null_<c>`` flag computed on the JVM, and
-  is rebuilt in Arrow with that flag as its null mask — NaN stays a value
-  and a bigint stays exact.
-- **Out**: numeric columns leave as pandas masked arrays, which PySpark
-  converts through Arrow without its ``isnull()`` mask.
+- **Buckets**: Spark groups on ``pmod(xxhash64(*keys), 16)``, not on the
+  keys, so PySpark's per-group work (its pandas conversion, ``GroupState``
+  and Arrow output) runs once per touched bucket and micro-batch, not once
+  per key. Inside a bucket the rows are sorted stably by the keys and cut
+  where a key changes (a null key equals a null key, NaN equals NaN, -0.0
+  equals 0.0: ``groupBy``'s equality, which the hash shares), and each
+  key's update runs on its run of rows. A bucket's state is one pickled
+  dict, key → that key's state.
+- **In**: ``applyInPandasWithState`` speaks pandas, where int64 has no null
+  and NaN reads as null, so each integral or floating column, keys
+  included, arrives null-filled with 0 (its type kept) beside a
+  ``__null_<c>`` flag computed on the JVM, and is rebuilt in Arrow with
+  that flag as its null mask — NaN stays a value and a bigint stays exact.
+- **Out**: the bucket's per-key outputs leave as one pandas frame whose
+  numeric columns are masked arrays, which PySpark converts through Arrow
+  without its ``isnull()`` mask.
+
+The bucket count is fixed: a restarted checkpoint must find every key in
+the bucket that holds its state, so each bucket's state records the count
+and a different one raises. Its costs: a touched bucket's dict is
+unpickled and pickled whole each micro-batch, O(keys / 16) however few of
+its keys the batch touches, and at most 16 state partitions hold a bucket,
+so at most 16 tasks per micro-batch run Python (SCALE.md, "Keyed state in
+hash buckets").
 
 So the streaming fold and scan keep the batch operators' null rule: a fold
 drops null rows only, a scan emits null for null rows only, and NaN is a
@@ -48,7 +65,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from polars_numba_spark.kernels import get_folder, get_scanner
 from polars_numba_spark.operators._prep import as_list, ensure_event_time
-from polars_numba_spark.operators._segmented import kernel_spec, result_batch
+from polars_numba_spark.operators._segmented import (
+    _key_changes,
+    group_key,
+    kernel_spec,
+    result_batch,
+)
 
 # Arrow type -> the pandas masked dtype a numeric column leaves as
 _MASKED = {
@@ -57,27 +79,39 @@ _MASKED = {
 }
 
 
+# The keyed state's hash buckets. Fixed, not a setting: a checkpoint
+# restarted under another count would look for its keys in other buckets.
+_BUCKETS = 16
+
+# A NaN key's name in a bucket's state dict (NaN != NaN, so NaN itself
+# would never find its entry); a floating key column holds no strings.
+_NAN = "NaN"
+
+
 def _keyed_state(
     df: DataFrame,
     keys: list[str],
     out_schema: T.StructType | str,
-    state_schema: T.StructType | str,
     mode: str,
-    update: Callable[..., tuple[pa.RecordBatch, tuple]],
+    update: Callable[..., tuple[pa.RecordBatch, Any]],
 ) -> DataFrame:
     """``df`` grouped by ``keys``, each key's micro-batch run through
-    ``update(key, rows, stored)`` with the in/out encoding the module
-    docstring describes: the module's one ``applyInPandasWithState`` call.
+    ``update(key, rows, stored)`` in hash buckets with the in/out encoding
+    the module docstring describes: the module's one
+    ``applyInPandasWithState`` call.
 
-    ``key`` maps each key column to its one-row array, ``rows`` holds every
-    row the key has in the micro-batch and ``stored`` is its state tuple,
-    None on the key's first micro-batch. ``update`` returns the rows to
-    emit, in ``out_schema`` order, and the new state tuple."""
+    ``key`` maps each key column to its one-row array, as ``groupBy`` emits
+    it (-0.0 as 0.0), ``rows`` holds every row the key has in the
+    micro-batch, in arrival order, and ``stored`` is the key's state, None
+    on its first micro-batch. ``update`` returns the rows to emit, in
+    ``out_schema`` order, and the key's new state: any picklable value
+    but None."""
     names = df.columns
     flagged = [
-        f.name for f in df.schema.fields if f.name not in keys
-        and isinstance(f.dataType, (T.IntegralType, T.FloatType, T.DoubleType))
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, (T.IntegralType, T.FloatType, T.DoubleType))
     ]
+    buckets = _BUCKETS  # the workers run with the count this query was built with
     encoded = df.select(
         *[
             F.coalesce(F.col(c), F.lit(0).cast(df.schema[c].dataType)).alias(c)
@@ -85,32 +119,54 @@ def _keyed_state(
             for c in names
         ],
         *[F.col(c).isNull().alias(f"__null_{c}") for c in flagged],
+        F.pmod(F.xxhash64(*keys), F.lit(buckets)).alias("__bucket"),
     )
 
     def run(
-        _: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+        bucket: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        # Spark may deliver a key's micro-batch rows as several chunks in
+        table: dict[tuple, Any] = {}
+        if state.exists:
+            written, pickled = state.get
+            if written != buckets:
+                raise RuntimeError(
+                    f"keyed state bucket {bucket[0]} was written with {written} "
+                    f"buckets, but this query hashes keys into {buckets}"
+                )
+            table = pickle.loads(pickled)
+        # Spark may deliver a bucket's micro-batch rows as several chunks in
         # arbitrary order; an order is only meaningful over all of them.
         chunks = [pdf for pdf in pdfs if len(pdf)]
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        rows = pa.RecordBatch.from_arrays(
-            [
-                pa.array(pdf[c].to_numpy(), mask=pdf[f"__null_{c}"].to_numpy())
-                if c in flagged else pa.Array.from_pandas(pdf[c])
-                for c in names
-            ],
-            names=names,
+        rows = _ascending(
+            pa.RecordBatch.from_arrays(
+                [
+                    pa.array(pdf[c].to_numpy(), mask=pdf[f"__null_{c}"].to_numpy())
+                    if c in flagged else pa.Array.from_pandas(pdf[c])
+                    for c in names
+                ],
+                names=names,
+            ),
+            keys,
         )
-        key = {k: rows.column(k).slice(0, 1) for k in keys}
-        out, new_state = update(key, rows, state.get if state.exists else None)
-        state.update(new_state)
-        yield out.to_pandas(types_mapper=_MASKED.get)
+        key_cols = [rows.column(k) for k in keys]
+        n = rows.num_rows
+        bounds = np.flatnonzero(_key_changes(key_cols, n)) + 1
+        starts, ends = np.concatenate(([0], bounds)), np.concatenate((bounds, [n]))
+        firsts = [group_key(c.take(starts)) for c in key_cols]
+        outs = []
+        for g, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
+            key = {k: c.slice(g, 1) for k, c in zip(keys, firsts)}
+            name = tuple(_NAN if v != v else v for v in (c[g].as_py() for c in firsts))
+            out, table[name] = update(key, rows.slice(s, e - s), table.get(name))
+            outs.append(out)
+        state.update((buckets, pickle.dumps(table)))
+        yield pa.Table.from_batches(outs).to_pandas(types_mapper=_MASKED.get)
 
-    return encoded.groupBy(*keys).applyInPandasWithState(
+    return encoded.groupBy("__bucket").applyInPandasWithState(
         run,
         outputStructType=out_schema,
-        stateStructType=state_schema,
+        stateStructType="buckets int, keys binary",
         outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -148,7 +204,9 @@ def streaming_grouped_fold(
     result_name: str = "fold",
 ) -> DataFrame:
     """Per-key running fold over a stream; emits (keys, result) each
-    micro-batch with the accumulator persisted in the state store.
+    micro-batch with the accumulator persisted in its hash bucket's state
+    (module docstring). A floating key is emitted as ``groupBy`` emits
+    it: -0.0 as 0.0.
 
     Output mode: use ``update`` (each batch emits keys that changed).
     """
@@ -161,21 +219,22 @@ def streaming_grouped_fold(
     used = {*keys, *order_cols, *spec.cols}
     out_schema = T.StructType([df.schema[k] for k in keys] + [spec.field])
 
-    # State holds the PICKLED accumulator: arbitrary Python accumulators
-    # (tuples, dicts, ints without float degradation) survive micro-batches
-    # exactly as the batch operators allow.
+    # State holds the accumulator as is, in a 1-tuple (an accumulator may
+    # be None): arbitrary Python accumulators (tuples, dicts, ints without
+    # float degradation) survive micro-batches exactly as the batch
+    # operators allow.
     def update(key, rows, stored):
-        acc = pickle.loads(stored[0]) if stored else spec.acc0
+        acc = stored[0] if stored else spec.acc0
         acc = spec.fold(acc, _ascending(rows, order_cols))
         buf = spec.buffer(1)  # the return-dtype cast of batch grouped_fold
         buf[0] = acc
         no_null = np.zeros(1, dtype=bool)
         out = result_batch(keys, list(key.values()), [spec], [buf], [no_null])
-        return out, (pickle.dumps(acc),)
+        return out, (acc,)
 
     return _keyed_state(
         df.select(*[c for c in df.columns if c in used]),
-        keys, out_schema, "acc binary", "update", update,
+        keys, out_schema, "update", update,
     )
 
 
@@ -191,9 +250,9 @@ def streaming_grouped_scan(
     result_name: str = "scan",
 ) -> DataFrame:
     """Per-key running scan over a stream: every input row is emitted with
-    its post-update accumulator; the accumulator persists in the state store
-    across micro-batches (the streaming face of ``grouped_scan``; output
-    mode ``append``).
+    its post-update accumulator and its own key; the accumulator persists
+    in its hash bucket's state across micro-batches (the streaming face of
+    ``grouped_scan``; output mode ``append``).
 
     Null rule: rows with a null in any selected column emit a null scan
     value and do not advance the accumulator.
@@ -209,18 +268,18 @@ def streaming_grouped_scan(
     out_schema = T.StructType(passthrough + [spec.field])
 
     def update(key, rows, stored):  # state as in streaming_grouped_fold
-        acc = pickle.loads(stored[0]) if stored else spec.acc0
+        acc = stored[0] if stored else spec.acc0
         rows = _ascending(rows, order_cols)
         mask, arrays = spec.inputs(rows)
         result = spec.buffer(rows.num_rows)
         acc = spec.kernel(spec.step, acc, spec.extra, result, mask, *arrays)
         names = rows.schema.names
         out = result_batch(names, rows.columns, [spec], [result], [mask])
-        return out, (pickle.dumps(acc),)
+        return out, (acc,)
 
     return _keyed_state(
         df.select(*[f.name for f in passthrough]),
-        keys, out_schema, "acc binary", "append", update,
+        keys, out_schema, "append", update,
     )
 
 
@@ -281,7 +340,8 @@ def streaming_kmv_distinct(
     """Streaming K-Minimum-Values distinct-count estimate per key: the
     stateful face of :mod:`polars_numba_spark.operators.sketch`.
 
-    State per key is the k smallest DISTINCT md5-derived 60-bit hashes
+    State per key, in its hash bucket's dict (module docstring), is the
+    k smallest DISTINCT md5-derived 60-bit hashes
     seen so far — a BOUNDED accumulator (≤ k longs, unlike exact
     streaming COUNT(DISTINCT) whose state grows with cardinality), and
     the merge (union → keep k smallest) is associative and commutative,
@@ -321,9 +381,7 @@ def streaming_kmv_distinct(
         )
         return out, (top, batches)
 
-    return _keyed_state(
-        df, key_list, out_schema, "hashes array<long>, batches long", "append", update
-    )
+    return _keyed_state(df, key_list, out_schema, "append", update)
 
 
 def streaming_hll_distinct(
@@ -334,8 +392,8 @@ def streaming_hll_distinct(
 ) -> DataFrame:
     """Streaming HyperLogLog registers per key: the stateful face of
     ``operators/sketch.py::hll_distinct``, and like it FULLY
-    ORACLE-REPRODUCIBLE — the state is the sparse register set (bucket →
-    max rho over md5-derived 60-bit hashes, ≤ 2^p ints per key however
+    ORACLE-REPRODUCIBLE — a key's state, in its hash bucket's dict, is the
+    sparse register set (register → max rho over md5-derived 60-bit hashes, ≤ 2^p ints per key however
     many rows stream through), the register merge (elementwise max) is
     associative, commutative and idempotent, so the final registers — and
     the estimate — are independent of micro-batch boundaries AND of
@@ -357,13 +415,12 @@ def streaming_hll_distinct(
     out_schema = (
         f"{key_schema}, n_registers int, z_present long, batches_seen long"
     )
-    state_schema = "buckets array<int>, rhos array<int>, batches long"
     w_bits = 60 - p
     rho_max = w_bits + 1
     w_mask = (1 << w_bits) - 1
 
     def update(key, rows, stored):
-        regs, batches = (dict(zip(*stored[:2])), stored[2]) if stored else ({}, 0)
+        regs, batches = stored if stored else ({}, 0)
         for v in set(rows.column(value_col).drop_null().to_pylist()):
             h = int(hashlib.md5(v.encode()).hexdigest()[:15], 16)
             bucket = h >> w_bits
@@ -379,9 +436,9 @@ def streaming_hll_distinct(
             "z_present": [z_present],
             "batches_seen": [batches],
         })
-        return out, (list(regs.keys()), list(regs.values()), batches)
+        return out, (regs, batches)
 
-    return _keyed_state(df, key_list, out_schema, state_schema, "append", update)
+    return _keyed_state(df, key_list, out_schema, "append", update)
 
 
 def streaming_latest_snapshot(
@@ -393,9 +450,9 @@ def streaming_latest_snapshot(
 ) -> DataFrame:
     """Streaming last-write-wins snapshot: the CDC face of
     :mod:`polars_numba_spark.operators.cdc` as keyed state. Per key, state
-    is ONE row — the current winner under ``(seq_col, *tiebreak)`` — so
-    state is bounded at one row per live key regardless of changelog
-    volume, and the winner-merge (newer beats older) is associative and
+    is ONE winner tuple — the current winner under ``(seq_col, *tiebreak)``,
+    held in the key's hash bucket's dict — so state is bounded at one
+    winner per live key regardless of changelog volume, and the winner-merge (newer beats older) is associative and
     commutative: the final snapshot is independent of how the stream was
     micro-batched.
 
@@ -424,7 +481,7 @@ def streaming_latest_snapshot(
     newest_first = [(c, "descending") for c in order_cols]
 
     def update(key, rows, stored):
-        best, batches = (tuple(stored[:-1]), stored[-1]) if stored else (None, 0)
+        best, batches = stored if stored else (None, 0)
         top = pc.sort_indices(rows, sort_keys=newest_first)[0].as_py()
         cand = tuple(rows.column(c)[top].as_py() for c in vals)
         if best is None or seq(cand) > seq(best):
@@ -435,8 +492,6 @@ def streaming_latest_snapshot(
             **{c: pa.array([v], rows.schema.field(c).type) for c, v in zip(vals, best)},
             "batches_seen": [batches],
         })
-        return out, (*best, batches)
+        return out, (best, batches)
 
-    return _keyed_state(
-        df, key_list, out_schema, f"{val_schema}, batches long", "append", update
-    )
+    return _keyed_state(df, key_list, out_schema, "append", update)

@@ -10,7 +10,10 @@ import pytest
 from polars_numba_spark import HAVE_NUMBA, collect_fold
 from polars_numba_spark.kernels import (
     _CAPTURED_VARS_HASHES,
+    MAX_ARITY,
     compile_step_function,
+    get_folder,
+    get_scanner,
 )
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -183,6 +186,17 @@ def test_compile_cache_returns_same_object():
         return acc + a
 
     assert compile_step_function(step) is compile_step_function(step)
+
+
+@pytest.mark.parametrize("get_kernel", [get_folder, get_scanner])
+def test_kernels_pickle_by_reference(get_kernel):
+    """Every generated kernel pickles as a reference to its module-level
+    name, not by value: it unpickles as the very same object."""
+    from pyspark import cloudpickle
+
+    for n in range(1, MAX_ARITY + 1):
+        kernel = get_kernel(n)
+        assert cloudpickle.loads(cloudpickle.dumps(kernel)) is kernel, n
 
 
 def test_combine_parallel_fold_matches_sequential(spark):

@@ -697,3 +697,21 @@ def test_nan_and_null_float_keys_are_two_groups(spark):
     assert {(_key(r["k"]), r["o"]): r["scan"] for r in scanned.collect()} == {
         ("NaN", 0): 1.0, (None, 1): 2.0, ("NaN", 2): 4.0, (None, 3): 6.0, (1.5, 4): 5.0,
     }
+
+
+@pytest.mark.parametrize("where", ["o >= 0", "o != 1"])
+def test_signed_zero_keys_fold_to_the_group_by_key(spark, where):
+    """-0.0 and 0.0 are one group, and a fold keys it 0.0 as ``groupBy``
+    does, also when every row of the group holds -0.0; a scan keeps each
+    row's own key."""
+    df = spark.createDataFrame(
+        [(-0.0, 1.0, 0), (0.0, 2.0, 1), (-0.0, 4.0, 2)], "k double, v double, o long"
+    ).where(where)
+    want = [(repr(r["k"]), r["s"]) for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()]
+    assert [k for k, _ in want] == ["0.0"]
+    folded = grouped_fold(df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o")
+    assert [(repr(r["k"]), r["fold"]) for r in folded.collect()] == want
+    scanned = grouped_scan(df, "k", sum_step, 0.0, "double", columns=["v"], order_by="o")
+    assert {r["o"]: repr(r["k"]) for r in scanned.collect()} == {
+        r["o"]: repr(r["k"]) for r in df.collect()
+    }

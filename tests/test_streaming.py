@@ -820,6 +820,151 @@ def test_streaming_fold_scan_list_results_match_batch(spark, tmp_path):
     ] == [[960.0, 23.0]]
 
 
+def _bucket_of(spark, keys: list[int]) -> dict[int, int]:
+    """Each bigint key's keyed-state hash bucket, computed on the JVM as
+    ``_keyed_state`` computes it."""
+    from polars_numba_spark.streaming import stateful
+
+    return {
+        r["k"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "k long")
+        .select("k", F.expr(f"pmod(xxhash64(k), {stateful._BUCKETS})").alias("b"))
+        .collect()
+    }
+
+
+def test_keys_sharing_a_bucket_keep_separate_state(spark, tmp_path):
+    """Two keys that hash into one bucket keep their own accumulators
+    across micro-batches: a file per micro-batch, three files, each with
+    rows of both keys, give the batch operators' results."""
+    from polars_numba_spark.operators.scan import grouped_scan
+    from polars_numba_spark.streaming import streaming_grouped_scan
+
+    seen: dict[int, int] = {}
+    for k, b in _bucket_of(spark, list(range(64))).items():
+        if b in seen:
+            pair = (seen[b], k)
+            break
+        seen[b] = k
+    schema = "k long, o long, v double"
+    for i in range(3):
+        spark.createDataFrame(
+            [(k, 10 * i + j, float(k + 1) * (j + 1)) for k in pair for j in range(2)],
+            schema,
+        ).coalesce(1).write.parquet(str(tmp_path / "in" / f"part{i}"))
+    batch = spark.read.parquet(str(tmp_path / "in" / "part*"))
+    args = ("k", add_cents, 0.0, "double")
+    kwargs = {"columns": ["v"], "order_by": "o"}
+
+    def drain(op, name, mode):
+        stream = (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(str(tmp_path / "in" / "part*"))
+        )
+        query = (
+            op(stream, *args, **kwargs).writeStream.format("memory")
+            .queryName(name).outputMode(mode)
+            .option("checkpointLocation", str(tmp_path / name))
+            .trigger(availableNow=True).start()
+        )
+        assert query.awaitTermination(120), "stream did not finish within timeout"
+        batches = [p for p in query.recentProgress if p["numInputRows"]]
+        try:
+            return spark.table(name).collect(), len(batches)
+        finally:
+            spark.catalog.dropTempView(name)
+
+    got_scan, n_batches = drain(streaming_grouped_scan, "shared_bucket_scan", "append")
+    assert n_batches == 3
+    assert sorted((r["k"], r["o"], r["scan"]) for r in got_scan) == sorted(
+        (r["k"], r["o"], r["scan"]) for r in grouped_scan(batch, *args, **kwargs).collect()
+    )
+    # the running sums only grow, so a key's last fold is its largest
+    got_fold, n_batches = drain(streaming_grouped_fold, "shared_bucket_fold", "update")
+    assert n_batches == 3
+    final: dict[int, float] = {}
+    for r in got_fold:
+        final[r["k"]] = max(final.get(r["k"], r["fold"]), r["fold"])
+    assert final == {
+        r["k"]: r["fold"] for r in grouped_fold(batch, *args, **kwargs).collect()
+    }
+
+
+def test_streaming_odd_keys_match_batch(spark, tmp_path):
+    """Null, NaN, -0.0 and 0.0 floating keys, and bigint keys one apart past
+    2^53, group and emit as the batch fold and scan do: -0.0 and 0.0 are
+    one group keyed 0.0 by the fold, and a scan row keeps its own key."""
+    from polars_numba_spark.operators.scan import grouped_scan
+    from polars_numba_spark.streaming import streaming_grouped_scan
+
+    nan = float("nan")
+    fkeys = [None, nan, -0.0, 0.0, 1.5, None, nan, -0.0, 0.0, 1.5]
+    ikeys = [2**53, 2**53 + 1, None, 2**53 + 1, 2**53, 7, None, 7, 2**53, 2**53 + 1]
+    rows = [(f, i, o, float(o + 1)) for o, (f, i) in enumerate(zip(fkeys, ikeys))]
+    schema = "f double, i long, o long, v double"
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "in"))
+    batch = spark.read.parquet(str(tmp_path / "in"))
+    folds = {}
+    for key in ("f", "i"):
+        args = (key, add_cents, 0.0, "double")
+        kwargs = {"columns": ["v"], "order_by": "o"}
+        stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
+        got_scan = _drain(spark, streaming_grouped_scan(stream, *args, **kwargs),
+                          f"odd_scan_{key}", "append", tmp_path / f"scan_{key}")
+        got_fold = _drain(spark, streaming_grouped_fold(stream, *args, **kwargs),
+                          f"odd_fold_{key}", "update", tmp_path / f"fold_{key}")
+        assert sorted((r["o"], repr(r[key]), r["scan"]) for r in got_scan) == sorted(
+            (r["o"], repr(r[key]), r["scan"])
+            for r in grouped_scan(batch, *args, **kwargs).collect()
+        )
+        folds[key] = sorted(
+            (repr(r[key]), r["fold"]) for r in grouped_fold(batch, *args, **kwargs).collect()
+        )
+        assert sorted((repr(r[key]), r["fold"]) for r in got_fold) == folds[key]
+    assert folds == {
+        "f": [("0.0", 24.0), ("1.5", 15.0), ("None", 7.0), ("nan", 9.0)],
+        "i": [("7", 14.0), ("9007199254740992", 15.0), ("9007199254740993", 16.0),
+              ("None", 10.0)],
+    }
+
+
+def test_restart_under_another_bucket_count_raises(spark, tmp_path, monkeypatch):
+    """A checkpoint written with one bucket count, restarted by a query
+    built with another, fails and names both counts rather than looking
+    for its keys in other buckets."""
+    from polars_numba_spark.streaming import stateful, streaming_grouped_scan
+
+    # a key in a low bucket keeps its bucket under half the count
+    key = next(k for k, b in _bucket_of(spark, list(range(16))).items()
+               if b < stateful._BUCKETS // 2)
+    schema = "k long, o long, v double"
+    src = tmp_path / "in"
+
+    def run(part):
+        """Add a file of ``key``'s rows and run the stream on from the one
+        checkpoint into a parquet sink (a memory sink does not restart)."""
+        spark.createDataFrame([(key, part, 1.0)], schema).write.parquet(
+            str(src / f"part{part}"))
+        stream = spark.readStream.schema(schema).parquet(str(src / "part*"))
+        out = streaming_grouped_scan(stream, "k", add_cents, 0.0, "double",
+                                     columns=["v"], order_by="o")
+        query = (
+            out.writeStream.format("parquet").option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True).start()
+        )
+        assert query.awaitTermination(120), "stream did not finish within timeout"
+
+    run(0)
+    assert [r["scan"] for r in spark.read.parquet(str(tmp_path / "out")).collect()] == [1.0]
+    monkeypatch.setattr(stateful, "_BUCKETS", stateful._BUCKETS // 2)
+    with pytest.raises(Exception, match=(
+        f"written with {2 * stateful._BUCKETS} buckets, "
+        f"but this query hashes keys into {stateful._BUCKETS}"
+    )):
+        run(1)
+
+
 _RUNNER_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.checkpointFileManagerClass",
@@ -991,19 +1136,21 @@ def test_pinned_confs_put_back_set_and_unset_confs(spark):
 
 class _StateOperatorPartitions(StreamingQueryListener):
     """Records ``numShufflePartitions`` of every state operator in every
-    progress event, and how many queries have terminated."""
+    progress event, the state rows each progress event reports over all
+    its state operators, and how many queries have terminated."""
 
     def __init__(self):
         self.partitions: set[int] = set()
+        self.rows: list[int] = []
         self.terminated = 0
 
     def onQueryStarted(self, event):
         pass
 
     def onQueryProgress(self, event):
-        self.partitions |= {
-            op.numShufflePartitions for op in event.progress.stateOperators
-        }
+        ops = event.progress.stateOperators
+        self.partitions |= {op.numShufflePartitions for op in ops}
+        self.rows.append(sum(op.numRowsTotal for op in ops))
 
     def onQueryIdle(self, event):
         pass
@@ -1014,7 +1161,13 @@ class _StateOperatorPartitions(StreamingQueryListener):
 
 def _state_partitions(spark, run) -> set[int]:
     """The state partition counts the streaming query started by ``run()``
-    reports. Listener events arrive asynchronously, in order: wait for the
+    reports."""
+    return _state_report(spark, run).partitions
+
+
+def _state_report(spark, run) -> _StateOperatorPartitions:
+    """What the state operators of the streaming query started by ``run()``
+    report. Listener events arrive asynchronously, in order: wait for the
     query's termination event, which follows its progress events."""
     listener = _StateOperatorPartitions()
     spark.streams.addListener(listener)
@@ -1026,7 +1179,7 @@ def _state_partitions(spark, run) -> set[int]:
     finally:
         spark.streams.removeListener(listener)
     assert listener.terminated == 1
-    return listener.partitions
+    return listener
 
 
 def test_ewma_runs_one_state_partition_per_task_slot(spark):
@@ -1036,6 +1189,20 @@ def test_ewma_runs_one_state_partition_per_task_slot(spark):
 
     assert spark.sparkContext.defaultParallelism == 4
     assert _state_partitions(spark, lambda: streaming_user_ewma(spark, SF)) == {4}
+
+
+def test_ewma_state_is_one_row_per_bucket(spark):
+    """The EWMA face's state operator holds one row per touched hash
+    bucket, not one per user: never more than the bucket count, though the
+    stream has more users than that."""
+    from polars_numba_spark.queries.io_streaming import streaming_user_ewma
+    from polars_numba_spark.streaming import stateful
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")  # sf0.001: fewer users than buckets
+    rows = _state_report(spark, lambda: streaming_user_ewma(spark, sf)).rows
+    users = load_table(spark, "events", sf).select("user_id").distinct().count()
+    assert users > stateful._BUCKETS
+    assert rows and 0 < max(rows) <= stateful._BUCKETS
 
 
 def test_runner_pins_state_partitions_to_the_task_slots(

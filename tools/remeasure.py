@@ -17,7 +17,13 @@ processes (SCALE.md, "Process launches in local checkpoint I/O"). It prints
 ``launches=n/a`` when ``jcmd`` or ``jfr`` is not on the PATH. Each run
 has its own Spark job group, and the line carries the jobs each run
 submitted from its own thread while building and writing the face
-(``sc.statusTracker().getJobIdsForGroup``)."""
+(``sc.statusTracker().getJobIdsForGroup``). For a face that runs a
+stateful stream, it also carries the state rows and state partitions
+that the stream's state operators reported in each run's last progress
+event, read through a ``StreamingQueryListener`` (:class:`StateReport`):
+the keyed-state operators hold one row per touched hash bucket, so their
+state rows stay at or under the bucket count (SCALE.md, "Keyed state in
+hash buckets")."""
 import collections
 import itertools
 import json
@@ -29,6 +35,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 
 _LAUNCH_SETTINGS = """<?xml version="1.0" encoding="UTF-8"?>
@@ -78,6 +86,49 @@ class LaunchRecorder:
         return collections.Counter(
             os.path.basename(e["values"]["command"].split()[0]) for e in events
         )
+
+
+class StateReport(StreamingQueryListener):
+    """The state rows and state partitions of every state operator, as each
+    streaming query's last progress event reported them. Events arrive
+    asynchronously but in order, so :meth:`take` waits until every started
+    query's termination event, which follows its progress events, has
+    arrived."""
+
+    def __init__(self):
+        self.started = 0
+        self.terminated = 0
+        self.last: dict[str, list[tuple[int, int]]] = {}
+
+    def onQueryStarted(self, event):
+        self.started += 1
+
+    def onQueryProgress(self, event):
+        progress = event.progress
+        self.last[str(progress.runId)] = [
+            (op.numRowsTotal, op.numShufflePartitions)
+            for op in progress.stateOperators
+        ]
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated += 1
+
+    def take(self, timeout: float = 60.0) -> tuple[int, int] | None:
+        """``(state rows, state partitions)`` summed over the state
+        operators of the queries since the last call, or None when none of
+        them had one; then start over."""
+        deadline = time.monotonic() + timeout
+        while self.terminated < self.started and time.monotonic() < deadline:
+            time.sleep(0.05)
+        ops = [op for ops in self.last.values() for op in ops]
+        self.started = self.terminated = 0
+        self.last = {}
+        if not ops:
+            return None
+        return sum(r for r, _ in ops), sum(p for _, p in ops)
 
 
 def main() -> int:
@@ -157,6 +208,9 @@ def main() -> int:
                 p = procs.get(p, (0, 0.0))[0]
         return total
 
+    state = StateReport()
+    spark.streams.addListener(state)
+
     recorder = None
     if LaunchRecorder.available():
         recorder = LaunchRecorder(
@@ -166,10 +220,11 @@ def main() -> int:
     print(f"load avg at start: {os.getloadavg()}", flush=True)
     for warm in ("q6_revenue_forecast", "capped_balance_per_user"):
         run(warm)
+    state.take()
 
     out = {}
     for name in args:
-        runs, cpus, jobs, launches = [], [], [], []
+        runs, cpus, jobs, launches, states = [], [], [], [], []
         steal0, total0 = cpu_jiffies()
         for _ in range(n):
             if recorder is not None:
@@ -179,6 +234,7 @@ def main() -> int:
             runs.append(round(seconds, 3))
             cpus.append(round(cpu_tree_seconds() - c0, 2))
             jobs.append(n_jobs)
+            states.append(state.take())
             if recorder is not None:
                 launches.append(recorder.stop())
         steal1, total1 = cpu_jiffies()
@@ -191,13 +247,20 @@ def main() -> int:
                 f"{cmd} {count / n:.3g}" for cmd, count in by_command.most_common()
             )
             launch_line = "/".join(str(c.total()) for c in launches) + f" [{per_run}]"
+        state_line = ""
+        if any(states):
+            state_line = (
+                f"  state_rows={'/'.join(str(s[0]) if s else '-' for s in states)}"
+                f" state_parts={'/'.join(str(s[1]) if s else '-' for s in states)}"
+            )
         out[name] = {"runs": runs, "floor": min(runs),
                      "cpu": cpus, "cpu_floor": min(cpus), "jobs": jobs,
                      "load": load, "steal_pct": steal_pct,
+                     "state": [list(s) if s else None for s in states],
                      "launches": [dict(c) for c in launches] if recorder else None}
         print(f"{name}: {' / '.join(f'{r:.2f}' for r in runs)}  floor={min(runs):.2f}"
               f"  cpu={' / '.join(f'{c:.1f}' for c in cpus)} cpu_floor={min(cpus):.1f}"
-              f"  jobs={'/'.join(map(str, jobs))}"
+              f"  jobs={'/'.join(map(str, jobs))}{state_line}"
               f"  load={load:.2f} steal={steal_pct:.1f}%  launches={launch_line}",
               flush=True)
     print("REMEASURE " + json.dumps({"sf_dir": sf_dir, "results": out,
