@@ -1,7 +1,7 @@
 """Round-8 surface tour: the streaming ingest-dedup story end to end —
-documents arrive in micro-batches, each batch is near-dup-checked against
-everything already ingested at pair-free keep-list cost, and the final
-verdict equals the batch keep-list over the whole corpus. Plus the two
+documents arrive in micro-batches, each batch is banded on its own and
+appended to a band store, and the verdict over that store equals the batch
+keep-list over the whole corpus. Plus the two
 other round-8 additions: WAV audio metadata and winnowing fingerprints."""
 
 import os

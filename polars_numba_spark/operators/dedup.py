@@ -1045,8 +1045,14 @@ def dedup_keep_list(
     """From near-dup pairs to a keep/drop verdict per document: cluster the
     pair graph, keep the smallest id per component (plus every unpaired
     document). Returns (id, keep: bool, component)."""
-    comps = connected_components(pairs)
-    ids = df.select(F.col(id_col).alias("id"))
+    return _label_components(df.select(F.col(id_col).alias("id")), pairs, max_iterations=20)
+
+
+def _label_components(ids: DataFrame, edges: DataFrame, max_iterations: int) -> DataFrame:
+    """(id, component, keep) for every row of ``ids``: connected components
+    over ``edges``, an id on no edge labelled as its own singleton, and
+    ``keep`` true for each component's minimum id."""
+    comps = connected_components(edges, max_iterations)
     labeled = ids.join(comps, "id", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.col("id"))
     )
@@ -1124,12 +1130,7 @@ def minhash_dedup_keep_list(
             .where(F.col("jaccard") >= verify_threshold)
             .select("a_id", "b_id")
         )
-    comps = connected_components(star, max_iterations)
-    ids = df.select(F.col(id_col).alias("id"))
-    labeled = ids.join(comps, "id", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("id"))
-    )
-    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+    return _label_components(df.select(F.col(id_col).alias("id")), star, max_iterations)
 
 
 def simhash_dedup_keep_list(
@@ -1182,12 +1183,7 @@ def simhash_dedup_keep_list(
         .select(F.col("__m.id").alias("a_id"), F.col("id").alias("b_id"))
         .dropDuplicates(["a_id", "b_id"])
     )
-    comps = connected_components(star, max_iterations)
-    ids = df.select(F.col(id_col).alias("id"))
-    labeled = ids.join(comps, "id", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("id"))
-    )
-    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+    return _label_components(df.select(F.col(id_col).alias("id")), star, max_iterations)
 
 
 def containment_keep_list(
@@ -1265,12 +1261,7 @@ def containment_keep_list(
         F.greatest(F.col("containment_a"), F.col("containment_b"))
         >= F.lit(threshold)
     ).select("a_id", "b_id")
-    comps = connected_components(edges, max_iterations)
-    ids = df.select(F.col(id_col).alias("id"))
-    labeled = ids.join(comps, "id", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("id"))
-    )
-    return labeled.withColumn("keep", F.col("id") == F.col("component"))
+    return _label_components(df.select(F.col(id_col).alias("id")), edges, max_iterations)
 
 
 def _duplicated_shingle_positions(

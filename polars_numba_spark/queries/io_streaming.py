@@ -1065,9 +1065,9 @@ def streaming_signup_conversion_outer(spark: SparkSession, sf_dir: str) -> DataF
 def _streaming_neardup_oracle() -> str:
     """The UNVERIFIED minhash keep-list closure (bucket co-membership IS
     the duplicate relation — the large-corpus LSH posture the streaming
-    incremental face commits to; see streaming/neardup.py for why a
-    verified variant would be arrival-order dependent). Same md5 band
-    table as dedup_minhash_keeplist's oracle, no verify stage."""
+    incremental face commits to; its store keeps bands, not texts, so
+    there is nothing to verify against, streaming/neardup.py). Same md5
+    band table as dedup_minhash_keeplist's oracle, no verify stage."""
     from polars_numba_spark.queries.pipeline import _CLUSTER_BANDS, _CLUSTER_SIG
 
     return f"""
@@ -1110,16 +1110,16 @@ def streaming_neardup_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup dedup as a REAL incremental Structured Streaming
     job (the 100-TB ingest story): the capped documents slice is staged as
     5 parquet files and file-streamed one file per micro-batch through
-    ``streaming_minhash_keep_list`` — each batch bands ONLY its own docs,
-    broadcast-joins the persisted band store on the buckets it touches,
-    and appends star edges; the final verdict is connected components over
-    the accumulated edge store. By the touched-bucket re-star argument
-    (streaming/neardup.py), that verdict is IDENTICAL to the batch
+    ``streaming_minhash_keep_list`` — each batch bands ONLY its own docs
+    and appends its band rows to the store; the final verdict is the
+    window-MIN star over the stored band table, then connected
+    components. Banding is per document, so the stored bands are the
+    slice's band table and that verdict is IDENTICAL to the batch
     ``minhash_dedup_keep_list(verify_threshold=None)`` over the full slice
-    whatever the batch boundaries — which is exactly what the DuckDB
-    oracle computes (md5 band table → window-MIN star → recursive
-    min-label closure), so the hash gate pins the incremental maintenance
-    logic end to end, not just a replayed batch plan."""
+    whatever the batch boundaries (streaming/neardup.py) — which is
+    exactly what the DuckDB oracle computes (md5 band table → window-MIN
+    star → recursive min-label closure), so the hash gate pins the
+    streamed ingest end to end, not just a replayed batch plan."""
     from polars_numba_spark.streaming.neardup import (
         neardup_verdict,
         streaming_minhash_keep_list,

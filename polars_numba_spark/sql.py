@@ -7,9 +7,10 @@ functions give them a pure-SQL spelling:
 
 Spark instantiates the UDTF once per partition key, feeds rows in the
 declared order, and ``terminate`` fires at group end — exactly the grouped
-fold/scan lifecycle. Semantics match the DataFrame operators (same null
-rules). Since round 6 ``eval`` only BUFFERS each row's key/input values
-(one append — no per-row kernel call, no per-row generator) and
+fold/scan lifecycle. Semantics match the DataFrame operators: the same
+null rules, and the result cast to the schema's declared type. Since
+round 6 ``eval`` only BUFFERS each row's key/input values (one append —
+no per-row kernel call, no per-row generator) and
 ``terminate`` runs the same codegen'd kernel the vectorized operators use
 (``kernels.get_scanner/get_folder(jit=False)``) once over the buffered
 columns, then emits the output rows. What remains per-row is Spark's PTF
@@ -28,9 +29,11 @@ from __future__ import annotations
 
 from typing import Any, Callable, Sequence
 
+import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
+from polars_numba_spark.dtypes import normalize_spark_type, spark_type_to_numpy
 from polars_numba_spark.kernels import (
     compile_step_function,
     get_folder,
@@ -45,6 +48,18 @@ def _guard_message(name: str, limit: int, vectorized: str) -> str:
         f"vectorized kernel). Use polars_numba_spark.{vectorized} for this "
         f"volume, or re-register with max_rows_per_group=None to override."
     )
+
+
+def _result_dtype(return_schema: Any) -> np.dtype | None:
+    """NumPy dtype of the schema's last field, the fold/scan result: the
+    emitted accumulator is cast through it, as the DataFrame operators'
+    result buffers cast theirs (a float accumulator declared ``int``
+    truncates). None for a type the kernels have no NumPy form for; that
+    result is emitted as the accumulator is."""
+    try:
+        return spark_type_to_numpy(normalize_spark_type(return_schema).fields[-1].dataType)
+    except TypeError:
+        return None
 
 
 def register_scan_udtf(
@@ -72,6 +87,7 @@ def register_scan_udtf(
     limit = max_rows_per_group
 
     scanner = get_scanner(len(cols), jit=False)
+    res_np = _result_dtype(return_schema)
     all_cols = list(key_cols) + list(input_cols)
 
     @udtf(returnType=return_schema)
@@ -94,8 +110,10 @@ def register_scan_udtf(
                 is_null = [v is None for v in data[0]]
             else:
                 is_null = [any(v is None for v in vs) for vs in zip(*data)]
-            result: list = [None] * len(rows)
+            result: Any = [None] * len(rows) if res_np is None else np.empty(len(rows), res_np)
             scanner(function, acc0, extra, result, is_null, *data)
+            if res_np is not None:
+                result = result.tolist()
             for r, null, out in zip(rows, is_null, result):
                 yield r + (None if null else out,)
 
@@ -127,6 +145,7 @@ def register_fold_udtf(
     limit = max_rows_per_group
 
     folder = get_folder(len(cols), jit=False)
+    res_np = _result_dtype(return_schema)
 
     @udtf(returnType=return_schema)
     class _Fold:
@@ -150,6 +169,10 @@ def register_fold_udtf(
                 return
             data = [[r[j] for r in self.rows] for j in range(len(cols))]
             acc = folder(function, acc0, extra, *data) if self.rows else acc0
+            if res_np is not None:
+                out = np.empty(1, res_np)
+                out[0] = acc
+                acc = out.tolist()[0]
             yield self.key + (acc,)
 
     spark.udtf.register(name, _Fold)

@@ -127,3 +127,55 @@ def test_sql_fold_size_guard_fails_over_threshold(spark):
         spark.sql(
             "SELECT * FROM sql_guarded_fold(TABLE(sql_fguard_t) PARTITION BY k ORDER BY ord)"
         ).collect()
+
+
+def _add(acc, v):
+    return acc + v
+
+
+def test_sql_scan_casts_to_declared_result_type(spark):
+    """A float accumulator declared ``int`` truncates, as ``grouped_scan``
+    casts it, instead of turning every row NULL."""
+    from polars_numba_spark.operators.scan import grouped_scan
+
+    register_scan_udtf(
+        spark, "sql_int_scan", _add, 0.0,
+        input_cols=["v"], key_cols=["k"],
+        return_schema="k string, v double, scan int",
+    )
+    df = spark.createDataFrame(
+        [("a", 1.5, 0), ("a", 2.25, 1), ("a", None, 2)],
+        "k string, v double, ord long",
+    )
+    df.createOrReplaceTempView("sql_int_scan_t")
+    sql_out = [
+        r["scan"]
+        for r in spark.sql(
+            "SELECT * FROM sql_int_scan(TABLE(sql_int_scan_t) PARTITION BY k ORDER BY ord)"
+        ).collect()
+    ]
+    api_out = [
+        r["scan"]
+        for r in grouped_scan(df, "k", _add, 0.0, "int", columns=["v"], order_by="ord")
+        .orderBy("ord")
+        .collect()
+    ]
+    assert sql_out == api_out == [1, 3, None]
+
+
+def test_sql_fold_casts_to_declared_result_type(spark):
+    register_fold_udtf(
+        spark, "sql_int_fold", _add, 0.0,
+        input_cols=["v"], key_cols=["k"],
+        return_schema="k string, fold int",
+    )
+    df = spark.createDataFrame(
+        [("a", 1.5, 0), ("a", 2.25, 1), ("a", None, 2)],
+        "k string, v double, ord long",
+    )
+    df.createOrReplaceTempView("sql_int_fold_t")
+    sql_out = spark.sql(
+        "SELECT * FROM sql_int_fold(TABLE(sql_int_fold_t) PARTITION BY k ORDER BY ord)"
+    ).collect()
+    api_out = grouped_fold(df, "k", _add, 0.0, "int", columns=["v"], order_by="ord").collect()
+    assert [r["fold"] for r in sql_out] == [r["fold"] for r in api_out] == [3]

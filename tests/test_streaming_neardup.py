@@ -1,7 +1,7 @@
-"""Incremental streaming minhash keep-list: the accumulated star-edge store
-must yield IDENTICAL components to the batch keep-list over the full
-corpus, whatever the batch boundaries or arrival order (the module
-docstring's proof sketch, pinned)."""
+"""Incremental streaming minhash keep-list: the verdict over the appended
+band store must yield IDENTICAL components to the batch keep-list over the
+full corpus, whatever the batch boundaries, arrival order, replays or
+restarts."""
 
 from __future__ import annotations
 
@@ -17,6 +17,7 @@ from polars_numba_spark.sources import load_table
 from polars_numba_spark.streaming.neardup import (
     ingest_neardup_batch,
     neardup_verdict,
+    streaming_minhash_keep_list,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -120,32 +121,6 @@ def test_empty_doc_in_stream_matches_batch(spark, store_dir):
         assert comp == 990001 and keep is True
 
 
-def test_per_batch_store_reads_are_bucket_filtered(spark, store_dir):
-    """The delta contract: the persisted band store joins the batch's
-    touched buckets via a BROADCAST of the batch side — the store is
-    filtered, never self-joined. Pin the plan of the members stage."""
-    from polars_numba_spark import plans
-    from polars_numba_spark.operators.dedup import _banded_signatures
-
-    corpus = _with_clones(spark)
-    first = corpus.where(F.col("doc_id") % 3 == 0)
-    ingest_neardup_batch(spark, first, store_dir, num_hashes=16, bands=4,
-                         portable=True)
-    # reconstruct the second batch's members stage exactly as ingest does
-    import os
-
-    store = spark.read.parquet(os.path.join(store_dir, "bands"))
-    bn = _banded_signatures(
-        corpus.where(F.col("doc_id") % 3 == 1),
-        "text", "doc_id", 16, 4, True, None, [],
-    )
-    touched = bn.select("band_idx", "band_hash").distinct()
-    members = store.join(F.broadcast(touched), ["band_idx", "band_hash"])
-    s = plans.explain_string(members)
-    assert "BroadcastHashJoin" in s
-    assert "CartesianProduct" not in s
-
-
 def test_nonportable_string_ids_with_tokenless_docs(spark, store_dir):
     """ADVICE r11: the operator is generic over id type — with STRING doc
     ids in xxhash64 (non-portable) mode, tokenless-doc sentinels must hash
@@ -193,21 +168,82 @@ def test_replayed_batch_appends_no_duplicate_sentinels(spark, store_dir):
     assert verdict == {101: (101, True), 102: (102, True)}
 
 
-def test_ingest_releases_its_batch_checkpoint(spark, store_dir):
-    """Each ingest pins its banded batch for the two appends and releases
-    it afterwards: repeated ingests leave no persistent RDD behind."""
-    from polars_numba_spark.plans.checkpoint import _persistent_ids
+def test_replayed_batch_leaves_verdict_unchanged(spark, store_dir):
+    """A replayed micro-batch appends its band rows a second time;
+    duplicate rows cannot change any bucket minimum."""
+    batch = _with_clones(spark).where(F.col("doc_id") < 40)
+    ingest_neardup_batch(spark, batch, store_dir, num_hashes=16, bands=4,
+                         portable=True)
+    once = _verdict_map(neardup_verdict(spark, store_dir))
+    ingest_neardup_batch(spark, batch, store_dir, num_hashes=16, bands=4,
+                         portable=True)
+    assert _verdict_map(neardup_verdict(spark, store_dir)) == once
+    assert once == _verdict_map(
+        minhash_dedup_keep_list(batch, num_hashes=16, bands=4, portable=True)
+    )
 
-    # Other modules' session-scoped checkpoints are registered by id only,
-    # so they can vanish during the ingests once their frames are
-    # collected; start from a session with none.
-    release_session_checkpoints(spark)
-    batch = _with_clones(spark).where(F.col("doc_id") < 20)
-    before = _persistent_ids(spark)
-    for _ in range(2):
-        ingest_neardup_batch(spark, batch, store_dir, num_hashes=16, bands=4,
-                             portable=True)
-    assert _persistent_ids(spark) == before
+
+@pytest.mark.parametrize(
+    "portable, shingle_n", [(True, None), (False, 3)], ids=["md5", "xxhash64-3gram"]
+)
+def test_ten_small_batches_equal_batch_keeplist(spark, store_dir, portable, shingle_n):
+    corpus = _with_clones(spark)
+    for i in range(10):
+        ingest_neardup_batch(
+            spark, corpus.where(F.col("doc_id") % 10 == i), store_dir,
+            num_hashes=16, bands=4, portable=portable, shingle_n=shingle_n,
+        )
+    streamed = _verdict_map(neardup_verdict(spark, store_dir))
+    batch = _verdict_map(
+        minhash_dedup_keep_list(
+            corpus, num_hashes=16, bands=4, portable=portable, shingle_n=shingle_n
+        )
+    )
+    assert streamed == batch
+
+
+def test_restart_on_same_checkpoint_equals_batch_keeplist(spark, store_dir):
+    """The query ingests 3 staged files, stops, and resumes from its
+    checkpoint after 2 more files land: the resumed run takes one
+    micro-batch per new file only, and the verdict over all 5 equals the
+    batch keep-list."""
+    import glob
+    import os
+
+    corpus = _with_clones(spark).select("doc_id", "text")
+    stage = os.path.join(store_dir, "stage")
+    ckpt = os.path.join(store_dir, "ckpt")
+
+    def stage_files(df, n):
+        before = set(glob.glob(os.path.join(stage, "*.parquet")))
+        df.repartition(n).write.mode("append").parquet(stage)
+        return len(set(glob.glob(os.path.join(stage, "*.parquet"))) - before)
+
+    def run():
+        stream = (
+            spark.readStream.schema(corpus.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+        )
+        query = streaming_minhash_keep_list(
+            stream, os.path.join(store_dir, "store"), ckpt,
+            num_hashes=16, bands=4, portable=True,
+        )
+        query.awaitTermination()
+        return sorted({p["batchId"] for p in query.recentProgress})
+
+    assert stage_files(corpus.where(F.col("doc_id") % 5 < 3), 3) == 3
+    assert run() == [0, 1, 2]
+    assert stage_files(corpus.where(F.col("doc_id") % 5 >= 3), 2) == 2
+    assert run() == [3, 4]
+
+    streamed = _verdict_map(neardup_verdict(spark, os.path.join(store_dir, "store")))
+    batch = _verdict_map(
+        minhash_dedup_keep_list(
+            spark.read.parquet(stage), num_hashes=16, bands=4, portable=True
+        )
+    )
+    assert streamed == batch
 
 
 def test_banding_columns_cache_holds_its_context_weakly(spark):

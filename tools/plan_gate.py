@@ -155,16 +155,18 @@ ALLOW: dict[str, dict[str, str]] = {
         "BroadcastNestedLoopJoin": "bounded value-grid x group cross (operators/profile.py contract): distinct integer stat values x sources"
     },
     # The SQL UDTF spelling is the documented slow-path surface: Spark's PTF
-    # protocol calls eval per row by design, and Arrow UDTF transport was
-    # measured SLOWER both times it was tried (2.6x on the round-5 form,
-    # 3.7x re-measured on the round-13 buffered form — BASELINE.md "UDTF
-    # overhead").  Both registrars carry a max_rows_per_group guard that
+    # protocol calls eval per row by design. `useArrow=True` was measured
+    # slower both times it was tried (2.6x on the round-5 form, 3.7x on the
+    # round-13 buffered form), and Spark 4.1's @arrow_udtf is 3.5x faster at
+    # 67 rows per key but 3-5x slower at one row per key (BASELINE.md "UDTF
+    # overhead"); a registrar cannot see its key cardinality, so the row
+    # path stays.  Both registrars carry a max_rows_per_group guard that
     # fails oversized groups with a pointer at the vectorized operator.
     "sql_surface_running_balance": {
-        "BatchEvalPython": "SQL UDTF spelling: per-row PTF protocol by design, size-guarded; Arrow transport measured 3.7x slower"
+        "BatchEvalPython": "SQL UDTF spelling: per-row PTF protocol by design, size-guarded; @arrow_udtf measured 3-5x slower at one row per key"
     },
     "sql_surface_capped_fold": {
-        "BatchEvalPython": "SQL UDTF spelling: per-row PTF protocol by design, size-guarded; Arrow transport measured 3.7x slower"
+        "BatchEvalPython": "SQL UDTF spelling: per-row PTF protocol by design, size-guarded; @arrow_udtf measured 3-5x slower at one row per key"
     },
 }
 
