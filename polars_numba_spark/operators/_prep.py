@@ -92,3 +92,19 @@ def input_numpy_dtypes(df: DataFrame, cols: Sequence[str]) -> dict[str, np.dtype
             raise KeyError(f"column {c!r} not found in DataFrame (has {df.columns})")
         out[c] = spark_type_to_numpy(schema[c])
     return out
+
+
+def join_on_keys(
+    left: DataFrame, right: DataFrame, keys: Sequence[str], how: str = "inner"
+) -> DataFrame:
+    """``left`` joined with ``right`` on ``keys`` by null-safe equality, so
+    a null key meets a null key as ``groupBy`` groups them; ``right``'s
+    copies of the keys are dropped."""
+    renames = {k: f"__fk_{k}" for k in keys}
+    for old, new in renames.items():
+        right = right.withColumnRenamed(old, new)
+    cond = None
+    for k in keys:
+        c = left[k].eqNullSafe(right[renames[k]])
+        cond = c if cond is None else (cond & c)
+    return left.join(right, cond, how).drop(*renames.values())

@@ -333,6 +333,55 @@ def group_key(col: pa.Array) -> pa.Array:
     return col
 
 
+# A NaN key's name (NaN != NaN, so NaN itself would never find its entry in
+# a dict); a floating key column holds no strings.
+_NAN = "NaN"
+
+
+def _ascending(rows: pa.RecordBatch, order_cols: list[str]) -> pa.RecordBatch:
+    """``rows`` stably sorted as the batch operators' Spark ``asc`` sorts
+    them: nulls first and NaN after every number (Arrow alone puts NaN
+    beside the nulls)."""
+    if not order_cols:
+        return rows
+    sort_keys: dict[str, pa.Array] = {}
+    for c in order_cols:
+        col = rows.column(c)
+        if pa.types.is_floating(col.type):
+            sort_keys[f"__nan_{c}"] = pc.is_nan(col)
+        sort_keys[c] = col
+    order = pc.sort_indices(
+        pa.RecordBatch.from_pydict(sort_keys),
+        sort_keys=[(k, "ascending") for k in sort_keys],
+        null_placement="at_start",
+    )
+    return rows.take(order)
+
+
+def keyed_runs(
+    rows: pa.RecordBatch, keys: list[str]
+) -> Iterator[tuple[dict[str, pa.Array], tuple, pa.RecordBatch]]:
+    """``(key, name, run)`` per key of ``rows`` under ``groupBy``'s equality
+    (null equals null, NaN equals NaN, -0.0 equals 0.0), the rows sorted
+    stably by the keys and cut where a key changes: ``key`` maps each key
+    column to its one-row array as ``groupBy`` emits it, ``name`` is a
+    hashable tuple of its values (NaN as ``_NAN``) and ``run`` holds the
+    key's rows in arrival order. The keyed Python pass of the streaming
+    state and of the sketch partials."""
+    n = rows.num_rows
+    if not n:
+        return
+    rows = _ascending(rows, keys)
+    key_cols = [rows.column(k) for k in keys]
+    bounds = np.flatnonzero(_key_changes(key_cols, n)) + 1
+    starts, ends = np.concatenate(([0], bounds)), np.concatenate((bounds, [n]))
+    firsts = [group_key(c.take(starts)) for c in key_cols]
+    for g, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
+        key = {k: c.slice(g, 1) for k, c in zip(keys, firsts)}
+        name = tuple(_NAN if v != v else v for v in (c[g].as_py() for c in firsts))
+        yield key, name, rows.slice(s, e - s)
+
+
 def _fold_rows(
     keys: list[str],
     key_cols: list[pa.Array],

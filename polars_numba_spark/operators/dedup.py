@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_numba_spark.operators._prep import as_list
+from polars_numba_spark.operators.skew import fair_share_threshold
 from polars_numba_spark.operators.text import distinct_tokens, token_shingles
 from polars_numba_spark.sources import widen
 
@@ -1481,10 +1482,7 @@ def _choose_shingle_via(
     ``explode_fn`` maps a document frame to its exploded shingle rows with
     the shingle in column ``__sh`` (the caller's own explode shape)."""
     if skew_threshold is None:
-        parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        skew_threshold = 1.0 / max(parts, 1)
+        skew_threshold = fair_share_threshold(df)
     sampled = (
         explode_fn(df.sample(fraction=sample_fraction, seed=7))
         .groupBy("__sh")

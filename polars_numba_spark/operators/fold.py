@@ -54,6 +54,7 @@ from polars_numba_spark.kernels import get_folder
 from polars_numba_spark.operators._prep import (
     as_list,
     frame_order_select,
+    join_on_keys,
     resolve_input_columns,
 )
 from polars_numba_spark.operators._segmented import (
@@ -306,21 +307,11 @@ def agg_with_fold(
         ob = tuple(as_list(spec.get("order_by")))
         by_order.setdefault(ob, {})[name] = spec
 
-    def join_on_keys(left: DataFrame, right: DataFrame) -> DataFrame:
-        renames = {k: f"__fk_{k}" for k in keys}
-        for old, new in renames.items():
-            right = right.withColumnRenamed(old, new)
-        cond = None
-        for k in keys:
-            c = left[k].eqNullSafe(right[renames[k]])
-            cond = c if cond is None else (cond & c)
-        return left.join(right, cond, "inner").drop(*renames.values())
-
     for ob, group in by_order.items():
         specs = {
             n: {k: v for k, v in s.items() if k != "order_by"}
             for n, s in group.items()
         }
         folded = grouped_multi_fold(df, keys, specs, order_by=list(ob))
-        out = folded if out is None else join_on_keys(out, folded)
+        out = folded if out is None else join_on_keys(out, folded, keys)
     return out

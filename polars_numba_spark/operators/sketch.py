@@ -11,7 +11,7 @@ included, reproduces bit-for-bit in any engine with md5 and is fully
 DuckDB-oracled (``distinct_users_kmv``).
 
 Scale shape (bounded-state, round 6): the sketch is computed as a real
-two-level aggregate. A ``mapInPandas`` partial keeps, per input
+two-level aggregate. A ``mapInArrow`` partial keeps, per input
 partition, only each group's k smallest DISTINCT hashes (bounded
 accumulator: ≤k longs per group per partition, exactly the KMV merge
 property — any global top-k element is a top-k element of its own
@@ -24,60 +24,81 @@ and by the unchanged DuckDB oracle — at a shuffle cost that no longer
 matches exact COUNT(DISTINCT). The streaming face
 (``streaming/stateful.py::streaming_kmv_distinct``) holds the same
 bounded ≤k-longs state per group across micro-batches.
+
+The KMV, Misra-Gries and t-digest partials are each one ``update``/``emit``
+pair on :func:`_partition_partials`, which cuts each Arrow batch into its
+keys with ``_segmented.keyed_runs`` (the streaming state's helper too): a
+group key passes through exact, as ``groupBy`` groups and emits it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from functools import partial
+from typing import Any, Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructType
 
-from polars_numba_spark.operators._prep import as_list
+from polars_numba_spark.operators._prep import as_list, join_on_keys
+from polars_numba_spark.operators._segmented import group_key, keyed_runs
 from polars_numba_spark.operators.dedup import md5_long
 
 # md5_long yields 60-bit hashes: uniform on [0, 2^60)
 _HASH_SPACE = float(1 << 60)
 
 
-def _partial_topk_fn(keys: list[str], k: int):
-    """Per-partition bounded partial: emit each group's k smallest
-    distinct ``__h`` seen in this partition (≤k rows per group)."""
+def _partition_partials(
+    df: DataFrame,
+    keys: list[str],
+    schema: StructType,
+    update: Callable[[pa.RecordBatch, Any], Any],
+    emit: Callable[[dict[str, pa.Array], Any], pa.RecordBatch],
+) -> DataFrame:
+    """The sketches' bounded partial stage, one ``mapInArrow`` pass: per
+    input partition, each key's rows (``keyed_runs``) fold into its state
+    by ``update(rows, state)``, None at first, and at the partition's end
+    each state becomes ``emit(key, state)``: ``schema`` rows, key first."""
+    return df.mapInArrow(partial(_fold_partition, keys, update, emit), schema=schema)
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # group tuple -> ascending np.ndarray of ≤k distinct hashes
-        state: dict[tuple, np.ndarray] = {}
-        template: pd.DataFrame | None = None
-        for pdf in batches:
-            if template is None:
-                template = pdf.iloc[:0]
-            if len(pdf) == 0:
-                continue
-            for gkey, sub in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                vals = sub["__h"].to_numpy(dtype=np.int64)
-                prev = state.get(gkey)
-                merged = (
-                    np.unique(vals)
-                    if prev is None
-                    else np.unique(np.concatenate([prev, vals]))
-                )
-                state[gkey] = merged[:k]  # np.unique sorts ascending
-        if template is None or not state:
-            return
-        n_rows = sum(len(arr) for arr in state.values())
-        out: dict[str, np.ndarray | list] = {}
-        for i, key_col in enumerate(keys):
-            out[key_col] = [
-                gkey[i] for gkey, arr in state.items() for _ in range(len(arr))
-            ]
-        out["__h"] = np.concatenate(list(state.values())) if n_rows else []
-        yield pd.DataFrame(out).astype(template.dtypes.to_dict(), errors="ignore")
 
-    return partial
+def _fold_partition(
+    keys: list[str],
+    update: Callable[[pa.RecordBatch, Any], Any],
+    emit: Callable[[dict[str, pa.Array], Any], pa.RecordBatch],
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    states: dict[tuple, Any] = {}
+    firsts: dict[tuple, dict[str, pa.Array]] = {}
+    for batch in batches:
+        for key, name, rows in keyed_runs(batch, keys):
+            firsts.setdefault(name, key)
+            states[name] = update(rows, states.get(name))
+    outs = [emit(firsts[n], st) for n, st in states.items() if st is not None]
+    if outs:
+        yield from pa.Table.from_batches(outs).combine_chunks().to_batches()
+
+
+def _key_rows(key: dict[str, pa.Array], n: int, **cols: Any) -> pa.RecordBatch:
+    """One key's partial rows: the key repeated ``n`` times, then ``cols``."""
+    at = pa.array(np.zeros(n, dtype=np.int64))
+    return pa.RecordBatch.from_pydict({**{k: a.take(at) for k, a in key.items()}, **cols})
+
+
+def _kmv_update(k: int, rows: pa.RecordBatch, top: Sequence[int] | None) -> np.ndarray:
+    """The KMV merge, shared with ``streaming_kmv_distinct``: the k smallest
+    distinct of ``top`` and the rows' non-null ``__h`` hashes, ascending."""
+    vals = rows.column("__h").drop_null().to_numpy()
+    if top is not None:
+        vals = np.concatenate([np.asarray(top, dtype=np.int64), vals])
+    return np.unique(vals)[:k]  # np.unique sorts ascending
+
+
+def _kmv_emit(key: dict[str, pa.Array], top: np.ndarray) -> pa.RecordBatch:
+    return _key_rows(key, len(top), __h=top)
 
 
 def kmv_partials(
@@ -85,57 +106,49 @@ def kmv_partials(
 ) -> DataFrame:
     """The bounded partial stage of :func:`kmv_distinct`, exposed so tests
     can pin the shuffle-volume contract directly: hash JVM-side, then a
-    per-partition ``mapInPandas`` that emits each group's ≤k smallest
+    per-partition ``mapInArrow`` that emits each group's ≤k smallest
     distinct hashes. The rows of THIS frame are what the group-by shuffle
     carries."""
     hashed = df.where(F.col(value_col).isNotNull()).select(
         *keys,
         md5_long(F.col(value_col).cast("string")).alias("__h"),
     )
-    return hashed.mapInPandas(_partial_topk_fn(keys, k), schema=hashed.schema)
+    return _partition_partials(hashed, keys, hashed.schema, partial(_kmv_update, k), _kmv_emit)
 
 
-def _mg_partial_fn(keys: list[str], value_col: str, k: int):
-    """Per-partition bounded Misra-Gries partial: emit, per group, the
-    ≤k candidate values whose MG counter is still positive after the
-    whole partition has streamed through.
+def _mg_update(
+    value_col: str, k: int, rows: pa.RecordBatch, counters: tuple | None
+) -> tuple[pa.Array, np.ndarray]:
+    """Misra-Gries over one key's rows: the rows' non-null value counts
+    (values under ``groupBy``'s equality, -0.0 as 0.0) added to the key's
+    ``(values, counts)`` counters; above k counters, the (k+1)-th largest
+    count is subtracted from every counter and the positive ones stay.
 
     Mergeable-summaries bound (Agarwal et al. 2012): combining batch
     counts then subtracting the (k+1)-th largest counter decrements every
     item by a total ≤ m_p/(k+1) across the partition, so any value with
     true partition frequency > m_p/(k+1) survives. State is ≤k counters
     per group per partition regardless of the distinct count."""
+    vc = pc.value_counts(group_key(rows.column(value_col)).drop_null())
+    values, counts = vc.field("values"), vc.field("counts").to_numpy()
+    if counters is not None:
+        merged = pa.table({
+            "v": pa.concat_arrays([counters[0], values]),
+            "n": np.concatenate([counters[1], counts]),
+        }).group_by("v").aggregate([("n", "sum")])
+        values, counts = merged["v"].combine_chunks(), merged["n_sum"].to_numpy()
+    if len(counts) > k:
+        counts = counts - np.sort(counts)[-(k + 1)]
+        keep = counts > 0
+        values, counts = values.filter(pa.array(keep)), counts[keep]
+    return values, counts
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, pd.Series] = {}
-        template: pd.DataFrame | None = None
-        for pdf in batches:
-            if template is None:
-                template = pdf.iloc[:0]
-            if len(pdf) == 0:
-                continue
-            for gkey, sub in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                vc = sub[value_col].dropna().value_counts()
-                prev = state.get(gkey)
-                s = vc if prev is None else prev.add(vc, fill_value=0)
-                if len(s) > k:
-                    dec = s.nlargest(k + 1).iloc[-1]
-                    s = s - dec
-                    s = s[s > 0]
-                state[gkey] = s
-        if template is None or not state:
-            return
-        out: dict[str, list] = {}
-        for i, key_col in enumerate(keys):
-            out[key_col] = [
-                gkey[i] for gkey, s in state.items() for _ in range(len(s))
-            ]
-        out[value_col] = [v for s in state.values() for v in s.index]
-        yield pd.DataFrame(out).astype(template.dtypes.to_dict(), errors="ignore")
 
-    return partial
+def _mg_emit(
+    value_col: str, key: dict[str, pa.Array], counters: tuple
+) -> pa.RecordBatch:
+    """One row per surviving Misra-Gries counter of one key."""
+    return _key_rows(key, len(counters[1]), **{value_col: counters[0]})
 
 
 def heavy_hitter_candidates(
@@ -146,8 +159,9 @@ def heavy_hitter_candidates(
     candidate values per group reach the shuffle — independent of the
     group's distinct count."""
     cols = df.select(*keys, value_col)
-    return cols.mapInPandas(
-        _mg_partial_fn(keys, value_col, k), schema=cols.schema
+    return _partition_partials(
+        cols, keys, cols.schema,
+        partial(_mg_update, value_col, k), partial(_mg_emit, value_col),
     ).distinct()
 
 
@@ -164,7 +178,7 @@ def heavy_hitters(
     Two passes, the classic distributed frequent-items shape:
 
     1. **Bounded candidate pass**: a per-partition Misra-Gries summary
-       (≤k counters per group per partition, ``mapInPandas``) whose
+       (≤k counters per group per partition, ``mapInArrow``) whose
        survivors are a SUPERSET of the true heavy hitters — any value
        with global share > 1/k has, by pigeonhole, partition frequency
        > m_p/(k+1) somewhere, and the MG bound keeps such values alive.
@@ -187,13 +201,14 @@ def heavy_hitters(
     totals = df.where(F.col(value_col).isNotNull()).groupBy(*keys).agg(
         F.count(F.lit(1)).alias("__total")
     )
+    # null-safe: a null key is a group of its own, as in groupBy
     exact = (
-        df.join(F.broadcast(cands), on=[*keys, value_col], how="left_semi")
+        join_on_keys(df, F.broadcast(cands), [*keys, value_col], "left_semi")
         .groupBy(*keys, value_col)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return (
-        exact.join(F.broadcast(totals), on=keys)
+        join_on_keys(exact, F.broadcast(totals), keys)
         .where(F.col("cnt") * F.lit(k) > F.col("__total"))
         .select(
             *keys,
@@ -223,12 +238,11 @@ def kmv_distinct(
     input ⇒ same estimate, in every engine with md5.
 
     Execution is the bounded-state two-level aggregate described in the
-    module docstring: the hash is computed JVM-side, a ``mapInPandas``
+    module docstring: the hash is computed JVM-side, a ``mapInArrow``
     partial bounds per-partition state to k distinct hashes per group,
     and the merge is a plain JVM aggregate over ≤k×P rows per group.
-    Grouping keys round-trip through Arrow in the partial; keys should be
-    string/int/date-typed (nullable-int keys surface as float64 in
-    pandas — cast such keys to string first).
+    Grouping keys pass through the partial as Arrow values, exact and
+    grouped as ``groupBy`` groups them.
     """
     keys = as_list(by)
     partials = kmv_partials(df, value_col, keys, k)
@@ -397,50 +411,32 @@ def _merge_digest_quantiles(
     ]
 
 
-def _tdigest_partial_fn(keys: list[str], value_col: str, n_centroids: int):
-    """Per-partition bounded t-digest partial: emit ≤ n_centroids
-    (mean, weight) rows per group per partition, whatever the row count.
-    Values accumulate per batch and compress whenever the buffer exceeds
-    8× the centroid budget — O(n_centroids) state per group."""
+def _tdigest_update(
+    value_col: str, n_centroids: int, rows: pa.RecordBatch, digest: tuple | None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Absorb one key's rows into its sorted ``(means, weights)`` digest,
+    each value a weight-1 centroid, and compress whenever the digest
+    exceeds 8× the centroid budget — O(n_centroids) state per group. Null
+    and NaN values are skipped; a key with no value keeps no digest."""
+    vals = rows.column(value_col).drop_null().cast(pa.float64()).to_numpy()
+    vals = vals[~np.isnan(vals)]
+    if not len(vals):
+        return digest
+    m0, w0 = (np.empty(0), np.empty(0)) if digest is None else digest
+    m, w = np.concatenate([m0, vals]), np.concatenate([w0, np.ones_like(vals)])
+    order = np.argsort(m, kind="stable")
+    m, w = m[order], w[order]
+    if len(m) > 8 * n_centroids:
+        m, w = _compress(m, w, n_centroids)
+    return m, w
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
 
-        def absorb(gkey, vals):
-            prev = state.get(gkey)
-            if prev is None:
-                m, w = vals, np.ones_like(vals)
-            else:
-                m = np.concatenate([prev[0], vals])
-                w = np.concatenate([prev[1], np.ones_like(vals)])
-            order = np.argsort(m, kind="stable")
-            m, w = m[order], w[order]
-            if len(m) > 8 * n_centroids:
-                m, w = _compress(m, w, n_centroids)
-            state[gkey] = (m, w)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for gkey, sub in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                vals = sub[value_col].dropna().to_numpy(dtype="float64")
-                if len(vals):
-                    absorb(gkey, vals)
-        if not state:
-            return
-        out: dict[str, list] = {c: [] for c in keys}
-        out["__mean"], out["__weight"] = [], []
-        for gkey, (m, w) in state.items():
-            m, w = _compress(m, w, n_centroids)
-            for i, c in enumerate(keys):
-                out[c].extend([gkey[i]] * len(m))
-            out["__mean"].extend(m.tolist())
-            out["__weight"].extend(w.tolist())
-        yield pd.DataFrame(out)
-
-    return partial
+def _tdigest_emit(
+    n_centroids: int, key: dict[str, pa.Array], digest: tuple
+) -> pa.RecordBatch:
+    """≤ n_centroids (mean, weight) rows for one key's digest."""
+    m, w = _compress(*digest, n_centroids)
+    return _key_rows(key, len(m), __mean=m, __weight=w)
 
 
 def tdigest_partials(
@@ -449,19 +445,13 @@ def tdigest_partials(
     """The bounded partial stage of :func:`tdigest_quantiles`, exposed so
     tests can pin the shuffle-volume contract: ≤ n_centroids rows per
     group per input partition reach the merge shuffle."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     cols = df.select(*keys, value_col)
-    key_fields = [cols.schema[k] for k in keys]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("__mean", DoubleType(), False),
-            StructField("__weight", DoubleType(), False),
-        ]
-    )
-    return cols.mapInPandas(
-        _tdigest_partial_fn(keys, value_col, n_centroids), schema=out_schema
+    out_schema = StructType([cols.schema[k] for k in keys])
+    out_schema.add("__mean", DoubleType(), False).add("__weight", DoubleType(), False)
+    return _partition_partials(
+        cols, keys, out_schema,
+        partial(_tdigest_update, value_col, n_centroids),
+        partial(_tdigest_emit, n_centroids),
     )
 
 
@@ -478,7 +468,7 @@ def tdigest_quantiles(
     range must be known up front, and the k1 scale function concentrates
     centroids in the tails where fixed-width bins are coarsest.
 
-    Scale shape mirrors :func:`kmv_distinct`: a ``mapInPandas`` partial
+    Scale shape mirrors :func:`kmv_distinct`: a ``mapInArrow`` partial
     bounds per-partition state to ≤ n_centroids (mean, weight) pairs per
     group — the t-digest merge property: a digest of digests is a valid
     digest — so the shuffle carries ≤ n_centroids × n_partitions rows per
@@ -501,30 +491,21 @@ def tdigest_quantiles(
     probs = [float(p) for p in probs]
     partials = tdigest_partials(df, value_col, keys, n_centroids)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(table: pa.Table) -> pa.Table:
         ests = _merge_digest_quantiles(
-            pdf["__mean"].to_numpy(),
-            pdf["__weight"].to_numpy(),
+            table.column("__mean").to_numpy(),
+            table.column("__weight").to_numpy(),
             n_centroids,
             probs,
         )
-        head = pdf.iloc[:1][keys].reset_index(drop=True)
-        rep = pd.concat([head] * len(probs), ignore_index=True)
-        rep["prob"] = probs
-        rep["quantile_est"] = ests
-        return rep
+        head = table.select(keys).take(np.zeros(len(probs), dtype=np.int64))
+        return head.append_column("prob", pa.array(probs)).append_column(
+            "quantile_est", pa.array(ests)
+        )
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("prob", DoubleType(), False),
-            StructField("quantile_est", DoubleType(), False),
-        ]
-    )
-    return partials.groupBy(*keys).applyInPandas(merge, schema=out_schema)
+    out_schema = StructType([partials.schema[k] for k in keys])
+    out_schema.add("prob", DoubleType(), False).add("quantile_est", DoubleType(), False)
+    return partials.groupBy(*keys).applyInArrow(merge, schema=out_schema)
 
 
 def hll_registers(

@@ -20,11 +20,11 @@ Arrow batch back.
 - **Buckets**: Spark groups on ``pmod(xxhash64(*keys), 16)``, not on the
   keys, so PySpark's per-group work (its pandas conversion, ``GroupState``
   and Arrow output) runs once per touched bucket and micro-batch, not once
-  per key. Inside a bucket the rows are sorted stably by the keys and cut
-  where a key changes (a null key equals a null key, NaN equals NaN, -0.0
-  equals 0.0: ``groupBy``'s equality, which the hash shares), and each
-  key's update runs on its run of rows. A bucket's state is one pickled
-  dict, key → that key's state.
+  per key. Inside a bucket ``_segmented.keyed_runs`` sorts the rows stably
+  by the keys and cuts them where a key changes (a null key equals a null
+  key, NaN equals NaN, -0.0 equals 0.0: ``groupBy``'s equality, which the
+  hash shares), and each key's update runs on its run of rows. A bucket's
+  state is one pickled dict, key → that key's state.
 - **In**: ``applyInPandasWithState`` speaks pandas, where int64 has no null
   and NaN reads as null, so each integral or floating column, keys
   included, arrives null-filled with 0 (its type kept) beside a
@@ -49,7 +49,6 @@ value (ref `__init__.py:339,718-736`).
 
 from __future__ import annotations
 
-import hashlib
 import pickle
 from operator import itemgetter
 from typing import Any, Callable, Iterable, Sequence
@@ -66,11 +65,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from polars_numba_spark.kernels import get_folder, get_scanner
 from polars_numba_spark.operators._prep import as_list, ensure_event_time
 from polars_numba_spark.operators._segmented import (
-    _key_changes,
-    group_key,
+    _ascending,
     kernel_spec,
+    keyed_runs,
     result_batch,
 )
+from polars_numba_spark.operators.dedup import md5_long
+from polars_numba_spark.operators.sketch import _HASH_SPACE, _kmv_update
 
 # Arrow type -> the pandas masked dtype a numeric column leaves as
 _MASKED = {
@@ -83,10 +84,6 @@ _MASKED = {
 # restarted under another count would look for its keys in other buckets.
 _BUCKETS = 16
 
-# A NaN key's name in a bucket's state dict (NaN != NaN, so NaN itself
-# would never find its entry); a floating key column holds no strings.
-_NAN = "NaN"
-
 
 def _keyed_state(
     df: DataFrame,
@@ -98,7 +95,8 @@ def _keyed_state(
     """``df`` grouped by ``keys``, each key's micro-batch run through
     ``update(key, rows, stored)`` in hash buckets with the in/out encoding
     the module docstring describes: the module's one
-    ``applyInPandasWithState`` call.
+    ``applyInPandasWithState`` call. A bucket's rows are cut into keys by
+    ``_segmented.keyed_runs``, the batch sketches' keyed pass.
 
     ``key`` maps each key column to its one-row array, as ``groupBy`` emits
     it (-0.0 as 0.0), ``rows`` holds every row the key has in the
@@ -138,27 +136,17 @@ def _keyed_state(
         # arbitrary order; an order is only meaningful over all of them.
         chunks = [pdf for pdf in pdfs if len(pdf)]
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        rows = _ascending(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array(pdf[c].to_numpy(), mask=pdf[f"__null_{c}"].to_numpy())
-                    if c in flagged else pa.Array.from_pandas(pdf[c])
-                    for c in names
-                ],
-                names=names,
-            ),
-            keys,
+        rows = pa.RecordBatch.from_arrays(
+            [
+                pa.array(pdf[c].to_numpy(), mask=pdf[f"__null_{c}"].to_numpy())
+                if c in flagged else pa.Array.from_pandas(pdf[c])
+                for c in names
+            ],
+            names=names,
         )
-        key_cols = [rows.column(k) for k in keys]
-        n = rows.num_rows
-        bounds = np.flatnonzero(_key_changes(key_cols, n)) + 1
-        starts, ends = np.concatenate(([0], bounds)), np.concatenate((bounds, [n]))
-        firsts = [group_key(c.take(starts)) for c in key_cols]
         outs = []
-        for g, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
-            key = {k: c.slice(g, 1) for k, c in zip(keys, firsts)}
-            name = tuple(_NAN if v != v else v for v in (c[g].as_py() for c in firsts))
-            out, table[name] = update(key, rows.slice(s, e - s), table.get(name))
+        for key, name, key_rows in keyed_runs(rows, keys):
+            out, table[name] = update(key, key_rows, table.get(name))
             outs.append(out)
         state.update((buckets, pickle.dumps(table)))
         yield pa.Table.from_batches(outs).to_pandas(types_mapper=_MASKED.get)
@@ -170,26 +158,6 @@ def _keyed_state(
         outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def _ascending(rows: pa.RecordBatch, order_cols: list[str]) -> pa.RecordBatch:
-    """``rows`` stably sorted as the batch operators' Spark ``asc`` sorts
-    them: nulls first and NaN after every number (Arrow alone puts NaN
-    beside the nulls)."""
-    if not order_cols:
-        return rows
-    sort_keys: dict[str, pa.Array] = {}
-    for c in order_cols:
-        col = rows.column(c)
-        if pa.types.is_floating(col.type):
-            sort_keys[f"__nan_{c}"] = pc.is_nan(col)
-        sort_keys[c] = col
-    order = pc.sort_indices(
-        pa.RecordBatch.from_pydict(sort_keys),
-        sort_keys=[(k, "ascending") for k in sort_keys],
-        null_placement="at_start",
-    )
-    return rows.take(order)
 
 
 def streaming_grouped_fold(
@@ -351,35 +319,30 @@ def streaming_kmv_distinct(
     the highest ``batches_seen`` per key (``max_by``) for the final
     estimate.
 
-    Hashing matches ``operators/dedup.py::md5_long`` (first 15 hex chars
-    of md5 of the value's string form) so the estimate reproduces in any
-    engine with md5 — the catalog entry's DuckDB oracle rebuilds it.
+    Hashing is ``operators/dedup.py::md5_long`` (first 15 hex chars of md5
+    of the value's string form, on the JVM) and the merge is the batch
+    partial's, so the estimate reproduces in any engine with md5 — the
+    catalog entry's DuckDB oracle rebuilds it.
     Nulls are excluded (COUNT(DISTINCT) semantics). State dedups at HASH
     level (values are not retained), identical to the oracle's
     hash-distinct spelling; under md5-60bit collisions this undercounts
     by the collision count, same as the batch sketch.
     """
-    # md5_long hashes the value's string form as Spark casts it (a double
-    # as '1.0E10', where Python's str gives '10000000000.0'), so cast on
-    # the JVM, exactly the batch sketch's spelling.
     key_list = as_list(keys)
-    df = df.select(*key_list, F.col(value_col).cast("string").alias(value_col))
+    df = df.select(*key_list, md5_long(F.col(value_col).cast("string")).alias("__h"))
     dtypes = dict(df.dtypes)
     key_schema = ", ".join(f"{c} {dtypes[c]}" for c in key_list)
     out_schema = f"{key_schema}, kmv_estimate double, batches_seen long"
-    space = float(1 << 60)
 
     def update(key, rows, stored):
-        hashes, batches = (set(stored[0]), stored[1]) if stored else (set(), 0)
-        for v in set(rows.column(value_col).drop_null().to_pylist()):
-            hashes.add(int(hashlib.md5(v.encode()).hexdigest()[:15], 16))
-        top = sorted(hashes)[:k]
+        top, batches = stored if stored else (None, 0)
+        top = _kmv_update(k, rows, top)
         batches += 1
-        est = float(len(top)) if len(top) < k else (k - 1) * space / float(top[-1])
+        est = float(len(top)) if len(top) < k else (k - 1) * _HASH_SPACE / float(top[-1])
         out = pa.RecordBatch.from_pydict(
             {**key, "kmv_estimate": [est], "batches_seen": [batches]}
         )
-        return out, (top, batches)
+        return out, (top.tolist(), batches)
 
     return _keyed_state(df, key_list, out_schema, "append", update)
 
@@ -393,8 +356,9 @@ def streaming_hll_distinct(
     """Streaming HyperLogLog registers per key: the stateful face of
     ``operators/sketch.py::hll_distinct``, and like it FULLY
     ORACLE-REPRODUCIBLE — a key's state, in its hash bucket's dict, is the
-    sparse register set (register → max rho over md5-derived 60-bit hashes, ≤ 2^p ints per key however
-    many rows stream through), the register merge (elementwise max) is
+    sparse register set (register → max rho over the values' ``md5_long``
+    hashes, taken on the JVM as for KMV, ≤ 2^p ints per key however many
+    rows stream through), the register merge (elementwise max) is
     associative, commutative and idempotent, so the final registers — and
     the estimate — are independent of micro-batch boundaries AND of
     duplicate replay (max absorbs re-delivery; stronger than KMV's
@@ -407,9 +371,8 @@ def streaming_hll_distinct(
     value, so the streaming estimate is bit-identical to the batch face
     and to the DuckDB oracle. Readers take ``max_by(..., batches_seen)``
     per key (the streaming_kmv_distinct read protocol)."""
-    # the JVM string cast: see streaming_kmv_distinct
     key_list = as_list(keys)
-    df = df.select(*key_list, F.col(value_col).cast("string").alias(value_col))
+    df = df.select(*key_list, md5_long(F.col(value_col).cast("string")).alias("__h"))
     dtypes = dict(df.dtypes)
     key_schema = ", ".join(f"{c} {dtypes[c]}" for c in key_list)
     out_schema = (
@@ -417,17 +380,20 @@ def streaming_hll_distinct(
     )
     w_bits = 60 - p
     rho_max = w_bits + 1
-    w_mask = (1 << w_bits) - 1
+    powers = np.left_shift(1, np.arange(w_bits, dtype=np.int64))
 
     def update(key, rows, stored):
         regs, batches = stored if stored else ({}, 0)
-        for v in set(rows.column(value_col).drop_null().to_pylist()):
-            h = int(hashlib.md5(v.encode()).hexdigest()[:15], 16)
-            bucket = h >> w_bits
-            w = h & w_mask
-            rho = rho_max if w == 0 else w_bits - w.bit_length() + 1
-            if regs.get(bucket, 0) < rho:
-                regs[bucket] = rho
+        h = rows.column("__h").drop_null().to_numpy()
+        # hll_registers' bucket and rho (its Column form costs string work per
+        # row): rho is rho_max less w's bit length, the powers of two <= w
+        rho = rho_max - np.searchsorted(powers, h & ((1 << w_bits) - 1), side="right")
+        maxes = pa.table({"reg": h >> w_bits, "rho": rho}).group_by("reg").aggregate(
+            [("rho", "max")]
+        )
+        for reg, r in zip(maxes["reg"].to_pylist(), maxes["rho_max"].to_pylist()):
+            if regs.get(reg, 0) < r:
+                regs[reg] = r
         batches += 1
         z_present = sum(1 << (rho_max - r) for r in regs.values())
         out = pa.RecordBatch.from_pydict({

@@ -949,7 +949,7 @@ def test_kmv_distinct_ignores_nulls(spark):
 
 def test_kmv_partials_bound_the_shuffle(spark):
     """The round-6 bounded-state contract: the rows crossing the group-by
-    shuffle are the mapInPandas partials, and a partition holding far more
+    shuffle are the mapInArrow partials, and a partition holding far more
     than k distinct values must contribute at most k rows per group — the
     sketch no longer pays exact-COUNT-DISTINCT shuffle volume."""
     from polars_numba_spark.operators.sketch import kmv_distinct, kmv_partials
@@ -1023,20 +1023,27 @@ def test_heavy_hitter_candidates_bounded_per_partition(spark):
     """The MG candidate pass sends ≤k rows per group per partition into
     the shuffle even when the partition holds far more distinct values —
     the frequent-items analogue of the KMV bounded-shuffle contract."""
-    from polars_numba_spark.operators.sketch import _mg_partial_fn
+    from functools import partial
 
-    import pandas as pd
+    import pyarrow as pa
+
+    from polars_numba_spark.operators.sketch import (
+        _fold_partition,
+        _mg_emit,
+        _mg_update,
+    )
 
     k = 8
     # one partition's stream: 3000 distinct singletons + one hot value
-    pdfs = [
-        pd.DataFrame({"g": ["x"] * 1000, "v": list(range(i * 1000, (i + 1) * 1000))})
+    batches = [
+        pa.record_batch({"g": ["x"] * 1000, "v": list(range(i * 1000, (i + 1) * 1000))})
         for i in range(3)
     ]
-    pdfs.append(pd.DataFrame({"g": ["x"] * 500, "v": [42] * 500}))
-    out = list(_mg_partial_fn(["g"], "v", k)(iter(pdfs)))
-    assert len(out) == 1 and len(out[0]) <= k
-    assert 42 in set(out[0]["v"])  # the true heavy hitter survives
+    batches.append(pa.record_batch({"g": ["x"] * 500, "v": [42] * 500}))
+    mg = partial(_fold_partition, ["g"], partial(_mg_update, "v", k), partial(_mg_emit, "v"))
+    out = list(mg(iter(batches)))
+    assert len(out) == 1 and out[0].num_rows <= k
+    assert 42 in set(out[0].column("v").to_pylist())  # the true heavy hitter survives
 
 
 def test_heavy_hitters_ignores_nulls(spark):
@@ -1052,6 +1059,17 @@ def test_heavy_hitters_ignores_nulls(spark):
     }
     # totals exclude nulls: total=9, threshold cnt*2>9 → only v=1 (6>4.5)
     assert got == {1: (6, round(6 / 9, 6))}
+
+
+def test_heavy_hitters_keep_null_key_groups(spark):
+    """A null group key is a group of its own, as in ``groupBy``: the
+    recount and the totals join it null-safely."""
+    from polars_numba_spark.operators.sketch import heavy_hitters
+
+    rows = [(None, "d")] * 2 + [("x", "e")] * 2
+    df = spark.createDataFrame(rows, "g string, v string")
+    got = {tuple(r) for r in heavy_hitters(df, "v", "g", k=2).collect()}
+    assert got == {(None, "d", 2, 1.0), ("x", "e", 2, 1.0)}
 
 
 # --- histogram quantiles (bounded-state deterministic sketch) ---------------

@@ -365,13 +365,13 @@ def test_containment_candidate_stage_width_adapts_too(spark, monkeypatch):
 
 
 def test_kmv_shuffle_sits_above_bounded_partial(spark):
-    """distinct_users_kmv's one exchange must sit ABOVE the mapInPandas
+    """distinct_users_kmv's one exchange must sit ABOVE the mapInArrow
     partial (the shuffle carries ≤k hashes per group per partition), with
     map-side partial_collect_set combining the partials further."""
     df = q(spark, "distinct_users_kmv")
     s = plans.explain_string(df)
-    assert "MapInPandas" in s
-    assert s.index("Exchange") < s.index("MapInPandas")  # root prints first
+    assert "MapInArrow" in s
+    assert s.index("Exchange") < s.index("MapInArrow")  # root prints first
     assert "partial_collect_set" in s
 
 
@@ -402,7 +402,7 @@ def test_heavy_hitters_recount_is_broadcast_join_over_bounded_candidates(spark):
     shuffle as groupBy keys of an unbounded aggregate."""
     df = q(spark, "doc_heavy_tokens")
     s = plans.explain_string(df)
-    assert "MapInPandas" in s                      # the bounded MG partial
+    assert "MapInArrow" in s                       # the bounded MG partial
     assert s.count("BroadcastExchange") >= 2       # candidates + totals
     assert "CartesianProduct" not in s
     assert "BroadcastNestedLoopJoin" not in s

@@ -194,3 +194,57 @@ def test_tdigest_rank_accuracy_vs_numpy(spark):
         # rank of the estimate in the true data vs the requested rank
         rank = np.searchsorted(sorted_data, est) / len(sorted_data)
         assert abs(rank - p) < 0.02, (p, est, rank)
+
+
+# --- group keys under groupBy's equality -----------------------------------
+
+BIG = 2**53
+
+# groupBy keeps 2^53 apart from 2^53 + 1 and NaN apart from null, and puts
+# -0.0 with 0.0; a key round trip through float64 or pandas NA would not
+ODD_KEYS = {
+    "bigint": ("g long, v string",
+               [(BIG, "a"), (BIG, "b"), (BIG + 1, "c"), (BIG + 1, "c"), (None, "z")]),
+    "double": ("g double, v string",
+               [(float("nan"), "a"), (float("nan"), "b"), (None, "c"),
+                (0.0, "d"), (-0.0, "e")]),
+}
+
+
+def group_of(g):
+    """A key as ``groupBy`` groups it: every NaN one group, -0.0 as 0.0."""
+    if isinstance(g, float):
+        return "NaN" if g != g else g + 0.0
+    return g
+
+
+def groups_of(rows):
+    out: dict = {}
+    for g, v in rows:
+        out.setdefault(group_of(g), []).append(v)
+    return out
+
+
+@pytest.mark.parametrize("kind", sorted(ODD_KEYS))
+def test_kmv_keeps_groupby_keys(spark, kind):
+    schema, rows = ODD_KEYS[kind]
+    df = spark.createDataFrame(rows, schema).coalesce(1)  # one partial for all keys
+    got = {group_of(r["g"]): r["kmv_estimate"]
+           for r in SK.kmv_distinct(df, "v", "g", k=64).collect()}
+    assert got == {g: float(len(set(vs))) for g, vs in groups_of(rows).items()}
+
+
+@pytest.mark.parametrize("kind", sorted(ODD_KEYS))
+def test_heavy_hitters_keep_groupby_keys(spark, kind):
+    schema, rows = ODD_KEYS[kind]
+    df = spark.createDataFrame(rows, schema).coalesce(1)  # one partial for all keys
+    k = 2
+    got = {(group_of(r["g"]), r["v"], r["cnt"], r["share"])
+           for r in SK.heavy_hitters(df, "v", "g", k=k).collect()}
+    expected = {
+        (g, v, n, round(n / len(vs), 6))
+        for g, vs in groups_of(rows).items()
+        for v, n in Counter(vs).items()
+        if n * k > len(vs)
+    }
+    assert expected and got == expected

@@ -387,7 +387,7 @@ def run_kmv_soak(
     spark: SparkSession, base_dir: str, big_dir: str, factor: int
 ) -> dict:
     """Soak the bounded-state batch KMV sketch (round 6): time the
-    operator at both scales AND count the rows its mapInPandas partial
+    operator at both scales AND count the rows its mapInArrow partial
     stage sends into the group-by shuffle — the bounded-shuffle contract
     is ≤ k × n_partitions per group, independent of distinct count."""
     from polars_numba_spark.operators.sketch import kmv_distinct, kmv_partials
