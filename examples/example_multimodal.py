@@ -1,6 +1,6 @@
 """Multimodal pipeline example: binary payloads + typed metadata through
 header decode, feature extraction, resize, and video frame sampling — the
-opaque-binary-column surface over mapInPandas (real plumbing; raster/demux
+opaque-binary-column surface over mapInArrow (real plumbing; raster/demux
 steps are deterministic fakes pending real codec libraries)."""
 
 import os

@@ -72,3 +72,55 @@ def scan_result_to_arrow(
     if mask.any():
         return pa.array(result, mask=mask)
     return pa.array(result)
+
+
+class ListVectors:
+    """A ``list<float>`` or ``list<double>`` batch column decoded once for
+    the NumPy vector kernels: the row ``offsets`` and ``lengths``, ``ok``
+    (row valid and no null element) and the flat ``values`` (a null
+    element reads as NaN)."""
+
+    def __init__(self, arr: pa.ListArray):
+        n = len(arr)
+        self.offsets = arr.offsets.to_numpy(zero_copy_only=False)[: n + 1]
+        self.lengths = self.offsets[1:] - self.offsets[:-1]
+        row_valid = (
+            np.ones(n, dtype=bool)
+            if arr.null_count == 0
+            else arr.is_valid().to_numpy(zero_copy_only=False)
+        )
+        values = arr.values
+        elem_clean = np.ones(n, dtype=bool)
+        if values.null_count:
+            # rare (dirty corpora): per-row any-null scan
+            nulls = values.is_null().to_numpy(zero_copy_only=False)
+            for i in np.nonzero(row_valid)[0]:
+                if nulls[self.offsets[i] : self.offsets[i + 1]].any():
+                    elem_clean[i] = False
+        self.ok = row_valid & elem_clean
+        self.values = values.to_numpy(zero_copy_only=False)
+
+    def rows(self, idx: np.ndarray, length: int) -> np.ndarray:
+        """The rows at ``idx``, all of ``length`` elements, as a float64
+        ``(len(idx), length)`` matrix (float32 widens exactly)."""
+        gather = self.offsets[idx][:, None] + np.arange(length)[None, :]
+        return self.values[gather].astype(np.float64)
+
+    def norms(self) -> np.ndarray:
+        """Each ``ok`` row's norm over its OWN length, index-ordered: one
+        rounded multiply + one rounded add per element, then ``sqrt`` —
+        the interpreted ``sqrt(aggregate(v, 0.0, acc + x·x))``. An empty
+        row's norm is 0.0; a row that is not ``ok`` reads NaN."""
+        vn = np.full(len(self.ok), np.nan)
+        with np.errstate(over="ignore", invalid="ignore"):
+            for L in np.unique(self.lengths[self.ok]):
+                idx = np.nonzero(self.ok & (self.lengths == L))[0]
+                if L == 0:
+                    vn[idx] = 0.0
+                    continue
+                vs = self.rows(idx, L)
+                acc = np.zeros(len(idx))
+                for d in range(L):
+                    acc += vs[:, d] * vs[:, d]
+                vn[idx] = np.sqrt(acc)
+        return vn

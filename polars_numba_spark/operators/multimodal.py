@@ -2,7 +2,7 @@
 
 Convention: a multimodal asset is a ``binary`` payload column next to a
 ``struct`` metadata column (mime, n_bytes, and per-modality fields). The
-Spark-side plumbing — schema contracts, Arrow batch shape, ``mapInPandas``
+Spark-side plumbing — schema contracts, Arrow batch shape, ``mapInArrow``
 feature extraction, partition sizing — is real and tested, and so is header
 decoding for the three container formats whose dimensions live in fixed
 header fields:
@@ -22,8 +22,12 @@ container — the parsers above read real files' headers but stop before
 pixels, which is also the right scale posture: corpus-wide dimension/codec
 stats must not decompress 100 TB of pixels.
 
-Scale notes: payloads ride through Arrow as zero-copy binary buffers;
-``mapInPandas`` batch size is governed by ``maxRecordsPerBatch`` — for
+Every extractor is one ``mapInArrow`` pass through :func:`_map_payloads`,
+which builds each output column straight from Arrow: a bigint ``doc_id`` or
+field beside a null is not rounded through float64 as in a pandas batch.
+
+Scale notes: payloads ride through Arrow as binary buffers; the
+``mapInArrow`` batch size is governed by ``maxRecordsPerBatch`` — for
 multi-MB payloads set it low (e.g. 64) to bound worker memory; feature
 extraction parallelizes per partition with no shuffle.
 """
@@ -31,9 +35,8 @@ extraction parallelizes per partition with no shuffle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Callable, Iterator, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -125,42 +128,88 @@ def decode_payload(
     )
 
 
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature extraction over payloads via ``mapInPandas`` (Arrow-batched,
-    partition-parallel, shuffle-free). The DECLARED mime in the metadata
-    struct picks the codec: ``image/*`` payloads go through real header
-    parsing, everything else takes the deterministic pseudo path — sniffing
-    bytes against the declaration would misdecode text that merely starts
-    with an ASCII container signature ('GIF89a...')."""
+def _map_payloads(
+    df: DataFrame,
+    schema: str,
+    rows: Callable[[bytes | None, dict | None], Sequence[tuple]],
+    with_meta: bool = False,
+) -> DataFrame:
+    """The extractors' one ``mapInArrow`` pass (Arrow-batched,
+    partition-parallel, shuffle-free). Per batch, ``rows(payload, meta)``
+    gives each payload's output rows after ``doc_id`` — none, one or
+    several — and every output column is built with the schema's Arrow
+    type. ``doc_id`` is the input's own Arrow value, taken once per output
+    row, so a 1→N extractor needs no special case. ``meta`` is the
+    metadata struct as a dict when ``with_meta``, else None."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # meta may arrive null from callers other than attach_payload
-            # (which always builds the struct) — treat it like a null
-            # payload: no declared mime, null metadata passthrough.
-            feats = [
-                decode_payload(p, declared_mime=m["mime"] if m is not None else None)
-                if p is not None
-                else (None, None, None, None)  # failed fetch: null features
-                for p, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "mime": [m["mime"] if m is not None else None for m in pdf["meta"]],
-                    "n_bytes": [
-                        int(m["n_bytes"])
-                        if m is not None and m["n_bytes"] is not None
-                        else None
-                        for m in pdf["meta"]
-                    ],
-                    "width": [f[1] for f in feats],
-                    "height": [f[2] for f in feats],
-                    "phash": [f[3] for f in feats],
-                }
+    out_schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(out_schema)
+    id_type, *value_types = arrow_schema.types
+    columns = ["doc_id", "payload", "meta"] if with_meta else ["doc_id", "payload"]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            payloads = batch.column("payload").to_pylist()
+            n = len(payloads)
+            metas = batch.column("meta").to_pylist() if with_meta else [None] * n
+            take, out = [], []
+            for i, (payload, meta) in enumerate(zip(payloads, metas)):
+                for row in rows(payload, meta):
+                    take.append(i)
+                    out.append(row)
+            values = list(zip(*out)) or [()] * len(value_types)
+            doc_ids = batch.column("doc_id").take(pa.array(take, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [doc_ids.cast(id_type)]
+                + [pa.array(v, t) for v, t in zip(values, value_types)],
+                schema=arrow_schema,
             )
 
-    return df.select("doc_id", "payload", "meta").mapInPandas(run, FEATURE_SCHEMA)
+    return df.select(*columns).mapInArrow(run, out_schema)
+
+
+def _extract_header(
+    df: DataFrame, schema: str, parse: Callable[[bytes], tuple | None]
+) -> DataFrame:
+    """The header extractors' row, ``(doc_id, *parse(payload), n_bytes)``:
+    a null payload (failed fetch) nulls every field, ``n_bytes`` too, and
+    a payload ``parse`` does not recognize (None) nulls every field but
+    ``n_bytes``."""
+    # the schemas are flat DDL: every field but doc_id and n_bytes is parsed
+    nulls = (None,) * (len(schema.split(",")) - 2)
+
+    def rows(payload: bytes | None, meta: None) -> list[tuple]:
+        if payload is None:
+            return [nulls + (None,)]
+        fields = parse(payload)
+        return [(nulls if fields is None else fields) + (len(payload),)]
+
+    return _map_payloads(df, schema, rows)
+
+
+def extract_features(df: DataFrame) -> DataFrame:
+    """Feature extraction over payloads, one ``mapInArrow`` pass
+    (Arrow-batched, partition-parallel, shuffle-free). The DECLARED mime in
+    the metadata struct picks the codec: ``image/*`` payloads go through
+    real header parsing, everything else takes the deterministic pseudo
+    path — sniffing bytes against the declaration would misdecode text
+    that merely starts with an ASCII container signature ('GIF89a...')."""
+
+    def rows(payload: bytes | None, meta: dict | None) -> list[tuple]:
+        # meta may arrive null from callers other than attach_payload
+        # (which always builds the struct) — treat it like a missing
+        # declaration: sniff the payload, pass null metadata through.
+        mime = meta["mime"] if meta is not None else None
+        n_bytes = meta["n_bytes"] if meta is not None else None
+        if payload is None:  # failed fetch: null features
+            return [(mime, n_bytes, None, None, None)]
+        _, width, height, phash = decode_payload(payload, declared_mime=mime)
+        return [(mime, n_bytes, width, height, phash)]
+
+    return _map_payloads(df, FEATURE_SCHEMA, rows, with_meta=True)
 
 
 IMAGE_DIMS_SCHEMA = "doc_id long, mime string, width int, height int, n_bytes int"
@@ -170,27 +219,7 @@ def extract_image_dims(df: DataFrame) -> DataFrame:
     """Dimension extraction from real image headers only (no metadata, no
     fallback): (doc_id, mime, width, height, n_bytes) with nulls for
     unrecognized payloads. Arrow-batched, partition-parallel, shuffle-free."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [
-                decode_image_header(p) if p is not None else None
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "mime": [x[0] if x else None for x in parsed],
-                    "width": [x[1] if x else None for x in parsed],
-                    "height": [x[2] if x else None for x in parsed],
-                    "n_bytes": [
-                        len(p) if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, IMAGE_DIMS_SCHEMA)
+    return _extract_header(df, IMAGE_DIMS_SCHEMA, decode_image_header)
 
 
 # --- deterministic image-payload synthesis (for tests + the driver query) --
@@ -253,7 +282,7 @@ RESIZE_SCHEMA = "doc_id long, mime string, width int, height int, payload binary
 
 
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing over ``mapInPandas`` (Arrow-batched,
+    """Image resize plumbing over ``mapInArrow`` (Arrow-batched,
     partition-parallel, shuffle-free): for each payload, decode the header
     (REAL PNG/JPEG/GIF parsing), then re-encode at the target dimensions.
 
@@ -286,29 +315,14 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
             + height.to_bytes(2, "big") + width.to_bytes(2, "big") + b"\x01" + body
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mimes, payloads = [], []
-            for p in pdf["payload"]:
-                if p is None:  # failed fetch: null in, null out
-                    mimes.append(None)
-                    payloads.append(None)
-                    continue
-                header = decode_image_header(p)
-                mime = header[0] if header else "image/png"
-                mimes.append(mime)
-                payloads.append(_fake_raster_resize(bytes(p), mime))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "mime": mimes,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "payload": payloads,
-                }
-            )
+    def rows(payload: bytes | None, meta: None) -> list[tuple]:
+        if payload is None:  # failed fetch: null in, null out
+            return [(None, width, height, None)]
+        header = decode_image_header(payload)
+        mime = header[0] if header else "image/png"
+        return [(mime, width, height, _fake_raster_resize(payload, mime))]
 
-    return df.select("doc_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return _map_payloads(df, RESIZE_SCHEMA, rows)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, ts_ms long, frame binary"
@@ -317,7 +331,7 @@ FRAME_SCHEMA = "doc_id long, frame_idx int, ts_ms long, frame binary"
 def sample_frames(
     df: DataFrame, every_ms: int = 1000, max_frames: int = 8
 ) -> DataFrame:
-    """Video frame-sampling plumbing over ``mapInPandas``: one output row
+    """Video frame-sampling plumbing over ``mapInArrow``: one output row
     per sampled frame (doc_id, frame_idx, ts_ms, frame) — the 1→N batch
     shape a real decoder produces, with partition-parallel extraction and
     no shuffle.
@@ -332,25 +346,14 @@ def sample_frames(
     def _fake_decode_frame(payload: bytes, idx: int) -> bytes:
         return hashlib.md5(payload + idx.to_bytes(4, "big")).digest()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None:  # failed fetch: no container, no frames
-                    continue
-                p = bytes(p)
-                duration_ms = (len(p) * 1000) // 1024
-                n = min(max_frames, max(1, duration_ms // every_ms + 1))
-                for i in range(n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    tss.append(i * every_ms)
-                    frames.append(_fake_decode_frame(p, i))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "ts_ms": tss, "frame": frames}
-            )
+    def rows(payload: bytes | None, meta: None) -> list[tuple]:
+        if payload is None:  # failed fetch: no container, no frames
+            return []
+        duration_ms = (len(payload) * 1000) // 1024
+        n = min(max_frames, max(1, duration_ms // every_ms + 1))
+        return [(i, i * every_ms, _fake_decode_frame(payload, i)) for i in range(n)]
 
-    return df.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
+    return _map_payloads(df, FRAME_SCHEMA, rows)
 
 
 # --- audio: real RIFF/WAVE header synthesis + parsing -----------------------
@@ -429,47 +432,23 @@ def decode_wav_header(payload: bytes) -> tuple[int, int, int, int] | None:
     return rate, channels, bits, data_bytes
 
 
+def _wav_fields(payload: bytes) -> tuple | None:
+    meta = decode_wav_header(payload)
+    if meta is None:
+        return None
+    rate, channels, bits, data_bytes = meta
+    frame = max(1, channels * (bits // 8))
+    duration_ms = (data_bytes // frame) * 1000 // max(1, rate)
+    return "audio/wav", rate, channels, bits, duration_ms
+
+
 def extract_audio_meta(df: DataFrame) -> DataFrame:
     """Audio metadata from real WAV headers only (no metadata smuggling, no
     fallback): (doc_id, mime, sample_rate, n_channels, bits_per_sample,
     duration_ms, n_bytes) with nulls for non-WAV payloads. Arrow-batched,
     partition-parallel, shuffle-free — the same scale shape as
     :func:`extract_image_dims`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "mime", "sample_rate", "n_channels",
-                "bits_per_sample", "duration_ms", "n_bytes",
-            )}
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None:  # failed fetch: all-null metadata row
-                    rows["doc_id"].append(doc_id)
-                    for k in ("mime", "sample_rate", "n_channels",
-                              "bits_per_sample", "duration_ms", "n_bytes"):
-                        rows[k].append(None)
-                    continue
-                p = bytes(p)
-                meta = decode_wav_header(p)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(p))
-                if meta is None:
-                    for k in ("mime", "sample_rate", "n_channels",
-                              "bits_per_sample", "duration_ms"):
-                        rows[k].append(None)
-                    continue
-                rate, channels, bits, data_bytes = meta
-                frame = max(1, channels * (bits // 8))
-                rows["mime"].append("audio/wav")
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(channels)
-                rows["bits_per_sample"].append(bits)
-                rows["duration_ms"].append(
-                    (data_bytes // frame) * 1000 // max(1, rate)
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select("doc_id", "payload").mapInPandas(run, AUDIO_META_SCHEMA)
+    return _extract_header(df, AUDIO_META_SCHEMA, _wav_fields)
 
 
 # --- MP4 / ISO-BMFF video containers -------------------------------------
@@ -604,6 +583,15 @@ def decode_mp4_meta(
     return state["timescale"], state["duration"], state["width"], state["height"]
 
 
+def _mp4_fields(payload: bytes) -> tuple | None:
+    meta = decode_mp4_meta(payload)
+    if meta is None:
+        return None
+    timescale, duration, width, height = meta
+    duration_ms = duration * 1000 // max(1, timescale)
+    return "video/mp4", timescale, duration, duration_ms, width, height
+
+
 def extract_video_meta(df: DataFrame) -> DataFrame:
     """Video metadata from real ISO-BMFF box walking only (no metadata
     smuggling, no fallback): (doc_id, mime, timescale, duration_ticks,
@@ -613,39 +601,7 @@ def extract_video_meta(df: DataFrame) -> DataFrame:
     decode / frame extraction would need ffmpeg, absent here; container
     parsing is the honest, scale-appropriate core — corpus-wide duration /
     resolution stats must not decode 100 TB of video.)"""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "mime", "timescale", "duration_ticks",
-                "duration_ms", "width", "height", "n_bytes",
-            )}
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None:  # failed fetch: all-null metadata row
-                    rows["doc_id"].append(doc_id)
-                    for k in ("mime", "timescale", "duration_ticks",
-                              "duration_ms", "width", "height", "n_bytes"):
-                        rows[k].append(None)
-                    continue
-                p = bytes(p)
-                meta = decode_mp4_meta(p)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(p))
-                if meta is None:
-                    for k in ("mime", "timescale", "duration_ticks",
-                              "duration_ms", "width", "height"):
-                        rows[k].append(None)
-                    continue
-                timescale, duration, width, height = meta
-                rows["mime"].append("video/mp4")
-                rows["timescale"].append(timescale)
-                rows["duration_ticks"].append(duration)
-                rows["duration_ms"].append(duration * 1000 // max(1, timescale))
-                rows["width"].append(width)
-                rows["height"].append(height)
-            yield pd.DataFrame(rows)
-
-    return df.select("doc_id", "payload").mapInPandas(run, VIDEO_META_SCHEMA)
+    return _extract_header(df, VIDEO_META_SCHEMA, _mp4_fields)
 
 
 # --- MPEG audio (MP3) frames ----------------------------------------------
@@ -726,41 +682,19 @@ def decode_mp3_frames(payload: bytes) -> tuple[int, int, int] | None:
     return first[0], first[1], n
 
 
+def _mp3_fields(payload: bytes) -> tuple | None:
+    meta = decode_mp3_frames(payload)
+    if meta is None:
+        return None
+    br, sr, n = meta
+    return "audio/mpeg", br, sr, n, n * 1152 * 1000 // sr
+
+
+
 def extract_mp3_meta(df: DataFrame) -> DataFrame:
     """MP3 metadata from real frame headers only: (doc_id, mime,
     bitrate_kbps, sample_rate, n_frames, duration_ms, n_bytes) with nulls
     for non-MP3 payloads; duration = n_frames · 1152 samples / rate.
     Arrow-batched, partition-parallel, shuffle-free — the same scale
     shape as :func:`extract_audio_meta`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "mime", "bitrate_kbps", "sample_rate",
-                "n_frames", "duration_ms", "n_bytes",
-            )}
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None:  # failed fetch: all-null metadata row
-                    rows["doc_id"].append(doc_id)
-                    for k in ("mime", "bitrate_kbps", "sample_rate",
-                              "n_frames", "duration_ms", "n_bytes"):
-                        rows[k].append(None)
-                    continue
-                p = bytes(p)
-                meta = decode_mp3_frames(p)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(p))
-                if meta is None:
-                    for k in ("mime", "bitrate_kbps", "sample_rate",
-                              "n_frames", "duration_ms"):
-                        rows[k].append(None)
-                    continue
-                br, sr, n = meta
-                rows["mime"].append("audio/mpeg")
-                rows["bitrate_kbps"].append(br)
-                rows["sample_rate"].append(sr)
-                rows["n_frames"].append(n)
-                rows["duration_ms"].append(n * 1152 * 1000 // sr)
-            yield pd.DataFrame(rows)
-
-    return df.select("doc_id", "payload").mapInPandas(run, MP3_META_SCHEMA)
+    return _extract_header(df, MP3_META_SCHEMA, _mp3_fields)

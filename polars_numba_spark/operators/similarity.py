@@ -261,6 +261,8 @@ def _with_bucket_array(
     def project(batches):
         import pyarrow as pa
 
+        from polars_numba_spark._arrow import ListVectors
+
         # heavyweight init once per task (§4.5): plane matrix (P, dim)
         planes = np.concatenate(
             [
@@ -270,30 +272,13 @@ def _with_bucket_array(
         )
         shifts = (1 << np.arange(n_planes, dtype=np.int64))
         for batch in batches:
-            arr = batch.column(vec_idx)
-            n = len(arr)
-            offsets = arr.offsets.to_numpy(zero_copy_only=False)[: n + 1]
-            lengths = offsets[1:] - offsets[:-1]
-            row_valid = (
-                np.ones(n, dtype=bool)
-                if arr.null_count == 0
-                else arr.is_valid().to_numpy(zero_copy_only=False)
-            )
-            values = arr.values
-            elem_clean = np.ones(n, dtype=bool)
-            if values.null_count:
-                # rare (dirty corpora): per-row any-null scan
-                nulls = values.is_null().to_numpy(zero_copy_only=False)
-                for i in np.nonzero(row_valid)[0]:
-                    if nulls[offsets[i] : offsets[i + 1]].any():
-                        elem_clean[i] = False
-            clean = row_valid & elem_clean & (lengths == dim)
-            vals = values.to_numpy(zero_copy_only=False)
+            vecs = ListVectors(batch.column(vec_idx))
+            n = len(vecs.ok)
+            clean = vecs.ok & (vecs.lengths == dim)
             buckets = np.zeros((n, n_tables), dtype=np.int64)
             idx = np.nonzero(clean)[0]
             if len(idx):
-                gather = offsets[idx][:, None] + np.arange(dim)[None, :]
-                vs = vals[gather].astype(np.float64)
+                vs = vecs.rows(idx, dim)
                 acc = np.zeros((len(idx), n_total))
                 with np.errstate(over="ignore", invalid="ignore"):
                     for d in range(dim):
@@ -308,26 +293,10 @@ def _with_bucket_array(
                 ).sum(axis=2)
             extra_cols = []
             if with_norm:
-                norm_ok = row_valid & elem_clean
-                vn = np.full(n, np.nan)
-                with np.errstate(over="ignore", invalid="ignore"):
-                    for L in np.unique(lengths[norm_ok]):
-                        nidx = np.nonzero(norm_ok & (lengths == L))[0]
-                        if L == 0:
-                            vn[nidx] = 0.0
-                            continue
-                        g = offsets[nidx][:, None] + np.arange(L)[None, :]
-                        vs = vals[g].astype(np.float64)
-                        acc = np.zeros(len(nidx))
-                        for d in range(L):
-                            acc += vs[:, d] * vs[:, d]
-                        vn[nidx] = np.sqrt(acc)
+                vn = vecs.norms()
                 extra_cols.append(
                     pa.array(
-                        [
-                            float(vn[i]) if norm_ok[i] else None
-                            for i in range(n)
-                        ],
+                        [float(vn[i]) if vecs.ok[i] else None for i in range(n)],
                         type=pa.float64(),
                     )
                 )

@@ -193,6 +193,8 @@ def _assign_nearest_arrow(
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from polars_numba_spark._arrow import ListVectors
+
         if not cent_rows:  # crossJoin-with-empty-broadcast → zero rows
             return
 
@@ -222,35 +224,9 @@ def _assign_nearest_arrow(
             arr = batch.column(1)
             n = len(arr)
             cast = pc.cast(arr, pa.list_(pa.float64()))
-            offsets = arr.offsets.to_numpy(zero_copy_only=False)[: n + 1]
-            lengths = offsets[1:] - offsets[:-1]
-            row_valid = (
-                np.ones(n, dtype=bool)
-                if arr.null_count == 0
-                else arr.is_valid().to_numpy(zero_copy_only=False)
-            )
-            values = arr.values
-            elem_clean = np.ones(n, dtype=bool)
-            if values.null_count:
-                nulls = values.is_null().to_numpy(zero_copy_only=False)
-                for i in range(n):
-                    if row_valid[i] and nulls[offsets[i] : offsets[i + 1]].any():
-                        elem_clean[i] = False
-            vals = values.to_numpy(zero_copy_only=False)
-            # per-row norms (over the row's OWN length, index-ordered)
-            vn = np.full(n, np.nan)
+            vecs = ListVectors(arr)
+            vn = vecs.norms()
             with np.errstate(over="ignore", invalid="ignore"):
-                for L in np.unique(lengths[row_valid & elem_clean]):
-                    idx = np.nonzero(row_valid & elem_clean & (lengths == L))[0]
-                    if L == 0:
-                        vn[idx] = 0.0
-                        continue
-                    gather = offsets[idx][:, None] + np.arange(L)[None, :]
-                    vs = vals[gather].astype(np.float64)
-                    acc = np.zeros(len(idx))
-                    for d in range(L):
-                        acc += vs[:, d] * vs[:, d]
-                    vn[idx] = np.sqrt(acc)
                 # tiers: -1 null, 0 comparable value (±inf included), 1 NaN
                 tier = np.full((n, k), -1, dtype=np.int8)
                 cosm = np.zeros((n, k))
@@ -258,11 +234,10 @@ def _assign_nearest_arrow(
                     if cnull[j]:
                         continue
                     L = clens[j]
-                    idx = np.nonzero(row_valid & elem_clean & (lengths == L))[0]
+                    idx = np.nonzero(vecs.ok & (vecs.lengths == L))[0]
                     if len(idx) == 0:
                         continue
-                    gather = offsets[idx][:, None] + np.arange(L)[None, :]
-                    vs = vals[gather].astype(np.float64)
+                    vs = vecs.rows(idx, L)
                     acc = np.zeros(len(idx))
                     cj = cmats[j]
                     for d in range(L):

@@ -532,7 +532,7 @@ def kernel_scan_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kernel_fold_event_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped fold through the generic kernel with an exact integer oracle:
-    per-user sum of value-in-cents. Proves the applyInPandas fold path
+    per-user sum of value-in-cents. Proves the mapInArrow fold path
     (shuffle on user_id, ordered kernel per group) against plain SQL.
 
     Two machinery items ride through the gate here: the accumulator is a

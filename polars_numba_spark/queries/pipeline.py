@@ -1131,7 +1131,7 @@ def _exact_pairs_capped(
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing end-to-end: binary payload + struct metadata →
-    Arrow-batched mapInPandas feature extraction (deterministic codec stub).
+    Arrow-batched mapInArrow feature extraction (deterministic codec stub).
     The oracle replicates the stub arithmetic in SQL, proving the batch
     shape, schema contract, and payload round-trip byte-exactly."""
     d = _t(spark, sf_dir, "documents")

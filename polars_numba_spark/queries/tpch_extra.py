@@ -1436,7 +1436,7 @@ def sql_surface_capped_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITION BY user_id ORDER BY (ts, event_id), one output row per
     user. Same semantics as the kernel face, so the oracle is the SAME
     recursive-CTE replay verbatim (CAPPED_FOLD_ORACLE, single-sourced) —
-    a drift between the mapInPandas kernel path and the UDTF path would
+    a drift between the mapInArrow kernel path and the UDTF path would
     hash-mismatch one of the two faces. Null-value rows are dropped by
     the fold null rule inside the UDTF; all-null users emit acc0."""
     from polars_numba_spark.sql import register_fold_udtf

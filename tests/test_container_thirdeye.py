@@ -158,16 +158,40 @@ def test_mp4_box_walk_hand_built():
     assert M.decode_mp4_meta(payload) == (600, 9000, 640, 360)
 
 
+def mvhd_v1_only(timescale: int, duration: int) -> bytes:
+    """ftyp + moov(mvhd v1): the version-1 body carries 64-bit ctime,
+    mtime and duration, so timescale sits at byte 20 of the body."""
+    mvhd = box(b"mvhd",
+               b"\x01\x00\x00\x00"           # version 1 + flags
+               + b"\x00" * 16                 # 64-bit ctime, mtime
+               + struct.pack(">IQ", timescale, duration)
+               + b"\x00" * 80)
+    return box(b"ftyp", b"isom" + b"\x00" * 4 + b"isom") + box(b"moov", mvhd)
+
+
 def test_mp4_duration_arithmetic_via_spark(spark):
     """duration_ms = duration_ticks / timescale * 1000 — 9000 ticks at
-    600 ticks/s is exactly 15000 ms."""
+    600 ticks/s is exactly 15000 ms. A version-1 duration of 2^53+1 ticks
+    comes back exact beside a non-BMFF payload in the same batch, whose
+    row is null in every field but n_bytes (a float64 detour of the column
+    would round the duration to 2^53)."""
+    big = 2**53 + 1
     payload = mp4_hand_built(timescale=600, duration=9000, w=1920, h=1080)
-    df = spark.createDataFrame([(1, bytearray(payload))],
-                               "doc_id long, payload binary")
-    r = M.extract_video_meta(df).first()
+    df = spark.createDataFrame(
+        [
+            (1, bytearray(payload)),
+            (2, bytearray(mvhd_v1_only(1000, big))),
+            (3, bytearray(b"plain text, not video")),
+        ],
+        "doc_id long, payload binary",
+    ).coalesce(1)
+    rows = {r["doc_id"]: r for r in M.extract_video_meta(df).collect()}
+    r = rows[1]
     assert (r["timescale"], r["duration_ticks"]) == (600, 9000)
     assert r["duration_ms"] == 15000
     assert (r["width"], r["height"]) == (1920, 1080)
+    assert (rows[2]["duration_ticks"], rows[2]["duration_ms"]) == (big, big)
+    assert rows[3]["duration_ticks"] is None and rows[3]["n_bytes"] == 21
 
 
 def test_mp4_mdat_first_layout():
@@ -207,3 +231,17 @@ def test_jpeg_sof_segment_walk():
 def test_gif_logical_screen_le():
     payload = b"GIF89a" + struct.pack("<HH", 777, 333) + b"\x00\x00\x00"
     assert M.decode_image_header(payload) == ("image/gif", 777, 333)
+
+
+def test_image_dims_bigint_doc_id_beside_null(spark):
+    """doc_id 2^53+1 must pass through extract_image_dims exact when a
+    null doc_id shares its batch (a float64 detour would round it)."""
+    big = 2**53 + 1
+    payload = bytearray(b"GIF89a" + struct.pack("<HH", 777, 333))
+    df = spark.createDataFrame(
+        [(big, payload), (None, payload)], "doc_id long, payload binary"
+    ).coalesce(1)
+    rows = M.extract_image_dims(df).collect()
+    ids = [r["doc_id"] for r in rows]
+    assert sorted(ids, key=lambda i: i is None) == [big, None]
+    assert {(r["width"], r["height"]) for r in rows} == {(777, 333)}

@@ -1,12 +1,11 @@
 """Census of the package modules that import pandas.
 
-The engine's Python passes speak Arrow: the fold/scan driver, the sketch
-partials and the t-digest merge hand NumPy/Arrow columns to their kernels
-with no pandas step, so a group key or a bigint comes through exact. Two
-modules keep pandas: ``streaming/stateful.py``, whose
-``applyInPandasWithState`` speaks only pandas, and
-``operators/multimodal.py``. A new importer has to be a deliberate edit
-here.
+The engine's batch Python passes speak Arrow: the fold/scan driver, the
+sketch partials, the t-digest merge and the multimodal extractors hand
+NumPy/Arrow columns to their kernels with no pandas step, so a group key,
+a doc_id or a 64-bit field comes through exact. One module keeps pandas:
+``streaming/stateful.py``, whose ``applyInPandasWithState`` speaks only
+pandas. A new importer has to be a deliberate edit here.
 """
 
 import pathlib
@@ -23,4 +22,4 @@ def test_pandas_importers_are_pinned():
         for path in PACKAGE.rglob("*.py")
         if _IMPORT.search(path.read_text())
     }
-    assert found == {"streaming/stateful.py", "operators/multimodal.py"}
+    assert found == {"streaming/stateful.py"}

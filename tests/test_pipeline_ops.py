@@ -522,23 +522,48 @@ def test_multimodal_extract_features_roundtrip(spark):
 def test_multimodal_extract_features_null_meta(spark):
     """ADVICE r11: a NULL meta struct (possible for callers other than
     attach_payload) must behave like a missing declaration — sniff mode,
-    null mime/n_bytes passthrough — not a worker TypeError."""
+    null mime/n_bytes passthrough — not a worker TypeError. A doc_id of
+    2^53+1 beside a null doc_id in the same batch comes back exact."""
+    big = 2**53 + 1
     df = spark.createDataFrame(
         [
             (1, b"payload bytes", ("application/octet-stream", 13)),
             (2, b"other payload", None),  # null meta, non-null payload
             (3, None, None),  # both null
+            (big, b"big id", None),
+            (None, b"null id", None),
         ],
         "doc_id long, payload binary, meta struct<mime string, n_bytes int>",
-    )
+    ).coalesce(1)
     rows = {r["doc_id"]: r for r in M.extract_features(df).collect()}
-    assert len(rows) == 3
+    assert len(rows) == 5 and big in rows and None in rows
     assert rows[1]["mime"] == "application/octet-stream"
     assert rows[2]["mime"] is None and rows[2]["n_bytes"] is None
     # null meta still decodes the payload in sniff mode (deterministic path)
     _, w, h, p = M.decode_payload(b"other payload")
     assert (rows[2]["width"], rows[2]["height"], rows[2]["phash"]) == (w, h, p)
     assert rows[3]["width"] is None and rows[3]["phash"] is None
+
+
+@pytest.mark.parametrize(
+    "extract, expected",
+    [
+        (M.extract_image_dims, [(7,) + (None,) * 4]),
+        (M.extract_audio_meta, [(7,) + (None,) * 6]),
+        (M.extract_video_meta, [(7,) + (None,) * 7]),
+        (M.extract_mp3_meta, [(7,) + (None,) * 6]),
+        (lambda df: M.resize_images(df, 32, 24), [(7, None, 32, 24, None)]),
+        (M.sample_frames, []),
+    ],
+    ids=["image_dims", "audio_meta", "video_meta", "mp3_meta", "resize", "frames"],
+)
+def test_multimodal_null_payload_row(spark, extract, expected):
+    """A null payload (failed fetch) keeps its doc_id: the header
+    extractors emit one row null in every field, n_bytes included; resize
+    emits a null mime and payload at the target size; frame sampling emits
+    no rows."""
+    df = spark.createDataFrame([(7, None)], "doc_id long, payload binary")
+    assert [tuple(r) for r in extract(df).collect()] == expected
 
 
 def test_simhash_full_64_bits(spark):
@@ -718,15 +743,17 @@ def test_resize_images_header_roundtrips_at_target_dims(spark):
 def test_sample_frames_shape_and_determinism(spark):
     from polars_numba_spark.operators.multimodal import sample_frames
 
+    big = 2**53 + 1  # exact beside a null doc_id in the same batch
     df = spark.createDataFrame(
-        [(0, bytes(range(256)) * 16), (1, b"x")],  # ~4 KiB → 4s; tiny → 1 frame
-        "doc_id long, payload binary",
-    )
+        [(0, bytes(range(256)) * 16), (1, b"x"), (big, b"y"), (None, b"z")],
+        "doc_id long, payload binary",  # ~4 KiB → 4s; tiny → 1 frame
+    ).coalesce(1)
     rows = sample_frames(df, every_ms=1000, max_frames=8).collect()
     by_doc: dict = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
     assert len(by_doc[1]) == 1 and by_doc[1][0]["ts_ms"] == 0
+    assert len(by_doc[big]) == 1 and len(by_doc[None]) == 1
     assert len(by_doc[0]) == 5  # 4096 B → 4000 ms → frames at 0..4000
     assert [r["ts_ms"] for r in sorted(by_doc[0], key=lambda r: r["frame_idx"])] == [
         0, 1000, 2000, 3000, 4000,

@@ -508,11 +508,11 @@ def test_bm25_is_inverted_index_with_broadcast_queries(spark):
 
 def test_video_meta_is_shuffle_free(spark):
     """multimodal_video_meta (synthesize -> box-walk parse) must be a pure
-    scan->project->MapInPandas pipeline: no shuffle, no join — container
+    scan->project->MapInArrow pipeline: no shuffle, no join — container
     metadata extraction over 100 TB of video must stream."""
     df = q(spark, "multimodal_video_meta")
     s = plans.explain_string(df)
-    assert "MapInPandas" in s
+    assert "MapInArrow" in s
     for op in ("Exchange", "Join", "CartesianProduct"):
         assert op not in s, op
 
@@ -569,7 +569,7 @@ def test_gopher_filter_is_one_scan(spark):
     Python would throttle every downstream curation stage at 100 TB."""
     df = q(spark, "doc_gopher_filter")
     s = plans.explain_string(df)
-    for op in ("Exchange", "Join", "MapInPandas", "BatchEvalPython"):
+    for op in ("Exchange", "Join", "MapInPandas", "MapInArrow", "BatchEvalPython"):
         assert op not in s, op
     schemas = plans.read_schemas(df)
     assert len(schemas) == 1 and "text" in schemas[0]

@@ -22,9 +22,9 @@ wrong at 100 TB regardless of row correctness:
   domain, a capped probe over a real table) needs a per-face ALLOW entry
   with a written reason.
 - ``BatchEvalPython`` — a row-at-a-time Python UDF/UDTF in the plan.  The
-  Arrow paths (ArrowEvalPython*, MapInArrow, FlatMapGroupsInPandas*,
-  FlatMapGroupsInArrow) are the engine's sanctioned Python surfaces and
-  pass.
+  Arrow paths the engine emits (MapInArrow, FlatMapGroupsInArrow, and
+  FlatMapGroupsInPandasWithState for the streaming state) are its
+  sanctioned Python surfaces and pass.
 
 Faces with the ``streaming_`` prefix execute an availableNow stream on
 construction and return a batch frame over the sink, so the interesting
